@@ -140,12 +140,10 @@ def main() -> None:
         spark.catalog.clearCache()
         return dt
 
-    # FIXED name order, not registry order: the registry is rotation-
-    # ordered (changed/stale queries first), which re-shuffles the
-    # suite every round and clusters that round's heaviest queries at
-    # the front -- measured as diffuse 0.3-1s drifts on untouched
-    # queries purely from who ran before them (round-9). A stable
-    # order makes round-over-round per-query numbers comparable.
+    # FIXED name order, not registry order: registry order changes as
+    # families are added, and a query's time drifts 0.3-1s with who
+    # ran before it (round-9). A stable order makes per-query numbers
+    # comparable across changes.
     bench_order = sorted(QUERIES)
     for name in bench_order:
         fn, _sql = QUERIES[name]

@@ -175,8 +175,8 @@ def _one_merge_pass(s, pair: str):
     and the pattern cannot match inside a multi-char token. O(len) per
     pass and whole-stage-codegen'd — this replaced the r14-r16
     ``F.aggregate`` array fold whose per-element accumulator copy made
-    it O(len^2) in word length (the r16 mega-doc probe measured 4x
-    wall per 2x length; tools/megadoc_probe.py is the witness).
+    it O(len^2) in word length (the r16 mega-doc probe, at commit
+    ``9dbaa4e``, measured 4x wall per 2x length).
     ``F.lit`` keeps corpus-derived rule text (quotes, backslashes) out
     of SQL literals entirely."""
     return F.replace(

@@ -214,9 +214,9 @@ SEMDEDUP_PAIR_SCHEMA = "a_id long, b_id long, cosine double"
 
 def semdedup_pair_kernel(threshold: float):
     """Per-group near-dup pair kernel (one exact int64 Gram matmul
-    over the Arrow batch). Module-level so the x100 scale probe
-    (tools/kmeans_x100_probe.py) times the SAME code the registered
-    query ships, not a drifted copy (r10 review)."""
+    over the Arrow batch). Module-level so a scale probe can time the
+    SAME code the registered query ships, not a drifted copy (the r10
+    x100 k-means probe, at commit ``9dbaa4e``)."""
     import numpy as np
     import pandas as pd
 

@@ -24,8 +24,7 @@ Query shape mirrors ``multimodal_bmp_decode``
 dimensions from the byte stream (width from length, height from the
 LAST byte — decorrelated from the BMP query's first-byte height), and
 the emitted columns are integer pixel stats the oracle replays with
-the shared byte-recovery CTE. Lives in its own module so registering
-it does not touch the multimodal module's rotation fingerprints.
+the shared byte-recovery CTE.
 
 Scale: same story as the other multimodal kernels — ``mapInPandas``
 is a narrow transformation, Arrow batches bound memory, the final

@@ -711,11 +711,8 @@ def _membership_contract(
 ) -> DataFrame:
     """Run ``fn`` and reduce its top-k frame to the per-query membership
     contract (k_full/distinct/no_self/ids_valid/rank/cosine-exact
-    booleans). Called through NAMED module-level wrappers below — the
-    rotation fingerprinter resolves plain defs only, and the old
-    closure-factory pattern left the three contract queries permanently
-    unresolvable (no manifest entry, 3 window slots burned every
-    round, r11 fix)."""
+    booleans). Called through NAMED module-level wrappers below, one
+    per contract query."""
     import pandas as pd
 
     res = fn(spark, sf_dir)

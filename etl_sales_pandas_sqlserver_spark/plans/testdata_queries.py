@@ -469,92 +469,9 @@ QUERIES: dict[str, tuple[SparkQuery, str | None]] = {
 }
 
 
-#: Manual window overrides, prepended BEFORE the automatic staleness
-#: ordering. Round 6: empty -- every round-5 member earned a fresh
-#: green row in ``CORRECTNESS_r05.json`` (round-start protocol:
-#: clear after the manifest regen re-pins their fingerprints).
-_FORCE_HEAD: list[str] = []
-
-#: FALLBACK registration-order head (round-4 vintage), used only when
-#: ``plans/_rotation_manifest.json`` is absent. Since round 5 the
-#: window order is computed automatically by ``plans/rotation.py``:
-#: stale-evidence queries (code changed since their last green driver
-#: row) first, then oldest-green-first -- see that module's docstring.
-_PRIORITY_HEAD: list[str] = [
-    # broken in r3 -- fixed this round, need fresh green rows
-    "asof_join_tolerance",
-    "pack_training_sequences",
-    # event-time queries: r2-green only, under the old long-typed
-    # vintage; re-verify under timestamp[us] + declared-schema loader
-    "sessionize_events",
-    "window_event_deltas",
-    "asof_join_clicks_purchases",
-    "range_join_event_pairs",
-    "time_bucket_rollup",
-    # flagship (reference main.py:156-179); position 50 in r3 -- one
-    # past the window
-    "monthly_summary",
-    # remaining consumers of the events loader path changed this round
-    "funnel_view_click_purchase",
-    "events_json_extract",
-    "window_moving_avg_7",
-    "window_range_1h_load",
-    "window_first_last_touch",
-    "stream_hourly_agg",
-    "stream_sessionize_stateful",
-    "stream_dedup_keys",
-    "stream_sliding_2h",
-    "stream_static_join_nation",
-    "stream_stream_join_attrib",
-    "skew_salted_user_counts",
-    "status_run_histogram",
-    # r3-green but perf-weak (VERDICT r3) -- keep inside the window so
-    # the re-timed rows land in CORRECTNESS/BENCH together
-    "sql_region_year_revenue",
-    # new in round 4: mergeable HLL sketch table + rollup, and the
-    # approx-distinct upgrade from rows-only to a hash-verifiable
-    # error-contract output -- all need first driver rows
-    "sketch_daily_distinct_users",
-    "sketch_rollup_distinct_users",
-    "approx_distinct_users",
-    "similarity_ann_recall_contract",
-    "percentiles_approx_contract",
-    # epoch_us TZ-proofing changed these three this round (the plain
-    # cast("timestamp") shifted epoch outputs on non-UTC hosts)
-    "scd2_customer_versions",
-    "temporal_dim_join_segments",
-    "tpch_q18_large_volume_customers",
-    # new in round 4: substring-level exact dedup (repeated 13-token
-    # spans across documents)
-    "dedup_repeated_spans",
-    # the rest of the r3 window, unchanged code, pushed behind the
-    # re-verification set but still inside the 50-query window
-    "text_token_stats",
-    "text_repetition_scores",
-    "text_quality_scores",
-    "text_lang_id",
-    "text_fingerprint",
-    "text_pii_redact",
-    "split_train_val_test",
-    "stratified_sample_docs",
-    "topk_tokens_per_lang",
-    "token_salience",
-    "quantize_embeddings_int8",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_embedding_cosine",
-    "dedup_clusters",
-    "dedup_decontaminate",
-    "similarity_topk_exact",
-]
-
-
 def _register_extensions() -> None:
     """Merge Layer B registries (analytics, text/dedup/similarity) into
-    QUERIES, then rotate ``_PRIORITY_HEAD`` to the front of the
-    registration order (see its docstring for why order matters)."""
+    QUERIES after Layer A, in the order below."""
     from .advanced_queries import ADVANCED_QUERIES
     from .analytics_queries import ANALYTICS_QUERIES
     from .array_queries import ARRAY_QUERIES
@@ -587,37 +504,12 @@ def _register_extensions() -> None:
 
     QUERIES.update(FUNCTION_QUERIES)
 
-    # Staleness-aware automatic rotation (round 5+): stale-evidence
-    # queries (code changed since last green driver row, or never
-    # green) first, then oldest-green-first, so every query re-verifies
-    # at worst every ceil(N/50) rounds. Falls back to the hand-curated
-    # _PRIORITY_HEAD order when no manifest exists. See
-    # plans/rotation.py and tools/update_rotation_manifest.py.
-    from .rotation import ordered_names
-
-    try:
-        auto = ordered_names(QUERIES)
-    except Exception:
-        auto = None
-    head = (_FORCE_HEAD + auto) if auto is not None else _PRIORITY_HEAD
-    ordered = {n: QUERIES[n] for n in head if n in QUERIES}
-    for name, entry in QUERIES.items():
-        if name not in ordered:
-            ordered[name] = entry
-    QUERIES.clear()
-    QUERIES.update(ordered)
-
 
 _register_extensions()
 
-# Registry-size floor: 166 as of round 10 (155 + corpus_diff ×2 +
-# quality_calibration ×1 + source_stats ×3 + batching ×3 +
-# histograms ×2 + dataset_cards ×2 + budget ×3 + sharding ×1 +
-# png ×1 + pruning ×1 + release ×1 + curriculum ×3 + bpe ×1 (r12) +
-# currpack ×3 + stream_dataset_card_ingest (r13) + curation funnel ×2
-# (r13) + bpe_apply_merges (r14)). If a refactor ever drops a whole
-# family, fail at import time rather than letting the driver verify a
-# shrunken registry.
+# Registry-size floor: the 186 queries registered today. If a refactor
+# ever drops a whole family, fail at import time rather than letting a
+# caller verify a shrunken registry.
 _REGISTRY_FLOOR = 186
 if len(QUERIES) < _REGISTRY_FLOOR:  # pragma: no cover - tripwire
     raise RuntimeError(

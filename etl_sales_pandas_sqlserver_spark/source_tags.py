@@ -9,10 +9,6 @@ Folding a (path, mtime_ns, size) tag of the memo's source files into
 the key makes a rewrite MISS the memo automatically -- the same
 convention ``sources/partitioned.py`` uses to fingerprint its layout
 builds.
-
-Kept in its own module (not cache.py) so adopting the tag in one query
-family does not fingerprint-stale every cache-using query in the
-registry (see plans/rotation.py on dependency-closure hashing).
 """
 
 from __future__ import annotations

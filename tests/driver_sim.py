@@ -3,7 +3,7 @@
 sf0.01 under a PLAIN default Spark session (ANSI on, 200 shuffle
 partitions) -- the driver's conditions, not the engine's tuned session.
 
-Usage: python tests/driver_sim.py [--only name1,name2] [--first N]
+Usage: python tests/driver_sim.py [--only name1,name2]
 """
 
 from __future__ import annotations
@@ -36,7 +36,6 @@ def canon(df):
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--only", default=None, help="comma-separated query names")
-    ap.add_argument("--first", type=int, default=None, help="first N in registration order")
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     args = ap.parse_args()
 
@@ -67,8 +66,6 @@ def main() -> int:
     names = list(q)
     if args.only:
         names = [n for n in args.only.split(",") if n in q]
-    if args.first:
-        names = names[: args.first]
     fails = []
     for name in names:
         t0 = time.perf_counter()

@@ -50,6 +50,20 @@ def test_registry_consistency():
     # Pin the registry floor (186 = r14 count). A broken family import
     # must raise at import time, never shrink queries() silently.
     assert len(q) >= 186, f"registry shrank to {len(q)}"
+    # Plain registration order: Layer A (the reference's operators)
+    # first, then the families in merge order. No reordering.
+    assert list(q)[:9] == [
+        "clean_valid_sales",
+        "categorize_invalid_sales",
+        "monthly_summary",
+        "format_dates_for_sink",
+        "string_cleaning",
+        "dedup_keep_first",
+        "dup_flag_groups",
+        "union_by_name",
+        "orders_monthly_agg",
+    ]
+    assert list(q) == list(QUERIES)
 
 
 def test_broken_family_import_raises():

@@ -23,7 +23,10 @@ from etl_sales_pandas_sqlserver_spark.session import get_spark
 
 def main() -> None:
     if len(sys.argv) < 2:
-        print(__doc__.strip().splitlines()[2], file=sys.stderr)
+        print(
+            "Usage: python tools/capture_plans.py <outdir> [name_filter_csv]",
+            file=sys.stderr,
+        )
         raise SystemExit(2)
     outdir = sys.argv[1]
     names = sorted(QUERIES)
