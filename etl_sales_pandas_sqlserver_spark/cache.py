@@ -1,28 +1,31 @@
-"""Construction-time hygiene for query-local DataFrame caches.
+"""Session-level reuse of expensive frames, and query-local cache hygiene.
 
-Several queries cache a small intermediate frame that is consumed more
-than once inside their own plan (the dedup shingle frame, the ANN
-contract's exact top-k set, the bloom bitmap). The cache must survive
-the query's execution -- so the query cannot unpersist it itself -- but
-without any release it outlives the query: a driver correctness sweep
-or a test session that constructs-and-collects a hundred queries in one
-SparkSession accumulates every one of those caches (round-5 advice;
-only bench.py's ``clearCache`` between runs covered this).
+``memo`` is the session memo for expensive intermediates that many
+queries of one session re-derive from the same source table (the
+shingle frame, the MinHash pair list, the top-k sets, the LM scores,
+the sales frames). ``memo(spark, name, sf_dir, table, build)`` runs
+``build`` once, eagerly ``localCheckpoint``s the result (lineage
+severed, so later cache churn cannot invalidate it) and hands the SAME
+frame to every later caller while ``{sf_dir}/{table}.parquet`` is
+unchanged. ``source_tag`` is the one answer to "has that source
+changed?": a rewrite of the file or of any part file of a parquet
+directory changes the tag, the next call rebuilds, and the superseded
+checkpoint is released rather than pinned for the rest of the session.
+Entries are weak-keyed by the session object, so a new session
+recomputes. Only memoize frames whose checkpointed size is small
+relative to executor memory.
 
-``managed_cache`` is the shared fix: it releases every cache registered
-by PREVIOUS queries, then caches and registers the new frame(s). Since
-the driver, bench, and tests all construct queries serially
-(construct -> execute -> construct ...), by the time the next
-cache-creating query is constructed the prior query's execution is
-over and its cache is dead weight.
-
-A query that needs SEVERAL caches must register them in one call
-(``managed_cache(a, b)``) or pass ``extend=True`` on later calls --
-a plain second call releases the first (round-7 advice: a composite
-plan built from two cache-using sub-queries would otherwise silently
-lose the first sub-query's cache at construction time and recompute
-it at execution).
-If an already-constructed query is re-executed after another query was
+``managed_cache`` is for a frame that one query's plan consumes more
+than once. The cache must survive the query's execution -- so the query
+cannot unpersist it itself -- but without any release it outlives the
+query: a correctness sweep or a test session that constructs and
+collects a hundred queries in one SparkSession would accumulate every
+one of those caches. ``managed_cache`` releases the cache registered by
+the PREVIOUS query, then caches and registers the new frame. Queries
+are constructed serially (construct -> execute -> construct ...), so by
+the time the next cache-creating query is constructed the prior query's
+execution is over and its cache is dead weight. If an
+already-constructed query is re-executed after another query was
 constructed, it simply recomputes without the cache: correctness never
 depends on a cache being present. Code whose RESULT validity depends
 on a live cache (e.g. corrupt-record-column scans) must NOT register
@@ -32,75 +35,95 @@ sources/csv_folder.read_csv_with_bad_records).
 
 from __future__ import annotations
 
+import os
 import weakref
-from typing import Callable, Hashable
+from typing import Callable
 
 from pyspark.sql import DataFrame
 
 _ACTIVE: list[DataFrame] = []
 
-# ---------------------------------------------------------------------------
-# Session-scoped eager-checkpoint memo (round 7): several query
-# families re-derive the same expensive intermediate in every query of
-# a serial sweep (the LSH-verified pair list; the synthetic sales_raw
-# frame and its cleaned output). The memo computes it once per (live
-# SparkSession, key), eagerly localCheckpoints it (lineage severed, so
-# later cache churn can't invalidate it), and hands the SAME frame to
-# every same-session consumer. Weak-keyed by the session object: a new
-# session recomputes, a stopped-but-alive one is detected and evicted,
-# so the driver's independent per-query invocations stay correct.
-# Unlike managed_cache, nothing here is ever released mid-sweep -- only
-# use it for intermediates whose checkpointed size is small relative
-# to executor memory.
-# ---------------------------------------------------------------------------
-
+#: session -> {(name, sf_dir): (source tag, checkpointed frame)}
 _MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
-def session_checkpoint_memo(
-    spark, key: Hashable, builder: Callable[[], DataFrame]
+def source_tag(sf_dir: str, table: str):
+    """Stat-level content tag of ``{sf_dir}/{table}.parquet``.
+
+    A single file tags as (inode, mtime_ns, size); a Spark-written
+    parquet directory tags as each child's (name, inode, mtime_ns,
+    size), which changes whenever Spark rewrites the dataset (part
+    files are replaced, never edited in place). The inode catches a
+    same-size replace within one coarse timestamp tick: parquet writers
+    write a new file and rename it. A missing path tags as None, so a
+    memo built against an absent source misses once it appears.
+    """
+    p = os.path.join(os.path.normpath(sf_dir), f"{table}.parquet")
+    try:
+        st = os.stat(p)
+    except OSError:
+        return None
+    if not os.path.isdir(p):
+        return (st.st_ino, st.st_mtime_ns, st.st_size)
+    children = []
+    try:
+        for name in sorted(os.listdir(p)):
+            try:
+                cst = os.stat(os.path.join(p, name))
+            except OSError:
+                continue
+            children.append((name, cst.st_ino, cst.st_mtime_ns, cst.st_size))
+    except OSError:
+        pass
+    return tuple(children)
+
+
+def memo(
+    spark, name: str, sf_dir: str, table: str, build: Callable[[], DataFrame]
 ) -> DataFrame:
+    """The checkpointed ``build()`` for (``name``, ``sf_dir``), rebuilt
+    when ``{sf_dir}/{table}.parquet`` changes or the session stopped."""
     per = _MEMO.setdefault(spark, {})
-    df = per.get(key)
-    if df is not None:
-        try:
-            if not spark.sparkContext._jsc.sc().isStopped():
-                return df
-        except Exception:  # noqa: BLE001 -- dead JVM handle: rebuild
-            pass
-        per.pop(key, None)
-    df = builder().localCheckpoint(eager=True)
-    per[key] = df
+    tag = source_tag(sf_dir, table)
+    hit = per.get((name, sf_dir))
+    if hit is not None:
+        if hit[0] == tag and _alive(spark):
+            return hit[1]
+        _release(hit[1])
+    df = build().localCheckpoint(eager=True)
+    per[(name, sf_dir)] = (tag, df)
     return df
 
 
-def evict_session_memos(spark) -> None:
-    """Drop every checkpoint memo held for ``spark``.
+def _alive(spark) -> bool:
+    try:
+        return not spark.sparkContext._jsc.sc().isStopped()
+    except Exception:  # noqa: BLE001 -- dead JVM handle: rebuild
+        return False
 
-    The memo has no data-change detection: it is keyed on (session,
-    logical key) only, so a same-session caller that REWRITES the files
-    under a reused sf_dir (scale smokes, fixture-mutating tests) must
-    evict before re-querying or it silently reads the stale checkpoint.
-    This is the public spelling of that eviction (round-8 advice; the
-    smoke and tests previously reached into the private ``_MEMO``)."""
+
+def _release(df: DataFrame) -> None:
+    """Unpersist the blocks behind a ``localCheckpoint``ed frame (its
+    plan is a LogicalRDD over the checkpointed RDD). Best-effort: a
+    stopped session must not turn hygiene into an error."""
+    try:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except Exception:  # noqa: BLE001
+        pass
+
+
+def evict_session_memos(spark) -> None:
+    """Drop every memo entry held for ``spark``, so the next call of
+    each memo rebuilds from its source."""
     _MEMO.pop(spark, None)
 
 
-def managed_cache(
-    *dfs: DataFrame, extend: bool = False
-) -> DataFrame | tuple[DataFrame, ...]:
-    """Release caches registered by previous queries, then cache and
-    register ``dfs``. Returns the single frame, or the tuple when
-    several are given. ``extend=True`` skips the release so a
-    composite plan can register caches across several calls without
-    unpersisting its own earlier ones."""
-    if not extend:
-        release_caches()
-    out = []
-    for df in dfs:
-        out.append(df.cache())
-        _ACTIVE.append(out[-1])
-    return out[0] if len(out) == 1 else tuple(out)
+def managed_cache(df: DataFrame) -> DataFrame:
+    """Release the caches registered by previous queries, then cache
+    and register ``df``."""
+    release_caches()
+    _ACTIVE.append(df.cache())
+    return _ACTIVE[-1]
 
 
 def release_caches() -> None:

@@ -25,9 +25,8 @@ narrow token-count projection, a staged frame), register the narrow
 projection through :func:`..cache.managed_cache` instead of relying
 on plan-level reuse -- uncached, each consumer silently re-runs the
 full build (e.g. the whole corpus LM score, twice). Pattern instances:
-``curriculum.q_curriculum_stage_mix``/``_pacing_schedule``,
-``currpack._packed_docs`` (two caches, ``extend=True``),
-``sharding.q_shard_manifest_tokens``. Composite plans that layer
-caches use ``extend=True`` so later registrations do not unpersist
-their own earlier ones.
+``currpack._packed_docs`` (the staged frame),
+``sharding.q_shard_manifest_tokens``. A frame that several QUERIES of
+one session share (the LM score feed, curriculum's scored documents)
+goes through :func:`..cache.memo` instead.
 """

@@ -47,6 +47,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import memo
 from ..sources.testdata import load_table
 from .intmath import exact_ppm_spark, exact_ppm_sql
 from .rankframe import distinct_score_rank_frame
@@ -64,8 +65,6 @@ def _scored_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the n_tokens split it adds on top of the score feed is itself a
     full text scan. Four narrow columns per scored doc -- the same
     footprint class as the score memo."""
-    from ..cache import session_checkpoint_memo
-    from ..source_tags import sf_content_tag
 
     def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
@@ -74,11 +73,7 @@ def _scored_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
         )
 
-    return session_checkpoint_memo(
-        spark,
-        ("scored_docs", sf_dir, sf_content_tag(sf_dir, "documents")),
-        build,
-    )
+    return memo(spark, "scored_docs", sf_dir, "documents", build)
 
 
 def q_curriculum_decile_bounds(

@@ -54,7 +54,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cache import managed_cache
+from ..cache import managed_cache, memo
 from ..session import shuffle_partitions
 from ..sources.testdata import load_table
 from .textstats import fingerprint_col
@@ -131,13 +131,9 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized checkpointed shingle frame. Six registered
     dedup queries start from this exact frame; before round 7 each
     rebuilt it (text scan + split + in-array shingle transform,
-    ~0.8s/query at sf0.1) behind its own managed_cache. The memoized
-    eager checkpoint (see cache.session_checkpoint_memo) materializes
-    it once per (live session, sf_dir) -- a few MB of string arrays --
-    and every consumer reads the severed-lineage frame, which also
-    retires the per-query cache registrations for it."""
-    from ..cache import session_checkpoint_memo
-    from ..source_tags import sf_content_tag
+    ~0.8s/query at sf0.1). The memo (see cache.memo) materializes it
+    once per session and documents content -- a few MB of string
+    arrays -- and every consumer reads the severed-lineage frame."""
 
     def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
@@ -145,14 +141,7 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", F.split(F.trim(F.col("text")), _WS_CLASS).alias("w")
         ).select("doc_id", F.expr(_SHINGLES_EXPR).alias("s"))
 
-    # the content tag in the key makes a same-session rewrite of the
-    # documents parquet MISS the memo (r9 advice; same spelling as the
-    # similarity/kmeans memos)
-    return session_checkpoint_memo(
-        spark,
-        ("doc_shingles", sf_dir, sf_content_tag(sf_dir, "documents")),
-        build,
-    )
+    return memo(spark, "doc_shingles", sf_dir, "documents", build)
 
 
 def _verify_jaccard(cand: DataFrame, sh: DataFrame) -> DataFrame:
@@ -651,10 +640,9 @@ def _minhash_signature(ex: DataFrame) -> DataFrame:
 # consume the LSH-verified pair list (dedup_minhash_lsh itself,
 # clusters, incremental batch, triangle census), and each paid the full
 # ~2.2s shingle->band pipeline independently in a serial sweep. The
-# feed is computed ONCE per (live session, sf_dir) via the shared
-# session_checkpoint_memo (eager localCheckpoint, weak-keyed by the
-# SparkSession; see cache.py) -- the result is a few thousand int-pair
-# rows, so the pinned blocks are negligible while the recompute is the
+# feed is computed ONCE per session and documents content via
+# cache.memo -- the result is a few thousand int-pair rows, so the
+# pinned blocks are negligible while the recompute is the
 # dominant cost of the whole dedup family.
 #
 # 100 TB size bound (r18 audit): the checkpoint holds exactly the
@@ -672,12 +660,8 @@ def _minhash_signature(ex: DataFrame) -> DataFrame:
 
 
 def minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..cache import session_checkpoint_memo
-    from ..source_tags import sf_content_tag
-
-    return session_checkpoint_memo(
-        spark,
-        ("minhash_pairs", sf_dir, sf_content_tag(sf_dir, "documents")),
+    return memo(
+        spark, "minhash_pairs", sf_dir, "documents",
         lambda: _minhash_pairs_plan(spark, sf_dir),
     )
 

@@ -52,6 +52,7 @@ from typing import Callable, Iterator
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import memo
 from ..sources.testdata import load_table
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
@@ -167,15 +168,10 @@ def _final_assignment_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Final (vec_id, e, cluster_id, dist) frame, session-memoized with
-    a content tag (three queries share it; a rewrite of the vectors
-    parquet misses the memo automatically)."""
-    from ..cache import session_checkpoint_memo
-    from ..source_tags import sf_content_tag
-
-    return session_checkpoint_memo(
-        spark,
-        ("kmeans_assignment", sf_dir, sf_content_tag(sf_dir, "embeddings")),
+    """Final (vec_id, e, cluster_id, dist) frame, session-memoized
+    (three queries share it)."""
+    return memo(
+        spark, "kmeans_assignment", sf_dir, "embeddings",
         lambda: _final_assignment_build(spark, sf_dir),
     )
 

@@ -22,6 +22,7 @@ from typing import Callable, Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import memo
 from ..sources.testdata import load_table
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
@@ -459,24 +460,18 @@ def lm_doc_scores(docs: DataFrame) -> DataFrame:
 # (this ranker, the band-prune, the curriculum trio via _scored_docs,
 # the pack_* trio), and in a serial sweep each rebuilt the full
 # explode + three-join score pipeline independently (~0.7-1s each at
-# sf0.1). The feed is computed once per (live session, sf_dir) via the
-# shared session_checkpoint_memo -- the result is three int64 columns
-# per scored document (|docs| x 24 bytes, far below the shingle memo's
-# footprint), so the pinned blocks are negligible while the recompute
-# was the dominant shared cost of the curriculum/pack families. A
-# rewrite of documents.parquet misses the memo (content tag), and a
-# new session -- every driver/bench process -- recomputes from the
-# parquet. ``lm_doc_scores`` itself stays frame-in/frame-out for
-# arbitrary inputs (tests score synthetic corpora through it).
+# sf0.1). The feed is computed once per session and documents content
+# via cache.memo -- the result is three int64 columns per scored
+# document (|docs| x 24 bytes, far below the shingle memo's footprint),
+# so the pinned blocks are negligible while the recompute was the
+# dominant shared cost of the curriculum/pack families.
+# ``lm_doc_scores`` itself stays frame-in/frame-out for arbitrary
+# inputs (tests score synthetic corpora through it).
 
 
 def lm_doc_scores_for(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..cache import session_checkpoint_memo
-    from ..source_tags import sf_content_tag
-
-    return session_checkpoint_memo(
-        spark,
-        ("lm_doc_scores", sf_dir, sf_content_tag(sf_dir, "documents")),
+    return memo(
+        spark, "lm_doc_scores", sf_dir, "documents",
         lambda: lm_doc_scores(load_table(spark, sf_dir, "documents")),
     )
 

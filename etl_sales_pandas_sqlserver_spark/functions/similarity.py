@@ -53,6 +53,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import memo, source_tag
 from ..sources.testdata import load_table
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
@@ -171,19 +172,11 @@ def q_topk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     but producing it is the family's most expensive scan (full corpus x
     query batch), and THREE same-session consumers re-derive it:
     the registered ``similarity_topk_exact`` query, ``q_knn_label``,
-    and ``q_ann_recall_contract``'s baseline. The session checkpoint
-    memo (round-8; same mechanism as the minhash pair feed) runs the
-    scan once per session and hands every consumer the same severed
-    40-row frame."""
-    from ..cache import session_checkpoint_memo
-    from ..source_tags import sf_content_tag
-
-    # the content tag makes a same-session rewrite of the vectors
-    # parquet MISS the memo automatically (round-8 advice) -- no
-    # caller-side evict_session_memos discipline required
-    return session_checkpoint_memo(
-        spark,
-        ("similarity_exact_topk", sf_dir, sf_content_tag(sf_dir, "embeddings")),
+    and ``q_ann_recall_contract``'s baseline. The session memo
+    (cache.memo) runs the scan once per session and hands every
+    consumer the same severed 40-row frame."""
+    return memo(
+        spark, "similarity_exact_topk", sf_dir, "embeddings",
         lambda: _topk_exact_build(spark, sf_dir),
     )
 
@@ -249,23 +242,14 @@ def _memoized_topk(variant: str, build: SparkQuery) -> SparkQuery:
     registered membership contract, once by the recall contract's
     union — and each consumption repeats the variant's corpus scan
     (plus, for IVF, the quantizer-training sample collect). The result
-    is n_queries x k rows; the memo (round-8, same mechanism as the
-    exact baseline above) checkpoints it once per (session, sf_dir).
+    is n_queries x k rows; the memo (same as the exact baseline above)
+    checkpoints it once per session and embeddings content.
     Determinism holds by construction: seeded hyperplanes / seeded
     Lloyd's, no runtime RNG anywhere."""
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..cache import session_checkpoint_memo
-        from ..source_tags import sf_content_tag
-
-        return session_checkpoint_memo(
-            spark,
-            (
-                "similarity_topk",
-                variant,
-                sf_dir,
-                sf_content_tag(sf_dir, "embeddings"),
-            ),
+        return memo(
+            spark, f"similarity_topk_{variant}", sf_dir, "embeddings",
             lambda: build(spark, sf_dir),
         )
 
@@ -450,17 +434,16 @@ def build_ann_index(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the bucket-partitioned vector index (idempotent per
     SOURCE CONTENT; rebuild = delete the directory).
 
-    The cache key fingerprints the source file's absolute path, mtime
-    and size -- not just the directory basename -- so regenerating the
-    embeddings table, or two corpora that share a basename, can never
-    serve a stale index (the indexed variant's contract is result
-    identity with the scan-based ANN)."""
+    The cache key fingerprints the source's absolute path and
+    ``cache.source_tag`` -- not just the directory basename -- so
+    regenerating the embeddings table, or two corpora that share a
+    basename, can never serve a stale index (the indexed variant's
+    contract is result identity with the scan-based ANN)."""
     import hashlib
 
     src = os.path.join(os.path.normpath(sf_dir), "embeddings.parquet")
-    st = os.stat(src)
     tag = hashlib.md5(
-        f"{os.path.abspath(src)}:{st.st_mtime_ns}:{st.st_size}".encode()
+        f"{os.path.abspath(src)}:{source_tag(sf_dir, 'embeddings')}".encode()
     ).hexdigest()[:16]
     path = os.path.join(_ANN_INDEX_ROOT, tag)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):

@@ -2,7 +2,6 @@ from .pipeline import run_sales_pipeline
 from .sales_etl import (
     clean_valid_sales,
     categorize_invalid_sales,
-    categorize_invalid_sales_single_pass,
     monthly_summary,
     format_dates_for_sink,
 )
@@ -10,7 +9,6 @@ from .sales_etl import (
 __all__ = [
     "clean_valid_sales",
     "categorize_invalid_sales",
-    "categorize_invalid_sales_single_pass",
     "monthly_summary",
     "format_dates_for_sink",
     "run_sales_pipeline",

@@ -10,7 +10,9 @@ flow Spark-first:
   cached because three independent sinks consume it (SURVEY.md
   section 4.1 -- plan reuse across actions is not automatic);
 - the three composite transforms stay lazy until their sink write, so
-  each output executes as a single fused plan;
+  each output executes as a single fused plan; the invalid rows are
+  sorted by tier inside the one sink task, so the CSV lists every N,
+  then every A, then every D row like the reference's concat;
 - row counts come from ``df.observe()`` accumulators collected during
   the sink writes themselves (observability.PipelineObserver) -- the
   reference's 'filas=%d' logging (main.py:99,146,174) with zero extra
@@ -27,6 +29,7 @@ import os
 from typing import Any
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 from ..observability import PipelineObserver, category_counts, configure_logging
 from ..sources.csv_folder import read_sales_folder
@@ -76,7 +79,7 @@ def run_sales_pipeline(
         categorize_invalid_sales(raw, nan_literal=nan_literal),
         "invalid",
         *category_counts("Reason", ("N", "A", "D")),
-    )
+    ).coalesce(1).sortWithinPartitions(F.expr("instr('NAD', Reason)"))
     summary = obs.observe_rows(monthly_summary(valid), "summary")
 
     os.makedirs(output_dir, exist_ok=True)

@@ -13,7 +13,7 @@ Key cross-cutting semantics preserved (SURVEY.md section 1.5):
   a partition of the input.
 - Reason precedence N > A > D: each tier sees only rows the previous
   tiers rejected.
-- union keeps duplicate rows verbatim.
+- duplicate input rows are kept verbatim.
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..operators import dates, dedup, nulls, numeric, setops, strings
+from ..operators import dates, dedup, nulls, numeric, strings
 
 SALES_COLS = ["Sale_ID", "Product", "Amount", "Date", "Audit_Date"]
 
@@ -65,70 +65,37 @@ def clean_valid_sales(
     return nulls.drop_null(out, "Date", "Audit_Date")
 
 
-def _categorize_prepare(df: DataFrame, nan_literal: bool) -> DataFrame:
-    """Shared ID/Product normalization for Q2 (reference main.py:112-113):
-    ``astype(str).str.upper()`` on Sale_ID and
-    ``astype(str).str.split('-').str[-1].str.upper()`` on Product.
+def categorize_invalid_sales(df: DataFrame, nan_literal: bool = True) -> DataFrame:
+    """Q2 -- invalid-sales categorization (reference main.py:106-151),
+    one pass over the input and one shuffle, duplicate rows kept
+    verbatim.
 
+    Sale_ID and Product are normalized first (main.py:112-113:
+    ``astype(str).str.upper()`` and
+    ``astype(str).str.split('-').str[-1].str.upper()``).
     ``nan_literal=True`` reproduces the pandas quirk where NULL becomes
     the string 'NAN' (so Sale_ID/Product nulls are invisible to the
     any-null check, main.py:119 -- golden-verified); False keeps NULLs,
     which then DO trigger Reason 'N' (engine-default, documented delta).
-    """
-    sid = strings.cast_str_nan("Sale_ID") if nan_literal else F.col("Sale_ID").cast("string")
-    prod = strings.cast_str_nan("Product") if nan_literal else F.col("Product").cast("string")
-    return df.withColumn("Sale_ID", strings.upper(sid)).withColumn(
-        "Product", strings.upper(strings.split_last(prod))
-    )
 
-
-def categorize_invalid_sales(df: DataFrame, nan_literal: bool = True) -> DataFrame:
-    """Q2 golden-parity shape -- three filtered branches + union-all
-    (reference main.py:106-151), preserving the output row ORDER-group
-    semantics of ``pd.concat([N rows, A rows, D rows])`` and duplicate
-    rows verbatim.
-
-    Tier precedence N > A > D:
+    Tier precedence N > A > D, as a single ``when`` cascade:
     - N: any column NULL (after the 'NAN' stringification, main.py:119);
     - A: among non-null rows, Amount string lacks USD/EUR (main.py:127-131);
     - D: among currency-valid rows, every member of a Sale_ID group with
-      >1 row (main.py:136-138).
+      >1 row (main.py:136-138) -- ONE window on Sale_ID counts only the
+      rows that passed N and A.
+
+    The reference concatenates the N, A and D rows in that order; a
+    sink that must reproduce the grouping sorts on the tier (see
+    plans/pipeline.run_sales_pipeline).
     """
-    base = _categorize_prepare(df, nan_literal)
-    cols = base.columns
-
-    is_null = nulls.any_null(cols)
-    n_rows = base.filter(is_null).withColumn("Reason", F.lit("N"))
-
-    not_null = base.filter(~is_null)
-    amount_str = strings.upper(strings.cast_str_nan("Amount"))
-    bad_amount = ~strings.contains_any(amount_str, "USD|EUR")
-    a_rows = not_null.filter(bad_amount).withColumn("Reason", F.lit("A"))
-
-    survivors = not_null.filter(~bad_amount)
-    d_rows = dedup.rows_in_dup_groups(survivors, ["Sale_ID"]).withColumn(
-        "Reason", F.lit("D")
+    sid = strings.cast_str_nan("Sale_ID") if nan_literal else F.col("Sale_ID").cast("string")
+    prod = strings.cast_str_nan("Product") if nan_literal else F.col("Product").cast("string")
+    base = df.withColumn("Sale_ID", strings.upper(sid)).withColumn(
+        "Product", strings.upper(strings.split_last(prod))
     )
 
-    return setops.union_by_name([n_rows, a_rows, d_rows])
-
-
-def categorize_invalid_sales_single_pass(
-    df: DataFrame, nan_literal: bool = True
-) -> DataFrame:
-    """Q2 scalable shape -- one pass, one shuffle.
-
-    The branch version scans the input three times and unions; at scale
-    the input scan dominates, so this variant computes Reason with a
-    single ``when`` cascade plus ONE window on Sale_ID that counts only
-    tier-surviving rows (a conditional count reproduces "duplicated
-    among rows that passed N and A"). Agrees with
-    :func:`categorize_invalid_sales` row-for-row (tested).
-    """
-    base = _categorize_prepare(df, nan_literal)
-    cols = base.columns
-
-    is_null = nulls.any_null(cols)
+    is_null = nulls.any_null(base.columns)
     amount_str = strings.upper(strings.cast_str_nan("Amount"))
     bad_amount = ~strings.contains_any(amount_str, "USD|EUR")
     survives_na = ~is_null & ~bad_amount

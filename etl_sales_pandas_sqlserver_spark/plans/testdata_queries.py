@@ -34,6 +34,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import memo
 from ..operators import dedup, setops
 from ..sources.testdata import load_table
 from . import sales_etl
@@ -175,41 +176,26 @@ _VALID_SALES_SQL = f"""
 # Session-memoized checkpoints for the sales family (round 7): three
 # registered queries re-derive the synthetic raw frame (Q1/Q2/Q3) and
 # two of them additionally re-run the whole Q1 cleaning chain. The
-# memo (cache.session_checkpoint_memo) materializes each once per
-# (live session, sf_dir); the driver's independent invocations still
-# compute from scratch, a serial sweep pays the string-building and
-# dedup window once.
+# memo (cache.memo) materializes each once per session and lineitem
+# content; a serial sweep pays the string-building and dedup window
+# once.
 
 
 def _sales_raw_cp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..cache import session_checkpoint_memo
-    from ..source_tags import sf_content_tag
-
-    # lineitem content tag in the key: a same-session rewrite of the
-    # source parquet misses the memo instead of serving the stale
-    # checkpoint (r9 advice; same spelling as the similarity memos)
-    return session_checkpoint_memo(
-        spark,
-        ("sales_raw", sf_dir, sf_content_tag(sf_dir, "lineitem")),
+    return memo(
+        spark, "sales_raw", sf_dir, "lineitem",
         lambda: synth_sales_raw(spark, sf_dir),
     )
 
 
 def _valid_sales_cp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..cache import session_checkpoint_memo
-    from ..source_tags import sf_content_tag
-
     def build() -> DataFrame:
         order = [F.col(c).asc_nulls_last() for c in _DEDUP_ORDER_COLS]
         return sales_etl.clean_valid_sales(
             _sales_raw_cp(spark, sf_dir), order=order
         )
 
-    return session_checkpoint_memo(
-        spark,
-        ("sales_valid", sf_dir, sf_content_tag(sf_dir, "lineitem")),
-        build,
-    )
+    return memo(spark, "sales_valid", sf_dir, "lineitem", build)
 
 
 def q_clean_valid_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -262,10 +248,9 @@ _INVALID_SALES_SQL = f"""
 
 
 def q_categorize_invalid_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q2 (reference main.py:106-151), single-pass scalable shape; the
-    branch+union golden shape is tested to agree in tests/."""
+    """Q2 (reference main.py:106-151)."""
     raw = _sales_raw_cp(spark, sf_dir)
-    out = sales_etl.categorize_invalid_sales_single_pass(raw, nan_literal=True)
+    out = sales_etl.categorize_invalid_sales(raw, nan_literal=True)
     return out.select(
         F.col("Sale_ID").alias("sale_id"),
         F.col("Product").alias("product"),

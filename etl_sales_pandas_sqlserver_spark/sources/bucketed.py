@@ -9,8 +9,8 @@ every join on that key reads bucket i against bucket i with NO exchange
 on either side -- the plan shows a SortMergeJoin whose children are
 bare bucketed scans (pinned in tests/test_plan_shapes.py).
 
-The build is content-fingerprinted and idempotent per source file
-(path + mtime + size), same convention as the ANN serving index
+The build is content-fingerprinted and idempotent per source
+(path + ``cache.source_tag``), same convention as the ANN serving index
 (functions/similarity.build_ann_index): querying pays bucketed-read
 cost, the one-time build is amortized. Tables register in the session's
 in-memory catalog with an external path under the system temp dir, so
@@ -26,6 +26,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import source_tag
 from .testdata import load_table
 
 _BUCKETED_ROOT = os.path.join(tempfile.gettempdir(), "spark_graft_bucketed")
@@ -40,9 +41,8 @@ N_BUCKETS = 8
 
 def _tag(sf_dir: str, table: str) -> str:
     src = os.path.join(os.path.normpath(sf_dir), f"{table}.parquet")
-    st = os.stat(src)
     return hashlib.md5(
-        f"{os.path.abspath(src)}:{st.st_mtime_ns}:{st.st_size}:{N_BUCKETS}".encode()
+        f"{os.path.abspath(src)}:{source_tag(sf_dir, table)}:{N_BUCKETS}".encode()
     ).hexdigest()[:16]
 
 

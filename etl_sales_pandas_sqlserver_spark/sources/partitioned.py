@@ -11,7 +11,7 @@ for row-group stats pruning). A daily-partitioned events table with a
 happens.
 
 Same build convention as :mod:`.bucketed`: the partitioned copy is
-content-fingerprinted per source file (path + mtime + size) and
+content-fingerprinted per source (path + ``cache.source_tag``) and
 written once under the system temp dir -- queries pay partitioned-read
 cost, the one-time layout build is amortized, and nothing lands in the
 repo.
@@ -25,6 +25,7 @@ import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from ..cache import source_tag
 from .testdata import load_table
 
 _PARTITIONED_ROOT = os.path.join(tempfile.gettempdir(), "spark_graft_partitioned")
@@ -32,9 +33,8 @@ _PARTITIONED_ROOT = os.path.join(tempfile.gettempdir(), "spark_graft_partitioned
 
 def _tag(sf_dir: str, table: str, part_col: str) -> str:
     src = os.path.join(os.path.normpath(sf_dir), f"{table}.parquet")
-    st = os.stat(src)
     return hashlib.md5(
-        f"{os.path.abspath(src)}:{st.st_mtime_ns}:{st.st_size}:{part_col}".encode()
+        f"{os.path.abspath(src)}:{source_tag(sf_dir, table)}:{part_col}".encode()
     ).hexdigest()[:16]
 
 

@@ -47,14 +47,11 @@ def write_single_csv(
         .csv(tmp)
     )
     part = glob.glob(os.path.join(tmp, "part-*.csv"))[0]
-    if with_bom:
-        # utf-8-sig parity with the reference (etl_utils.py:125): prepend BOM
-        with open(part, "rb") as fh:
-            data = fh.read()
-        with open(path, "wb") as fh:
-            fh.write(b"\xef\xbb\xbf" + data)
-    else:
-        shutil.copyfile(part, path)
+    with open(part, "rb") as src, open(path, "wb") as dst:
+        if with_bom:
+            # utf-8-sig parity with the reference (etl_utils.py:125)
+            dst.write(b"\xef\xbb\xbf")
+        shutil.copyfileobj(src, dst)
     shutil.rmtree(tmp)
     return path
 

@@ -28,11 +28,11 @@ explicit non-goal.
 
 from __future__ import annotations
 
-import os
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..cache import source_tag
 from ..schemas import TESTDATA_TABLES
 
 #: Per-session memo of the VERIFIED read schema (a StructType — never
@@ -46,11 +46,10 @@ from ..schemas import TESTDATA_TABLES
 #: read produced; later calls build a FRESH reader with that schema —
 #: a fresh plan with fresh expression ids, so self-joins of two
 #: ``load_table`` results stay unambiguous, and each execution still
-#: scans the parquet from disk. Keyed by (sf_dir, table, file
-#: mtime+size) so a same-session rewrite of the parquet (fixture-
-#: mutating tests, scale smokes) misses the memo and re-verifies, and
-#: weak-keyed by the session object so a new session — every driver /
-#: bench process — re-infers from the files.
+#: scans the parquet from disk. Entries are (sf_dir, table) ->
+#: (``cache.source_tag``, schema), so a same-session rewrite of the
+#: parquet file or directory re-verifies, and the dict is weak-keyed by
+#: the session object so a new session re-infers from the files.
 _SCHEMA_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
@@ -58,25 +57,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TESTDATA_TABLES:
         raise KeyError(f"unknown testdata table: {name!r}")
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
-    try:
-        # the (mtime_ns, size) change-detection key is only reliable
-        # for a single regular parquet FILE: a Spark-written parquet
-        # DIRECTORY can have a part file rewritten without the
-        # directory stat changing, so anything else skips the memo and
-        # takes the always-infer path (r17 advice)
-        st = os.stat(path)
-        key = (
-            (sf_dir, name, st.st_mtime_ns, st.st_size)
-            if os.path.isfile(path)
-            else None
-        )
-    except OSError:
-        # missing file: fall through and let spark.read raise its
-        # usual error (no memo entry for a nonexistent path)
-        key = None
+    # a missing path tags as None: spark.read raises its usual error
+    tag = source_tag(sf_dir, name)
     per = _SCHEMA_MEMO.setdefault(spark, {})
-    if key is not None and key in per:
-        return spark.read.schema(per[key]).parquet(path)
+    hit = per.get((sf_dir, name))
+    if tag is not None and hit is not None and hit[0] == tag:
+        return spark.read.schema(hit[1]).parquet(path)
     df = spark.read.parquet(path)
     expected = {f.name for f in TESTDATA_TABLES[name].fields}
     got = set(df.columns)
@@ -84,8 +70,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise ValueError(f"{name}: missing columns {sorted(expected - got)}")
     if name == "events":
         df = spark.read.schema(TESTDATA_TABLES[name]).parquet(path)
-    if key is not None:
-        per[key] = df.schema
+    if tag is not None:
+        per[(sf_dir, name)] = (tag, df.schema)
     return df
 
 

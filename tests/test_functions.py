@@ -548,8 +548,9 @@ def test_similarity_memo_misses_on_source_rewrite(spark, sf_small, tmp_path):
 
 def test_dedup_memos_miss_on_documents_rewrite(spark, sf_small, tmp_path):
     """r10: the doc_shingles / minhash_pairs memos carry a documents
-    content tag in their keys — a same-session rewrite of the corpus
-    parquet under a reused sf_dir must rebuild, not serve stale."""
+    content tag — a same-session rewrite of the corpus parquet under a
+    reused sf_dir must rebuild, not serve stale, and the rebuild must
+    release the superseded checkpoints instead of pinning them."""
     import shutil
 
     import duckdb
@@ -564,6 +565,8 @@ def test_dedup_memos_miss_on_documents_rewrite(spark, sf_small, tmp_path):
     n_before = _doc_shingles(spark, sf).count()
     assert n_before > 0
     minhash_verified_pairs(spark, sf).count()
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    n_pinned = persistent().size()
 
     con = duckdb.connect()
     con.execute(
@@ -579,6 +582,7 @@ def test_dedup_memos_miss_on_documents_rewrite(spark, sf_small, tmp_path):
     assert all(r.a_id % 2 == 0 and r.b_id % 2 == 0 for r in pairs), (
         "minhash_pairs memo served stale pre-rewrite pairs"
     )
+    assert persistent().size() <= n_pinned, "superseded checkpoints stay pinned"
 
 
 def test_sales_memos_miss_on_lineitem_rewrite(spark, sf_small, tmp_path):

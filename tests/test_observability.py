@@ -77,6 +77,9 @@ def test_pipeline_csv_outputs(pipeline_result):
     summary = pd.read_csv(outs["Ventas_Resumen_Mensual"], encoding="utf-8-sig")
     assert len(valid) == 5 and len(invalid) == 7 and len(summary) == 5
     assert set(invalid["Reason"]) == {"N", "A", "D"}
+    # the reference's concat order: every N row, then every A, then every D
+    tiers = ["NAD".index(r) for r in invalid["Reason"]]
+    assert tiers == sorted(tiers)
     # dates are sink-formatted strings (Q4, main.py:201-210)
     assert valid["Date"].str.match(r"\d{4}-\d{2}-\d{2}").all()
     # BOM actually present on disk

@@ -111,14 +111,6 @@ def test_garbage_date_not_reason_n(invalid, valid):
     assert valid.filter(F.col("Sale_ID") == "BADDATE").count() == 0
 
 
-def test_single_pass_agrees_with_branch_shape(raw):
-    a = sales_etl.categorize_invalid_sales(raw)
-    b = sales_etl.categorize_invalid_sales_single_pass(raw)
-    ka = sorted([tuple(r) for r in a.collect()], key=str)
-    kb = sorted([tuple(r) for r in b.collect()], key=str)
-    assert ka == kb
-
-
 def test_monthly_summary_lexicographic_sort(spark, valid):
     out = sales_etl.monthly_summary(valid)
     rows = out.collect()

@@ -57,6 +57,9 @@ def test_write_single_csv_bom(spark, tmp_path):
     assert data.startswith(b"\xef\xbb\xbf")  # utf-8-sig parity (etl_utils.py:125)
     assert b"k,v" in data and b"a,1.5" in data
     assert os.path.isfile(out) and not os.path.isdir(out + "._spark_tmp")
+    plain = str(tmp_path / "plain.csv")
+    write_single_csv(df, plain, with_bom=False)
+    assert data == b"\xef\xbb\xbf" + open(plain, "rb").read()
 
 
 def test_jdbc_url_construction():
@@ -316,6 +319,29 @@ def test_events_ts_pinned_ltz_under_ntz_inference(spark, sf_small):
         ev.select(F.unix_micros("ts")).limit(1).collect()
     finally:
         spark.conf.set(key, old)
+
+
+def test_load_table_memo_sees_parquet_directory_rewrite(spark, sf_small, tmp_path):
+    """The schema memo covers a Spark-written parquet DIRECTORY, and a
+    rewrite of that directory re-verifies: dropping a required column
+    must raise the missing-columns error, not serve the memoized
+    schema."""
+    import pytest
+
+    from etl_sales_pandas_sqlserver_spark.sources.testdata import (
+        _SCHEMA_MEMO,
+        load_table,
+    )
+
+    sf = str(tmp_path)
+    src = spark.read.parquet(f"{sf_small}/nation.parquet")
+    src.write.parquet(f"{sf}/nation.parquet")
+    assert load_table(spark, sf, "nation").count() == src.count()
+    assert (sf, "nation") in _SCHEMA_MEMO[spark]
+
+    src.drop("n_regionkey").write.mode("overwrite").parquet(f"{sf}/nation.parquet")
+    with pytest.raises(ValueError, match="missing columns"):
+        load_table(spark, sf, "nation")
 
 
 def test_csv_bad_record_quarantine(spark, tmp_path):

@@ -120,11 +120,10 @@ SKEW_FAMILIES: dict[str, list[str]] = {
 
 
 def _fingerprint() -> str:
-    stats = [
-        str(os.stat(os.path.join(SRC, f"{t}.parquet")).st_mtime_ns)
-        for t in ("documents", "embeddings", "customer", "events")
-    ]
-    return f"{_GEN_VERSION}:{SRC}:{':'.join(stats)}"
+    from etl_sales_pandas_sqlserver_spark.cache import source_tag
+
+    tags = [source_tag(SRC, t) for t in ("documents", "embeddings", "customer", "events")]
+    return f"{_GEN_VERSION}:{SRC}:{tags}"
 
 
 def ensure_data() -> None:
