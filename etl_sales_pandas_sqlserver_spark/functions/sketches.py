@@ -241,6 +241,26 @@ def _cms_estimate(hash_a, table, item: int) -> int:
     return best
 
 
+def _check_cms_replay(spark: SparkSession, raw: bytes) -> None:
+    """Raise unless ``_cms_estimate`` equals the JVM's
+    ``CountMinSketch.estimateCount`` for every probe user of one
+    sketch. The replay copies a private format and hash, so a Spark
+    upgrade that keeps the layout but changes the hash would pass
+    ``_parse_cms``'s guard and skew every estimate."""
+    jvm_sketch = spark._jvm.org.apache.spark.util.sketch.CountMinSketch.readFrom(
+        bytearray(raw)
+    )
+    hash_a, table = _parse_cms(raw)
+    for uid in range(_CMS_PROBE_USERS):
+        ours = _cms_estimate(hash_a, table, uid)
+        theirs = jvm_sketch.estimateCount(uid)
+        if ours != theirs:
+            raise RuntimeError(
+                f"CountMinSketch replay disagrees with the JVM for user "
+                f"{uid}: replayed {ours}, estimateCount {theirs}"
+            )
+
+
 def q_cms_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _with_day_bucket(load_table(spark, sf_dir, "events"))
     cms_args = (F.lit(_CMS_EPS), F.lit(_CMS_CONF), F.lit(_CMS_SEED))
@@ -249,12 +269,14 @@ def q_cms_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count_min_sketch("user_id", *cms_args).alias("sk"))
         .collect()
     )
-    direct = {
-        r.event_type: _parse_cms(bytes(r.sk))
-        for r in ev.groupBy("event_type")
+    direct_rows = (
+        ev.groupBy("event_type")
         .agg(F.count_min_sketch("user_id", *cms_args).alias("sk"))
         .collect()
-    }
+    )
+    if direct_rows:
+        _check_cms_replay(spark, bytes(direct_rows[0].sk))
+    direct = {r.event_type: _parse_cms(bytes(r.sk)) for r in direct_rows}
     # Merge and probe the sketches in-process (r18, guide §7.3): the
     # old spelling shipped every per-day binary through
     # CountMinSketch.readFrom + mergeInPlace and probed via

@@ -29,3 +29,15 @@ def sf_small() -> str:
 @pytest.fixture(scope="session")
 def sf_oracle() -> str:
     return SF_ORACLE
+
+
+@pytest.fixture
+def driver_ansi(spark):
+    """Run a test under DRIVER conditions (Spark 4 default = ANSI ON):
+    the engine's tuned test session sets ansi=false. Restore after.
+    Opt in per module with
+    ``pytestmark = pytest.mark.usefixtures("driver_ansi")``."""
+    before = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    yield
+    spark.conf.set("spark.sql.ansi.enabled", before)

@@ -9,28 +9,13 @@ Usage: python tests/driver_sim.py [--only name1,name2]
 from __future__ import annotations
 
 import argparse
-import math
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def canon(df):
-    df = df.copy()
-    df.columns = [c.lower() for c in df.columns]
-    df = df[sorted(df.columns)]
-    return sorted(
-        [
-            tuple(
-                None if (isinstance(v, float) and math.isnan(v)) else v
-                for v in r
-            )
-            for r in df.itertuples(index=False)
-        ],
-        key=str,
-    )
+from tests.oracle_compare import compare_frames, run_oracle  # noqa: E402
 
 
 def main() -> int:
@@ -39,7 +24,6 @@ def main() -> int:
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     args = ap.parse_args()
 
-    import duckdb
     from pyspark.sql import SparkSession
 
     spark = (
@@ -52,15 +36,6 @@ def main() -> int:
     import __spark_entry__ as e
 
     print("entry rows:", len(e.entry(spark).collect()), flush=True)
-
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem "
-        "events documents embeddings"
-    ).split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{args.sf}/{t}.parquet'"
-        )
 
     q, o = e.queries(), e.oracle_sql()
     names = list(q)
@@ -79,15 +54,9 @@ def main() -> int:
         if name not in o:
             print(f"{name} rows-only {len(sdf)} ({dt:.1f}s)", flush=True)
             continue
-        odf = con.execute(o[name]).df()
-        ok = (
-            len(sdf) == len(odf)
-            and sorted(c.lower() for c in sdf.columns)
-            == sorted(c.lower() for c in odf.columns)
-            and canon(sdf) == canon(odf)
-        )
-        print(f"{name} {ok} ({dt:.1f}s)", flush=True)
-        if not ok:
+        problems = compare_frames(sdf, run_oracle(o[name], args.sf))
+        print(f"{name} {not problems} ({dt:.1f}s)", *problems, flush=True)
+        if problems:
             fails.append(name)
     print("FAILURES:", fails or "none", flush=True)
     return 1 if fails else 0

@@ -1,13 +1,15 @@
-"""Local re-implementation of the driver's Spark-vs-DuckDB compare:
-row-count + column set + order-insensitive value comparison.
+"""The one Spark-vs-DuckDB oracle compare: row count + column set +
+order-insensitive value comparison, the driver's definition of
+"oracle-equal".
 
-Used by tests/test_oracle_parity.py to pre-validate every
-``queries()``/``oracle_sql()`` pair before the driver does.
+Used by the parity gate (tests/test_oracle_parity.py), the hostile
+suites, ``tools/hostile_sweep.py`` and ``tests/driver_sim.py``.
 """
 
 from __future__ import annotations
 
 import math
+import os
 
 import duckdb
 import pandas as pd
@@ -19,14 +21,15 @@ _CONNS: dict[str, duckdb.DuckDBPyConnection] = {}
 
 
 def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    """Shared per-SF DuckDB connection with the testdata views mounted."""
+    """Shared per-SF DuckDB connection with the testdata views mounted
+    (only the tables present: a view over a missing parquet raises)."""
     con = _CONNS.get(sf_dir)
     if con is None:
         con = duckdb.connect()
         for name in TESTDATA_TABLES:
-            con.execute(
-                f"CREATE VIEW {name} AS SELECT * FROM '{sf_dir}/{name}.parquet'"
-            )
+            path = f"{sf_dir}/{name}.parquet"
+            if os.path.exists(path):
+                con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{path}'")
         _CONNS[sf_dir] = con
     return con
 
@@ -35,16 +38,13 @@ def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
     return oracle_connection(sf_dir).execute(sql).df()
 
 
-def _canon(df: pd.DataFrame) -> pd.DataFrame:
+def _canonical(df: pd.DataFrame) -> pd.DataFrame:
     df = df.copy()
     df.columns = [c.lower() for c in df.columns]
     df = df[sorted(df.columns)]
     # canonicalize cell values to hashable, float-tolerant forms
     for c in df.columns:
-        if df[c].dtype == object:
-            df[c] = df[c].map(lambda v: _canon_value(v))
-        else:
-            df[c] = df[c].map(_canon_value)
+        df[c] = df[c].map(_canon_value)
     return df.sort_values(by=list(df.columns), key=lambda s: s.map(str)).reset_index(
         drop=True
     )
@@ -68,16 +68,21 @@ def _canon_value(v):
 
 def compare(spark_df, oracle_df: pd.DataFrame) -> list[str]:
     """Return a list of mismatch descriptions (empty == parity)."""
+    return compare_frames(spark_df.toPandas(), oracle_df)
+
+
+def compare_frames(sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
+    """``compare`` over two pandas frames (Spark side already
+    collected)."""
     problems: list[str] = []
-    sdf = spark_df.toPandas()
-    if len(sdf) != len(oracle_df):
-        problems.append(f"row count: spark={len(sdf)} oracle={len(oracle_df)}")
+    if len(sdf) != len(odf):
+        problems.append(f"row count: spark={len(sdf)} oracle={len(odf)}")
     scols = sorted(c.lower() for c in sdf.columns)
-    ocols = sorted(c.lower() for c in oracle_df.columns)
+    ocols = sorted(c.lower() for c in odf.columns)
     if scols != ocols:
         problems.append(f"columns: spark={scols} oracle={ocols}")
         return problems
-    a, b = _canon(sdf), _canon(oracle_df)
+    a, b = _canonical(sdf), _canonical(odf)
     if len(a) == len(b):
         neq = []
         for c in a.columns:
@@ -94,8 +99,16 @@ def compare(spark_df, oracle_df: pd.DataFrame) -> list[str]:
 
 
 def _val_eq(x, y) -> bool:
+    # a float column turns _canon_value's None back into NaN
     if isinstance(x, float) and isinstance(y, float):
-        return x == y or (math.isnan(x) and math.isnan(y)) or math.isclose(
-            x, y, rel_tol=0, abs_tol=0
-        )
+        return x == y or (math.isnan(x) and math.isnan(y))
     return x == y
+
+
+def compare_query(spark, name: str, sf_dir: str) -> list[str]:
+    """``compare`` for registered query ``name`` on ``sf_dir``."""
+    import __spark_entry__ as e
+
+    return compare(
+        e.queries()[name](spark, sf_dir), run_oracle(e.oracle_sql()[name], sf_dir)
+    )

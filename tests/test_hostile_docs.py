@@ -15,12 +15,11 @@ DOWN to ``[0, -1]`` where DuckDB's ``range(0, 0)`` is empty, so a
 
 from __future__ import annotations
 
-import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from .oracle_compare import compare
+from .oracle_compare import compare, run_oracle
 
 #: doc_id % 3 picks the modality (0=image, 1=audio), so ids are chosen
 #: to land empty/non-ASCII docs in BOTH the BMP and WAV populations
@@ -62,14 +61,6 @@ def hostile_sf_dir(tmp_path_factory):
     )
     pq.write_table(tbl, str(d / "documents.parquet"))
     return str(d)
-
-
-def _oracle(sql: str, sf_dir: str):
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
-    )
-    return con.execute(sql).df()
 
 
 _AFFECTED = [
@@ -127,7 +118,7 @@ def test_hostile_docs_parity(spark, hostile_sf_dir, name):
     fn = e.queries()[name]
     sql = e.oracle_sql()[name]
     sdf = fn(spark, hostile_sf_dir)
-    odf = _oracle(sql, hostile_sf_dir)
+    odf = run_oracle(sql, hostile_sf_dir)
     problems = compare(sdf, odf)
     assert not problems, f"{name}: {problems}"
     # the populations must be non-trivial: non-ASCII docs survive both

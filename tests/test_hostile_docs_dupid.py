@@ -8,32 +8,35 @@ one of those ORDER BYs a real tie. Ties are where engines are allowed
 to disagree (and where one engine can disagree WITH ITSELF across
 runs) — the classic silent-nondeterminism trap.
 
-r15 full-registry sweep (``tools/hostile_sweep.py documents_dupid``):
-**186/186 green, zero mismatches, zero errors.** The green is
-structural, not lucky: the tied rows share the tie key, and every
-query's OUTPUT projection either aggregates over the tie (per-shard /
-per-sequence / per-source rollups are order-insensitive within the
-tie) or emits rows keyed by the id itself, so swapping the two tied
-rows produces the SAME output set. This suite pins a representative
-slice of the most tie-sensitive families so a future query that
-breaks the pattern (e.g. emitting a row_number alongside a non-key
-column) fails here first.
+Full-registry sweep (``tools/hostile_sweep.py documents_dupid``):
+**181 green / 5 mismatch / 0 errors.** (The r15 sweep reported
+186/186, but its table was one row: an unparenthesized
+``ORDER BY doc_id LIMIT 1`` bound to the whole ``UNION ALL``.)
 
-No uniqueness tripwire is needed for THIS axis — the registry is
-proven green even when uniqueness breaks — but the sweep stays the
-reclassification tool if a pin ever flips.
+- Green, and structurally so: the tied rows share the tie key, and
+  every tie-sensitive query's OUTPUT projection either aggregates over
+  the tie (per-shard / per-sequence / per-source rollups are
+  order-insensitive within the tie) or emits rows keyed by the id
+  itself, so swapping the two tied rows produces the SAME output set.
+  This suite pins a representative slice of those families so a
+  future query that breaks the pattern (e.g. emitting a row_number
+  alongside a non-key column) fails here first.
+- Mismatch: the id-keyed PAIR families ``dedup_jaccard_prefix_filter``,
+  ``dedup_containment_pairs``, ``dedup_ngram_jaccard``,
+  ``dedup_simhash`` and ``dedup_decontaminate`` emit a different
+  number of ``(a_id, b_id)`` pairs on the two engines once one id
+  carries two texts. Not pinned yet; the tripwire below keeps them
+  latent.
 """
 
 from __future__ import annotations
 
-import math
-import shutil
-
-import duckdb
 import pytest
 
-_COPY = ["region", "nation", "customer", "supplier", "part",
-         "orders", "lineitem", "events", "embeddings"]
+from .hostile_tables import build
+from .oracle_compare import compare_query
+
+pytestmark = pytest.mark.usefixtures("driver_ansi")
 
 #: the most tie-sensitive doc-keyed queries: global/stratified prefix
 #: sums, keep-first windows, fingerprint dedup with DIFFERENT text
@@ -54,64 +57,33 @@ _ROBUST = [
 ]
 
 
-@pytest.fixture(autouse=True)
-def _driver_ansi(spark):
-    before = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    yield
-    spark.conf.set("spark.sql.ansi.enabled", before)
-
-
 @pytest.fixture(scope="module")
 def dupid_sf(sf_small, tmp_path_factory) -> str:
     d = tmp_path_factory.mktemp("hostile_dupid")
-    con = duckdb.connect()
-    con.execute(
-        f"""
-        COPY (
-          SELECT * FROM '{sf_small}/documents.parquet'
-          UNION ALL SELECT doc_id,
-            'different text for the duplicated id with enough tokens',
-            lang, source, 55
-          FROM '{sf_small}/documents.parquet' ORDER BY doc_id LIMIT 1
-        ) TO '{d}/documents.parquet' (FORMAT PARQUET)
-        """
-    )
-    for t in _COPY:
-        shutil.copy(f"{sf_small}/{t}.parquet", str(d / f"{t}.parquet"))
-    return str(d)
-
-
-def _oracle(sql: str, sf_dir: str):
-    con = duckdb.connect()
-    for t in _COPY + ["documents"]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    return con.execute(sql).df()
-
-
-def _canon(df):
-    df = df.copy()
-    df.columns = [c.lower() for c in df.columns]
-    df = df[sorted(df.columns)]
-    return sorted(
-        [
-            tuple(
-                None if (isinstance(v, float) and math.isnan(v)) else v
-                for v in r
-            )
-            for r in df.itertuples(index=False)
-        ],
-        key=str,
-    )
+    return build("documents_dupid", sf_small, d)
 
 
 @pytest.mark.parametrize("name", _ROBUST)
 def test_duplicate_doc_id_stays_oracle_green(spark, dupid_sf, name):
-    import __spark_entry__ as e
+    problems = compare_query(spark, name, dupid_sf)
+    assert not problems, f"{name}: {problems}"
 
-    sdf = e.queries()[name](spark, dupid_sf).toPandas()
-    odf = _oracle(e.oracle_sql()[name], dupid_sf)
-    assert len(sdf) == len(odf), (name, len(sdf), len(odf))
-    assert _canon(sdf) == _canon(odf), name
+
+def test_testdata_doc_ids_are_unique():
+    """Tripwire: the pair-family mismatches above stay latent only
+    while driver documents carry unique doc_ids at every sf."""
+    import glob
+    import os
+
+    import duckdb
+
+    from .conftest import SF_SMALL
+
+    dirs = sorted(glob.glob(os.path.join(os.path.dirname(SF_SMALL), "sf*")))
+    assert dirs, "driver testdata missing"
+    for d in dirs:
+        n, n_ids = duckdb.sql(
+            f"SELECT count(*), count(DISTINCT doc_id) "
+            f"FROM '{d}/documents.parquet'"
+        ).fetchone()
+        assert n == n_ids, f"{d}: {n - n_ids} duplicated doc_ids"

@@ -30,14 +30,15 @@ Full 185-query sweep result: **172 green / 13 divergent-or-crash.**
 
 from __future__ import annotations
 
-import math
-import shutil
-
 import duckdb
 import pytest
 
-_COPY = ["region", "nation", "customer", "supplier", "part",
-         "orders", "lineitem", "events", "embeddings"]
+from .hostile_tables import build
+from .oracle_compare import compare_frames, compare_query, run_oracle
+
+# several null-text behaviors are ANSI-sensitive
+# (size(split(NULL)), divide-by-zero)
+pytestmark = pytest.mark.usefixtures("driver_ansi")
 
 _ROBUST = [
     "dedup_exact",
@@ -101,75 +102,16 @@ _KNOWN_NOT_GREEN = [
 ]
 
 
-@pytest.fixture(autouse=True)
-def _driver_ansi(spark):
-    """Classifications below were made under DRIVER conditions (Spark 4
-    default = ANSI ON); the test session is the engine's tuned one
-    (ansi=false), and several null-text behaviors are ANSI-sensitive
-    (size(split(NULL)), divide-by-zero). Flip ANSI on for this module
-    only and restore after."""
-    before = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    yield
-    spark.conf.set("spark.sql.ansi.enabled", before)
-
-
 @pytest.fixture(scope="module")
 def null_docs_sf(sf_small, tmp_path_factory) -> str:
     d = tmp_path_factory.mktemp("hostile_docs_nulls")
-    con = duckdb.connect()
-    con.execute(
-        f"""
-        COPY (
-          SELECT * FROM '{sf_small}/documents.parquet'
-          UNION ALL SELECT NULL,
-            'null id doc with several tokens here', 'en', 'web', 37
-          UNION ALL SELECT 900001, NULL, 'en', 'web', NULL
-          UNION ALL SELECT 900002,
-            'null lang doc with plenty of tokens', NULL, 'web', 35
-          UNION ALL SELECT 900003,
-            'null source doc with plenty of tokens', 'en', NULL, 37
-        ) TO '{d}/documents.parquet' (FORMAT PARQUET)
-        """
-    )
-    for t in _COPY:
-        shutil.copy(f"{sf_small}/{t}.parquet", str(d / f"{t}.parquet"))
-    return str(d)
-
-
-def _oracle(sql: str, sf_dir: str):
-    con = duckdb.connect()
-    for t in _COPY + ["documents"]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    return con.execute(sql).df()
-
-
-def _canon(df):
-    df = df.copy()
-    df.columns = [c.lower() for c in df.columns]
-    df = df[sorted(df.columns)]
-    return sorted(
-        [
-            tuple(
-                None if (isinstance(v, float) and math.isnan(v)) else v
-                for v in r
-            )
-            for r in df.itertuples(index=False)
-        ],
-        key=str,
-    )
+    return build("documents", sf_small, d)
 
 
 @pytest.mark.parametrize("name", _ROBUST)
 def test_null_fields_stay_oracle_green(spark, null_docs_sf, name):
-    import __spark_entry__ as e
-
-    sdf = e.queries()[name](spark, null_docs_sf).toPandas()
-    odf = _oracle(e.oracle_sql()[name], null_docs_sf)
-    assert len(sdf) == len(odf), (name, len(sdf), len(odf))
-    assert _canon(sdf) == _canon(odf), name
+    problems = compare_query(spark, name, null_docs_sf)
+    assert not problems, f"{name}: {problems}"
 
 
 @pytest.mark.parametrize("name", _KNOWN_NOT_GREEN)
@@ -183,8 +125,8 @@ def test_null_fields_known_not_green(spark, null_docs_sf, name):
         sdf = e.queries()[name](spark, null_docs_sf).toPandas()
     except Exception:
         return  # crash: loud, counted as pinned
-    odf = _oracle(e.oracle_sql()[name], null_docs_sf)
-    assert len(sdf) != len(odf) or _canon(sdf) != _canon(odf), (
+    odf = run_oracle(e.oracle_sql()[name], null_docs_sf)
+    assert compare_frames(sdf, odf), (
         f"{name} now agrees on null fields — move it to _ROBUST"
     )
 

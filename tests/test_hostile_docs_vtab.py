@@ -27,14 +27,12 @@ existing doc ONLY by \\x0B-vs-space):
 
 from __future__ import annotations
 
-import math
-import shutil
-
-import duckdb
 import pytest
 
-_COPY = ["region", "nation", "customer", "supplier", "part",
-         "orders", "lineitem", "events", "embeddings"]
+from .hostile_tables import build
+from .oracle_compare import compare_query, run_oracle
+
+pytestmark = pytest.mark.usefixtures("driver_ansi")
 
 #: representative slice of the 180 vtab-green queries: the r16
 #: fingerprint atomic group + the grains flipped in earlier rounds
@@ -73,85 +71,16 @@ _ROBUST = [
 _KNOWN_MISMATCH: list[str] = []
 
 
-@pytest.fixture(autouse=True)
-def _driver_ansi(spark):
-    """Match driver conditions (Spark 4 default = ANSI ON)."""
-    before = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    yield
-    spark.conf.set("spark.sql.ansi.enabled", before)
-
-
 @pytest.fixture(scope="module")
 def vtab_sf(sf_small, tmp_path_factory) -> str:
     d = tmp_path_factory.mktemp("hostile_vtab")
-    con = duckdb.connect()
-    # precondition (r16 ADVICE): doc 910002 is doc 1's text with
-    # spaces swapped for \x0B — the collision test below is vacuous
-    # (twin == original) unless doc 1 exists and contains a space.
-    # Fail HERE with a clear message if testdata regeneration breaks
-    # that, not downstream with a confusing fingerprint assertion.
-    pre = con.execute(
-        f"SELECT text FROM '{sf_small}/documents.parquet' WHERE doc_id = 1"
-    ).fetchall()
-    assert len(pre) == 1 and pre[0][0] and " " in pre[0][0], (
-        "vtab fixture precondition: sf_small doc_id 1 must exist and "
-        "contain at least one space (doc 910002 is built as its "
-        "\\x0B-for-space twin)"
-    )
-    con.execute(
-        f"""
-        COPY (
-          SELECT * FROM '{sf_small}/documents.parquet'
-          UNION ALL SELECT 910001,
-            'alpha' || chr(11) || 'beta gamma' || chr(11) ||
-            'delta epsilon zeta eta theta',
-            'en', 'web', 40
-          UNION ALL SELECT 910002,
-            (SELECT replace(text, ' ', chr(11))
-             FROM '{sf_small}/documents.parquet' WHERE doc_id = 1),
-            'en', 'web', 40
-        ) TO '{d}/documents.parquet' (FORMAT PARQUET)
-        """
-    )
-    for t in _COPY:
-        shutil.copy(f"{sf_small}/{t}.parquet", str(d / f"{t}.parquet"))
-    return str(d)
-
-
-def _oracle(sql: str, sf_dir: str):
-    con = duckdb.connect()
-    for t in _COPY + ["documents"]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    return con.execute(sql).df()
-
-
-def _canon(df):
-    df = df.copy()
-    df.columns = [c.lower() for c in df.columns]
-    df = df[sorted(df.columns)]
-    return sorted(
-        [
-            tuple(
-                None if (isinstance(v, float) and math.isnan(v)) else v
-                for v in r
-            )
-            for r in df.itertuples(index=False)
-        ],
-        key=str,
-    )
+    return build("documents_vtab", sf_small, d)
 
 
 @pytest.mark.parametrize("name", _ROBUST)
 def test_vtab_stays_oracle_green(spark, vtab_sf, name):
-    import __spark_entry__ as e
-
-    sdf = e.queries()[name](spark, vtab_sf).toPandas()
-    odf = _oracle(e.oracle_sql()[name], vtab_sf)
-    assert len(sdf) == len(odf), (name, len(sdf), len(odf))
-    assert _canon(sdf) == _canon(odf), name
+    problems = compare_query(spark, name, vtab_sf)
+    assert not problems, f"{name}: {problems}"
 
 
 @pytest.mark.parametrize("name", _KNOWN_MISMATCH)
@@ -160,11 +89,7 @@ def test_vtab_known_mismatch_is_pinned(spark, vtab_sf, name):
     asserted to DISAGREE with its oracle on \\x0B text, so a pinned
     divergence can neither be forgotten (this fails when fixed) nor
     silently regress (the sweep axis catches new mismatches)."""
-    import __spark_entry__ as e
-
-    sdf = e.queries()[name](spark, vtab_sf).toPandas()
-    odf = _oracle(e.oracle_sql()[name], vtab_sf)
-    assert len(sdf) != len(odf) or _canon(sdf) != _canon(odf), (
+    assert compare_query(spark, name, vtab_sf), (
         f"{name} now agrees on vertical-tab text — move it to _ROBUST"
     )
 
@@ -182,7 +107,7 @@ def test_fingerprint_vtab_collision_is_real(spark, vtab_sf):
     sdf = e.queries()["text_fingerprint"](spark, vtab_sf).toPandas()
     by_id = dict(zip(sdf["doc_id"], sdf["fingerprint"]))
     assert by_id[910002] != by_id[1]
-    odf = _oracle(e.oracle_sql()["text_fingerprint"], vtab_sf)
+    odf = run_oracle(e.oracle_sql()["text_fingerprint"], vtab_sf)
     oby = dict(zip(odf["doc_id"], odf["fingerprint"]))
     assert oby[910002] != oby[1]
     assert by_id[910002] == oby[910002]

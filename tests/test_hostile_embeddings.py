@@ -37,18 +37,14 @@ behavior is THREE-TIERED:
 
 from __future__ import annotations
 
-import math
-import shutil
-
 import duckdb
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
-_TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents",
-]
+from .hostile_tables import build
+from .oracle_compare import compare_query, run_oracle
+
+# hostile-input behavior can be ANSI-sensitive
+pytestmark = pytest.mark.usefixtures("driver_ansi")
 
 #: oracle-backed embedding consumers proven robust to NULL-element and
 #: zero-norm vectors (tier 1)
@@ -63,83 +59,22 @@ _ROBUST = [
 ]
 
 
-@pytest.fixture(autouse=True)
-def _driver_ansi(spark):
-    """Run this module under DRIVER conditions (Spark 4 default = ANSI
-    ON): the engine's tuned test session sets ansi=false, and hostile-
-    input behavior can be ANSI-sensitive. Restore after."""
-    before = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    yield
-    spark.conf.set("spark.sql.ansi.enabled", before)
-
-
-def _poisoned_dir(sf_small, tmp_path_factory, poison: str) -> str:
-    tbl = pq.read_table(f"{sf_small}/embeddings.parquet")
-    dim = len(tbl.column("embedding")[0])
-    embs = [[v.as_py() for v in row] for row in tbl.column("embedding")]
-    embs[-1] = [0.0] * dim  # zero-norm: cosine undefined
-    if poison == "null":
-        embs[-2] = [None] + [0.1] * (dim - 1)
-    else:
-        embs[-2] = [float("nan")] + [0.1] * (dim - 1)
-    out = pa.table(
-        {
-            "vec_id": tbl.column("vec_id"),
-            "embedding": pa.array(embs, pa.list_(pa.float32())),
-            "label": tbl.column("label"),
-        }
-    )
-    d = tmp_path_factory.mktemp(f"hostile_emb_{poison}")
-    pq.write_table(out, str(d / "embeddings.parquet"))
-    for t in _TABLES:
-        shutil.copy(f"{sf_small}/{t}.parquet", str(d / f"{t}.parquet"))
-    return str(d)
-
-
 @pytest.fixture(scope="module")
 def null_sf(sf_small, tmp_path_factory) -> str:
-    return _poisoned_dir(sf_small, tmp_path_factory, "null")
+    d = tmp_path_factory.mktemp("hostile_emb_null")
+    return build("embeddings", sf_small, d)
 
 
 @pytest.fixture(scope="module")
 def nan_sf(sf_small, tmp_path_factory) -> str:
-    return _poisoned_dir(sf_small, tmp_path_factory, "nan")
-
-
-def _oracle(sql: str, sf_dir: str):
-    con = duckdb.connect()
-    for t in _TABLES + ["embeddings"]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    return con.execute(sql).df()
-
-
-def _canon(df):
-    df = df.copy()
-    df.columns = [c.lower() for c in df.columns]
-    df = df[sorted(df.columns)]
-    return sorted(
-        [
-            tuple(
-                None if (isinstance(v, float) and math.isnan(v)) else v
-                for v in r
-            )
-            for r in df.itertuples(index=False)
-        ],
-        key=str,
-    )
+    d = tmp_path_factory.mktemp("hostile_emb_nan")
+    return build("embeddings_nan", sf_small, d)
 
 
 @pytest.mark.parametrize("name", _ROBUST)
 def test_null_and_zero_vectors_stay_oracle_green(spark, null_sf, name):
-    import __spark_entry__ as e
-
-    sdf = e.queries()[name](spark, null_sf).toPandas()
-    odf = _oracle(e.oracle_sql()[name], null_sf)
-    assert len(sdf) == len(odf), (name, len(sdf), len(odf))
-    assert _canon(sdf) == _canon(odf), name
+    problems = compare_query(spark, name, null_sf)
+    assert not problems, f"{name}: {problems}"
 
 
 def test_kmeans_null_element_raises_envelope_error(spark, null_sf):
@@ -164,7 +99,7 @@ def test_nan_is_the_known_embedding_divergence(spark, nan_sf):
     import __spark_entry__ as e
 
     sdf = e.queries()["dedup_embedding_cosine"](spark, nan_sf).toPandas()
-    odf = _oracle(e.oracle_sql()["dedup_embedding_cosine"], nan_sf)
+    odf = run_oracle(e.oracle_sql()["dedup_embedding_cosine"], nan_sf)
     assert len(odf) > len(sdf)
 
 

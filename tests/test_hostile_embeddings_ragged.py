@@ -27,16 +27,14 @@ classification this module pins:
 
 from __future__ import annotations
 
-import math
-import shutil
-
 import duckdb
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
-_COPY = ["region", "nation", "customer", "supplier", "part",
-         "orders", "lineitem", "events", "documents"]
+from .hostile_tables import build
+from .oracle_compare import compare_query
+
+# the element_at out-of-bounds raise is ANSI-sensitive
+pytestmark = pytest.mark.usefixtures("driver_ansi")
 
 #: cross-engine green on ragged vectors (parity-pinned below)
 _ROBUST = [
@@ -61,68 +59,16 @@ _KNOWN_LOUD = [
 ]
 
 
-@pytest.fixture(autouse=True)
-def _driver_ansi(spark):
-    """Classifications were made under DRIVER conditions (ANSI ON) —
-    the element_at out-of-bounds raise is ANSI-sensitive."""
-    before = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    yield
-    spark.conf.set("spark.sql.ansi.enabled", before)
-
-
 @pytest.fixture(scope="module")
 def ragged_sf(sf_small, tmp_path_factory) -> str:
     d = tmp_path_factory.mktemp("hostile_ragged")
-    tbl = pq.read_table(f"{sf_small}/embeddings.parquet")
-    dim = len(tbl.column("embedding")[0])
-    embs = [[v.as_py() for v in row] for row in tbl.column("embedding")]
-    embs[-1] = []                 # empty vector
-    embs[-2] = [0.25] * (dim // 2)  # wrong dimension
-    out = pa.table({
-        "vec_id": tbl.column("vec_id"),
-        "embedding": pa.array(embs, pa.list_(pa.float32())),
-        "label": tbl.column("label"),
-    })
-    pq.write_table(out, str(d / "embeddings.parquet"))
-    for t in _COPY:
-        shutil.copy(f"{sf_small}/{t}.parquet", str(d / f"{t}.parquet"))
-    return str(d)
-
-
-def _oracle(sql: str, sf_dir: str):
-    con = duckdb.connect()
-    for t in _COPY + ["embeddings"]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    return con.execute(sql).df()
-
-
-def _canon(df):
-    df = df.copy()
-    df.columns = [c.lower() for c in df.columns]
-    df = df[sorted(df.columns)]
-    return sorted(
-        [
-            tuple(
-                None if (isinstance(v, float) and math.isnan(v)) else v
-                for v in r
-            )
-            for r in df.itertuples(index=False)
-        ],
-        key=str,
-    )
+    return build("embeddings_ragged", sf_small, d)
 
 
 @pytest.mark.parametrize("name", _ROBUST)
 def test_ragged_vectors_stay_oracle_green(spark, ragged_sf, name):
-    import __spark_entry__ as e
-
-    sdf = e.queries()[name](spark, ragged_sf).toPandas()
-    odf = _oracle(e.oracle_sql()[name], ragged_sf)
-    assert len(sdf) == len(odf), (name, len(sdf), len(odf))
-    assert _canon(sdf) == _canon(odf), name
+    problems = compare_query(spark, name, ragged_sf)
+    assert not problems, f"{name}: {problems}"
 
 
 @pytest.mark.parametrize("name", _KNOWN_LOUD)

@@ -30,16 +30,14 @@ found three tiers, mirrors of the embeddings audit
 
 from __future__ import annotations
 
-import math
-import shutil
-
 import duckdb
 import pytest
 
-_TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "documents", "embeddings",
-]
+from .hostile_tables import build
+from .oracle_compare import compare_frames, compare_query, run_oracle
+
+# hostile-input behavior can be ANSI-sensitive
+pytestmark = pytest.mark.usefixtures("driver_ansi")
 
 _ROBUST = [
     "approx_distinct_users",
@@ -81,76 +79,16 @@ _ROBUST = [
 _KNOWN_DIVERGENT: list[str] = []
 
 
-@pytest.fixture(autouse=True)
-def _driver_ansi(spark):
-    """Run this module under DRIVER conditions (Spark 4 default = ANSI
-    ON): the engine's tuned test session sets ansi=false, and hostile-
-    input behavior can be ANSI-sensitive. Restore after."""
-    before = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    yield
-    spark.conf.set("spark.sql.ansi.enabled", before)
-
-
 @pytest.fixture(scope="module")
 def hostile_events_sf(sf_small, tmp_path_factory) -> str:
     d = tmp_path_factory.mktemp("hostile_events")
-    con = duckdb.connect()
-    con.execute(
-        f"""
-        COPY (
-          SELECT * FROM '{sf_small}/events.parquet'
-          UNION ALL SELECT 100001, NULL::TIMESTAMP, 7, 'view', 1.5, '{{}}'
-          UNION ALL SELECT 100002, NULL::TIMESTAMP, 8, 'click', 2.5, '{{}}'
-          UNION ALL SELECT 100003, TIMESTAMP '2024-03-02 05:00:00',
-                           NULL, 'view', 1.0, '{{}}'
-          UNION ALL SELECT 100004, TIMESTAMP '2024-03-02 06:00:00',
-                           NULL, 'purchase', 3.0, '{{}}'
-          UNION ALL SELECT 100005, TIMESTAMP '2024-03-02 07:00:00',
-                           9, NULL, 4.0, '{{}}'
-          UNION ALL SELECT 100006, TIMESTAMP '2024-03-02 08:00:00',
-                           10, 'view', NULL, NULL
-        ) TO '{d}/events.parquet' (FORMAT PARQUET)
-        """
-    )
-    for t in _TABLES:
-        shutil.copy(f"{sf_small}/{t}.parquet", str(d / f"{t}.parquet"))
-    return str(d)
-
-
-def _oracle(sql: str, sf_dir: str):
-    con = duckdb.connect()
-    for t in _TABLES + ["events"]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    return con.execute(sql).df()
-
-
-def _canon(df):
-    df = df.copy()
-    df.columns = [c.lower() for c in df.columns]
-    df = df[sorted(df.columns)]
-    return sorted(
-        [
-            tuple(
-                None if (isinstance(v, float) and math.isnan(v)) else v
-                for v in r
-            )
-            for r in df.itertuples(index=False)
-        ],
-        key=str,
-    )
+    return build("events", sf_small, d)
 
 
 @pytest.mark.parametrize("name", _ROBUST)
 def test_null_rows_stay_oracle_green(spark, hostile_events_sf, name):
-    import __spark_entry__ as e
-
-    sdf = e.queries()[name](spark, hostile_events_sf).toPandas()
-    odf = _oracle(e.oracle_sql()[name], hostile_events_sf)
-    assert len(sdf) == len(odf), (name, len(sdf), len(odf))
-    assert _canon(sdf) == _canon(odf), name
+    problems = compare_query(spark, name, hostile_events_sf)
+    assert not problems, f"{name}: {problems}"
 
 
 @pytest.mark.parametrize("name", _KNOWN_DIVERGENT)
@@ -158,11 +96,7 @@ def test_null_ts_is_a_known_divergence(spark, hostile_events_sf, name):
     """Tier 3 pin: these DO diverge on null ts today (NULLS FIRST vs
     NULLS LAST window ordering). When a respell lands, this test flips
     loudly and the query moves to the _ROBUST list."""
-    import __spark_entry__ as e
-
-    sdf = e.queries()[name](spark, hostile_events_sf).toPandas()
-    odf = _oracle(e.oracle_sql()[name], hostile_events_sf)
-    assert len(sdf) != len(odf) or _canon(sdf) != _canon(odf), (
+    assert compare_query(spark, name, hostile_events_sf), (
         f"{name} now agrees on null ts — move it to _ROBUST and drop "
         "the stale divergence note"
     )
@@ -202,12 +136,8 @@ _STREAM_KNOWN_NOT_GREEN: list[str] = []
 def test_streaming_null_rows_stay_oracle_green(
     spark, hostile_events_sf, name
 ):
-    import __spark_entry__ as e
-
-    sdf = e.queries()[name](spark, hostile_events_sf).toPandas()
-    odf = _oracle(e.oracle_sql()[name], hostile_events_sf)
-    assert len(sdf) == len(odf), (name, len(sdf), len(odf))
-    assert _canon(sdf) == _canon(odf), name
+    problems = compare_query(spark, name, hostile_events_sf)
+    assert not problems, f"{name}: {problems}"
 
 
 @pytest.mark.parametrize("name", _STREAM_KNOWN_NOT_GREEN)
@@ -220,8 +150,8 @@ def test_streaming_null_ts_known_not_green(spark, hostile_events_sf, name):
         sdf = e.queries()[name](spark, hostile_events_sf).toPandas()
     except Exception:
         return  # crash: loud, counted as pinned
-    odf = _oracle(e.oracle_sql()[name], hostile_events_sf)
-    assert len(sdf) != len(odf) or _canon(sdf) != _canon(odf), (
+    odf = run_oracle(e.oracle_sql()[name], hostile_events_sf)
+    assert compare_frames(sdf, odf), (
         f"{name} now agrees on null ts — move it to _STREAM_ROBUST"
     )
 

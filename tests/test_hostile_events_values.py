@@ -32,14 +32,14 @@ agrees bit-for-bit.
 
 from __future__ import annotations
 
-import math
-import shutil
-
 import duckdb
 import pytest
 
-_COPY = ["region", "nation", "customer", "supplier", "part",
-         "orders", "lineitem", "documents", "embeddings"]
+from .hostile_tables import build
+from .oracle_compare import compare_query, run_oracle
+
+# the null-vs-raise classification is ANSI-dependent
+pytestmark = pytest.mark.usefixtures("driver_ansi")
 
 #: representative robust slice: the families the poisoned values flow
 #: through (double aggs, time bucketing at extreme ts, sessionization,
@@ -88,75 +88,16 @@ _BOTH_ENGINES_RAISE = [
 _SPARK_NULLS_ORACLE_RAISES: list[str] = []
 
 
-@pytest.fixture(autouse=True)
-def _driver_ansi(spark):
-    """DRIVER conditions (ANSI ON) — the null-vs-raise classification
-    is ANSI-dependent. Restore after."""
-    before = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    yield
-    spark.conf.set("spark.sql.ansi.enabled", before)
-
-
 @pytest.fixture(scope="module")
 def hostile_values_sf(sf_small, tmp_path_factory) -> str:
     d = tmp_path_factory.mktemp("hostile_events_values")
-    con = duckdb.connect()
-    con.execute(
-        f"""
-        COPY (
-          SELECT * FROM '{sf_small}/events.parquet'
-          UNION ALL SELECT 9200001, TIMESTAMP '1970-01-01 00:00:00', 7,
-                           'view', 'nan'::DOUBLE, '{{}}'
-          UNION ALL SELECT 9200002, TIMESTAMP '2199-12-31 23:59:59', 8,
-                           'click', 'inf'::DOUBLE, '{{}}'
-          UNION ALL SELECT 9200003, TIMESTAMP '2024-03-02 05:00:00', 9,
-                           'purchase', '-inf'::DOUBLE, '{{}}'
-          UNION ALL SELECT 9200004, TIMESTAMP '2024-03-02 06:00:00', 10,
-                           '', 9.9e15, '{{}}'
-          UNION ALL SELECT 9200005, TIMESTAMP '2024-03-02 07:00:00', 11,
-                           'view', -9.9e15, '{{}}'
-        ) TO '{d}/events.parquet' (FORMAT PARQUET)
-        """
-    )
-    for t in _COPY:
-        shutil.copy(f"{sf_small}/{t}.parquet", str(d / f"{t}.parquet"))
-    return str(d)
-
-
-def _oracle(sql: str, sf_dir: str):
-    con = duckdb.connect()
-    for t in _COPY + ["events"]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    return con.execute(sql).df()
-
-
-def _canon(df):
-    df = df.copy()
-    df.columns = [c.lower() for c in df.columns]
-    df = df[sorted(df.columns)]
-    return sorted(
-        [
-            tuple(
-                None if (isinstance(v, float) and math.isnan(v)) else v
-                for v in r
-            )
-            for r in df.itertuples(index=False)
-        ],
-        key=str,
-    )
+    return build("events_values", sf_small, d)
 
 
 @pytest.mark.parametrize("name", _ROBUST)
 def test_hostile_values_stay_oracle_green(spark, hostile_values_sf, name):
-    import __spark_entry__ as e
-
-    sdf = e.queries()[name](spark, hostile_values_sf).toPandas()
-    odf = _oracle(e.oracle_sql()[name], hostile_values_sf)
-    assert len(sdf) == len(odf), (name, len(sdf), len(odf))
-    assert _canon(sdf) == _canon(odf), name
+    problems = compare_query(spark, name, hostile_values_sf)
+    assert not problems, f"{name}: {problems}"
 
 
 @pytest.mark.parametrize("name", _BOTH_ENGINES_RAISE)
@@ -168,7 +109,7 @@ def test_value_envelope_raises_loudly_on_both_engines(
     with pytest.raises(Exception):
         e.queries()[name](spark, hostile_values_sf).collect()
     with pytest.raises(Exception):
-        _oracle(e.oracle_sql()[name], hostile_values_sf)
+        run_oracle(e.oracle_sql()[name], hostile_values_sf)
 
 
 @pytest.mark.parametrize("name", _SPARK_NULLS_ORACLE_RAISES)
@@ -182,7 +123,7 @@ def test_nan_decimal_cast_is_the_known_divergence(
 
     e.queries()[name](spark, hostile_values_sf).collect()  # no raise
     with pytest.raises(Exception):
-        _oracle(e.oracle_sql()[name], hostile_values_sf)
+        run_oracle(e.oracle_sql()[name], hostile_values_sf)
 
 
 def test_testdata_event_values_stay_inside_the_envelope():

@@ -28,14 +28,14 @@ statuses and names came back **180 green / 5 divergent**:
 
 from __future__ import annotations
 
-import math
-import shutil
-
 import duckdb
 import pytest
 
-_COPY = ["region", "nation", "supplier", "part",
-         "events", "documents", "embeddings"]
+from .hostile_tables import build
+from .oracle_compare import compare_query
+
+# hostile-input behavior can be ANSI-sensitive
+pytestmark = pytest.mark.usefixtures("driver_ansi")
 
 #: representative robust slice: every family that touches the poisoned
 #: columns (joins on null keys, aggs over null measures, windows over
@@ -78,91 +78,16 @@ _ROBUST = [
 _KNOWN_DIVERGENT: list[str] = []
 
 
-@pytest.fixture(autouse=True)
-def _driver_ansi(spark):
-    """Run this module under DRIVER conditions (Spark 4 default = ANSI
-    ON): the engine's tuned test session sets ansi=false, and hostile-
-    input behavior can be ANSI-sensitive. Restore after."""
-    before = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    yield
-    spark.conf.set("spark.sql.ansi.enabled", before)
-
-
 @pytest.fixture(scope="module")
 def hostile_tpch_sf(sf_small, tmp_path_factory) -> str:
     d = tmp_path_factory.mktemp("hostile_tpch")
-    con = duckdb.connect()
-    con.execute(
-        f"""
-        COPY (
-          SELECT * FROM '{sf_small}/orders.parquet'
-          UNION ALL SELECT 9000001, 1, 'O', 1234.56,
-                           NULL::TIMESTAMP, '3-MEDIUM'
-          UNION ALL SELECT 9000002, NULL, 'F', 2345.67,
-                           TIMESTAMP '1995-06-15', '1-URGENT'
-          UNION ALL SELECT 9000003, 2, NULL, NULL,
-                           TIMESTAMP '1995-07-15', NULL
-        ) TO '{d}/orders.parquet' (FORMAT PARQUET)
-        """
-    )
-    con.execute(
-        f"""
-        COPY (
-          SELECT * FROM '{sf_small}/lineitem.parquet'
-          UNION ALL SELECT 9000001, 1, 1, 1, NULL, 100.0, 0.05, 0.02,
-                           'N', 'O', NULL::TIMESTAMP
-          UNION ALL SELECT 9000002, 2, 2, 1, 5.0, NULL, NULL, NULL,
-                           NULL, NULL, TIMESTAMP '1995-06-20'
-        ) TO '{d}/lineitem.parquet' (FORMAT PARQUET)
-        """
-    )
-    con.execute(
-        f"""
-        COPY (
-          SELECT * FROM '{sf_small}/customer.parquet'
-          UNION ALL SELECT 9000001, NULL, 1, NULL, NULL
-        ) TO '{d}/customer.parquet' (FORMAT PARQUET)
-        """
-    )
-    for t in _COPY:
-        shutil.copy(f"{sf_small}/{t}.parquet", str(d / f"{t}.parquet"))
-    return str(d)
-
-
-def _oracle(sql: str, sf_dir: str):
-    con = duckdb.connect()
-    for t in _COPY + ["orders", "lineitem", "customer"]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    return con.execute(sql).df()
-
-
-def _canon(df):
-    df = df.copy()
-    df.columns = [c.lower() for c in df.columns]
-    df = df[sorted(df.columns)]
-    return sorted(
-        [
-            tuple(
-                None if (isinstance(v, float) and math.isnan(v)) else v
-                for v in r
-            )
-            for r in df.itertuples(index=False)
-        ],
-        key=str,
-    )
+    return build("tpch", sf_small, d)
 
 
 @pytest.mark.parametrize("name", _ROBUST)
 def test_null_rows_stay_oracle_green(spark, hostile_tpch_sf, name):
-    import __spark_entry__ as e
-
-    sdf = e.queries()[name](spark, hostile_tpch_sf).toPandas()
-    odf = _oracle(e.oracle_sql()[name], hostile_tpch_sf)
-    assert len(sdf) == len(odf), (name, len(sdf), len(odf))
-    assert _canon(sdf) == _canon(odf), name
+    problems = compare_query(spark, name, hostile_tpch_sf)
+    assert not problems, f"{name}: {problems}"
 
 
 @pytest.mark.parametrize("name", _KNOWN_DIVERGENT)
@@ -172,11 +97,7 @@ def test_nullable_order_by_is_a_known_divergence(
     """These DO diverge on null sort keys today (NULLS FIRST vs NULLS
     LAST). A respell (explicit null exclusion or NULLS FIRST on both
     engines) flips this test loudly — then move the query to _ROBUST."""
-    import __spark_entry__ as e
-
-    sdf = e.queries()[name](spark, hostile_tpch_sf).toPandas()
-    odf = _oracle(e.oracle_sql()[name], hostile_tpch_sf)
-    assert len(sdf) != len(odf) or _canon(sdf) != _canon(odf), (
+    assert compare_query(spark, name, hostile_tpch_sf), (
         f"{name} now agrees on null sort keys — move it to _ROBUST"
     )
 

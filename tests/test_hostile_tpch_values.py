@@ -35,14 +35,15 @@ first.
 
 from __future__ import annotations
 
-import math
-import shutil
-
 import duckdb
 import pytest
 
-_COPY = ["region", "nation", "supplier", "part", "customer",
-         "events", "documents", "embeddings"]
+from .hostile_tables import build
+from .oracle_compare import compare_query, run_oracle
+
+# the loud-error classifications are ANSI-dependent (non-ANSI Spark
+# would silently NULL/wrap instead of raising)
+pytestmark = pytest.mark.usefixtures("driver_ansi")
 
 #: representative robust slice: the families the poisoned values flow
 #: through (money aggs, rate arithmetic, date bucketing, domain CASEs,
@@ -78,84 +79,16 @@ _BOTH_ENGINES_RAISE = [
 ]
 
 
-@pytest.fixture(autouse=True)
-def _driver_ansi(spark):
-    """DRIVER conditions (Spark 4 default = ANSI ON) — the loud-error
-    classifications below are ANSI-dependent (non-ANSI Spark would
-    silently NULL/wrap instead of raising). Restore after."""
-    before = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    yield
-    spark.conf.set("spark.sql.ansi.enabled", before)
-
-
 @pytest.fixture(scope="module")
 def hostile_values_sf(sf_small, tmp_path_factory) -> str:
     d = tmp_path_factory.mktemp("hostile_tpch_values")
-    con = duckdb.connect()
-    con.execute(
-        f"""
-        COPY (
-          SELECT * FROM '{sf_small}/orders.parquet'
-          UNION ALL SELECT 9100001, 1, 'O', 9900000000000.99,
-                           TIMESTAMP '1970-01-01', '1-URGENT'
-          UNION ALL SELECT 9100002, 2, 'X', -54321.99,
-                           TIMESTAMP '2099-12-31', ''
-        ) TO '{d}/orders.parquet' (FORMAT PARQUET)
-        """
-    )
-    con.execute(
-        f"""
-        COPY (
-          SELECT * FROM '{sf_small}/lineitem.parquet'
-          UNION ALL SELECT 9100001, 1, 1, 1, -3.0, -100.25, 1.5, -0.1,
-                           'Z', '?', TIMESTAMP '1970-01-01'
-          UNION ALL SELECT 9100001, 2, 2, 2, 0.0, 9900000000000.99,
-                           0.999999, 0.999999, 'N', 'O',
-                           TIMESTAMP '2099-12-31'
-          UNION ALL SELECT 9100002, 3, 3, 1, 0.000001, 0.0, 0.0, 0.0,
-                           'A', 'F', TIMESTAMP '1992-01-01'
-        ) TO '{d}/lineitem.parquet' (FORMAT PARQUET)
-        """
-    )
-    for t in _COPY:
-        shutil.copy(f"{sf_small}/{t}.parquet", str(d / f"{t}.parquet"))
-    return str(d)
-
-
-def _oracle(sql: str, sf_dir: str):
-    con = duckdb.connect()
-    for t in _COPY + ["orders", "lineitem"]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    return con.execute(sql).df()
-
-
-def _canon(df):
-    df = df.copy()
-    df.columns = [c.lower() for c in df.columns]
-    df = df[sorted(df.columns)]
-    return sorted(
-        [
-            tuple(
-                None if (isinstance(v, float) and math.isnan(v)) else v
-                for v in r
-            )
-            for r in df.itertuples(index=False)
-        ],
-        key=str,
-    )
+    return build("tpch_values", sf_small, d)
 
 
 @pytest.mark.parametrize("name", _ROBUST)
 def test_hostile_values_stay_oracle_green(spark, hostile_values_sf, name):
-    import __spark_entry__ as e
-
-    sdf = e.queries()[name](spark, hostile_values_sf).toPandas()
-    odf = _oracle(e.oracle_sql()[name], hostile_values_sf)
-    assert len(sdf) == len(odf), (name, len(sdf), len(odf))
-    assert _canon(sdf) == _canon(odf), name
+    problems = compare_query(spark, name, hostile_values_sf)
+    assert not problems, f"{name}: {problems}"
 
 
 @pytest.mark.parametrize("name", _BOTH_ENGINES_RAISE)
@@ -167,7 +100,7 @@ def test_money_envelope_raises_loudly_on_both_engines(
     with pytest.raises(Exception):
         e.queries()[name](spark, hostile_values_sf).collect()
     with pytest.raises(Exception):
-        _oracle(e.oracle_sql()[name], hostile_values_sf)
+        run_oracle(e.oracle_sql()[name], hostile_values_sf)
 
 
 def test_testdata_money_stays_inside_the_envelope():

@@ -2,8 +2,9 @@
 driver will: run the Spark query and the DuckDB oracle on the same
 parquet tables, compare row-count + columns + order-insensitive values.
 
-Runs at sf0.001 by default (fast dev loop); set
-SPARK_GRAFT_SF_ORACLE=/root/testdata/sf0.01 to match the driver's t2.
+Runs at sf0.001 by default (fast dev loop) with ANSI on, as the driver
+does; point SPARK_GRAFT_SF_SMALL at the sf0.01 testdata to match the
+driver's scale.
 """
 
 from __future__ import annotations
@@ -13,6 +14,9 @@ import pytest
 from etl_sales_pandas_sqlserver_spark.plans.testdata_queries import QUERIES
 
 from .oracle_compare import compare, run_oracle
+
+# the driver runs with ANSI on; the tuned test session turns it off
+pytestmark = pytest.mark.usefixtures("driver_ansi")
 
 CASES = [(name, fn, sql) for name, (fn, sql) in QUERIES.items() if sql is not None]
 

@@ -16,7 +16,6 @@ chunks, so the compare is chunking-independent).
 
 from __future__ import annotations
 
-import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -26,7 +25,7 @@ from etl_sales_pandas_sqlserver_spark.functions.sharding import (
     q_shard_manifest_tokens,
 )
 
-from .oracle_compare import compare
+from .oracle_compare import compare, run_oracle
 
 _SUPER_SPAN = 4096 * 4096  # ids per superchunk
 
@@ -51,14 +50,6 @@ def _write_docs(tmp_path, doc_ids: list[int]) -> str:
     d.mkdir()
     pq.write_table(tbl, str(d / "documents.parquet"))
     return str(d)
-
-
-def _oracle(sql: str, sf_dir: str):
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
-    )
-    return con.execute(sql).df()
 
 
 @pytest.mark.parametrize(
@@ -105,7 +96,7 @@ def test_two_level_prefix_sum_matches_naive_window(
 ):
     sf_dir = _write_docs(tmp_path, doc_ids)
     sdf = q_shard_manifest_tokens(spark, sf_dir)
-    odf = _oracle(SHARD_MANIFEST_SQL, sf_dir)
+    odf = run_oracle(SHARD_MANIFEST_SQL, sf_dir)
     problems = compare(sdf, odf)
     assert not problems, f"{case}: {problems}"
     # the fixture must actually exercise >1 superchunk

@@ -1,9 +1,13 @@
 """Mergeable HLL sketch semantics: the error contract the queries emit
 as booleans must actually hold, and unioning daily sketches must be
-exactly lossless versus sketching the whole column."""
+exactly lossless versus sketching the whole column; the CountMinSketch
+replay must agree with the JVM before it is trusted."""
 
 from __future__ import annotations
 
+import pytest
+
+from etl_sales_pandas_sqlserver_spark.functions import sketches
 from etl_sales_pandas_sqlserver_spark.functions.sketches import (
     _with_day_bucket,
     q_sketch_daily,
@@ -59,3 +63,14 @@ def test_rollup_is_lossless_and_in_bound(spark, sf_small):
             f"{r.event_type}: union of daily sketches diverged from the "
             "direct whole-column sketch"
         )
+
+
+def test_cms_replay_is_checked_against_the_jvm(spark, sf_small, monkeypatch):
+    """The in-process CountMinSketch replay is trusted only after it
+    matches the JVM's estimateCount: an off-by-one replay must raise."""
+    real = sketches._cms_estimate
+    monkeypatch.setattr(
+        sketches, "_cms_estimate", lambda h, t, item: real(h, t, item) + 1
+    )
+    with pytest.raises(RuntimeError, match="replay disagrees with the JVM"):
+        sketches.q_cms_contract(spark, sf_small)

@@ -5,13 +5,14 @@ docs_nulls}.py) were produced by exactly this harness run inline;
 committing it makes reclassification ONE command when a deferred
 respell lands:
 
-    python tools/hostile_sweep.py events      # or: documents,
-    python tools/hostile_sweep.py documents   # embeddings, tpch
+    python tools/hostile_sweep.py events      # any kind in
+    python tools/hostile_sweep.py documents   # tests/hostile_tables.KINDS
     python tools/hostile_sweep.py tpch
 
 Runs every registered query against a copy of sf0.001 with the chosen
-table poisoned (null keys/fields/elements — the same rows the suites
-pin), under DRIVER conditions (plain ANSI session), and prints one
+table poisoned by ``tests/hostile_tables.build`` (the same builder the
+suites' fixtures call), under DRIVER conditions (plain ANSI session),
+compares with ``tests/oracle_compare.compare_frames``, and prints one
 JSON line: {green: [...], mismatch: [...], spark_error: {...},
 oracle_error: {...}}. Move a query between a suite's _ROBUST and
 known-not-green lists only on this tool's evidence.
@@ -20,220 +21,29 @@ known-not-green lists only on this tool's evidence.
 from __future__ import annotations
 
 import json
-import math
 import os
-import shutil
 import sys
 import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = os.environ.get("SPARK_GRAFT_SWEEP_SF", "/root/testdata/sf0.001")
-TABLES = ["region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events", "documents", "embeddings"]
-
-
-def _poison(kind: str, d: str) -> list[str]:
-    """Write the poisoned table(s) into ``d``; return table names NOT
-    to copy verbatim."""
-    import duckdb
-
-    con = duckdb.connect()
-    if kind == "events":
-        con.execute(f"""
-        COPY (
-          SELECT * FROM '{SF}/events.parquet'
-          UNION ALL SELECT 100001, NULL::TIMESTAMP, 7, 'view', 1.5, '{{}}'
-          UNION ALL SELECT 100002, NULL::TIMESTAMP, 8, 'click', 2.5, '{{}}'
-          UNION ALL SELECT 100003, TIMESTAMP '2024-03-02 05:00:00', NULL, 'view', 1.0, '{{}}'
-          UNION ALL SELECT 100004, TIMESTAMP '2024-03-02 06:00:00', NULL, 'purchase', 3.0, '{{}}'
-          UNION ALL SELECT 100005, TIMESTAMP '2024-03-02 07:00:00', 9, NULL, 4.0, '{{}}'
-          UNION ALL SELECT 100006, TIMESTAMP '2024-03-02 08:00:00', 10, 'view', NULL, NULL
-        ) TO '{d}/events.parquet' (FORMAT PARQUET)
-        """)
-        return ["events"]
-    if kind == "documents":
-        con.execute(f"""
-        COPY (
-          SELECT * FROM '{SF}/documents.parquet'
-          UNION ALL SELECT NULL, 'null id doc with several tokens here', 'en', 'web', 37
-          UNION ALL SELECT 900001, NULL, 'en', 'web', NULL
-          UNION ALL SELECT 900002, 'null lang doc with plenty of tokens', NULL, 'web', 35
-          UNION ALL SELECT 900003, 'null source doc with plenty of tokens', 'en', NULL, 37
-        ) TO '{d}/documents.parquet' (FORMAT PARQUET)
-        """)
-        return ["documents"]
-    if kind == "documents_vtab":
-        # r16 axis: vertical-tab (U+000B) text — THE whitespace-grain
-        # divergence character (Java \s includes it, RE2's does not).
-        # The r16 WS_CLASS respells (fingerprint group, curation gate,
-        # repetition, _RE_TOKEN, plus the r14/r15 tokcount/bpe/array
-        # flips) must be GREEN here; the still-unflipped
-        # textstats._TOKEN_SPLIT family (r17 with its drain) is the
-        # expected-mismatch set pinned in tests/test_hostile_docs_vtab.
-        # Two shapes: \x0B INSIDE words (token-count sensitive) and a
-        # doc that differs from an existing one ONLY by \x0B-vs-space
-        # (fingerprint-collision sensitive).
-        con.execute(f"""
-        COPY (
-          SELECT * FROM '{SF}/documents.parquet'
-          UNION ALL SELECT 910001,
-            'alpha' || chr(11) || 'beta gamma' || chr(11) || 'delta epsilon zeta eta theta',
-            'en', 'web', 40
-          UNION ALL SELECT 910002,
-            (SELECT replace(text, ' ', chr(11)) FROM '{SF}/documents.parquet'
-             WHERE doc_id = 1),
-            'en', 'web', 40
-        ) TO '{d}/documents.parquet' (FORMAT PARQUET)
-        """)
-        return ["documents"]
-    if kind == "documents_dupid":
-        # r15 axis: doc_id uniqueness violation — one existing id
-        # duplicated with DIFFERENT text (the nastier shape: ties in
-        # every ORDER BY doc_id become real, and fingerprints differ
-        # within the id). Aggregated outputs must stay deterministic.
-        con.execute(f"""
-        COPY (
-          SELECT * FROM '{SF}/documents.parquet'
-          UNION ALL SELECT doc_id,
-            'different text for the duplicated id with enough tokens',
-            lang, source, 55
-          FROM '{SF}/documents.parquet' ORDER BY doc_id LIMIT 1
-        ) TO '{d}/documents.parquet' (FORMAT PARQUET)
-        """)
-        return ["documents"]
-    if kind == "tpch":
-        con.execute(f"""
-        COPY (
-          SELECT * FROM '{SF}/orders.parquet'
-          UNION ALL SELECT 9000001, 1, 'O', 1234.56, NULL::TIMESTAMP, '3-MEDIUM'
-          UNION ALL SELECT 9000002, NULL, 'F', 2345.67, TIMESTAMP '1995-06-15', '1-URGENT'
-          UNION ALL SELECT 9000003, 2, NULL, NULL, TIMESTAMP '1995-07-15', NULL
-        ) TO '{d}/orders.parquet' (FORMAT PARQUET)
-        """)
-        con.execute(f"""
-        COPY (
-          SELECT * FROM '{SF}/lineitem.parquet'
-          UNION ALL SELECT 9000001, 1, 1, 1, NULL, 100.0, 0.05, 0.02, 'N', 'O', NULL::TIMESTAMP
-          UNION ALL SELECT 9000002, 2, 2, 1, 5.0, NULL, NULL, NULL, NULL, NULL, TIMESTAMP '1995-06-20'
-        ) TO '{d}/lineitem.parquet' (FORMAT PARQUET)
-        """)
-        con.execute(f"""
-        COPY (
-          SELECT * FROM '{SF}/customer.parquet'
-          UNION ALL SELECT 9000001, NULL, 1, NULL, NULL
-        ) TO '{d}/customer.parquet' (FORMAT PARQUET)
-        """)
-        return ["orders", "lineitem", "customer"]
-    if kind == "events_values":
-        # hostile VALUES on the events axis: NaN/±inf/huge value
-        # doubles, epoch and far-future timestamps, empty-string type
-        con.execute(f"""
-        COPY (
-          SELECT * FROM '{SF}/events.parquet'
-          UNION ALL SELECT 9200001, TIMESTAMP '1970-01-01 00:00:00', 7,
-                           'view', 'nan'::DOUBLE, '{{}}'
-          UNION ALL SELECT 9200002, TIMESTAMP '2199-12-31 23:59:59', 8,
-                           'click', 'inf'::DOUBLE, '{{}}'
-          UNION ALL SELECT 9200003, TIMESTAMP '2024-03-02 05:00:00', 9,
-                           'purchase', '-inf'::DOUBLE, '{{}}'
-          UNION ALL SELECT 9200004, TIMESTAMP '2024-03-02 06:00:00', 10,
-                           '', 9.9e15, '{{}}'
-          UNION ALL SELECT 9200005, TIMESTAMP '2024-03-02 07:00:00', 11,
-                           'view', -9.9e15, '{{}}'
-        ) TO '{d}/events.parquet' (FORMAT PARQUET)
-        """)
-        return ["events"]
-    if kind == "tpch_values":
-        # hostile VALUES, not nulls: negative/zero/huge money, >1 and
-        # negative rates, epoch/far-future dates, out-of-domain flags
-        # and empty strings — the overflow/rounding/domain-CASE axis
-        con.execute(f"""
-        COPY (
-          SELECT * FROM '{SF}/orders.parquet'
-          UNION ALL SELECT 9100001, 1, 'O', 9900000000000.99,
-                           TIMESTAMP '1970-01-01', '1-URGENT'
-          UNION ALL SELECT 9100002, 2, 'X', -54321.99,
-                           TIMESTAMP '2099-12-31', ''
-        ) TO '{d}/orders.parquet' (FORMAT PARQUET)
-        """)
-        con.execute(f"""
-        COPY (
-          SELECT * FROM '{SF}/lineitem.parquet'
-          UNION ALL SELECT 9100001, 1, 1, 1, -3.0, -100.25, 1.5, -0.1,
-                           'Z', '?', TIMESTAMP '1970-01-01'
-          UNION ALL SELECT 9100001, 2, 2, 2, 0.0, 9900000000000.99,
-                           0.999999, 0.999999, 'N', 'O',
-                           TIMESTAMP '2099-12-31'
-          UNION ALL SELECT 9100002, 3, 3, 1, 0.000001, 0.0, 0.0, 0.0,
-                           'A', 'F', TIMESTAMP '1992-01-01'
-        ) TO '{d}/lineitem.parquet' (FORMAT PARQUET)
-        """)
-        con.execute(f"""
-        COPY (
-          SELECT * FROM '{SF}/customer.parquet'
-          UNION ALL SELECT 9100001, 'Cust''omer "quoted" über', 1,
-                           -99999.99, ''
-        ) TO '{d}/customer.parquet' (FORMAT PARQUET)
-        """)
-        return ["orders", "lineitem", "customer"]
-    if kind in ("embeddings", "embeddings_ragged"):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(f"{SF}/embeddings.parquet")
-        dim = len(tbl.column("embedding")[0])
-        embs = [[v.as_py() for v in row] for row in tbl.column("embedding")]
-        if kind == "embeddings_ragged":
-            # r15 axis: empty + wrong-dimension vectors (the fixed-dim
-            # contract violation; see test_hostile_embeddings_ragged)
-            embs[-1] = []
-            embs[-2] = [0.25] * (dim // 2)
-        else:
-            embs[-1] = [0.0] * dim
-            embs[-2] = [None] + [0.1] * (dim - 1)
-        out = pa.table({
-            "vec_id": tbl.column("vec_id"),
-            "embedding": pa.array(embs, pa.list_(pa.float32())),
-            "label": tbl.column("label"),
-        })
-        pq.write_table(out, f"{d}/embeddings.parquet")
-        return ["embeddings"]
-    raise SystemExit(f"unknown table kind: {kind}")
-
-
-def _canon(df):
-    df = df.copy()
-    df.columns = [c.lower() for c in df.columns]
-    df = df[sorted(df.columns)]
-    return sorted(
-        [tuple(None if (isinstance(v, float) and math.isnan(v)) else v
-               for v in r)
-         for r in df.itertuples(index=False)],
-        key=str,
-    )
 
 
 def main() -> int:
-    import duckdb
     from pyspark.sql import SparkSession
 
+    from tests.hostile_tables import build
+    from tests.oracle_compare import compare_frames, run_oracle
+
     kind = sys.argv[1] if len(sys.argv) > 1 else "events"
-    d = tempfile.mkdtemp(prefix=f"hostile_{kind}_")
-    poisoned = _poison(kind, d)
-    for t in TABLES:
-        if t not in poisoned:
-            shutil.copy(f"{SF}/{t}.parquet", f"{d}/{t}.parquet")
+    d = build(kind, SF, tempfile.mkdtemp(prefix=f"hostile_{kind}_"))
 
     # DRIVER conditions: plain session, Spark 4 default = ANSI ON
     spark = (SparkSession.builder.master("local[8]")
              .config("spark.ui.enabled", "false").getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as e
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{d}/{t}.parquet'")
 
     q, o = e.queries(), e.oracle_sql()
     only = {s for s in os.environ.get(
@@ -252,12 +62,11 @@ def main() -> int:
             res["rows_only"].append(name)
             continue
         try:
-            odf = con.execute(o[name]).df()
+            odf = run_oracle(o[name], d)
         except Exception as ex:
             res["oracle_error"][name] = str(ex)[:120].replace("\n", " ")
             continue
-        ok = (len(sdf) == len(odf) and _canon(sdf) == _canon(odf))
-        res["green" if ok else "mismatch"].append(name)
+        res["mismatch" if compare_frames(sdf, odf) else "green"].append(name)
     print(json.dumps({"table": kind, "sf": SF,
                       "n_green": len(res["green"]), **res}))
     return 0
