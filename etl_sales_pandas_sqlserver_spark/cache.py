@@ -89,7 +89,7 @@ def memo(
     if hit is not None:
         if hit[0] == tag and _alive(spark):
             return hit[1]
-        _release(hit[1])
+        release(hit[1])
     df = build().localCheckpoint(eager=True)
     per[(name, sf_dir)] = (tag, df)
     return df
@@ -102,10 +102,12 @@ def _alive(spark) -> bool:
         return False
 
 
-def _release(df: DataFrame) -> None:
+def release(df: DataFrame) -> None:
     """Unpersist the blocks behind a ``localCheckpoint``ed frame (its
-    plan is a LogicalRDD over the checkpointed RDD). Best-effort: a
-    stopped session must not turn hygiene into an error."""
+    plan is a LogicalRDD over the checkpointed RDD), eager or lazy, run
+    or not. Pass the frame ``localCheckpoint`` returned, not one derived
+    from it. Best-effort: a stopped session must not turn hygiene into
+    an error."""
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:  # noqa: BLE001

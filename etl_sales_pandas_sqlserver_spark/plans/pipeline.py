@@ -6,13 +6,24 @@ format dates -> write each table to SQL Server and to a CSV file,
 logging row counts along the way. :func:`run_sales_pipeline` is that
 flow Spark-first:
 
-- ONE distributed folder scan (sources.csv_folder.read_sales_folder),
-  cached because three independent sinks consume it (SURVEY.md
-  section 4.1 -- plan reuse across actions is not automatic);
-- the three composite transforms stay lazy until their sink write, so
-  each output executes as a single fused plan; the invalid rows are
-  sorted by tier inside the one sink task, so the CSV lists every N,
-  then every A, then every D row like the reference's concat;
+- ONE distributed folder scan (sources.csv_folder.read_sales_folder)
+  and ONE run of the cleaned valid plan (its dedup window shuffle):
+  each gets a lazy ``localCheckpoint``, filled by the first job that
+  reads it and then read from its blocks, because plan reuse across
+  actions is not automatic (SURVEY.md section 4.1). The raw scan feeds
+  the valid and invalid plans; the valid plan feeds its own sink and
+  the summary. A lazy checkpoint, unlike ``.cache()``, is not filled
+  by a job of its own under AQE;
+- the transforms stay lazy until their sink write, so each output
+  executes as one fused plan. The invalid and summary sinks sort inside
+  their one ``coalesce(1)`` task: the invalid CSV lists every N, then
+  every A, then every D row like the reference's concat, and the
+  summary keeps the reference's lexicographic (Mes, Producto) order
+  without a range-sampling job;
+- both checkpoints are released in a ``finally`` (cache.release), so a
+  failed sink does not pin their blocks. The trade is the one
+  cache.memo makes: a lost checkpoint block fails the job instead of
+  being recomputed from the CSVs;
 - row counts come from ``df.observe()`` accumulators collected during
   the sink writes themselves (observability.PipelineObserver) -- the
   reference's 'filas=%d' logging (main.py:99,146,174) with zero extra
@@ -31,6 +42,7 @@ from typing import Any
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import release
 from ..observability import PipelineObserver, category_counts, configure_logging
 from ..sources.csv_folder import read_sales_folder
 from ..sources.sinks import write_jdbc, write_single_csv
@@ -70,35 +82,42 @@ def run_sales_pipeline(
     """
     logger = configure_logging(logfile)
     obs = PipelineObserver()
-
-    raw = read_sales_folder(spark, input_dir)
-    raw = obs.observe_rows(raw, "input").cache()
-
-    valid = obs.observe_rows(clean_valid_sales(raw), "valid")
-    invalid = obs.observe_rows(
-        categorize_invalid_sales(raw, nan_literal=nan_literal),
-        "invalid",
-        *category_counts("Reason", ("N", "A", "D")),
-    ).coalesce(1).sortWithinPartitions(F.expr("instr('NAD', Reason)"))
-    summary = obs.observe_rows(monthly_summary(valid), "summary")
-
     os.makedirs(output_dir, exist_ok=True)
-    tables = [(VALID_NAME, valid), (INVALID_NAME, invalid), (SUMMARY_NAME, summary)]
     outputs: dict[str, str] = {}
-    for name, df in tables:
-        formatted = format_dates_for_sink(df)
-        if jdbc is not None:
-            write_jdbc(
-                formatted,
-                jdbc["url"],
-                name,
-                mode=jdbc.get("mode", "overwrite"),
-                options=jdbc.get("options"),
+
+    raw_cp = read_sales_folder(spark, input_dir).localCheckpoint(eager=False)
+    valid_cp = None
+    try:
+        raw = obs.observe_rows(raw_cp, "input")
+        valid_cp = clean_valid_sales(raw).localCheckpoint(eager=False)
+        valid = obs.observe_rows(valid_cp, "valid")
+        invalid = obs.observe_rows(
+            categorize_invalid_sales(raw, nan_literal=nan_literal),
+            "invalid",
+            *category_counts("Reason", ("N", "A", "D")),
+        ).coalesce(1).sortWithinPartitions(F.expr("instr('NAD', Reason)"))
+        summary = obs.observe_rows(
+            monthly_summary(valid_cp, sort=False), "summary"
+        ).coalesce(1).sortWithinPartitions("Mes", "Producto")
+
+        tables = [(VALID_NAME, valid), (INVALID_NAME, invalid), (SUMMARY_NAME, summary)]
+        for name, df in tables:
+            formatted = format_dates_for_sink(df)
+            if jdbc is not None:
+                write_jdbc(
+                    formatted,
+                    jdbc["url"],
+                    name,
+                    mode=jdbc.get("mode", "overwrite"),
+                    options=jdbc.get("options"),
+                )
+            outputs[name] = write_single_csv(
+                formatted, os.path.join(output_dir, f"{name}.csv"), with_bom=with_bom
             )
-        outputs[name] = write_single_csv(
-            formatted, os.path.join(output_dir, f"{name}.csv"), with_bom=with_bom
-        )
+    finally:
+        release(raw_cp)
+        if valid_cp is not None:
+            release(valid_cp)
 
     obs.log_metrics(logger)
-    raw.unpersist()
     return {"outputs": outputs, "metrics": obs.metrics()}

@@ -10,6 +10,16 @@ directory -- the scan parallelizes by file split, and the audit date is
 derived per-row from ``input_file_name()`` inside the same stage, so no
 driver-side loop and no union of N plans. At 100 TB / 10^5 files this is
 the difference between a single distributed scan and a 10^5-way union.
+
+The folder is read as ONE root path with a ``pathGlobFilter``, not as
+the glob ``{directory}/*.csv``. A glob expands to one root path per
+file, and above ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+(32 paths) ``InMemoryFileIndex`` lists those paths with a distributed
+Spark job, one task per file -- on every read. One root is listed on
+the driver and starts no job. Both forms read only top-level files
+(a ``sub/`` directory is skipped); a DIRECTORY named ``old.csv/`` is
+skipped by the filter, as the reference's ``listdir`` + ``read_csv``
+cannot read a directory either.
 """
 
 from __future__ import annotations
@@ -34,7 +44,7 @@ def read_sales_folder(
     ``Audit_Date`` parsed from each row's source filename stem.
 
     Parity notes (reference etl_utils.py:183-197):
-    - suffix filter ``endswith('.csv')`` == the ``*.csv`` path glob;
+    - suffix filter ``endswith('.csv')`` == ``pathGlobFilter='*.csv'``;
     - ``pd.to_datetime(stem, errors='coerce')`` == ``try_to_timestamp``
       (unparseable stem -> NULL, e.g. a file named ``notes.csv``);
     - ``pd.concat(ignore_index=True)`` union-by-name is implicit in the
@@ -42,12 +52,20 @@ def read_sales_folder(
 
     The audit date stays a TimestampType here; formatting to string
     happens only at sinks (plans.sales_etl.format_dates_for_sink).
+
+    A missing folder raises ``[PATH_NOT_FOUND]``; a folder with no
+    ``*.csv`` file raises ``FileNotFoundError`` naming it (a filtered
+    directory read would otherwise return 0 rows silently). Both checks
+    run on the driver and start no job.
     """
     df = (
         spark.read.option("header", "true")
+        .option("pathGlobFilter", "*.csv")
         .schema(schema)
-        .csv(f"{directory.rstrip('/')}/*.csv")
+        .csv(directory)
     )
+    if not df.inputFiles():
+        raise FileNotFoundError(f"no *.csv files in sales folder {directory!r}")
     stem = F.regexp_extract(F.input_file_name(), _STEM, 1)
     # decode %XX escapes that input_file_name() applies to the URI
     stem = F.url_decode(stem)

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -41,3 +42,23 @@ def driver_ansi(spark):
     spark.conf.set("spark.sql.ansi.enabled", "true")
     yield
     spark.conf.set("spark.sql.ansi.enabled", before)
+
+
+@pytest.fixture
+def job_ids(spark):
+    """``job_ids(fn)`` runs ``fn()`` under a fresh Spark job group and
+    returns ``(fn's result, ids of the jobs it started)``. The ids are
+    read after the listener bus drains, so no finished job is missed."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"test-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -20,6 +20,7 @@ from etl_sales_pandas_sqlserver_spark.observability import (
     PipelineObserver,
     category_counts,
 )
+from etl_sales_pandas_sqlserver_spark.plans import pipeline
 from etl_sales_pandas_sqlserver_spark.plans.pipeline import run_sales_pipeline
 from pyspark.sql import functions as F
 
@@ -46,16 +47,21 @@ _FILES = {
 }
 
 
-@pytest.fixture(scope="module")
-def pipeline_result(spark, tmp_path_factory):
-    indir = tmp_path_factory.mktemp("sales_csv_in")
-    outdir = tmp_path_factory.mktemp("sales_csv_out")
+def _write_input(indir) -> str:
+    indir.mkdir(exist_ok=True)
     for name, rows in _FILES.items():
         body = "Sale_ID,Product,Amount,Date\n" + "".join(
             ",".join(f'"{v}"' if "," in v else v for v in row) + "\n" for row in rows
         )
         (indir / name).write_text(body, encoding="utf-8")
-    return run_sales_pipeline(spark, str(indir), str(outdir))
+    return str(indir)
+
+
+@pytest.fixture(scope="module")
+def pipeline_result(spark, tmp_path_factory):
+    indir = _write_input(tmp_path_factory.mktemp("sales_csv_in"))
+    outdir = tmp_path_factory.mktemp("sales_csv_out")
+    return run_sales_pipeline(spark, indir, str(outdir))
 
 
 def test_pipeline_metrics_match_known_counts(pipeline_result):
@@ -80,11 +86,52 @@ def test_pipeline_csv_outputs(pipeline_result):
     # the reference's concat order: every N row, then every A, then every D
     tiers = ["NAD".index(r) for r in invalid["Reason"]]
     assert tiers == sorted(tiers)
+    # the reference's lexicographic (Mes, Producto) order (SURVEY.md A2)
+    keys = list(zip(summary["Mes"], summary["Producto"]))
+    assert keys == sorted(keys)
     # dates are sink-formatted strings (Q4, main.py:201-210)
     assert valid["Date"].str.match(r"\d{4}-\d{2}-\d{2}").all()
     # BOM actually present on disk
     with open(outs["Ventas_Validas_M"], "rb") as fh:
         assert fh.read(3) == b"\xef\xbb\xbf"
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
+def test_pipeline_job_and_checkpoint_budget(spark, tmp_path, job_ids):
+    """One call runs each plan once: the folder is listed on the driver,
+    the raw scan and the cleaned valid plan are each computed by one
+    job and checkpointed, and the summary is sorted in its sink task --
+    at most 6 Spark jobs. Both checkpoints are released."""
+    indir = _write_input(tmp_path / "in")
+    before = _persistent_rdds(spark)
+    result, jobs = job_ids(lambda: run_sales_pipeline(spark, indir, str(tmp_path / "out")))
+    assert result["metrics"]["summary"]["rows"] == 5
+    assert len(jobs) <= 6
+    assert _persistent_rdds(spark) == before
+
+
+def test_pipeline_failed_sink_releases_checkpoints(spark, tmp_path, monkeypatch):
+    """A sink that raises mid-pipeline (the second of three) still
+    leaves no checkpoint blocks pinned."""
+    calls = []
+    real = pipeline.write_single_csv
+
+    def fail_second(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("sink down")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "write_single_csv", fail_second)
+    indir = _write_input(tmp_path / "in")
+    before = _persistent_rdds(spark)
+    with pytest.raises(RuntimeError, match="sink down"):
+        run_sales_pipeline(spark, indir, str(tmp_path / "out"))
+    assert len(calls) == 2
+    assert _persistent_rdds(spark) == before
 
 
 def test_pipeline_logs_filas_lines(spark, tmp_path):

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from etl_sales_pandas_sqlserver_spark.sources import (
@@ -34,10 +36,43 @@ def test_read_sales_folder_audit_date(spark, tmp_path):
     d = _write_folder(tmp_path)
     df = read_sales_folder(spark, d)
     rows = {r["Sale_ID"]: r for r in df.collect()}
-    assert len(rows) == 4  # txt file excluded by *.csv glob
+    assert len(rows) == 4  # txt file excluded by the *.csv filter
     assert rows["a1"]["Audit_Date"].month == 1
     assert rows["b1"]["Audit_Date"].month == 2
     assert rows["c1"]["Audit_Date"] is None  # non-date stem coerced to NULL
+
+
+def test_read_sales_folder_lists_on_the_driver(spark, tmp_path, job_ids):
+    """40 files are above the 32-path parallel-discovery threshold: a
+    per-file glob would list them with a Spark job on every read. The
+    filtered directory read starts none and reads only top-level
+    ``*.csv`` files -- not ``sub/x.csv``, not the directory ``old.csv/``."""
+    for i in range(40):
+        (tmp_path / f"f{i:02d}.csv").write_text(CSV_HEADER + f"s{i},K-A,1.00,2024-01-01\n")
+    for sub in ("sub/x.csv", "old.csv/part.csv"):
+        (tmp_path / sub).parent.mkdir()
+        (tmp_path / sub).write_text(CSV_HEADER + "nested,K-A,1.00,2024-01-01\n")
+    df, jobs = job_ids(lambda: read_sales_folder(spark, str(tmp_path)))
+    assert jobs == []
+    ids = [r["Sale_ID"] for r in df.select("Sale_ID").collect()]
+    assert sorted(ids) == sorted(f"s{i}" for i in range(40))
+
+
+@pytest.mark.parametrize("files", [[], ["readme.txt"]], ids=["empty", "no_csv"])
+def test_read_sales_folder_without_csv_fails_loudly(spark, tmp_path, files):
+    """A folder with no ``*.csv`` is an error naming the folder, not a
+    silent 0-row frame."""
+    folder = tmp_path / "inbox"
+    folder.mkdir()
+    for name in files:
+        (folder / name).write_text("not sales\n")
+    with pytest.raises(FileNotFoundError, match="inbox"):
+        read_sales_folder(spark, str(folder))
+
+
+def test_read_sales_folder_missing_folder_fails_loudly(spark, tmp_path):
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        read_sales_folder(spark, str(tmp_path / "missing"))
 
 
 def test_read_csv_with_date_parse(spark, tmp_path):
