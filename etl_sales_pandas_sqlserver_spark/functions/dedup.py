@@ -8,9 +8,10 @@ Scale design (the whole point -- these run over 100 TB of text):
   partial aggregation keeps the shuffle small. Never shuffles the text.
 - **ngram_jaccard**: the exact all-pairs answer via an *inverted index*
   (explode shingles -> self-join on the 64-bit shingle hash -> count
-  common per pair). Shuffles (doc_id, hash) pairs, never text; cost is
-  sum over shingles of C(group_size, 2), which explodes on hot shingles
-  -- this is the correctness baseline, MinHash below is the scale path.
+  common per pair of rows). Shuffles (row, doc_id, size, hash) ints,
+  never text; cost is sum over shingles of C(group_size, 2), which
+  explodes on hot shingles -- this is the correctness baseline,
+  MinHash below is the scale path.
 - **minhash_lsh**: 64 hash functions -> 16 bands x 4 rows. Signature is
   one agg shuffle; candidates come from equi-joining 16 fixed-width
   band keys per doc; only candidates are exactly verified. Linear in
@@ -51,7 +52,7 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..cache import managed_cache, memo
@@ -127,36 +128,133 @@ _EXACT_JACCARD_PAIRS_SQL = f"""
 """
 
 
+def _doc_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The one definition of document identity: (ord, doc_id, text),
+    one row per ``documents`` row. The table does not promise a unique
+    ``doc_id``, and the oracles pair, size and window ROWS, so every
+    pair family groups, ranks, windows and size-joins on ``ord`` and
+    carries ``doc_id`` as payload. ``ord`` is unique but not stable
+    across scans: a frame that joins it back to itself must read it
+    from one materialization (``_doc_shingles``)."""
+    return load_table(spark, sf_dir, "documents").select(
+        F.monotonically_increasing_id().alias("ord"), "doc_id", "text"
+    )
+
+
 def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized checkpointed shingle frame. Six registered
-    dedup queries start from this exact frame; before round 7 each
-    rebuilt it (text scan + split + in-array shingle transform,
-    ~0.8s/query at sf0.1). The memo (see cache.memo) materializes it
-    once per session and documents content -- a few MB of string
-    arrays -- and every consumer reads the severed-lineage frame."""
+    """Session-memoized checkpointed shingle frame (ord, doc_id, s).
+    Most registered dedup queries start from this exact frame; before
+    round 7 each rebuilt it (text scan + split + in-array shingle
+    transform, ~0.8s/query at sf0.1). The memo (see cache.memo)
+    materializes it once per session and documents content -- a few MB
+    of string arrays -- so ``ord`` is assigned once and every consumer
+    reads the same severed-lineage frame."""
 
     def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents")
-        return docs.select(
-            "doc_id", F.split(F.trim(F.col("text")), _WS_CLASS).alias("w")
-        ).select("doc_id", F.expr(_SHINGLES_EXPR).alias("s"))
+        return _doc_rows(spark, sf_dir).select(
+            "ord", "doc_id", F.split(F.trim(F.col("text")), _WS_CLASS).alias("w")
+        ).select("ord", "doc_id", F.expr(_SHINGLES_EXPR).alias("s"))
 
     return memo(spark, "doc_shingles", sf_dir, "documents", build)
 
 
-def _verify_jaccard(cand: DataFrame, sh: DataFrame) -> DataFrame:
-    """Join candidate (a_id, b_id) pairs back to the shingle sets and
-    keep only pairs with exact Jaccard >= threshold. Only candidates are
-    verified -- at scale this joins |candidates| rows, not all pairs.
-    Extra columns on ``cand`` (e.g. a prefilter's hamming distance) ride
-    through, so callers need not re-join them afterwards."""
-    sa = sh.select(F.col("doc_id").alias("a_id"), F.col("s").alias("sa"))
-    sb = sh.select(F.col("doc_id").alias("b_id"), F.col("s").alias("sb"))
-    common = F.size(F.array_intersect("sa", "sb"))
-    jaccard = common.cast("double") / (F.size("sa") + F.size("sb") - common)
+# ---------------------------------------------------------------------------
+# The overlap core shared by every shingle-pair family: one posting
+# list, one inverted-index pair count, one band-candidate join and one
+# exact-Jaccard verify. Pair frames name the two sides a_* and b_*
+# (doc_id becomes a_id / b_id).
+# ---------------------------------------------------------------------------
+
+
+def _side(df: DataFrame, side: str, keys: tuple[str, ...] = ()) -> DataFrame:
+    """``df`` as one side of a pair: doc_id -> {side}_id, any other
+    column c -> {side}_c; the join ``keys`` keep their names."""
+    return df.select(*keys, *[
+        F.col(c).alias(f"{side}_id" if c == "doc_id" else f"{side}_{c}")
+        for c in df.columns if c not in keys
+    ])
+
+
+def _jaccard(common: Column, na: Column, nb: Column) -> Column:
+    return common.cast("double") / (na + nb - common)
+
+
+def _postings(sh: DataFrame) -> DataFrame:
+    """(ord, doc_id, n, x, h): one row per shingle ``x`` of each shingle
+    row, ``n`` = |s| and ``h`` its 64-bit hash. The explode reads the
+    checkpointed arrays and the hash runs as a codegen'd column (a
+    transform() lambda is interpreted per element -- round-9, ~1s at
+    sf0.1); shuffles downstream carry ints, never shingle strings."""
+    return sh.select(
+        "ord", "doc_id", F.size("s").alias("n"), F.explode("s").alias("x")
+    ).withColumn("h", F.xxhash64("x"))
+
+
+def overlap_pairs(
+    postings: DataFrame, directed: bool = False, eval_split: Column | None = None
+) -> DataFrame:
+    """Inverted-index overlap: (a_ord, a_id, a_n, b_ord, b_id, b_n,
+    common) for every pair of shingle rows sharing >= 1 posting hash.
+    Only (ord, doc_id, n, hash) ints shuffle; cost is the sum over
+    hashes of the pair count per hash, which explodes on hot shingles
+    (prefix filtering is the prune).
+
+    - default: unordered pairs with a_id < b_id; two rows of one
+      doc_id never pair (the oracles' ``a.doc_id < b.doc_id``);
+    - ``directed``: both orientations of every a_id <> b_id pair;
+      |A n B| is symmetric, so each pair is counted once and mirrored;
+    - ``eval_split``: a doc_id predicate; a = rows outside it (train),
+      b = rows inside it (eval), no id order."""
+    post = postings.select("ord", "doc_id", "n", "h")
+    if eval_split is None:
+        a, b = post, post
+    else:
+        a, b = post.filter(~eval_split), post.filter(eval_split)
+    pairs = _side(a, "a", ("h",)).join(_side(b, "b", ("h",)), "h")
+    if eval_split is None:
+        pairs = pairs.filter(F.col("a_id") < F.col("b_id"))
+    common = pairs.groupBy(*[c for c in pairs.columns if c != "h"]).agg(
+        F.count(F.lit(1)).alias("common")
+    )
+    if not directed:
+        return common
+    flip = {f"{x}_{c}": f"{y}_{c}" for x, y in ("ab", "ba") for c in ("ord", "id", "n")}
+    return common.unionByName(
+        common.select(*[F.col(flip.get(c, c)).alias(c) for c in common.columns])
+    )
+
+
+def _band_candidates(sig: DataFrame, bands: Column, *payload: str) -> DataFrame:
+    """Distinct pairs of ``sig`` rows (a_id < b_id) that share at least
+    one LSH band value. ``bands`` is an array<struct<band, val>>
+    expression over ``sig``; the ``payload`` columns (doc_id among
+    them) ride through on both sides as a_* / b_*. The array is built
+    inside the explode: projected as a column first, Spark infers a
+    ``size(bands) > 0`` filter that evaluates the signature twice."""
+    banded = sig.select(*payload, F.explode(bands).alias("b")).select(
+        *payload, "b.band", "b.val"
+    )
+    keys = ("band", "val")
     return (
-        cand.join(sa, "a_id")
-        .join(sb, "b_id")
+        _side(banded, "a", keys).join(_side(banded, "b", keys), list(keys))
+        .filter(F.col("a_id") < F.col("b_id"))
+        .drop(*keys)
+        .distinct()
+    )
+
+
+def _verify_jaccard(cand: DataFrame, sh: DataFrame, key: str = "ord") -> DataFrame:
+    """Join candidate pairs back to the shingle sets on a_{key} /
+    b_{key} (``doc_id`` joins as a_id / b_id) and keep the pairs with
+    exact Jaccard >= threshold. Only candidates are verified -- at
+    scale this joins |candidates| rows, not all pairs. ``cand``'s
+    columns ride through, plus ``jaccard``."""
+    k = "id" if key == "doc_id" else key
+    common = F.size(F.array_intersect("a_s", "b_s"))
+    jaccard = _jaccard(common, F.size("a_s"), F.size("b_s"))
+    return (
+        cand.join(_side(sh.select(key, "s"), "a"), f"a_{k}")
+        .join(_side(sh.select(key, "s"), "b"), f"b_{k}")
         .select(*cand.columns, jaccard.alias("jaccard"))
         .filter(F.col("jaccard") >= _JACCARD_THRESHOLD)
     )
@@ -279,38 +377,10 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the shingle frame is a session-memoized checkpoint (four
-    # consumers here: both self-join sides, both size joins)
-    sh = _doc_shingles(spark, sf_dir)
-    sizes = sh.select("doc_id", F.size("s").alias("n"))
-    # inverted index: ship 64-bit hashes through the shuffle, not text.
-    # Hash INSIDE the array then explode the precomputed longs: a
-    # generator whose child is an uncached expensive array pipeline
-    # evaluates it interpreted (7.1s at sf0.1 vs 0.5s for this
-    # spelling) -- with the cache this costs nothing and protects the
-    # plan if the cache is ever dropped
-    ex = sh.select(
-        "doc_id",
-        F.explode(F.expr("transform(s, x -> xxhash64(x))")).alias("h"),
-    )
-    a = ex.select(F.col("doc_id").alias("a_id"), "h")
-    b = ex.select(F.col("doc_id").alias("b_id"), "h")
-    common = (
-        a.join(b, "h")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .groupBy("a_id", "b_id")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    na = sizes.select(F.col("doc_id").alias("a_id"), F.col("n").alias("na"))
-    nb = sizes.select(F.col("doc_id").alias("b_id"), F.col("n").alias("nb"))
-    jaccard = F.col("common").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("common")
-    )
-    return (
-        common.join(na, "a_id")
-        .join(nb, "b_id")
-        .select("a_id", "b_id", jaccard.alias("jaccard"))
-        .filter(F.col("jaccard") >= _JACCARD_THRESHOLD)
+    o = overlap_pairs(_postings(_doc_shingles(spark, sf_dir)))
+    jaccard = _jaccard(F.col("common"), F.col("a_n"), F.col("b_n"))
+    return o.select("a_id", "b_id", jaccard.alias("jaccard")).filter(
+        F.col("jaccard") >= _JACCARD_THRESHOLD
     )
 
 
@@ -346,46 +416,15 @@ CONTAINMENT_SQL = f"""
 
 
 def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = _doc_shingles(spark, sf_dir)
-    sizes = sh.select("doc_id", F.size("s").alias("n")).filter(
-        F.col("n") > 0
-    )
-    ex = sh.select(
-        "doc_id",
-        F.explode(F.expr("transform(s, x -> xxhash64(x))")).alias("h"),
-    )
-    a = ex.select(F.col("doc_id").alias("a_id"), "h")
-    b = ex.select(F.col("doc_id").alias("b_id"), "h")
-    # |A n B| is symmetric: aggregate each unordered pair ONCE (a<b --
-    # half the join/agg mass of a directed a!=b join), then mirror the
-    # tiny post-agg pair list into both orientations before the
-    # per-side size test.
-    common = (
-        a.join(b, "h")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .groupBy("a_id", "b_id")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    directed = common.unionByName(
-        common.select(
-            F.col("b_id").alias("a_id"),
-            F.col("a_id").alias("b_id"),
-            "common",
-        )
-    )
-    na = sizes.select(F.col("doc_id").alias("a_id"), F.col("n").alias("na"))
-    return (
-        directed.join(na, "a_id")
-        .filter(
-            F.lit(10) * F.col("common") >= F.lit(_CONTAINMENT_PCT) * F.col("na")
-        )
-        .select(
-            "a_id",
-            "b_id",
-            (F.col("common").cast("double") / F.col("na")).alias(
-                "containment"
-            ),
-        )
+    # an empty shingle row has no postings, so it never pairs (the
+    # oracle's len(s) > 0)
+    o = overlap_pairs(_postings(_doc_shingles(spark, sf_dir)), directed=True)
+    return o.filter(
+        F.lit(10) * F.col("common") >= F.lit(_CONTAINMENT_PCT) * F.col("a_n")
+    ).select(
+        "a_id",
+        "b_id",
+        (F.col("common").cast("double") / F.col("a_n")).alias("containment"),
     )
 
 
@@ -421,35 +460,16 @@ DECONTAMINATE_SQL = f"""
 
 
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = _doc_shingles(spark, sf_dir)
-    sizes = sh.select("doc_id", F.size("s").alias("n"))
-    # in-array hash before explode (see q_ngram_jaccard_pairs)
-    ex = sh.select(
-        "doc_id",
-        F.explode(F.expr("transform(s, x -> xxhash64(x))")).alias("h"),
+    o = overlap_pairs(
+        _postings(_doc_shingles(spark, sf_dir)),
+        eval_split=F.col("doc_id") % 10 == 0,
     )
-    train = ex.filter(F.col("doc_id") % 10 != 0).select(
-        F.col("doc_id").alias("train_id"), "h"
-    )
-    ev = ex.filter(F.col("doc_id") % 10 == 0).select(
-        F.col("doc_id").alias("eval_id"), "h"
-    )
-    common = (
-        train.join(ev, "h")
-        .groupBy("train_id", "eval_id")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    nt = sizes.select(F.col("doc_id").alias("train_id"), F.col("n").alias("nt"))
-    ne = sizes.select(F.col("doc_id").alias("eval_id"), F.col("n").alias("ne"))
-    jaccard = F.col("common").cast("double") / (
-        F.col("nt") + F.col("ne") - F.col("common")
-    )
-    return (
-        common.join(nt, "train_id")
-        .join(ne, "eval_id")
-        .select("train_id", "eval_id", jaccard.alias("jaccard"))
-        .filter(F.col("jaccard") >= _JACCARD_THRESHOLD)
-    )
+    jaccard = _jaccard(F.col("common"), F.col("a_n"), F.col("b_n"))
+    return o.select(
+        F.col("a_id").alias("train_id"),
+        F.col("b_id").alias("eval_id"),
+        jaccard.alias("jaccard"),
+    ).filter(F.col("jaccard") >= _JACCARD_THRESHOLD)
 
 
 # ---------------------------------------------------------------------------
@@ -485,24 +505,22 @@ def _hash_duck(start: int) -> str:
     )
 
 
+def _md5_slice(col: str, start: int) -> Column:
+    """Spark twin of ``_hash_duck``: a 14-hex-digit md5 slice of
+    ``col`` mod 2^31-1."""
+    return F.expr(
+        f"CAST(conv(substring(md5({col}), {start}, 14), 16, 10) AS BIGINT)"
+        f" % {_HASH_MOD}"
+    )
+
+
 _BLOOM_M = 1 << 19  # bitmap bits (64 KiB packed)
 _BLOOM_K = 3  # probes per shingle
 
 
 def q_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = _doc_shingles(spark, sf_dir)
-    # hash INSIDE the array, then explode the precomputed (h1, h2)
-    # structs: exploding the raw shingle pipeline drops the expensive
-    # transform+distinct out of whole-stage codegen (measured 7s vs
-    # <1s at sf0.1), while an in-array hash keeps the generator trivial
-    h_struct = (
-        "transform(s, x -> named_struct("
-        f"'h1', CAST(conv(substring(md5(x), 1, 14), 16, 10) AS BIGINT) % {_HASH_MOD}, "
-        f"'h2', CAST(conv(substring(md5(x), 15, 14), 16, 10) AS BIGINT) % {_HASH_MOD}))"
-    )
-    hashed = (
-        sh.select("doc_id", F.explode(F.expr(h_struct)).alias("p"))
-        .select("doc_id", F.col("p.h1").alias("h1"), F.col("p.h2").alias("h2"))
+    hashed = _postings(_doc_shingles(spark, sf_dir)).select(
+        "doc_id", _md5_slice("x", 1).alias("h1"), _md5_slice("x", 15).alias("h2")
     )
 
     # eval side -> byte-packed bloom bitmap (tiny; shuffles are fine)
@@ -560,18 +578,13 @@ def q_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bloom_hash_duck(start: int) -> str:
-    # _hash_duck hashes the lambda/row variable `tok`
-    return _hash_duck(start)
-
-
 DECONTAMINATE_BLOOM_SQL = f"""
   WITH {_SHINGLES_CTE},
   ex AS (SELECT doc_id, unnest(s) AS tok FROM sh),
   hashed AS (
     SELECT doc_id, tok,
-           {_bloom_hash_duck(1)} AS h1,
-           {_bloom_hash_duck(15)} AS h2
+           {_hash_duck(1)} AS h1,
+           {_hash_duck(15)} AS h2
     FROM ex
   ),
   ev_pos AS (
@@ -614,14 +627,14 @@ DECONTAMINATE_BLOOM_SQL = f"""
 # ---------------------------------------------------------------------------
 
 
-def _minhash_signature(ex: DataFrame) -> DataFrame:
-    """(doc_id, h1, h2) base-hash pairs -> one row per doc with columns
-    h0..h{K-1}; one agg shuffle.
+def _minhash_signature(post: DataFrame) -> DataFrame:
+    """Postings -> one row per shingle row, (ord, doc_id, h0..h{K-1});
+    one agg shuffle.
 
     The K hash functions use double hashing (Kirsch-Mitzenmacher):
     ``g_i = (h1 + i*h2) mod p`` from TWO base xxhash64 evaluations per
-    shingle (computed in-array by the caller) -- hashing the string K
-    times costs K string traversals per row and a giant codegen unit
+    shingle (the posting hash and a seeded second one) -- hashing the
+    string K times costs K string traversals per row and a giant codegen unit
     (measured: the 64x xxhash64 spelling pushed the first-run
     compile+execute to ~14s at sf0.1; this form runs ~2s warm).
     mod 2^31-1 keeps every intermediate ANSI-safe (h1 + 63*h2 < 2^37)
@@ -629,11 +642,17 @@ def _minhash_signature(ex: DataFrame) -> DataFrame:
     practice; recall vs the exact answer is unchanged (verified: 25/25
     at sf0.01, 249/249 at sf0.1)."""
     p = F.lit(_HASH_MOD)
+    ex = post.select(
+        "ord",
+        "doc_id",
+        F.pmod("h", p).alias("h1"),
+        F.pmod(F.xxhash64(F.lit(1), "x"), p).alias("h2"),
+    )
     mins = [
         F.min(F.pmod(F.col("h1") + F.lit(i) * F.col("h2"), p)).alias(f"h{i}")
         for i in range(_MINHASH_K)
     ]
-    return ex.groupBy("doc_id").agg(*mins)
+    return ex.groupBy("ord", "doc_id").agg(*mins)
 
 
 # Memoized pair feed (round-7, verdict #4): four registered queries
@@ -674,19 +693,7 @@ def _minhash_pairs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingle checkpoint consumed by the signature pipeline AND the
     # verify join
     sh = _doc_shingles(spark, sf_dir)
-    # both base hashes computed in-array, exploded as precomputed
-    # structs (see q_ngram_jaccard_pairs)
-    ex = sh.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(s, x -> named_struct("
-                f"'h1', pmod(xxhash64(x), {_HASH_MOD}), "
-                f"'h2', pmod(xxhash64(1, x), {_HASH_MOD})))"
-            )
-        ).alias("p"),
-    ).select("doc_id", F.col("p.h1").alias("h1"), F.col("p.h2").alias("h2"))
-    sig = _minhash_signature(ex)
+    sig = _minhash_signature(_postings(sh))
     rows_per_band = _MINHASH_K // _MINHASH_BANDS
     bands = F.array(
         *[
@@ -699,18 +706,8 @@ def _minhash_pairs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             for bi in range(_MINHASH_BANDS)
         ]
     )
-    banded = sig.select("doc_id", F.explode(bands).alias("b")).select(
-        "doc_id", F.col("b.band").alias("band"), F.col("b.val").alias("val")
-    )
-    left = banded.select(F.col("doc_id").alias("a_id"), "band", "val")
-    right = banded.select(F.col("doc_id").alias("b_id"), "band", "val")
-    cand = (
-        left.join(right, ["band", "val"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
-    )
-    return _verify_jaccard(cand, sh)
+    cand = _band_candidates(sig, bands, "ord", "doc_id")
+    return _verify_jaccard(cand, sh).select("a_id", "b_id", "jaccard")
 
 
 # ---------------------------------------------------------------------------
@@ -815,17 +812,18 @@ SIMHASH_SQL = _simhash_sql()
 
 
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    from pyspark.sql import Window
-
     # Round-9 rewrite: the array-transform spelling evaluated FOUR
     # interpreted lambda passes per token (md5, two conv slices, the
     # trigram combine) -- higher-order functions never enter codegen
     # (measured ~2.9s isolated at sf0.1, ~1.2s after). Explode tokens
     # FIRST so md5/conv run as codegen'd columns, then build each
-    # trigram with two lead() steps in one doc-partitioned window; the
-    # bit-sum aggregate below reuses that exchange (same clustering).
-    toks = docs.select(
+    # trigram with two lead() steps in one doc-partitioned window,
+    # ordered by row then position; a trigram must stay inside one row
+    # (the oracle's never cross two texts of one doc_id). The bit-sum
+    # aggregate below groups by doc_id, as the oracle's does, and
+    # reuses the window's exchange (same clustering).
+    toks = _doc_rows(spark, sf_dir).select(
+        "ord",
         "doc_id",
         F.posexplode(F.split(F.trim(F.col("text")), _WS_CLASS)).alias(
             "pos", "tok"
@@ -833,22 +831,18 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # one md5 per token; both 31-bit hashes slice the same digest
     th = toks.select(
+        "ord",
         "doc_id",
         "pos",
-        F.expr(
-            f"CAST(conv(substring(md5(tok), 1, 14), 16, 10) AS BIGINT)"
-            f" % {_HASH_MOD}"
-        ).alias("h1"),
-        F.expr(
-            f"CAST(conv(substring(md5(tok), 15, 14), 16, 10) AS BIGINT)"
-            f" % {_HASH_MOD}"
-        ).alias("h2"),
+        _md5_slice("tok", 1).alias("h1"),
+        _md5_slice("tok", 15).alias("h2"),
     )
-    wl = Window.partitionBy("doc_id").orderBy("pos")
+    wl = Window.partitionBy("doc_id").orderBy("ord", "pos")
     tri = th.select(
         "doc_id",
         "h1",
         "h2",
+        (F.lead("ord", 2).over(wl) == F.col("ord")).alias("in_row"),
         F.lead("h1", 1).over(wl).alias("h1b"),
         F.lead("h1", 2).over(wl).alias("h1c"),
         F.lead("h2", 1).over(wl).alias("h2b"),
@@ -856,10 +850,10 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c1 = _COMBINE3.format(t0="h1", t1="h1b", t2="h1c", mult=31, mod=_HASH_MOD)
     c2 = _COMBINE3.format(t0="h2", t1="h2b", t2="h2c", mult=37, mod=_HASH_MOD)
-    # rows whose 2-ahead lead is NULL are the tail of each doc (and
-    # docs under 3 tokens vanish entirely) -- identical to the old
-    # CASE size(th1) < 3 guard + sequence(1, size - 2) enumeration
-    hashed = tri.filter(F.col("h1c").isNotNull()).select(
+    # a token whose 2-ahead lead is in another row (or absent) is the
+    # tail of its row (and rows under 3 tokens vanish entirely) --
+    # identical to the oracle's range(1, len(th1) - 1) enumeration
+    hashed = tri.filter(F.col("in_row")).select(
         "doc_id", F.expr(_combine62(c1, c2)).alias("h")
     )
     # bit-majority via plain bit sums: bit j set <=> 2*sum_j > n, the
@@ -882,15 +876,6 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"(CASE WHEN c{j} * 2 > nfeat THEN {1 << j}L ELSE 0L END)"
         for j in range(_SIMHASH_BITS)
     )
-    # one row per doc; NOT cached -- the band self-join's two branches
-    # are byte-identical subplans, so Spark materializes the shuffle
-    # once and reads it twice (ReusedExchange; pinned by
-    # tests/test_plan_shapes.py). Explicit caching here cost ~2s per
-    # bench run in re-materialization without saving any work.
-    sig = bitsum.selectExpr(
-        "doc_id", f"CAST({simhash_sql} AS BIGINT) AS simhash"
-    )
-
     bits_per_band = _SIMHASH_BITS // _SIMHASH_BANDS
     mask = (1 << bits_per_band) - 1
     bands = F.expr(
@@ -900,22 +885,19 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             for bi in range(_SIMHASH_BANDS)
         ) + ")"
     )
-    banded = sig.select("doc_id", "simhash", F.explode(bands).alias("b")).select(
-        "doc_id", "simhash", F.col("b.band").alias("band"), F.col("b.val").alias("val")
+    # one row per doc; NOT cached -- the band self-join's two branches
+    # are byte-identical subplans, so Spark materializes the shuffle
+    # once and reads it twice (ReusedExchange; pinned by
+    # tests/test_plan_shapes.py). Explicit caching here cost ~2s per
+    # bench run in re-materialization without saving any work.
+    sig = bitsum.selectExpr(
+        "doc_id", f"CAST({simhash_sql} AS BIGINT) AS simhash"
     )
-    left = banded.select(
-        F.col("doc_id").alias("a_id"), F.col("simhash").alias("sim_a"), "band", "val"
-    )
-    right = banded.select(
-        F.col("doc_id").alias("b_id"), F.col("simhash").alias("sim_b"), "band", "val"
-    )
-    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
+    hamming = F.bit_count(F.col("a_simhash").bitwiseXOR(F.col("b_simhash")))
     cand = (
-        left.join(right, ["band", "val"])
-        .filter(F.col("a_id") < F.col("b_id"))
+        _band_candidates(sig, bands, "doc_id", "simhash")
         .select("a_id", "b_id", hamming.alias("hamming"))
         .filter(F.col("hamming") <= _SIMHASH_HAMMING)
-        .distinct()
     )
     # the hamming XOR-popcount prefilter above keeps the candidate set
     # SMALL before the exact verify, so the intersect runs on raw
@@ -926,12 +908,9 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # prefilter had already made rare -- strictly more work (round-9;
     # string intersects also match the oracle exactly, no collision
     # caveat). hamming rides through the verify join, so cand is
-    # consumed exactly once -- no cache, no re-join.
-    sh = _doc_shingles(spark, sf_dir)
-    return (
-        _verify_jaccard(cand, sh)
-        .select("a_id", "b_id", "hamming", "jaccard")
-    )
+    # consumed exactly once -- no cache, no re-join. The candidates are
+    # doc_id pairs, so the verify joins on doc_id, as the oracle's does.
+    return _verify_jaccard(cand, _doc_shingles(spark, sf_dir), key="doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1633,47 +1612,22 @@ def q_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     sh = _doc_shingles(spark, sf_dir)
-    # hash AFTER the explode so xxhash64 runs as a codegen'd column
-    # (a transform() lambda is interpreted per element -- round-9
-    # rewrite, ~1s at sf0.1); every downstream shuffle (df window,
-    # rank window, candidate join) then carries (doc_id, int64) rows,
-    # never 3-word shingle strings. (df, hash) is still a shared TOTAL
-    # order over the shingle universe, which is all prefix-filter
-    # completeness requires; a 2^-64 hash collision merges two items'
-    # df counts, which can only ADD candidates, never lose a pair.
-    ex = sh.select("doc_id", F.explode("s").alias("x")).select(
-        "doc_id", F.xxhash64("x").alias("sh_hash")
+    # (df, hash) is a shared TOTAL order over the shingle universe,
+    # which is all prefix-filter completeness requires; a 2^-64 hash
+    # collision merges two items' df counts, which can only ADD
+    # candidates, never lose a pair. Document frequency is a COUNT
+    # window over the hash (one shuffle, no counts-table join back),
+    # then the rank runs in one row-partitioned window.
+    occ = _postings(sh).withColumn(
+        "df", F.count(F.lit(1)).over(Window.partitionBy("h"))
     )
-    # document frequency as a COUNT window over the hash (one shuffle,
-    # no counts-table join back -- the posting list never rides through
-    # a sort-merge join), then rank + set size in ONE doc-partitioned
-    # window pass (both functions share the exchange)
-    df_win = F.count(F.lit(1)).over(Window.partitionBy("sh_hash"))
-    occ = ex.withColumn("df", df_win)
-    w = Window.partitionBy("doc_id").orderBy("df", "sh_hash")
-    ranked = occ.withColumn("pos", F.row_number().over(w)).withColumn(
-        "n_sh", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
+    rank = F.row_number().over(Window.partitionBy("ord").orderBy("df", "h"))
+    prefix = occ.withColumn("pos", rank).filter(
+        F.col("pos") <= F.col("n") - F.expr("(9 * n + 9) div 10") + 1
     )
-    prefix_len = (
-        F.col("n_sh")
-        - F.expr("(9 * n_sh + 9) div 10")
-        + F.lit(1)
-    )
-    prefix = ranked.filter(F.col("pos") <= prefix_len).select(
-        "doc_id", "sh_hash"
-    )
-    a = prefix.select(F.col("doc_id").alias("a_id"), "sh_hash")
-    b = prefix.select(F.col("doc_id").alias("b_id"), "sh_hash")
-    cand = (
-        a.join(b, "sh_hash")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
-    )
-    return _verify_jaccard(cand, sh)
+    cand = overlap_pairs(prefix).select("a_ord", "a_id", "b_ord", "b_id")
+    return _verify_jaccard(cand, sh).select("a_id", "b_id", "jaccard")
 
 
 QUERIES_EXPORT: dict[str, tuple[SparkQuery, str | None]] = {

@@ -136,7 +136,12 @@ def _collect_queries(vecs: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     np.array([]) would give -- so norms (axis=1), bucket assignment
     (matmul) and the per-query loops all degrade to no-ops and every
     top-k variant returns an empty result instead of crashing."""
-    rows = vecs.filter(F.col("vec_id") < _N_QUERIES).orderBy("vec_id").collect()
+    # at most _N_QUERIES rows: order them here, since a Spark sort would
+    # cost a range-sampling job and a shuffle on top of the collect
+    rows = sorted(
+        vecs.filter(F.col("vec_id") < _N_QUERIES).collect(),
+        key=lambda r: r.vec_id,
+    )
     ids = np.array([r.vec_id for r in rows], dtype=np.int64)
     if not rows:
         return ids, np.empty((0, _DIM), dtype=np.float64)

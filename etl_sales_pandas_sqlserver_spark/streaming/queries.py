@@ -93,6 +93,36 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STATE_STORE_PARTITIONS = 8
 
 
+class WatermarkFinalizedAppendError(ValueError):
+    """An append-mode stream whose rows are emitted only once the
+    watermark finalizes them. ``_run_to_table`` turns off the no-data
+    micro-batch that advances the watermark, so such a query would end
+    with its last windows or unmatched outer rows never emitted."""
+
+
+def _watermark_finalized(plan) -> str | None:
+    """What in the analyzed ``plan`` emits in append mode only when the
+    watermark passes: a streaming aggregate (event-time or session
+    window) or an outer join of two streams. None for the
+    arrival-driven shapes (dropDuplicates, inner interval join)."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "Aggregate" and node.isStreaming():
+            return "a streaming aggregate"
+        if (
+            name == "Join"
+            and "Outer" in node.joinType().toString()
+            and node.left().isStreaming()
+            and node.right().isStreaming()
+        ):
+            return "an outer stream-stream join"
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return None
+
+
 # SERIAL-EXECUTION ASSUMPTION (r10 advice): the pin below mutates the
 # session-global spark.sql.shuffle.partitions; the driver/bench sweeps
 # run queries strictly serially, so nothing else observes the override.
@@ -123,7 +153,20 @@ def _run_to_table(spark: SparkSession, result: DataFrame, mode: str) -> DataFram
     24/7 deployment with downstream consumers of watermark-FINALIZED
     results (outer joins, append-mode window aggs) must keep the
     default instead; this knob is scoped to the finite replay run and
-    restored after."""
+    restored after, and an append query of a watermark-finalized shape
+    raises ``WatermarkFinalizedAppendError`` before it starts.
+
+    The memory sink's temp view is dropped on the way out, whether the
+    stream succeeded or failed: the returned frame is already resolved
+    and keeps the sink's rows, while the view would hold them on the
+    driver for the rest of the session."""
+    if mode == "append":
+        shape = _watermark_finalized(result._jdf.queryExecution().analyzed())
+        if shape is not None:
+            raise WatermarkFinalizedAppendError(
+                f"append-mode stream with {shape} emits only on watermark "
+                "advance; run it in complete or update mode"
+            )
     name = f"stream_sink_{next(_sink_counter)}"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     prev_nodata = spark.conf.get(
@@ -142,12 +185,13 @@ def _run_to_table(spark: SparkSession, result: DataFrame, mode: str) -> DataFram
             .start()
         )
         q.awaitTermination()
+        return spark.table(name)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         spark.conf.set(
             "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
         )
-    return spark.table(name)
+        spark.catalog.dropTempView(name)
 
 
 # ---------------------------------------------------------------------------

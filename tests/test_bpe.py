@@ -219,9 +219,8 @@ def test_detokenize_byte_identity_over_real_vocab(spark, merge_corpus):
     characters, never alter them. Runs over the staged corpus AND the
     real sf0.001 document vocabulary with that corpus' own top-K merge
     table, so the witness covers organic text, not just crafted words.
-    (Scheduled to graduate into a registered ``bpe_detokenize_check``
-    query with per-source compression ratios when the rotation window
-    has slack — r18 per the r16 verdict's deferral note.)"""
+    (A candidate for a registered ``bpe_detokenize_check`` query with
+    per-source compression ratios; the registry is not growing now.)"""
     from pyspark.sql import functions as F
 
     from etl_sales_pandas_sqlserver_spark.functions.bpe import (

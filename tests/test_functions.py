@@ -730,3 +730,18 @@ def test_table_fingerprint_order_insensitive_and_mutation_sensitive(spark):
 
     assert fp(a) == fp(b.repartition(7))
     assert fp(a) != fp(mut)
+
+
+def test_collect_queries_runs_one_job(spark, sf_small, job_ids):
+    """The query batch is at most eight rows: collecting it unsorted and
+    ordering on the driver is one Spark job (a Spark orderBy adds a
+    range-sampling job and a shuffle)."""
+    from etl_sales_pandas_sqlserver_spark.functions.similarity import (
+        _collect_queries,
+        _vectors,
+    )
+
+    vecs = _vectors(spark, sf_small)
+    (ids, mat), jobs = job_ids(lambda: _collect_queries(vecs))
+    assert len(jobs) == 1, jobs
+    assert list(ids) == sorted(ids) and len(ids) == len(mat) > 0

@@ -9,9 +9,10 @@ to disagree (and where one engine can disagree WITH ITSELF across
 runs) — the classic silent-nondeterminism trap.
 
 Full-registry sweep (``tools/hostile_sweep.py documents_dupid``):
-**181 green / 5 mismatch / 0 errors.** (The r15 sweep reported
+**186 green / 0 mismatch / 0 errors.** (The r15 sweep reported
 186/186, but its table was one row: an unparenthesized
-``ORDER BY doc_id LIMIT 1`` bound to the whole ``UNION ALL``.)
+``ORDER BY doc_id LIMIT 1`` bound to the whole ``UNION ALL``. With
+two rows the sweep found 181 green / 5 mismatch, fixed below.)
 
 - Green, and structurally so: the tied rows share the tie key, and
   every tie-sensitive query's OUTPUT projection either aggregates over
@@ -21,12 +22,15 @@ Full-registry sweep (``tools/hostile_sweep.py documents_dupid``):
   This suite pins a representative slice of those families so a
   future query that breaks the pattern (e.g. emitting a row_number
   alongside a non-key column) fails here first.
-- Mismatch: the id-keyed PAIR families ``dedup_jaccard_prefix_filter``,
+- The id-keyed PAIR families ``dedup_jaccard_prefix_filter``,
   ``dedup_containment_pairs``, ``dedup_ngram_jaccard``,
-  ``dedup_simhash`` and ``dedup_decontaminate`` emit a different
-  number of ``(a_id, b_id)`` pairs on the two engines once one id
-  carries two texts. Not pinned yet; the tripwire below keeps them
-  latent.
+  ``dedup_simhash`` and ``dedup_decontaminate`` once grouped their
+  shingle joins by ``doc_id``, merging the two texts of one id into
+  one set, and emitted a different number of ``(a_id, b_id)`` pairs
+  than DuckDB. They now pair ROWS: every group, window and size join
+  keys on the shingle frame's row ordinal (``dedup._doc_rows``) and
+  ``doc_id`` rides along as payload, which is what the oracle SQL
+  does. Pinned in ``_ROBUST``.
 """
 
 from __future__ import annotations
@@ -54,6 +58,13 @@ _ROBUST = [
     "split_train_val_test",
     "token_budget_waterfill",
     "chunk_context_windows",
+    # the shingle-pair families: pairs of ROWS keyed on the shingle
+    # frame's row ordinal, doc_id carried as payload
+    "dedup_ngram_jaccard",
+    "dedup_containment_pairs",
+    "dedup_decontaminate",
+    "dedup_jaccard_prefix_filter",
+    "dedup_simhash",
 ]
 
 
@@ -70,8 +81,8 @@ def test_duplicate_doc_id_stays_oracle_green(spark, dupid_sf, name):
 
 
 def test_testdata_doc_ids_are_unique():
-    """Tripwire: the pair-family mismatches above stay latent only
-    while driver documents carry unique doc_ids at every sf."""
+    """Tripwire: the driver documents carry unique doc_ids at every sf,
+    so the pins above are the only coverage of a duplicated id."""
     import glob
     import os
 

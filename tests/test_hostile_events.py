@@ -10,8 +10,7 @@ found three tiers, mirrors of the embeddings audit
    and the 1h sliding windows order by a never-null derived bucket.
    Pinned parametrized below.
 
-2. **Fixed in r13** (both were r9-vintage, already re-verifying this
-   window, so the fix cost zero rotation slots):
+2. **Fixed in r13**:
    ``sessionize_events`` now excludes clock-less events explicitly on
    both engines (un-filtered, a NULL ts sorts NULLS FIRST in Spark but
    NULLS LAST in DuckDB and session boundaries diverge);
@@ -22,9 +21,9 @@ found three tiers, mirrors of the embeddings audit
 3. **Known divergences: all fixed.** The lag/lead/rows-window
    families (``window_event_deltas``, ``window_moving_avg_7``,
    ``window_zscore_anomaly``, ``window_first_last_touch``) got their
-   ``NULLS FIRST`` oracle respell in r15 (fronted into the r15 window
-   alongside the r11 drain) and the as-of join excluded clock-less
-   clicks on both engines in r14 — the known-divergent list is empty.
+   ``NULLS FIRST`` oracle respell in r15 and the as-of join excluded
+   clock-less clicks on both engines in r14 — the known-divergent list
+   is empty.
    The null-free-events tripwire below stays as the regression canary.
 """
 
@@ -111,8 +110,7 @@ _STREAM_ROBUST = [
     "stream_static_join_nation",
     "stream_stream_join_attrib",
     "stream_upsert_latest",
-    # fixed r14 (zero-slot: the whole stream_ family is r10-vintage
-    # and drains through the r14 window): the watermarked aggs'
+    # fixed r14: the watermarked aggs'
     # batch oracles now carry WHERE ts IS NOT NULL — which IS the
     # watermark's semantics — the stateful sessionizer filters
     # clock-less events explicitly on both engines, the hourly topk

@@ -162,3 +162,81 @@ def test_upsert_swap_recovers_from_every_crash_point(spark, tmp_path):
     assert not os.path.exists(target + "._staging")
     # a normal completed upsert leaves no side dirs either
     assert sorted(os.listdir(tmp_path)) == ["tbl"]
+
+
+def _sink_views(spark) -> list[str]:
+    return [
+        t.name for t in spark.catalog.listTables()
+        if t.isTemporary and t.name.startswith("stream_sink_")
+    ]
+
+
+def test_stream_sinks_are_released_and_frames_stay_readable(spark, sf_small):
+    """A memory sink's temp view holds the result rows on the driver
+    for the rest of the session: after every registered stream has run
+    (the card ingest twice) and one stream has failed, no
+    ``stream_sink_*`` view may remain, and every returned frame must
+    still collect. Running all of them also shows the append-mode guard
+    admits every registered stream."""
+    import pytest
+    from pyspark.sql import functions as F
+    from pyspark.errors import StreamingQueryException
+
+    from etl_sales_pandas_sqlserver_spark.streaming.queries import (
+        QUERIES_EXPORT,
+        _run_to_table,
+        q_stream_card_ingest,
+        read_events_stream,
+    )
+
+    assert len(QUERIES_EXPORT) == 11
+    first = q_stream_card_ingest(spark, sf_small)
+    second = q_stream_card_ingest(spark, sf_small)
+    frames = [fn(spark, sf_small) for fn, _ in QUERIES_EXPORT.values()]
+    failing = read_events_stream(spark, sf_small).select(
+        F.raise_error(F.lit("boom")).alias("x")
+    )
+    with pytest.raises(StreamingQueryException, match="boom"):
+        _run_to_table(spark, failing, "append")
+    assert _sink_views(spark) == []
+    rows = sorted(first.collect())
+    assert rows and rows == sorted(second.collect())
+    for df in frames:
+        df.collect()
+
+
+def test_append_stream_needing_the_watermark_fails_loudly(spark, sf_small):
+    """The finite replay turns off the no-data micro-batch that
+    advances the watermark, so an append query whose rows wait for it
+    (window aggregate, outer stream-stream join) must raise before it
+    starts, not return a table missing its last windows."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from etl_sales_pandas_sqlserver_spark.streaming.queries import (
+        WatermarkFinalizedAppendError,
+        _run_to_table,
+        read_events_stream,
+    )
+
+    ev = read_events_stream(spark, sf_small).withWatermark("event_time", "1 hour")
+    windowed = ev.groupBy(F.window("event_time", "1 hour")).count()
+    other = read_events_stream(spark, sf_small).select(
+        F.col("user_id").alias("p_user"),
+        F.col("event_time").alias("p_time"),
+    ).withWatermark("p_time", "1 hour")
+    outer = ev.join(
+        other,
+        F.expr(
+            "user_id = p_user AND p_time >= event_time "
+            "AND p_time <= event_time + INTERVAL 1 HOUR"
+        ),
+        "left_outer",
+    )
+    nodata = "spark.sql.streaming.noDataMicroBatches.enabled"
+    before = spark.conf.get(nodata)
+    for query, shape in ((windowed, "aggregate"), (outer, "outer")):
+        with pytest.raises(WatermarkFinalizedAppendError, match=shape):
+            _run_to_table(spark, query, "append")
+    assert spark.conf.get(nodata) == before
+    assert not spark.streams.active
