@@ -55,7 +55,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import managed_cache, memo
+from ..cache import managed_cache, memo, release
 from ..session import shuffle_partitions
 from ..sources.testdata import load_table
 from .textstats import fingerprint_col
@@ -996,7 +996,7 @@ def _dot(a, b):
 # NB x |eval|, tunable to the cluster), and each group runs ONE
 # vectorized kernel. No driver collect, no all-pairs shuffle. The
 # kernel accumulates dot products in strict index order
-# (similarity._seq_matmul), so the emitted cosine is bitwise identical
+# (similarity._seq_dot), so the emitted cosine is bitwise identical
 # to the oracle's list_reduce fold -- the full pair table hash-checks,
 # not just booleans. (The testdata has no zero-norm vectors, verified
 # across sf0.001-0.1, so the unguarded division matches the oracle's.)
@@ -1032,7 +1032,7 @@ def q_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql import types as T
 
-    from .similarity import _seq_matmul, _seq_norms
+    from .similarity import _seq_dot, _seq_norms
 
     nb = _COSINE_GRID_BLOCKS
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1066,7 +1066,7 @@ def q_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         tm = np.stack(tr["v"].to_numpy()).astype(np.float64)
         em = np.stack(evl["v"].to_numpy()).astype(np.float64)
         # oracle arithmetic exactly: dot / (nrm_t * nrm_e), fold order
-        cos = _seq_matmul(tm, em) / (
+        cos = _seq_dot(tm[:, None], em[None]) / (
             _seq_norms(tm)[:, None] * _seq_norms(em)[None, :]
         )
         ti, ei = np.nonzero(cos >= _COSINE_THRESHOLD)
@@ -1248,6 +1248,7 @@ def cluster_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
             # action on the new edge set, so it materializes the
             # checkpoint as a side effect -- one Spark job per round
             # instead of two (checkpoint + probe)
+            prev = edges
             edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
             # Convergence is detected DIRECTLY, in one two-level
             # aggregation per round: a canonical edge set is a fixed
@@ -1278,6 +1279,10 @@ def cluster_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
             )
             viol = per_node.agg(F.sum(bad_node.cast("int"))).collect()[0][0]
             converged = int(viol or 0) == 0
+            # the probe job filled the new checkpoint, and Spark cuts
+            # its lineage right after that job: nothing reads the
+            # superseded edge set's blocks any more
+            release(prev)
     if not converged:
         # partial star sets are WRONG (a component would be reported as
         # several clusters) -- fail loudly rather than return them.

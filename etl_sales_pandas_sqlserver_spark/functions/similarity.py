@@ -1,37 +1,47 @@
 """Similarity search over the ``embeddings`` table (array<float>, 64-d).
 
-Three paths, all sharing one scale shape: the query batch is tiny by
-definition (top-k search serves a bounded set of probes per request),
-so queries + index metadata are collected/broadcast to every executor,
+Four variants answer one top-k cosine question through one scan kernel,
+`_scan_topk`. The query batch is tiny by definition (top-k search
+serves a bounded set of probes per request), so its ids and vectors,
+plus the variant's index metadata, are broadcast to every executor,
 and the CANDIDATE side — the 100 TB side — streams through
-``mapInPandas`` in Arrow batches, each scored with one vectorized
-numpy kernel and reduced to a per-partition top-k before the (tiny)
-global top-k shuffle. Nothing ever shuffles the vectors.
+``mapInPandas`` in Arrow batches. Per batch the variant's probe yields
+one vectorized (rows, queries) mask of the candidates each query
+searches; each query's probed rows are scored with the sequential-fold
+cosine (`_seq_dot`, bitwise identical to the DuckDB oracle's
+``list_reduce`` fold) and cut to a per-partition top-k before the
+(tiny) global top-k shuffle. Nothing ever shuffles the vectors, and a
+variant is nothing but its candidate frame and its probe:
 
-- **exact top-k** (`similarity_topk_exact`): brute-force cosine of
-  every query against every candidate. The correctness baseline;
-  oracle-checked, so the kernel accumulates the dot product in strict
-  index order (see `_seq_matmul`) — bitwise identical to the DuckDB
-  oracle's sequential `list_reduce` fold. Map-side top-k means the
-  shuffle carries k rows per query per partition, not |candidates|.
-- **LSH ANN** (`similarity_topk_ann`): signed-random-projection
-  signatures; a candidate is probed when its bucket is within hamming
-  distance _PROBE_RADIUS of the query's bucket. Cost per query drops
-  from |candidates| to the probed-bucket mass. Hyperplanes are a fixed
-  seeded draw — no runtime randomness.
-- **IVF ANN** (`similarity_topk_ivf`): k-means coarse quantizer
-  (driver-side seeded Lloyd's on a bounded deterministic sample —
-  the standard billion-scale layout trains centroids on a sample, not
-  the corpus; MLlib's distributed k-means at query time would spend
-  20 scheduler round-trips on a 16x64 model). Vectors are assigned to
-  inverted lists by nearest centroid; each query searches its
-  _IVF_NPROBE nearest lists and reranks exactly.
+- **exact** (`similarity_topk_exact`, probe `_probe_all`): every
+  candidate. The correctness baseline, oracle-checked row for row.
+  Map-side top-k means the shuffle carries k rows per query per
+  partition, not |candidates|.
+- **LSH ANN** (`similarity_topk_ann`, probe `_probe_hamming`):
+  signed-random-projection buckets; a candidate is probed when its
+  bucket is within hamming distance _PROBE_RADIUS of the query's.
+  Scoring cost per query drops from |candidates| to the probed-bucket
+  mass. Hyperplanes are a fixed seeded draw — no runtime randomness.
+- **IVF ANN** (`similarity_topk_ivf`, probe `_probe_lists`): k-means
+  coarse quantizer (driver-side seeded Lloyd's on a bounded
+  deterministic sample — the standard billion-scale layout trains
+  centroids on a sample, not the corpus; MLlib's distributed k-means at
+  query time would spend 20 scheduler round-trips on a 16x64 model).
+  A candidate is probed when its nearest centroid is one of the
+  query's _IVF_NPROBE nearest lists.
+- **indexed LSH** (`similarity_topk_ann_indexed`, probe
+  `_probe_hamming`): the LSH probe over a bucket-partitioned parquet
+  index whose bucket filter skips unprobed files at plan time. The
+  probe is the scan-based LSH's, so the result is too.
 
-Approximate variants register their RESULT SETS rows-only for the
-driver (the sets are approximate by construction), but their recall
-floors are oracle-checked: ``similarity_ann_recall_contract`` computes
-recall@k of every variant against the exact baseline inside Spark and
-emits one boolean per variant for the driver's value-hash.
+The approximate result sets cannot be hash-compared with an oracle (they
+are approximate by construction), so each approximate variant registers
+its per-query membership contract (`_membership_contract`: k hits,
+distinct, no self-match, valid ids, ranks, and every cosine recomputed
+bitwise from an in-plan join of the query and neighbor vectors), and
+``similarity_ann_recall_contract`` computes recall@k of every variant
+against the exact baseline inside Spark, one boolean per variant
+against its floor in `_ANN_VARIANTS`, for the driver's value-hash.
 tests/test_functions.py additionally asserts the floors unit-side.
 
 Recall caveat, measured honestly: the synthetic test embeddings are
@@ -47,6 +57,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+from functools import reduce
 from typing import Callable, Iterator
 
 import numpy as np
@@ -108,25 +119,23 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
 
 
-def _seq_matmul(m: np.ndarray, q: np.ndarray) -> np.ndarray:
-    """(n, d) x (k, d) -> (n, k) dot products accumulated in strict
-    index order: acc = (acc + m[:,j]*q[:,j]) for j = 0..d-1. Per-element
-    this is the exact double-add sequence of the DuckDB oracle's
-    ``list_reduce`` fold (numpy elementwise ops don't fuse), so scalar
-    results are bitwise identical across engines while each step is a
-    vectorized O(n*k) kernel instead of an interpreted lambda."""
-    acc = np.zeros((m.shape[0], q.shape[0]), dtype=np.float64)
-    for j in range(m.shape[1]):
-        acc = acc + m[:, j : j + 1] * q[None, :, j]
+def _seq_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Dot products over the last axis (the leading axes broadcast),
+    accumulated in strict index order: acc = acc + a[..., j] * b[..., j]
+    for j = 0..d-1. Per element this is the exact double-add sequence of
+    the DuckDB oracle's ``list_reduce`` fold (numpy elementwise ops don't
+    fuse), so scalar results are bitwise identical across engines while
+    each step is one vectorized kernel instead of an interpreted lambda.
+    ``_seq_dot(m[:, None], q[None])`` is the (n, k) product matrix."""
+    acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+    for j in range(a.shape[-1]):
+        acc = acc + a[..., j] * b[..., j]
     return acc
 
 
 def _seq_norms(m: np.ndarray) -> np.ndarray:
     """sqrt of the sequential-fold self-dot, matching sqrt(_DOT_DUCK)."""
-    acc = np.zeros(m.shape[0], dtype=np.float64)
-    for j in range(m.shape[1]):
-        acc = acc + m[:, j] * m[:, j]
-    return np.sqrt(acc)
+    return np.sqrt(_seq_dot(m, m))
 
 
 def _collect_queries(vecs: DataFrame) -> tuple[np.ndarray, np.ndarray]:
@@ -149,16 +158,6 @@ def _collect_queries(vecs: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     return ids, mat
 
 
-def _local_topk(
-    ids: np.ndarray, cos: np.ndarray, qid: int, k: int
-) -> "list[tuple[int, int, float]]":
-    """Partition-local top-k by (cosine desc, neighbor_id asc)."""
-    if len(ids) == 0:
-        return []
-    order = np.lexsort((ids, -cos))[:k]
-    return [(qid, int(ids[i]), float(cos[i])) for i in order]
-
-
 def _global_topk(scored: DataFrame) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
@@ -170,84 +169,62 @@ def _global_topk(scored: DataFrame) -> DataFrame:
     )
 
 
-def q_topk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact brute-force top-k, memoized per (session, sf_dir).
+def _scan_topk(
+    spark: SparkSession,
+    queries: tuple[np.ndarray, np.ndarray],
+    cands: DataFrame,
+    probe: Callable[..., np.ndarray],
+    *ctx: object,
+) -> DataFrame:
+    """The one top-k scan behind every variant.
 
-    The result is n_queries x k rows — broadcast-size by definition —
-    but producing it is the family's most expensive scan (full corpus x
-    query batch), and THREE same-session consumers re-derive it:
-    the registered ``similarity_topk_exact`` query, ``q_knn_label``,
-    and ``q_ann_recall_contract``'s baseline. The session memo
-    (cache.memo) runs the scan once per session and hands every
-    consumer the same severed 40-row frame."""
-    return memo(
-        spark, "similarity_exact_topk", sf_dir, "embeddings",
-        lambda: _topk_exact_build(spark, sf_dir),
-    )
-
-
-def _topk_exact_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ``queries`` is the ``_collect_queries`` batch, broadcast with
+    ``ctx``; ``cands`` streams its ``(vec_id, v)`` rows through
+    ``mapInPandas``. ``probe(m, *ctx)`` is the variant: a boolean mask
+    over (rows, queries) -- or broadcastable to it -- saying which
+    candidates each query searches. Each query's probed candidates are
+    scored as the oracle spells cosine, dot / (q.nrm * c.nrm) (norms
+    multiplied first, then the divide), and cut to a partition-local
+    top-k by (cosine desc, neighbor_id asc) before the global top-k
+    shuffle, so the shuffle carries k rows per query per partition. A
+    zero-norm query or candidate has no cosine and is skipped, and so is
+    the query vector itself."""
     import pandas as pd
 
-    vecs = _vectors(spark, sf_dir)
-    q_ids, q_mat = _collect_queries(vecs)
-    q_nrm = _seq_norms(q_mat)
-    bc = spark.sparkContext.broadcast((q_ids, q_mat, q_nrm))
+    q_ids, q_mat = queries
+    bc = spark.sparkContext.broadcast((q_ids, q_mat, _seq_norms(q_mat), ctx))
 
     def scan(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        qids, qmat, qnrm = bc.value
+        qids, qmat, qnrm, args = bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            cand_ids = pdf["vec_id"].to_numpy()
+            ids = pdf["vec_id"].to_numpy()
             m = np.stack(pdf["v"].to_numpy()).astype(np.float64)
             nrm = _seq_norms(m)
-            # oracle spells cosine = dot / (q.nrm * c.nrm); reproduce the
-            # op order exactly (multiply norms first, then divide)
-            cos = _seq_matmul(m, qmat) / (qnrm[None, :] * nrm[:, None])
+            keep = probe(m, *args) & (ids[:, None] != qids) & (nrm[:, None] > 0.0)
             out: list[tuple[int, int, float]] = []
-            for qi in range(len(qids)):
-                if qnrm[qi] == 0.0:
-                    continue  # zero-norm query: cosine undefined, skip
-                keep = (cand_ids != qids[qi]) & (nrm > 0.0)
-                out.extend(
-                    _local_topk(cand_ids[keep], cos[keep, qi], int(qids[qi]), _TOP_K)
-                )
+            for qi in np.flatnonzero(qnrm != 0.0):
+                rows = keep[:, qi]
+                cand = ids[rows]
+                cos = _seq_dot(m[rows], qmat[qi]) / (qnrm[qi] * nrm[rows])
+                for i in np.lexsort((cand, -cos))[:_TOP_K]:
+                    out.append((int(qids[qi]), int(cand[i]), float(cos[i])))
             yield pd.DataFrame(out, columns=["query_id", "neighbor_id", "cosine"])
 
-    scored = vecs.mapInPandas(scan, schema=_PAIR_SCHEMA)
+    scored = cands.select("vec_id", "v").mapInPandas(scan, schema=_PAIR_SCHEMA)
     return _global_topk(scored)
-
-
-# ---------------------------------------------------------------------------
-# LSH ANN: signed random projections -> hamming-radius probe -> exact rerank.
-# ---------------------------------------------------------------------------
-
-
-def _hyperplanes() -> np.ndarray:
-    """Fixed seeded hyperplane draw; broadcast, no runtime RNG."""
-    rng = np.random.default_rng(42)
-    return rng.standard_normal((_N_PLANES, _DIM))
-
-
-def _bucket_of(mat: np.ndarray, planes: np.ndarray) -> np.ndarray:
-    """LSH bucket id per row: sign bit per hyperplane packed into an int."""
-    signs = (mat @ planes.T) >= 0.0
-    return (signs.astype(np.int64) << np.arange(_N_PLANES)[None, :]).sum(axis=1)
-
-
-#: popcount over the 2^_N_PLANES possible xor values (buckets are 5-bit)
-_POPCOUNT = np.array([bin(i).count("1") for i in range(1 << _N_PLANES)], dtype=np.int64)
 
 
 def _memoized_topk(variant: str, build: SparkQuery) -> SparkQuery:
     """Session-memoize a deterministic top-k variant's ranked frame.
 
-    Each approximate variant is consumed twice per sweep — once by its
-    registered membership contract, once by the recall contract's
-    union — and each consumption repeats the variant's corpus scan
-    (plus, for IVF, the quantizer-training sample collect). The result
-    is n_queries x k rows; the memo (same as the exact baseline above)
+    The exact baseline is consumed three times per session (its
+    registered query, ``q_knn_label`` and the recall contract's
+    baseline); each approximate variant twice (its membership contract
+    and the recall contract's union). Each consumption would repeat the
+    variant's corpus scan (plus, for IVF, the quantizer-training sample
+    collect). The result is n_queries x k rows; the memo (cache.memo)
     checkpoints it once per session and embeddings content.
     Determinism holds by construction: seeded hyperplanes / seeded
     Lloyd's, no runtime RNG anywhere."""
@@ -263,44 +240,54 @@ def _memoized_topk(variant: str, build: SparkQuery) -> SparkQuery:
     return fn
 
 
-def _topk_ann_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+def _probe_all(m: np.ndarray) -> np.ndarray:
+    """Exact search: every candidate is probed by every query."""
+    return np.ones((len(m), 1), dtype=bool)
 
+
+def _topk_exact_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = _vectors(spark, sf_dir)
-    q_ids, q_mat = _collect_queries(vecs)
-    q_nrm = _seq_norms(q_mat)
-    planes = _hyperplanes()
-    q_buckets = _bucket_of(q_mat, planes)
-    bc = spark.sparkContext.broadcast((q_ids, q_mat, q_nrm, q_buckets, planes))
+    return _scan_topk(spark, _collect_queries(vecs), vecs, _probe_all)
 
-    def scan(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        qids, qmat, qnrm, qbuck, pl = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cand_ids = pdf["vec_id"].to_numpy()
-            m = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            buckets = _bucket_of(m, pl)
-            nrm = _seq_norms(m)
-            out: list[tuple[int, int, float]] = []
-            for qi in range(len(qids)):
-                if qnrm[qi] == 0.0:
-                    continue  # zero-norm query: cosine undefined, skip
-                # probe = all candidates within hamming radius of the
-                # query's bucket (equivalent to enumerating the probe
-                # bucket set, without materializing it)
-                ham = _POPCOUNT[np.bitwise_xor(buckets, qbuck[qi])]
-                keep = (ham <= _PROBE_RADIUS) & (cand_ids != qids[qi]) & (nrm > 0.0)
-                if not keep.any():
-                    continue
-                cos = _seq_matmul(m[keep], qmat[qi : qi + 1])[:, 0] / (
-                    qnrm[qi] * nrm[keep]
-                )
-                out.extend(_local_topk(cand_ids[keep], cos, int(qids[qi]), _TOP_K))
-            yield pd.DataFrame(out, columns=["query_id", "neighbor_id", "cosine"])
 
-    scored = vecs.mapInPandas(scan, schema=_PAIR_SCHEMA)
-    return _global_topk(scored)
+q_topk_exact = _memoized_topk("exact", _topk_exact_build)
+
+
+# ---------------------------------------------------------------------------
+# LSH ANN: signed random projections -> hamming-radius probe -> exact rerank.
+# ---------------------------------------------------------------------------
+
+
+#: fixed seeded hyperplane draw (the same on the driver and in every
+#: worker that imports this module), no runtime RNG
+_PLANES = np.random.default_rng(42).standard_normal((_N_PLANES, _DIM))
+
+
+def _bucket_of(mat: np.ndarray) -> np.ndarray:
+    """LSH bucket id per row: sign bit per hyperplane packed into an int."""
+    signs = (mat @ _PLANES.T) >= 0.0
+    return (signs.astype(np.int64) << np.arange(_N_PLANES)[None, :]).sum(axis=1)
+
+
+#: popcount over the 2^_N_PLANES possible xor values (buckets are 5-bit)
+_POPCOUNT = np.array([bin(i).count("1") for i in range(1 << _N_PLANES)], dtype=np.int64)
+
+
+def _near_buckets(buckets: np.ndarray, q_buckets: np.ndarray) -> np.ndarray:
+    """(rows, queries) mask: bucket within hamming distance _PROBE_RADIUS
+    of the query's bucket (the probe bucket set, never materialized)."""
+    return _POPCOUNT[np.bitwise_xor(buckets[:, None], q_buckets[None, :])] <= _PROBE_RADIUS
+
+
+def _probe_hamming(m: np.ndarray, q_buckets: np.ndarray) -> np.ndarray:
+    """LSH: a candidate is probed when its bucket is near the query's."""
+    return _near_buckets(_bucket_of(m), q_buckets)
+
+
+def _topk_ann_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+    vecs = _vectors(spark, sf_dir)
+    queries = _collect_queries(vecs)
+    return _scan_topk(spark, queries, vecs, _probe_hamming, _bucket_of(queries[1]))
 
 
 q_topk_ann = _memoized_topk("ann", _topk_ann_build)
@@ -336,15 +323,23 @@ def _kmeans_fit(x: np.ndarray, k: int, seed: int, iters: int = 20) -> np.ndarray
     return c
 
 
-def _nearest_lists(u: np.ndarray, cents: np.ndarray, n: int) -> np.ndarray:
-    """Indices of the n nearest centroids (euclidean) per row: (rows, n)."""
+def _nearest_lists(m: np.ndarray, cents: np.ndarray, n: int) -> np.ndarray:
+    """Indices of the n nearest centroids (euclidean) to each row's unit
+    vector (a zero row stays zero): (rows, n)."""
+    nrm = np.linalg.norm(m, axis=1, keepdims=True)
+    u = m / np.where(nrm == 0.0, 1.0, nrm)
     d2 = ((u[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
     return np.argsort(d2, axis=1, kind="stable")[:, :n]
 
 
-def _topk_ivf_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+def _probe_lists(m: np.ndarray, cents: np.ndarray, q_lists: np.ndarray) -> np.ndarray:
+    """IVF: a candidate is probed when its inverted list (nearest
+    centroid) is one of the query's _IVF_NPROBE nearest lists."""
+    assign = _nearest_lists(m, cents, 1)
+    return (assign[:, :, None] == q_lists[None, :, :]).any(axis=2)
 
+
+def _topk_ivf_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = _vectors(spark, sf_dir)
     # bounded UNBIASED training sample for the coarse quantizer: a
     # hash-based filter (keep rows with xxhash64(vec_id) % D == 0) is
@@ -370,50 +365,9 @@ def _topk_ivf_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = x[xn[:, 0] > 0] / xn[xn[:, 0] > 0]
     cents = _kmeans_fit(x, _IVF_K, seed=42)
 
-    q_ids, q_mat = _collect_queries(vecs)
-    q_norms = np.linalg.norm(q_mat, axis=1, keepdims=True)
-    q_unit = q_mat / np.where(q_norms == 0.0, 1.0, q_norms)
-    probe_lists = _nearest_lists(q_unit, cents, _IVF_NPROBE)
-    q_seqnrm = _seq_norms(q_mat)
-    bc = spark.sparkContext.broadcast(
-        (q_ids, q_mat, q_seqnrm, q_norms[:, 0], probe_lists, cents)
-    )
-
-    def scan(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        qids, qmat, qseqnrm, qnrm, probes, c = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cand_ids = pdf["vec_id"].to_numpy()
-            m = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            nrm = np.linalg.norm(m, axis=1, keepdims=True)
-            u = m / np.where(nrm == 0.0, 1.0, nrm)
-            assign = _nearest_lists(u, c, 1)[:, 0]
-            out: list[tuple[int, int, float]] = []
-            for qi in range(len(qids)):
-                if qnrm[qi] == 0.0:
-                    continue  # zero-norm query: cosine undefined, skip
-                keep = (
-                    np.isin(assign, probes[qi])
-                    & (cand_ids != qids[qi])
-                    & (nrm[:, 0] > 0.0)
-                )
-                if not keep.any():
-                    continue
-                # probe selection is the IVF part; the reported score
-                # is spelled through the same sequential-fold kernel as
-                # the exact scan, so the membership contract can check
-                # it bitwise (round 7 -- a BLAS unit-vector dot differs
-                # in the last ulps)
-                mk = m[keep]
-                cos = _seq_matmul(mk, qmat[qi : qi + 1])[:, 0] / (
-                    qseqnrm[qi] * _seq_norms(mk)
-                )
-                out.extend(_local_topk(cand_ids[keep], cos, int(qids[qi]), _TOP_K))
-            yield pd.DataFrame(out, columns=["query_id", "neighbor_id", "cosine"])
-
-    scored = vecs.mapInPandas(scan, schema=_PAIR_SCHEMA)
-    return _global_topk(scored)
+    queries = _collect_queries(vecs)
+    q_lists = _nearest_lists(queries[1], cents, _IVF_NPROBE)
+    return _scan_topk(spark, queries, vecs, _probe_lists, cents, q_lists)
 
 
 q_topk_ivf = _memoized_topk("ivf", _topk_ivf_build)
@@ -424,12 +378,13 @@ q_topk_ivf = _memoized_topk("ivf", _topk_ivf_build)
 # full-corpus scan (IO = O(corpus) per query batch); this variant
 # materializes the corpus ONCE as bucket-partitioned parquet and lets
 # partition pruning skip every non-probed bucket's files at plan time.
-# Same hyperplanes, radius and rerank as q_topk_ann, so results are
-# identical -- asserted in tests -- while repeated query batches read
-# only |probe| / 2^_N_PLANES of the corpus. At 100 TB the index build
-# is one shuffle-free pass (bucket is computed per-row), and serving
-# IO is proportional to the probed buckets, the property that makes
-# repeated ANN serving viable at all.
+# The scan then applies the same probe as q_topk_ann to the files that
+# are read, so results are identical by construction -- asserted in
+# tests -- while repeated query batches read only |probe| / 2^_N_PLANES
+# of the corpus. At 100 TB the index build is one shuffle-free pass
+# (bucket is computed per-row), and serving IO is proportional to the
+# probed buckets, the property that makes repeated ANN serving viable
+# at all.
 # ---------------------------------------------------------------------------
 
 _ANN_INDEX_ROOT = os.path.join(tempfile.gettempdir(), "spark_graft_ann_index")
@@ -454,18 +409,14 @@ def build_ann_index(spark: SparkSession, sf_dir: str) -> str:
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         import pandas as pd  # noqa: F401
 
-        vecs = _vectors(spark, sf_dir)
-        bcp = spark.sparkContext.broadcast(_hyperplanes())
-
         def assign(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-            pl = bcp.value
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
                 m = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-                yield pdf.assign(bucket=_bucket_of(m, pl))
+                yield pdf.assign(bucket=_bucket_of(m))
 
-        bucketed = vecs.mapInPandas(
+        bucketed = _vectors(spark, sf_dir).mapInPandas(
             assign, schema="vec_id long, v array<double>, bucket long"
         )
         # co-locate each bucket before writing: one task -> one file per
@@ -479,65 +430,19 @@ def build_ann_index(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _topk_ann_indexed_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    vecs = _vectors(spark, sf_dir)
-    q_ids, q_mat = _collect_queries(vecs)
-    q_nrm = _seq_norms(q_mat)
-    planes = _hyperplanes()
-    q_buckets = _bucket_of(q_mat, planes)
-
+    queries = _collect_queries(_vectors(spark, sf_dir))
+    q_buckets = _bucket_of(queries[1])
     # the union probe set over all queries -> a partition-pruning filter
     all_b = np.arange(1 << _N_PLANES, dtype=np.int64)
-    probe = sorted(
-        {
-            int(b)
-            for qb in q_buckets
-            for b in all_b[_POPCOUNT[np.bitwise_xor(all_b, qb)] <= _PROBE_RADIUS]
-        }
-    )
-    index_path = build_ann_index(spark, sf_dir)
+    probed = all_b[_near_buckets(all_b, q_buckets).any(axis=1)].tolist()
     # explicit schema: an empty corpus writes an index with no data
     # files, where schema inference has nothing to read
     pruned = (
         spark.read.schema("vec_id long, v array<double>, bucket long")
-        .parquet(index_path)
-        .filter(F.col("bucket").isin(probe))
+        .parquet(build_ann_index(spark, sf_dir))
+        .filter(F.col("bucket").isin(probed))
     )
-
-    bc = spark.sparkContext.broadcast((q_ids, q_mat, q_nrm, q_buckets))
-
-    def scan(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        qids, qmat, qnrm, qbuck = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cand_ids = pdf["vec_id"].to_numpy()
-            buckets = pdf["bucket"].to_numpy()
-            m = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            nrm = _seq_norms(m)
-            out: list[tuple[int, int, float]] = []
-            for qi in range(len(qids)):
-                if qnrm[qi] == 0.0:
-                    continue
-                # per-query radius *within* the union probe set (files
-                # outside it were never read)
-                ham = _POPCOUNT[np.bitwise_xor(buckets, qbuck[qi])]
-                keep = (
-                    (ham <= _PROBE_RADIUS)
-                    & (cand_ids != qids[qi])
-                    & (nrm > 0.0)
-                )
-                if not keep.any():
-                    continue
-                cos = _seq_matmul(m[keep], qmat[qi : qi + 1])[:, 0] / (
-                    qnrm[qi] * nrm[keep]
-                )
-                out.extend(_local_topk(cand_ids[keep], cos, int(qids[qi]), _TOP_K))
-            yield pd.DataFrame(out, columns=["query_id", "neighbor_id", "cosine"])
-
-    scored = pruned.mapInPandas(scan, schema=_PAIR_SCHEMA)
-    return _global_topk(scored)
+    return _scan_topk(spark, queries, pruned, _probe_hamming, q_buckets)
 
 
 q_topk_ann_indexed = _memoized_topk("ann_indexed", _topk_ann_indexed_build)
@@ -603,7 +508,13 @@ def q_knn_label(spark: SparkSession, sf_dir: str) -> DataFrame:
 # binds.
 # ---------------------------------------------------------------------------
 
-_RECALL_FLOORS = {"ivf": 0.45, "lsh": 0.55, "lsh_indexed": 0.55}
+#: variant -> (raw top-k query, recall@k floor): the one table the
+#: recall contract reads its variant rows, their frames and floors from
+_ANN_VARIANTS: dict[str, tuple[SparkQuery, float]] = {
+    "ivf": (q_topk_ivf, 0.45),
+    "lsh": (q_topk_ann, 0.55),
+    "lsh_indexed": (q_topk_ann_indexed, 0.55),
+}
 
 ANN_RECALL_SQL = """
   SELECT 'ivf' AS variant, TRUE AS recall_floor_ok
@@ -620,17 +531,15 @@ def q_ann_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumers read the same severed 40-row frame and the full-corpus
     # scan runs at most once per session
     exact = q_topk_exact(spark, sf_dir).select("query_id", "neighbor_id")
-    variants = [
-        ("ivf", q_topk_ivf),
-        ("lsh", q_topk_ann),
-        ("lsh_indexed", q_topk_ann_indexed),
-    ]
-    tagged = None
-    for name, fn in variants:
-        part = fn(spark, sf_dir).select(
-            F.lit(name).alias("variant"), "query_id", "neighbor_id"
-        )
-        tagged = part if tagged is None else tagged.unionByName(part)
+    tagged = reduce(
+        DataFrame.unionByName,
+        [
+            fn(spark, sf_dir).select(
+                F.lit(name).alias("variant"), "query_id", "neighbor_id"
+            )
+            for name, (fn, _floor) in _ANN_VARIANTS.items()
+        ],
+    )
     # recall = |approx ∩ exact| / |exact| per variant
     hits = (
         tagged.join(F.broadcast(exact), ["query_id", "neighbor_id"])
@@ -643,11 +552,9 @@ def q_ann_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from the groupBy; an empty corpus has no recall to miss, so it
     # passes vacuously
     base = spark.createDataFrame(
-        [(n,) for n in sorted(_RECALL_FLOORS)], "variant string"
+        [(n, floor) for n, (_fn, floor) in sorted(_ANN_VARIANTS.items())],
+        "variant string, floor double",
     )
-    floor = F.when(
-        F.col("variant") == "ivf", F.lit(_RECALL_FLOORS["ivf"])
-    ).otherwise(F.lit(_RECALL_FLOORS["lsh"]))
     recall = F.coalesce(F.col("n_hits"), F.lit(0)).cast("double") / F.greatest(
         F.col("n_exact"), F.lit(1)
     )
@@ -656,7 +563,7 @@ def q_ann_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(n_exact_df))  # single-row denominator
         .select(
             "variant",
-            ((recall >= floor) | (F.col("n_exact") == 0)).alias(
+            ((recall >= F.col("floor")) | (F.col("n_exact") == 0)).alias(
                 "recall_floor_ok"
             ),
         )
@@ -703,40 +610,31 @@ def _membership_contract(
     per contract query."""
     import pandas as pd
 
-    res = fn(spark, sf_dir)
     vecs = _vectors(spark, sf_dir)
-    q_ids, q_mat = _collect_queries(vecs)
-    q_nrm = _seq_norms(q_mat)
-    bc = spark.sparkContext.broadcast((q_ids, q_mat, q_nrm))
-
-    # ids_valid + cosine recompute ride one join to the corpus
-    # vectors; a missing neighbor_id survives as v IS NULL.
-    joined = res.join(
-        vecs.select(
-            F.col("vec_id").alias("neighbor_id"), F.col("v").alias("nv")
-        ),
-        "neighbor_id",
-        "left",
-    ).select("query_id", "neighbor_id", "cosine", "rank", "nv")
+    # ids_valid and the cosine recompute ride two joins to the stored
+    # vectors, the query's and the neighbor's; a missing id survives as
+    # a NULL vector. Both joins read the same vector frame, so Spark
+    # reuses one exchange of it for the two
+    joined = (
+        fn(spark, sf_dir)
+        .join(vecs.withColumnsRenamed({"vec_id": "query_id", "v": "qv"}),
+              "query_id", "left")
+        .join(vecs.withColumnsRenamed({"vec_id": "neighbor_id", "v": "nv"}),
+              "neighbor_id", "left")
+    )
 
     def verify(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        qids, qmat, qnrm = bc.value
-        pos = {int(q): i for i, q in enumerate(qids)}
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ok = np.zeros(len(pdf), dtype=bool)
             valid = pdf["nv"].notna().to_numpy()
-            if valid.any():
-                sub = pdf[valid]
-                m = np.stack(sub["nv"].to_numpy()).astype(np.float64)
-                nrm = _seq_norms(m)
-                cos = _seq_matmul(m, qmat) / (qnrm[None, :] * nrm[:, None])
-                qcol = np.array(
-                    [pos[int(q)] for q in sub["query_id"]], dtype=np.int64
-                )
-                recomputed = cos[np.arange(len(sub)), qcol]
-                ok[valid] = recomputed == sub["cosine"].to_numpy()
+            both = valid & pdf["qv"].notna().to_numpy()
+            ok = np.zeros(len(pdf), dtype=bool)
+            if both.any():
+                q = np.stack(pdf["qv"][both].to_numpy()).astype(np.float64)
+                n = np.stack(pdf["nv"][both].to_numpy()).astype(np.float64)
+                cos = _seq_dot(n, q) / (_seq_norms(q) * _seq_norms(n))
+                ok[both] = cos == pdf["cosine"].to_numpy()[both]
             out = pdf[["query_id", "neighbor_id", "rank", "cosine"]].copy()
             out["id_valid"] = valid
             out["cos_ok"] = ok
@@ -780,6 +678,7 @@ def _membership_contract(
             F.bool_and("cos_ok").alias("cosine_exact_ok"),
         )
     )
+
 
 def q_topk_ann_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _membership_contract(q_topk_ann, spark, sf_dir)

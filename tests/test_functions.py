@@ -354,6 +354,21 @@ def test_cluster_components_high_diameter_path(spark):
     assert all(r["cluster_id"] == 1 for r in rows)
 
 
+def test_cluster_components_releases_superseded_checkpoints(spark):
+    # a 200-node path takes several rounds; each round's edge set
+    # supersedes the last, so only the pair list and the final edge set
+    # (both read by the returned frame) may stay persisted
+    n = 200
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, n)], ["a_id", "b_id"]
+    )
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    rows = cluster_components(path).collect()
+    assert len(rows) == n and {r["cluster_id"] for r in rows} == {1}
+    assert persistent().size() - before <= 2
+
+
 def test_cluster_components_star_input_converges_in_one_round(spark):
     # convergence is detected structurally (the post-round edge set IS
     # a star forest), not by comparing against the previous round, so
@@ -745,3 +760,58 @@ def test_collect_queries_runs_one_job(spark, sf_small, job_ids):
     (ids, mat), jobs = job_ids(lambda: _collect_queries(vecs))
     assert len(jobs) == 1, jobs
     assert list(ids) == sorted(ids) and len(ids) == len(mat) > 0
+
+
+def test_ann_contract_memo_hit_runs_no_job(spark, sf_small, job_ids):
+    """On a memo hit the membership contract is plan-only: its query
+    vectors come from an in-plan join, not from a second collect."""
+    from etl_sales_pandas_sqlserver_spark.functions.similarity import (
+        q_topk_ann_contract,
+    )
+
+    q_topk_ann(spark, sf_small)  # fill the memo
+    _, jobs = job_ids(lambda: q_topk_ann_contract(spark, sf_small))
+    assert jobs == []
+
+
+def test_membership_contract_flags_tampered_rows(spark, sf_small):
+    """A cosine 1e-12 off its recomputation, and a neighbor id that is
+    not in the corpus, each flip their own query's booleans only."""
+    from etl_sales_pandas_sqlserver_spark.functions import similarity as sim
+
+    first = (F.col("rank") == 1) & (F.col("query_id") == 0)
+    second = (F.col("rank") == 1) & (F.col("query_id") == 1)
+    bad = (
+        q_topk_ann(spark, sf_small)
+        .withColumn("cosine", F.when(first, F.col("cosine") + 1e-12)
+                    .otherwise(F.col("cosine")))
+        .withColumn("neighbor_id", F.when(second, F.lit(-1))
+                    .otherwise(F.col("neighbor_id")))
+    )
+    rows = {
+        r.query_id: r.asDict()
+        for r in sim._membership_contract(lambda s, d: bad, spark, sf_small).collect()
+    }
+    assert len(rows) == sim._N_QUERIES
+    failed = {
+        (q, k) for q, r in rows.items() for k, v in r.items()
+        if k != "query_id" and v is not True
+    }
+    assert failed == {
+        (0, "cosine_exact_ok"), (1, "ids_valid_ok"), (1, "cosine_exact_ok")
+    }
+
+
+def test_recall_floors_come_from_one_table(spark, sf_small, monkeypatch):
+    """Each variant's recall row is checked against its own floor: an
+    unreachable floor for lsh_indexed fails that row and no other."""
+    from etl_sales_pandas_sqlserver_spark.functions import similarity as sim
+
+    monkeypatch.setitem(
+        sim._ANN_VARIANTS, "lsh_indexed", (sim.q_topk_ann_indexed, 1.01)
+    )
+    got = {
+        r.variant: r.recall_floor_ok
+        for r in sim.q_ann_recall_contract(spark, sf_small).collect()
+    }
+    assert got == {"ivf": True, "lsh": True, "lsh_indexed": False}
