@@ -110,8 +110,9 @@ def main() -> None:
     # reported timing is the MIN across runs: one-shot numbers carried
     # 1.5-3x scatter (first-run codegen/JIT, transient host
     # contention -- observed in BOTH directions), which made
-    # round-over-round comparison meaningless (round-3 VERDICT flagged
-    # two "regressions" that isolated re-runs cleared as noise). Min is
+    # round-over-round comparison meaningless (the round-3 VERDICT.md,
+    # commit 3ee68c1, flagged two "regressions" that isolated re-runs
+    # cleared as noise). Min is
     # the standard plan-cost estimator: contention only ever ADDS time.
     # First-run timings are preserved in the detail file under
     # "queries_cold".
@@ -119,8 +120,9 @@ def main() -> None:
     # queries whose min-of-n_runs still exceeds this get extra passes:
     # two runs bound cheap queries fine, but under suite-wide
     # contention the most expensive queries showed 3-4x suite-vs-
-    # isolated gaps (round-4 VERDICT: dedup_clusters 15.2s suite vs
-    # 3.6s isolated median), making round-over-round triage of exactly
+    # isolated gaps (the round-4 VERDICT.md, commit 2214650:
+    # dedup_clusters 15.2s suite vs 3.6s isolated median), making
+    # round-over-round triage of exactly
     # the queries that matter unreliable
     heavy_sec = float(os.environ.get("SPARK_GRAFT_BENCH_HEAVY_SEC", "2.0"))
     heavy_extra = max(0, int(os.environ.get("SPARK_GRAFT_BENCH_HEAVY_RUNS", "2")))
@@ -162,8 +164,9 @@ def main() -> None:
 
     # isolated medians for the suspicious queries: even min-of-4 under
     # suite conditions overstated heavies 3x vs a dedicated process
-    # (round-5 VERDICT: quantize_embeddings_int8 2.45s suite vs 0.76s
-    # isolated median, adjudicated by hand every round). Queries whose
+    # (the round-5 VERDICT.md, commit b0c4449: quantize_embeddings_int8
+    # 2.45s suite vs 0.76s isolated median, adjudicated by hand every
+    # round). Queries whose
     # suite min still exceeds the heavy threshold, or regressed >1.5x
     # against the previous round's detail file, re-run in ONE fresh
     # process via tests/perf_isolated.py; {suite, isolated} pairs land
@@ -254,7 +257,8 @@ def main() -> None:
         repo = os.path.dirname(os.path.abspath(__file__))
         try:
             # r14: 600s silently killed the smoke every driver round
-            # (BENCH_r13 recorded scale_smoke: {}) — 18 families plus
+            # (BENCH_r13.json, commit 5302aa0, recorded scale_smoke:
+            # {}) — 18 families plus
             # the one-time .scaledata regeneration in a fresh checkout
             # measure ~7 min alone; 1800s covers it with margin while
             # still bounding a hang

@@ -66,16 +66,11 @@ from .intmath import (
     next_pow2_spark,
     next_pow2_sql,
 )
-from .textstats import _TOKEN_SPLIT
-from .tokcount import WS_CLASS
 
-# Both token-count spellings come from the corpus-wide single source
-# of truth (functions/tokcount.py) — the same grain the budget /
-# sharding / release / curriculum families compute on, so batch
-# economics can never desync from the shard boundaries. The aliases
-# keep the historical call-site names.
-from .tokcount import N_TOKENS_SQL as _N_TOKENS_SQL
-from .tokcount import n_tokens_spark as _n_tokens_col
+# The token counts are tokcount's -- the grain the budget / sharding /
+# release / curriculum families compute on, so batch economics can
+# never desync from the shard boundaries.
+from .tokcount import N_TOKENS_SQL, n_tokens_spark, ws_split, ws_split_sql
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 _MIN_BUCKET = 16
@@ -89,7 +84,7 @@ _VOCAB_K = 64
 
 SEQ_BUCKET_SQL = f"""
   WITH t AS (
-    SELECT CAST({_N_TOKENS_SQL} AS BIGINT) AS n FROM documents
+    SELECT CAST({N_TOKENS_SQL} AS BIGINT) AS n FROM documents
   ),
   b AS (
     SELECT n,
@@ -119,7 +114,7 @@ def q_seq_bucket_padding_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact ppm. next_pow2 is bit math (length of the binary string of
     n-1), not log2 — transcendentals differ across libm builds."""
     docs = load_table(spark, sf_dir, "documents")
-    t = docs.select(_n_tokens_col().alias("n"))
+    t = docs.select(n_tokens_spark().alias("n"))
     cap = F.when(
         F.col("n") <= _MIN_BUCKET, F.lit(_MIN_BUCKET).cast("long")
     ).otherwise(F.expr(next_pow2_spark("n")))
@@ -152,7 +147,7 @@ def q_seq_bucket_padding_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PACKING_CURVE_SQL = f"""
   WITH t AS (
-    SELECT CAST({_N_TOKENS_SQL} AS BIGINT) AS n FROM documents
+    SELECT CAST({N_TOKENS_SQL} AS BIGINT) AS n FROM documents
   ),
   x AS (
     SELECT c.ctx, t.n, (t.n + c.ctx - 1) // c.ctx AS chunks
@@ -181,7 +176,7 @@ def q_packing_efficiency_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline every smarter packer must beat; 3 literal ctx points, so
     the explode triples a 1-column agg input, nothing more."""
     docs = load_table(spark, sf_dir, "documents")
-    t = docs.select(_n_tokens_col().alias("n"))
+    t = docs.select(n_tokens_spark().alias("n"))
     x = t.select(
         "n",
         F.explode(
@@ -219,7 +214,7 @@ def q_packing_efficiency_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 OOV_RATE_SQL = f"""
   WITH toks AS (
     SELECT source,
-           UNNEST(regexp_split_to_array(trim(text), '{WS_CLASS}')) AS token
+           UNNEST({ws_split_sql()}) AS token
     FROM documents
   ),
   counts AS (
@@ -252,9 +247,7 @@ def q_oov_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "source",
-        F.explode(F.split(F.trim(F.col("text")), _TOKEN_SPLIT)).alias(
-            "token"
-        ),
+        F.explode(ws_split()).alias("token"),
     )
     counts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
     vocab = (

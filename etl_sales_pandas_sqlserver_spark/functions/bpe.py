@@ -65,7 +65,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
-from .tokcount import WS_CLASS
+from .tokcount import ws_split, ws_split_sql
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -80,7 +80,7 @@ _APPLY_K = 16
 def q_bpe_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), WS_CLASS)).alias("w")
+        F.explode(ws_split(F.lower("text"))).alias("w")
     ).filter(F.length("w") >= 2)
     # Pre-aggregate word OCCURRENCES to the distinct-word VOCABULARY
     # with a multiplicity before building bigrams (r18, guide §2.3
@@ -115,7 +115,7 @@ def q_bpe_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BPE_TOP_PAIRS_SQL = f"""
   WITH words AS (
-    SELECT UNNEST(regexp_split_to_array(trim(lower(text)), '{WS_CLASS}')) AS w
+    SELECT UNNEST({ws_split_sql('lower(text)')}) AS w
     FROM documents
   ),
   pairs AS (
@@ -210,9 +210,7 @@ def q_bpe_apply_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     word_counts = (
         docs.select(
             "source",
-            F.explode(
-                F.split(F.trim(F.lower(F.col("text"))), WS_CLASS)
-            ).alias("w"),
+            F.explode(ws_split(F.lower("text"))).alias("w"),
         )
         .filter(F.length("w") >= 1)
         .groupBy("source", "w")
@@ -268,7 +266,7 @@ def _apply_merges_sql() -> str:
       FROM (
         SELECT UNNEST([substr(w, i, 2) for i in range(1, len(w))]) AS pair
         FROM (
-          SELECT UNNEST(regexp_split_to_array(trim(lower(text)), '{WS_CLASS}')) AS w
+          SELECT UNNEST({ws_split_sql('lower(text)')}) AS w
           FROM documents
         ) WHERE len(w) >= 2
       )
@@ -281,7 +279,7 @@ def _apply_merges_sql() -> str:
     SELECT source, w, CAST(COUNT(*) AS BIGINT) AS n_occ
     FROM (
       SELECT source,
-             UNNEST(regexp_split_to_array(trim(lower(text)), '{WS_CLASS}')) AS w
+             UNNEST({ws_split_sql('lower(text)')}) AS w
       FROM documents
     ) WHERE len(w) >= 1
     GROUP BY source, w

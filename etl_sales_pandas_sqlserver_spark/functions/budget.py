@@ -50,8 +50,12 @@ from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
 from .intmath import exact_ppm_spark, exact_ppm_sql
-from .tokcount import N_TOKENS_SQL as _N_TOKENS_SQL
-from .tokcount import n_tokens_spark
+from .tokcount import (
+    N_TOKENS_SQL,
+    md5_slice,
+    md5_slice_sql,
+    n_tokens_spark,
+)
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -143,14 +147,17 @@ def q_token_budget_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: DuckDB twin of :func:`sample_gate`
+SAMPLE_GATE_SQL = (
+    md5_slice_sql("CAST(doc_id AS VARCHAR) || '#budget'", 1, 8) + " % 1000000"
+)
+
+
 def sample_gate() -> "F.Column":
     """Deterministic 32-bit md5 gate in [0, 10^6) over ``doc_id``,
-    salted ``#budget`` (decorrelated from the split/mix families).
-    A doc survives a rate iff ``gate < rate_ppm``. Shared by the
-    audit query below and the release pipeline
-    (functions/release.py); the DuckDB twin is
-    ``CAST('0x' || substr(md5(id || '#budget'), 1, 8) AS BIGINT)
-    % 1000000``.
+    salted ``#budget``. A doc survives a rate iff ``gate < rate_ppm``.
+    Shared by the audit query below and the release pipeline
+    (functions/release.py); the DuckDB twin is :data:`SAMPLE_GATE_SQL`.
 
     The 32-bit prefix modulo 10^6 is slightly non-uniform
     (2^32 % 10^6 = 967296, so gates below 967296 are overrepresented
@@ -158,22 +165,8 @@ def sample_gate() -> "F.Column":
     bias only shows as a ~0.02% systematic tilt of achieved_ppm vs
     target_ppm, matching the established sampling-gate convention
     across the split/mix families."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("doc_id").cast("string"), F.lit("#budget")
-                    ).cast("binary")
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1_000_000
-    )
+    key = F.concat(F.col("doc_id").cast("string"), F.lit("#budget"))
+    return md5_slice(key, 1, 8) % 1_000_000
 
 
 def q_budget_sampled_by_source(
@@ -235,7 +228,7 @@ def q_budget_sampled_by_source(
 
 _WF_CTE = f"""
   WITH t AS (
-    SELECT source, CAST(SUM({_N_TOKENS_SQL}) AS BIGINT) AS avail
+    SELECT source, CAST(SUM({N_TOKENS_SQL}) AS BIGINT) AS avail
     FROM documents GROUP BY source
   ),
   r AS (
@@ -291,9 +284,8 @@ BUDGET_SAMPLED_SQL = f"""
   {_WF_CTE},
   d AS (
     SELECT doc_id, source,
-           CAST({_N_TOKENS_SQL} AS BIGINT) AS n_tok,
-           CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#budget'),
-                               1, 8) AS BIGINT) % 1000000 AS gate
+           CAST({N_TOKENS_SQL} AS BIGINT) AS n_tok,
+           {SAMPLE_GATE_SQL} AS gate
     FROM documents
   ),
   sh AS (

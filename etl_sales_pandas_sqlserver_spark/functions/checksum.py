@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
+from .tokcount import md5_slice, md5_slice_sql
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -46,33 +47,35 @@ def _row_hash(cols: list[str]):
     joined = F.concat_ws(
         "|", *[F.col(c).cast("string") for c in cols]
     )
-    return F.conv(F.substring(F.md5(joined.cast("binary")), 1, 8), 16, 10).cast(
-        "bigint"
-    )
+    return md5_slice(joined, 1, 8)
 
 
-TABLE_FINGERPRINT_SQL = """
-  SELECT 'orders' AS table_name,
-         CAST(COUNT(*) AS BIGINT) AS n_rows,
-         CAST(SUM(CAST('0x' || substr(md5(concat_ws('|',
+#: the DuckDB twins of the '|'-joined canonical renderings
+_ORDERS_ROW_SQL = """concat_ws('|',
               CAST(o_orderkey AS VARCHAR), CAST(o_custkey AS VARCHAR),
               o_orderstatus, CAST(CAST(o_orderdate AS DATE) AS VARCHAR),
-              o_orderpriority)), 1, 8) AS BIGINT)) AS BIGINT) AS fingerprint
+              o_orderpriority)"""
+_CUSTOMER_ROW_SQL = """concat_ws('|',
+              CAST(c_custkey AS VARCHAR), c_name,
+              CAST(c_nationkey AS VARCHAR), c_mktsegment)"""
+_NATION_ROW_SQL = """concat_ws('|',
+              CAST(n_nationkey AS VARCHAR), n_name,
+              CAST(n_regionkey AS VARCHAR))"""
+
+TABLE_FINGERPRINT_SQL = f"""
+  SELECT 'orders' AS table_name,
+         CAST(COUNT(*) AS BIGINT) AS n_rows,
+         CAST(SUM({md5_slice_sql(_ORDERS_ROW_SQL, 1, 8)}) AS BIGINT) AS fingerprint
   FROM orders
   UNION ALL
   SELECT 'customer',
          CAST(COUNT(*) AS BIGINT),
-         CAST(SUM(CAST('0x' || substr(md5(concat_ws('|',
-              CAST(c_custkey AS VARCHAR), c_name,
-              CAST(c_nationkey AS VARCHAR), c_mktsegment)), 1, 8)
-              AS BIGINT)) AS BIGINT)
+         CAST(SUM({md5_slice_sql(_CUSTOMER_ROW_SQL, 1, 8)}) AS BIGINT)
   FROM customer
   UNION ALL
   SELECT 'nation',
          CAST(COUNT(*) AS BIGINT),
-         CAST(SUM(CAST('0x' || substr(md5(concat_ws('|',
-              CAST(n_nationkey AS VARCHAR), n_name,
-              CAST(n_regionkey AS VARCHAR))), 1, 8) AS BIGINT)) AS BIGINT)
+         CAST(SUM({md5_slice_sql(_NATION_ROW_SQL, 1, 8)}) AS BIGINT)
   FROM nation
   ORDER BY table_name
 """

@@ -8,7 +8,7 @@ today's decides what actually needs reprocessing (the edited+added
 slice), what downstream artifacts to invalidate (removed), and whether
 a source's churn rate looks anomalous. The fingerprint is the same
 whitespace-normalized md5 the exact-dedup family uses
-(textstats.fingerprint_col == EXACT_DEDUP_SQL's spelling), so "edited"
+(tokcount.fingerprint_col and its SQL twin), so "edited"
 means the CONTENT changed, not merely the bytes.
 
 The two snapshots here are derived deterministically from the one
@@ -35,8 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
-from .textstats import fingerprint_col
-from .tokcount import WS_CLASS
+from .tokcount import fingerprint_col, fingerprint_sql
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -109,20 +108,16 @@ def q_corpus_churn_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_FP_SQL = (
-    "md5(lower(trim(regexp_replace({t}, '" + WS_CLASS + "', ' ', 'g'))))"
-)
-
 _DIFF_CTE = f"""
   old AS (
-    SELECT doc_id, source, {_FP_SQL.format(t="text")} AS fp
+    SELECT doc_id, source, {fingerprint_sql()} AS fp
     FROM documents WHERE doc_id % {_OLD_MOD} <> {_OLD_DROP}
   ),
   new AS (
     SELECT doc_id, source,
-           {_FP_SQL.format(
-               t=f"CASE WHEN doc_id % {_EDIT_MOD} = {_EDIT_HIT} "
-                 f"THEN text || '{_EDIT_SUFFIX}' ELSE text END"
+           {fingerprint_sql(
+               f"CASE WHEN doc_id % {_EDIT_MOD} = {_EDIT_HIT} "
+               f"THEN text || '{_EDIT_SUFFIX}' ELSE text END"
            )} AS fp
     FROM documents WHERE doc_id % {_NEW_MOD} <> {_NEW_DROP}
   ),

@@ -45,12 +45,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
-from .tokcount import N_TOKENS_SQL as _N_TOKENS_SQL
-from .tokcount import WS_CLASS as _WS_CLASS
-from .tokcount import n_tokens_spark as _n_tokens_col
 from .histograms import _BIN_CAP_SPARK, _BIN_CAP_SQL, ceil_rank_cap_agg
 from .intmath import PPM as _PPM, exact_ppm_spark, exact_ppm_sql
-from .textstats import fingerprint_col
+from .tokcount import (
+    N_TOKENS_SQL,
+    fingerprint_col,
+    fingerprint_sql,
+    n_tokens_spark,
+)
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -71,8 +73,8 @@ _GINI_PPM_SPARK = exact_ppm_spark(
 _BASE_SQL = rf"""
     SELECT source, lang,
            CAST(n_chars AS BIGINT) AS n,
-           CAST({_N_TOKENS_SQL} AS BIGINT) AS tok,
-           md5(lower(trim(regexp_replace(text, '{_WS_CLASS}', ' ', 'g')))) AS fp
+           CAST({N_TOKENS_SQL} AS BIGINT) AS tok,
+           {fingerprint_sql()} AS fp
     FROM documents
 """
 
@@ -83,7 +85,7 @@ def _base(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "lang",
         F.col("n_chars").cast("long").alias("n"),
-        _n_tokens_col().alias("tok"),
+        n_tokens_spark().alias("tok"),
         fingerprint_col().alias("fp"),
     )
 

@@ -58,8 +58,14 @@ from pyspark.sql import functions as F
 from ..cache import managed_cache, memo, release
 from ..session import shuffle_partitions
 from ..sources.testdata import load_table
-from .textstats import fingerprint_col
-from .tokcount import WS_CLASS
+from .tokcount import (
+    fingerprint_col,
+    fingerprint_sql,
+    md5_slice,
+    md5_slice_sql,
+    ws_split,
+    ws_split_sql,
+)
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -72,17 +78,6 @@ _SIMHASH_BANDS = 5
 _SIMHASH_HAMMING = 20
 _HASH_MOD = 2_147_483_647
 _HASH_SHIFT = 2_147_483_648  # 2^31
-
-#: Explicit whitespace class for this module's TOKEN sites (r14
-#: respell, aligned with the r10-cohort drain): Java's ``\s`` (Spark)
-#: includes U+000B, RE2's (DuckDB) does not, so the two engines
-#: disagreed on vertical-tab documents. The class is defined ONCE in
-#: functions/tokcount.py (the token-grain home, same hoist discipline
-#: as N_TOKENS_SQL) and proven cross-engine-identical over every
-#: Unicode codepoint. r16: EXACT_DEDUP_SQL's fingerprint (paired with
-#: textstats.fingerprint_col) now also interpolates this class — the
-#: module has no ``\s+`` site left.
-_WS_CLASS = WS_CLASS
 
 # ---------------------------------------------------------------------------
 # Shared shingling (word 3-grams, distinct per doc)
@@ -99,7 +94,7 @@ _SHINGLES_EXPR = """
 
 _SHINGLES_CTE = rf"""
   toks AS (
-    SELECT doc_id, regexp_split_to_array(trim(text), '{_WS_CLASS}') AS w
+    SELECT doc_id, {ws_split_sql()} AS w
     FROM documents
   ),
   sh AS (
@@ -152,7 +147,7 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         return _doc_rows(spark, sf_dir).select(
-            "ord", "doc_id", F.split(F.trim(F.col("text")), _WS_CLASS).alias("w")
+            "ord", "doc_id", ws_split().alias("w")
         ).select("ord", "doc_id", F.expr(_SHINGLES_EXPR).alias("s"))
 
     return memo(spark, "doc_shingles", sf_dir, "documents", build)
@@ -267,7 +262,7 @@ def _verify_jaccard(cand: DataFrame, sh: DataFrame, key: str = "ord") -> DataFra
 EXACT_DEDUP_SQL = rf"""
   WITH f AS (
     SELECT doc_id,
-           md5(lower(trim(regexp_replace(text, '{_WS_CLASS}', ' ', 'g')))) AS fingerprint
+           {fingerprint_sql()} AS fingerprint
     FROM documents
   )
   SELECT min(doc_id) AS keep_doc_id, fingerprint, COUNT(*) AS n_copies
@@ -496,31 +491,15 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # majority gate.
 # ---------------------------------------------------------------------------
 
-def _hash_duck(start: int) -> str:
-    return (
-        "list_reduce(list_prepend(CAST(0 AS BIGINT),"
-        f" list_transform(range({start}, {start + 14}), i ->"
-        " CAST(strpos('0123456789abcdef', substr(md5(tok), i, 1)) - 1 AS BIGINT))),"
-        f" (acc, x) -> acc * 16 + x) % {_HASH_MOD}"
-    )
-
-
-def _md5_slice(col: str, start: int) -> Column:
-    """Spark twin of ``_hash_duck``: a 14-hex-digit md5 slice of
-    ``col`` mod 2^31-1."""
-    return F.expr(
-        f"CAST(conv(substring(md5({col}), {start}, 14), 16, 10) AS BIGINT)"
-        f" % {_HASH_MOD}"
-    )
-
-
 _BLOOM_M = 1 << 19  # bitmap bits (64 KiB packed)
 _BLOOM_K = 3  # probes per shingle
 
 
 def q_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = _postings(_doc_shingles(spark, sf_dir)).select(
-        "doc_id", _md5_slice("x", 1).alias("h1"), _md5_slice("x", 15).alias("h2")
+        "doc_id",
+        (md5_slice("x", 1, 14) % _HASH_MOD).alias("h1"),
+        (md5_slice("x", 15, 14) % _HASH_MOD).alias("h2"),
     )
 
     # eval side -> byte-packed bloom bitmap (tiny; shuffles are fine)
@@ -583,8 +562,8 @@ DECONTAMINATE_BLOOM_SQL = f"""
   ex AS (SELECT doc_id, unnest(s) AS tok FROM sh),
   hashed AS (
     SELECT doc_id, tok,
-           {_hash_duck(1)} AS h1,
-           {_hash_duck(15)} AS h2
+           {md5_slice_sql("tok", 1, 14)} % {_HASH_MOD} AS h1,
+           {md5_slice_sql("tok", 15, 14)} % {_HASH_MOD} AS h2
     FROM ex
   ),
   ev_pos AS (
@@ -729,10 +708,7 @@ def _minhash_pairs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Spark hot path has NO per-character lambda work (the earlier
 #: char-fold polynomial hash spent ~2.6s of interpreted higher-order
 #: lambdas at sf0.1; this form is a codegen'd md5 + conv per token).
-#: Spark parses the hex slice with conv() (inline in q_simhash_pairs,
-#: over a single md5 array); DuckDB has no hex-parse function so the
-#: oracle folds the 14 hex digits -- fine, the oracle only ever runs
-#: at sf0.01.
+#: Both engines read the slices with tokcount.md5_slice's twins.
 #: combine three token hashes into one shingle feature hash; max
 #: intermediate = (p-1)*37 + (p-1) < 2^37, no int64 overflow. `{t0}`,
 #: `{t1}`, `{t2}` are the token-hash terms in engine-local indexing.
@@ -762,15 +738,17 @@ def _simhash_sql() -> str:
         _COMBINE3.format(t0="th1[i]", t1="th1[i+1]", t2="th1[i+2]", mult=31, mod=_HASH_MOD),
         _COMBINE3.format(t0="th2[i]", t1="th2[i+1]", t2="th2[i+2]", mult=37, mod=_HASH_MOD),
     )
+    th1 = f"{md5_slice_sql('tok', 1, 14)} % {_HASH_MOD}"
+    th2 = f"{md5_slice_sql('tok', 15, 14)} % {_HASH_MOD}"
     return rf"""
   WITH simw AS (
-    SELECT doc_id, regexp_split_to_array(trim(text), '{_WS_CLASS}') AS w
+    SELECT doc_id, {ws_split_sql()} AS w
     FROM documents
   ),
   simth AS (
     SELECT doc_id,
-           list_transform(w, tok -> {_hash_duck(1)}) AS th1,
-           list_transform(w, tok -> {_hash_duck(15)}) AS th2
+           list_transform(w, tok -> {th1}) AS th1,
+           list_transform(w, tok -> {th2}) AS th2
     FROM simw
   ),
   hashed AS (
@@ -825,17 +803,15 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = _doc_rows(spark, sf_dir).select(
         "ord",
         "doc_id",
-        F.posexplode(F.split(F.trim(F.col("text")), _WS_CLASS)).alias(
-            "pos", "tok"
-        ),
+        F.posexplode(ws_split()).alias("pos", "tok"),
     )
     # one md5 per token; both 31-bit hashes slice the same digest
     th = toks.select(
         "ord",
         "doc_id",
         "pos",
-        _md5_slice("tok", 1).alias("h1"),
-        _md5_slice("tok", 15).alias("h2"),
+        (md5_slice("tok", 1, 14) % _HASH_MOD).alias("h1"),
+        (md5_slice("tok", 15, 14) % _HASH_MOD).alias("h2"),
     )
     wl = Window.partitionBy("doc_id").orderBy("ord", "pos")
     tri = th.select(
@@ -1473,7 +1449,7 @@ _SPAN_TOKENS = 13
 
 REPEATED_SPANS_SQL = f"""
   WITH toks AS (
-    SELECT doc_id, regexp_split_to_array(trim(text), '{_WS_CLASS}') AS t
+    SELECT doc_id, {ws_split_sql()} AS t
     FROM documents
   ),
   spans AS (
@@ -1508,9 +1484,7 @@ def q_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" ELSE array() END"
     )
     exploded = (
-        docs.select(
-            "doc_id", F.split(F.trim(F.col("text")), _WS_CLASS).alias("t")
-        )
+        docs.select("doc_id", ws_split().alias("t"))
         .select("doc_id", F.explode(spans).alias("span_md5"))
     )
     return (

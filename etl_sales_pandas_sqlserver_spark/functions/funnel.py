@@ -52,8 +52,12 @@ from pyspark.sql import functions as F
 from ..sources.testdata import load_table
 from .dedup import DECONTAMINATE_SQL, q_decontaminate
 from .intmath import exact_ppm_spark, exact_ppm_sql
-from .textstats import fingerprint_col
-from .tokcount import N_TOKENS_SQL, WS_CLASS, n_tokens_spark
+from .tokcount import (
+    N_TOKENS_SQL,
+    fingerprint_col,
+    fingerprint_sql,
+    n_tokens_spark,
+)
 from .traindata import _MIN_TOKENS
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
@@ -186,13 +190,11 @@ def q_funnel_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# the fingerprint spelling below is pinned character-identical to
-# textstats.FINGERPRINT_SQL / fingerprint_col by tests/test_funnel.py
 _STAGED_CTE = f"""
   pool AS (
     SELECT doc_id, source,
            CAST({N_TOKENS_SQL} AS BIGINT) AS n_tok,
-           md5(lower(trim(regexp_replace(text, '{WS_CLASS}', ' ', 'g')))) AS fingerprint
+           {fingerprint_sql()} AS fingerprint
     FROM documents WHERE doc_id % 10 <> 0
   ),
   ranked AS (

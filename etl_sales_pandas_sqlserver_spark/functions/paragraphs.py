@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
+from .tokcount import space_split, space_split_sql
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -40,7 +41,7 @@ _DUP_NUM, _DUP_DEN = 3, 10
 
 PARAGRAPH_DUP_SQL = f"""
   WITH toks AS (
-    SELECT doc_id, string_split(text, ' ') AS ts FROM documents
+    SELECT doc_id, {space_split_sql('text')} AS ts FROM documents
   ),
   paras AS (
     SELECT doc_id,
@@ -70,7 +71,7 @@ PARAGRAPH_DUP_SQL = f"""
 
 def q_paragraph_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = docs.select("doc_id", F.split("text", " ").alias("ts"))
+    toks = docs.select("doc_id", space_split("text").alias("ts"))
     # guard the short-doc case BEFORE building the index sequence:
     # Spark's sequence(0, -1) counts DOWN to [0, -1] (DuckDB's
     # range(0, 0) is empty), so a <10-token doc would explode into two
@@ -121,11 +122,11 @@ def q_paragraph_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # features.
 # ---------------------------------------------------------------------------
 
-DIVERSITY_SQL = """
+DIVERSITY_SQL = f"""
   WITH s AS (
     SELECT doc_id, text,
            string_split(text, '') AS cs,
-           string_split(text, ' ') AS ts
+           {space_split_sql('text')} AS ts
     FROM documents
     WHERE length(text) > 0
   ),

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
+from .tokcount import space_split, space_split_sql
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -52,9 +53,13 @@ def q_quality_percentile_by_source(
     scored = docs.select(
         "doc_id",
         "source",
+        "text",
+        F.size(space_split("text")).alias("n_tok"),
+    ).select(
+        "doc_id",
+        "source",
         F.expr(
-            f"CAST(length(replace(text, ' ', '')) AS BIGINT) * {_PPM}"
-            f" div size(split(text, ' '))"
+            f"CAST(length(replace(text, ' ', '')) AS BIGINT) * {_PPM} div n_tok"
         ).alias("score_ppm"),
     )
     w = Window.partitionBy("source").orderBy("score_ppm", "doc_id")
@@ -84,7 +89,7 @@ QUALITY_PCT_SQL = f"""
   WITH s AS (
     SELECT doc_id, source,
            CAST(length(replace(text, ' ', '')) AS BIGINT) * {_PPM}
-             // len(string_split(text, ' ')) AS score_ppm
+             // len({space_split_sql('text')}) AS score_ppm
     FROM documents
   ),
   r AS (

@@ -38,11 +38,10 @@ from pyspark.sql import functions as F
 
 from ..cache import managed_cache
 from ..sources.testdata import load_table
-from .budget import _WF_CTE, _waterfill, sample_gate
+from .budget import SAMPLE_GATE_SQL, _WF_CTE, _waterfill, sample_gate
 from .intmath import exact_ppm_spark, exact_ppm_sql
 from .sharding import _N_SHARDS, assign_token_shards
-from .tokcount import N_TOKENS_SQL as _N_TOKENS_SQL
-from .tokcount import n_tokens_spark
+from .tokcount import N_TOKENS_SQL, n_tokens_spark
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -81,9 +80,8 @@ RELEASE_SHARD_SQL = f"""
   {_WF_CTE},
   d AS (
     SELECT doc_id, source,
-           CAST({_N_TOKENS_SQL} AS BIGINT) AS n_tok,
-           CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#budget'),
-                               1, 8) AS BIGINT) % 1000000 AS gate
+           CAST({N_TOKENS_SQL} AS BIGINT) AS n_tok,
+           {SAMPLE_GATE_SQL} AS gate
     FROM documents
   ),
   sh AS (

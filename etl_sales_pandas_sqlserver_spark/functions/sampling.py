@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
+from .tokcount import md5_slice, md5_slice_sql
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -35,8 +36,8 @@ WEIGHTED_PRIORITY_SQL = f"""
   WITH p AS (
     SELECT doc_id, lang, n_chars,
            n_chars * 4294967296.0
-             / (CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)
-                     AS BIGINT) + 1) AS priority
+             / ({md5_slice_sql("CAST(doc_id AS VARCHAR)", 1, 8)} + 1)
+             AS priority
     FROM documents
   ),
   r AS (
@@ -61,11 +62,7 @@ def q_sample_weighted_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Spelled as w * 2^32 / (h + 1): one double division of identical
     # bigint operands on both engines (w * 2^32 <= ~2.6e12, exact in
     # double), so the order -- and the hash -- is engine-independent.
-    h = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 8),
-        16,
-        10,
-    ).cast("bigint")
+    h = md5_slice(F.col("doc_id").cast("string"), 1, 8)
     p = docs.withColumn(
         "priority",
         F.col("n_chars") * F.lit(4294967296.0) / (h + F.lit(1)),

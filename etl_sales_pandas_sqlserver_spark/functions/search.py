@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..cache import memo
 from ..sources.testdata import load_table
+from .tokcount import space_split, space_split_sql
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -46,7 +47,7 @@ _terms_sql = ", ".join(f"'{t}'" for t in _BM25_TERMS)
 
 BM25_SEARCH_SQL = f"""
   WITH tok AS (
-    SELECT doc_id, UNNEST(string_split(trim(lower(text)), ' ')) AS tok
+    SELECT doc_id, UNNEST({space_split_sql('trim(lower(text))')}) AS tok
     FROM documents
   ),
   dl AS (
@@ -111,7 +112,7 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), " ")).alias("tok"),
+        F.explode(space_split(F.trim(F.lower("text")))).alias("tok"),
     )
     dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     stats = dl.agg(
@@ -275,7 +276,7 @@ _BIGRAM_TOPK = 50
 
 BIGRAM_LM_SQL = f"""
   WITH toks AS (
-    SELECT doc_id, string_split(trim(lower(text)), ' ') AS w
+    SELECT doc_id, {space_split_sql('trim(lower(text))')} AS w
     FROM documents
   ),
   big AS (
@@ -301,7 +302,7 @@ BIGRAM_LM_SQL = f"""
 def q_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        F.split(F.trim(F.lower(F.col("text"))), " ").alias("w")
+        space_split(F.trim(F.lower("text"))).alias("w")
     ).filter(F.size("w") >= 2)
     big = toks.select(
         F.explode(
@@ -346,9 +347,9 @@ def q_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: lm_score_ppm)`` — shared verbatim by the band-pruning oracle
 #: (functions/pruning.py), mirroring the shared ``lm_doc_scores``
 #: Spark helper
-LM_SCORES_CTE = """
+LM_SCORES_CTE = f"""
   toks AS (
-    SELECT doc_id, string_split(trim(lower(text)), ' ') AS w
+    SELECT doc_id, {space_split_sql('trim(lower(text))')} AS w
     FROM documents
   ),
   db AS (
@@ -406,7 +407,7 @@ def lm_doc_scores(docs: DataFrame) -> DataFrame:
     (functions/pruning.py) so the score spelling cannot drift between
     the rank and the prune."""
     toks = docs.select(
-        "doc_id", F.split(F.trim(F.lower(F.col("text"))), " ").alias("w")
+        "doc_id", space_split(F.trim(F.lower("text"))).alias("w")
     ).filter(F.size("w") >= 2)
     # both hashes built in-array; only (doc_id, int64, int64) shuffles.
     # chr(30) (record separator) keeps "ab c"+"d" distinct from

@@ -157,7 +157,9 @@ def q_shard_manifest_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     # IS doc_id, so an id-less document cannot be deterministically
     # placed (and the Spark chunk/super equi-joins drop a NULL chunk
     # anyway, while DuckDB's naive window would sort it NULLS LAST —
-    # the r15 hostile-docs divergence)
+    # the r15 hostile-docs divergence). On data with null doc_ids the
+    # manifest's token totals therefore run below the budget and
+    # release totals (which keep those documents) by their tokens.
     docs = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id").isNotNull())

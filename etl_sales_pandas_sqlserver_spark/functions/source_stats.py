@@ -48,8 +48,13 @@ from pyspark.sql import functions as F
 from ..sources.testdata import load_table
 from .dedup import _doc_shingles
 from .intmath import exact_ppm_spark, exact_ppm_sql
-from .textstats import _TOKEN_SPLIT, fingerprint_col
-from .tokcount import WS_CLASS
+from .tokcount import (
+    N_TOKENS_SQL,
+    fingerprint_col,
+    fingerprint_sql,
+    n_tokens_spark,
+    ws_split_sql,
+)
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -60,7 +65,7 @@ SparkQuery = Callable[[SparkSession, str], DataFrame]
 
 CONTAMINATION_SQL = rf"""
   WITH toks AS (
-    SELECT doc_id, source, regexp_split_to_array(trim(text), '{WS_CLASS}') AS w
+    SELECT doc_id, source, {ws_split_sql()} AS w
     FROM documents
   ),
   sh AS (
@@ -117,7 +122,7 @@ def q_contamination_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 DEDUP_RATE_SQL = rf"""
   WITH d AS (
     SELECT source,
-           md5(lower(trim(regexp_replace(text, '{WS_CLASS}', ' ', 'g')))) AS fp
+           {fingerprint_sql()} AS fp
     FROM documents
   ),
   g AS (SELECT fp, COUNT(*) AS cnt FROM d GROUP BY fp)
@@ -165,7 +170,7 @@ def q_source_dedup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 LANG_WEIGHTS_SQL = f"""
   WITH t AS (
     SELECT lang,
-           CAST(SUM(len(regexp_split_to_array(trim(text), '{_TOKEN_SPLIT}')))
+           CAST(SUM({N_TOKENS_SQL})
                 AS BIGINT) AS total_tokens
     FROM documents
     GROUP BY lang
@@ -195,9 +200,7 @@ def q_lang_sampling_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = (
         docs.select(
             "lang",
-            F.size(F.split(F.trim(F.col("text")), _TOKEN_SPLIT))
-            .cast("long")
-            .alias("n_ws"),
+            n_tokens_spark().alias("n_ws"),
         )
         .groupBy("lang")
         .agg(F.sum("n_ws").alias("total_tokens"))

@@ -22,20 +22,19 @@ from pyspark.sql import functions as F
 
 from ..cache import managed_cache
 from ..sources.testdata import load_table
-from .tokcount import WS_CHARS, WS_CLASS
+from .tokcount import (
+    N_TOKENS_SQL,
+    WS_CHARS,
+    fingerprint_col,
+    fingerprint_sql,
+    md5_slice,
+    md5_slice_sql,
+    n_tokens_spark,
+    ws_split,
+    ws_split_sql,
+)
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
-
-#: whitespace-word tokenizer used everywhere (documents.text is
-#: single-space separated, but the regex keeps the engine honest on
-#: arbitrary input). r17: bound to the explicit ``tokcount.WS_CLASS``
-#: grain — the LAST ``\s+`` site; Java's ``\s`` includes U+000B where
-#: the oracle's RE2 does not, so the six queries on this symbol
-#: (token_stats, quality_scores, winnow, docfreq, oov_rate,
-#: lang_sampling) silently desynced on vertical-tab text. The respell
-#: is atomic with batching.py's OOV_RATE_SQL literal (the Spark sides
-#: IMPORT this symbol; its paired SQL literals must move with it).
-_TOKEN_SPLIT = WS_CLASS
 
 #: BPE-ish surface tokenizer: runs of lowercase alnum OR a single
 #: non-alnum-non-whitespace char. The whitespace exclusion is the
@@ -58,10 +57,6 @@ _LANG_STOPWORDS: dict[str, list[str]] = {
 _LANG_ORDER = ["en", "es", "de", "fr"]
 
 
-def _tokens(col: str = "text"):
-    return F.split(F.trim(F.col(col)), _TOKEN_SPLIT)
-
-
 # ---------------------------------------------------------------------------
 # 1. Token counting: whitespace tokens + BPE-ish regex tokens, per source.
 # ---------------------------------------------------------------------------
@@ -69,7 +64,7 @@ def _tokens(col: str = "text"):
 TOKEN_STATS_SQL = f"""
   WITH d AS (
     SELECT source,
-           len(regexp_split_to_array(trim(text), '{_TOKEN_SPLIT}')) AS n_ws,
+           {N_TOKENS_SQL} AS n_ws,
            len(regexp_extract_all(lower(text), '{_RE_TOKEN}')) AS n_re,
            length(text) AS n_char
     FROM documents
@@ -91,7 +86,7 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         "source",
-        F.size(_tokens()).cast("long").alias("n_ws"),
+        n_tokens_spark().alias("n_ws"),
         F.size(F.regexp_extract_all(F.lower("text"), F.lit(_RE_TOKEN), F.lit(0)))
         .cast("long")
         .alias("n_re"),
@@ -121,7 +116,7 @@ _EN_STOP_SQL = ", ".join(f"'{w}'" for w in _LANG_STOPWORDS["en"])
 QUALITY_SCORES_SQL = f"""
   WITH t AS (
     SELECT doc_id,
-           regexp_split_to_array(trim(text), '{_TOKEN_SPLIT}') AS toks,
+           {ws_split_sql()} AS toks,
            length(text) AS n_char
     FROM documents
   ), m AS (
@@ -149,7 +144,7 @@ def q_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     stop_arr = F.array(*[F.lit(w) for w in _LANG_STOPWORDS["en"]])
     t = docs.select(
-        "doc_id", _tokens().alias("toks"), F.length("text").alias("n_char")
+        "doc_id", ws_split().alias("toks"), F.length("text").alias("n_char")
     )
     m = t.select(
         "doc_id",
@@ -209,7 +204,7 @@ def _lang_scores_sql() -> str:
     return f"""
   WITH t AS (
     SELECT doc_id, lang,
-           regexp_split_to_array(trim(lower(text)), '{_TOKEN_SPLIT}') AS toks
+           {ws_split_sql('lower(text)')} AS toks
     FROM documents
   ), s AS (
     SELECT doc_id, lang,
@@ -232,7 +227,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = docs.select(
         "doc_id",
         "lang",
-        F.split(F.trim(F.lower("text")), _TOKEN_SPLIT).alias("toks"),
+        ws_split(F.lower("text")).alias("toks"),
     )
     def _overlap(ws: list[str]):
         arr = F.array(*[F.lit(w) for w in ws])
@@ -270,7 +265,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 FINGERPRINT_SQL = f"""
   WITH f AS (
     SELECT doc_id,
-           md5(lower(trim(regexp_replace(text, '{WS_CLASS}', ' ', 'g')))) AS fingerprint
+           {fingerprint_sql()} AS fingerprint
     FROM documents
   )
   SELECT doc_id, fingerprint,
@@ -278,17 +273,6 @@ FINGERPRINT_SQL = f"""
   FROM f
   ORDER BY doc_id
 """
-
-
-def fingerprint_col(col: str = "text"):
-    """md5 of lowercase whitespace-collapsed text -- the content key
-    used by exact dedup (dedup.py) and this query. Whitespace is the
-    explicit ``tokcount.WS_CLASS`` grain (r16: was Java ``\\s+``,
-    which collapses U+000B where the oracle's RE2 ``\\s+`` does not --
-    the last silent-wrong-answer divergence class; now both engines
-    share one spelling, flipped atomically with every SQL site that
-    pins this spelling character-identical)."""
-    return F.md5(F.lower(F.trim(F.regexp_replace(F.col(col), WS_CLASS, " "))))
 
 
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -396,7 +380,7 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 TEXT_REPETITION_SQL = rf"""
   WITH toks AS (
-    SELECT doc_id, regexp_split_to_array(trim(text), '{WS_CLASS}') AS w
+    SELECT doc_id, {ws_split_sql()} AS w
     FROM documents
   ),
   grams AS (
@@ -427,9 +411,9 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
                           i -> concat_ws(' ', w[i-1], w[i], w[i+1]))
       END
     """
-    g = docs.select(
-        "doc_id", F.split(F.trim(F.col("text")), WS_CLASS).alias("w")
-    ).select("doc_id", F.expr(grams_expr).alias("g"))
+    g = docs.select("doc_id", ws_split().alias("w")).select(
+        "doc_id", F.expr(grams_expr).alias("g")
+    )
     n = F.size("g").cast("long")
     nd = F.size(F.array_distinct("g")).cast("long")
     dup = F.lit(1.0) - nd.cast("double") / n
@@ -456,8 +440,8 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cmb = hash * 2^20 + (2^20 - 1 - pos) -- so a plain window MIN picks
 # the winner (smaller hash wins; among equal hashes the larger pos
 # encodes smaller) and decoding recovers (hash, pos). The hash is the
-# first 10 md5 hex digits as an integer (< 2^40, so cmb < 2^60 --
-# int64-safe under ANSI; both engines fold the same digits). Position
+# first 10 md5 hex digits as an integer (tokcount.md5_slice; < 2^40,
+# so cmb < 2^60 -- int64-safe under ANSI). Position
 # must fit 20 bits (1M grams per document) -- production chunks longer
 # docs first (chunk_context_windows).
 #
@@ -470,18 +454,10 @@ _WINNOW_K = 3  # tokens per gram
 _WINNOW_W = 4  # grams per winnowing window
 _POS_ENC = 1 << 20
 
-#: DuckDB fold of the first 10 md5 hex digits of expression ``e``
-_WINNOW_HASH_DUCK = (
-    "list_reduce(list_prepend(CAST(0 AS BIGINT),"
-    " list_transform(range(1, 11), j ->"
-    " CAST(strpos('0123456789abcdef', substr(md5({e}), j, 1)) - 1 AS BIGINT))),"
-    " (acc, x) -> acc * 16 + x)"
-)
-
 WINNOW_SQL = f"""
   WITH toks AS (
     SELECT doc_id,
-           regexp_split_to_array(trim(lower(text)), '{_TOKEN_SPLIT}') AS w
+           {ws_split_sql('lower(text)')} AS w
     FROM documents
   ),
   grams AS (
@@ -497,7 +473,7 @@ WINNOW_SQL = f"""
     SELECT doc_id,
            list_transform(
              range(1, len(g) + 1),
-             i -> {_WINNOW_HASH_DUCK.format(e="g[i]")} * {_POS_ENC}
+             i -> {md5_slice_sql("g[i]", 1, 10)} * {_POS_ENC}
                   + ({_POS_ENC} - i)
            ) AS cs
     FROM grams
@@ -526,10 +502,9 @@ WINNOW_SQL = f"""
 
 def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.split(F.trim(F.lower(F.col("text"))), _TOKEN_SPLIT).alias("w"),
-    ).filter(F.size("w") >= _WINNOW_K)
+    toks = docs.select("doc_id", ws_split(F.lower("text")).alias("w")).filter(
+        F.size("w") >= _WINNOW_K
+    )
     # grams + hash + position encoding all inside the array, and the
     # frame CACHED before the explode: projection collapse would
     # otherwise fold the transform into the generator and evaluate it
@@ -537,11 +512,13 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured here 4.1s -> 1.2s at sf0.1)
     cmb = managed_cache(toks.select(
         "doc_id",
-        F.expr(
-            f"transform(sequence(1, size(w) - {_WINNOW_K} + 1),"
-            f" i -> CAST(conv(substring("
-            f"md5(array_join(slice(w, i, {_WINNOW_K}), ' ')), 1, 10),"
-            f" 16, 10) AS BIGINT) * {_POS_ENC} + ({_POS_ENC} - i))"
+        F.transform(
+            F.sequence(F.lit(1), F.size("w") - _WINNOW_K + 1),
+            lambda i: md5_slice(
+                F.array_join(F.slice("w", i, _WINNOW_K), " "), 1, 10
+            )
+            * _POS_ENC
+            + (_POS_ENC - i),
         ).alias("cs"),
     ))
     ex = cmb.select("doc_id", F.explode("cs").alias("c")).withColumn(
@@ -595,7 +572,7 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 DOCFREQ_QUALITY_SQL = f"""
   WITH tok AS (
     SELECT doc_id,
-           UNNEST(regexp_split_to_array(trim(lower(text)), '{_TOKEN_SPLIT}'))
+           UNNEST({ws_split_sql('lower(text)')})
              AS tok
     FROM documents
   ),
@@ -627,9 +604,7 @@ def q_docfreq_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
-        F.explode(
-            F.split(F.trim(F.lower(F.col("text"))), _TOKEN_SPLIT)
-        ).alias("tok"),
+        F.explode(ws_split(F.lower("text"))).alias("tok"),
     )
     df_tbl = tok.groupBy("tok").agg(
         F.count_distinct("doc_id").alias("df")

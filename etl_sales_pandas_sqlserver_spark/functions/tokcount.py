@@ -1,62 +1,49 @@
-"""The corpus-wide whitespace token-count spelling, ONCE.
+"""The engine's text primitives, each spelled once per engine.
 
-Token counts are the shared grain of the budgeting (functions/
-budget.py), sharding (functions/sharding.py), release (functions/
-release.py), curriculum (functions/curriculum.py), packing
-(functions/currpack.py), funnel (functions/funnel.py) and card
-(functions/dataset_cards.py, streaming/queries.py) families: a
-water-fill level computed on one token definition and a shard
-boundary computed on another would silently desync the pipeline. Both
-engines' spellings live here so a change to the grain is one edit:
+The text families (dedup, search, text stats, curation, budgets,
+cards, streams) are oracle-checked: every Spark query is compared with
+a DuckDB query over the same rows. That only holds if both engines
+split, fingerprint and hash text identically, so each primitive here is
+a TWIN: a Spark ``Column`` builder and the DuckDB SQL fragment that
+renders the same value. Spark builders take a ``Column`` or a column
+name; SQL builders take a SQL expression string. Callers that lower
+text pass ``lower(text)`` (or ``F.lower("text")``) in.
 
-- ``N_TOKENS_SQL``   — the DuckDB oracle fragment;
-- ``n_tokens_spark`` — the equivalent Spark Column (split on the
-  explicit class after trim, count elements, int64).
+1. **Token split** on the whitespace class ``WS_CLASS`` after trim:
+   :func:`ws_split` / :func:`ws_split_sql`, and the token count built
+   on it, :func:`n_tokens_spark` / :data:`N_TOKENS_SQL` (int64). An
+   empty or whitespace-only text splits to one empty token on both
+   engines. ``WS_CLASS`` is the set both regex dialects agree on: Java's
+   ``\\s`` (Spark) includes U+000B where RE2's (DuckDB) does not, and
+   the explicit class has zero divergence over every Unicode codepoint
+   (tests/test_cross_engine_primitives.py::
+   test_explicit_ws_class_has_zero_divergence).
 
-An empty/whitespace-only ``text`` yields 1 on both engines (split of
-the empty string returns one empty element) — a quirk, but an
-IDENTICAL quirk, which is what the hash compare needs.
+   :func:`space_split` / :func:`space_split_sql` split on ONE space and
+   do not trim: repeated spaces yield empty tokens. The BM25 search,
+   bigram LM and LM-score oracles (functions/search.py, shared by
+   functions/pruning.py), the paragraph-dup and text-diversity oracles
+   (functions/paragraphs.py) and the quality-percentile oracle
+   (functions/quality_calibration.py) count on this grain; folding it
+   into ``WS_CLASS`` would change their results on such text.
 
-r14: the grain split on the EXPLICIT class ``WS_CLASS`` now, closing
-the vertical-tab divergence this docstring used to document: Java's
-``\\s`` (Spark) includes U+000B where RE2's (DuckDB) does not, so
-``'a\\x0Bb'`` counted 2 Spark tokens vs 1 DuckDB token. The class is
-the two-engine intersection — RE2's ``\\s`` IS exactly
-``[\\t\\n\\f\\r ]``, so the oracle side of this respell is a semantic
-no-op and only Spark's \\x0B behavior changed (to match the oracle).
-Zero cross-engine divergence over every Unicode codepoint is proven
-by tests/test_cross_engine_primitives.py::
-test_explicit_ws_class_has_zero_divergence, and the fragment-level
-agreement (vertical tab included) by tests/test_tokcount.py.
+2. **Content fingerprint**: md5 of the lowercased, trimmed text with
+   every ``WS_CLASS`` run collapsed to one space --
+   :func:`fingerprint_col` / :func:`fingerprint_sql`. The exact-dedup
+   key of dedup, text stats, curation, source stats, cards, corpus
+   diff and the funnel.
 
-r16: the 8-site fingerprint spelling
-(``md5(lower(trim(regexp_replace(text, WS_CLASS, ' '))))`` across
-textstats/dedup/traindata/source_stats/dataset_cards/corpus_diff/
-funnel), traindata's curation token gate, textstats' repetition pair
-and ``_RE_TOKEN`` all interpolate this class now.
+3. **md5 hex slice**: ``width`` hex digits of ``md5(expr)`` from
+   1-based ``start``, read as an integer -- :func:`md5_slice` /
+   :func:`md5_slice_sql`. Spark parses the digits with ``conv``,
+   DuckDB casts a ``'0x'`` literal; both equal Python's
+   ``int(hexdigest()[start - 1:start - 1 + width], 16)``. The result
+   is INT for up to 7 digits (28 bits) and BIGINT up to 15 (60 bits).
+   The sampling, split, mix, budget and release gates, the table
+   checksum, the winnow hash and the simhash/bloom token hashes use it.
 
-r17: the LAST ``\\s+`` family landed — ``textstats._TOKEN_SPLIT`` is
-now ``WS_CLASS`` itself, flipped atomically with its paired SQL
-literals (batching.py OOV_RATE_SQL, source_stats.py
-CONTAMINATION_SQL). EVERY token/fingerprint site in the package is on
-this one grain; a package grep for backslash-s token sites finds
-none. The no-\\x0B testdata tripwire (test_tokcount) stands down to a
-plain data-freshness check: with zero ``\\s`` sites it no longer
-guards a latent divergence, but \\x0B-free driver data remains the
-documented precondition the hostile vtab axis (tests/
-test_hostile_docs_vtab.py + tools/hostile_sweep.py documents_vtab)
-builds its poison corpus against.
-
-Cross-family grain caveat (r15 ADVICE): ``shard_manifest_tokens``
-excludes null-``doc_id`` documents on both engines — a manifest whose
-global order IS doc_id cannot place an id-less document — while the
-sibling token-grain families (token_budget_waterfill, release totals,
-this module's raw counts) still include them. On data with null
-doc_ids, shard-manifest token totals therefore run LOW relative to
-budget/release totals by exactly the null-id documents' tokens. The
-exclusion is deliberate and documented at sharding.py's query; the
-same ``isNotNull`` respell is scheduled for the other doc_id-ordered
-token families in their drain rounds if a single grain is wanted.
+tests/test_tokcount.py evaluates every twin on both engines over the
+same rows and scans the package for hand spellings of them.
 """
 
 from __future__ import annotations
@@ -64,21 +51,70 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-#: The whitespace character SET (class interior) — shared so a
+#: The whitespace character SET (class interior) -- shared so a
 #: negated class (e.g. textstats._RE_TOKEN's "non-whitespace token
 #: char") spells the same five characters as the positive split class.
 WS_CHARS = r" \t\n\f\r"
 
-#: The EXPLICIT whitespace class — identical under Java regex (Spark)
-#: and RE2 (DuckDB): proven zero-divergence over every Unicode
-#: codepoint. This is the respell TARGET for every ``\s+`` site; new
-#: token sites must use this class from day one.
+#: The explicit whitespace class, identical under Java regex (Spark)
+#: and RE2 (DuckDB).
 WS_CLASS = f"[{WS_CHARS}]+"
 
-N_TOKENS_SQL = rf"len(regexp_split_to_array(trim(text), '{WS_CLASS}'))"
+
+def ws_split(col: Column | str = "text") -> Column:
+    """Tokens of ``col``: trim, then split on ``WS_CLASS``."""
+    return F.split(F.trim(col), WS_CLASS)
 
 
-def n_tokens_spark(col: str = "text") -> Column:
-    """Whitespace token count of ``col`` as int64 — the Spark twin of
+def ws_split_sql(expr: str = "text") -> str:
+    """DuckDB twin of :func:`ws_split`."""
+    return f"regexp_split_to_array(trim({expr}), '{WS_CLASS}')"
+
+
+N_TOKENS_SQL = f"len({ws_split_sql()})"
+
+
+def n_tokens_spark(col: Column | str = "text") -> Column:
+    """Whitespace token count of ``col`` as int64 -- the Spark twin of
     :data:`N_TOKENS_SQL`."""
-    return F.size(F.split(F.trim(F.col(col)), WS_CLASS)).cast("long")
+    return F.size(ws_split(col)).cast("long")
+
+
+def space_split(col: Column | str) -> Column:
+    """Tokens of ``col`` split on one space, untrimmed."""
+    return F.split(col, " ")
+
+
+def space_split_sql(expr: str) -> str:
+    """DuckDB twin of :func:`space_split`."""
+    return f"string_split({expr}, ' ')"
+
+
+def fingerprint_col(col: Column | str = "text") -> Column:
+    """md5 of lowercase, trimmed, whitespace-collapsed ``col``."""
+    return F.md5(F.lower(F.trim(F.regexp_replace(col, WS_CLASS, " "))))
+
+
+def fingerprint_sql(expr: str = "text") -> str:
+    """DuckDB twin of :func:`fingerprint_col`."""
+    return f"md5(lower(trim(regexp_replace({expr}, '{WS_CLASS}', ' ', 'g'))))"
+
+
+def _slice_type(width: int) -> tuple[str, str]:
+    """(Spark, DuckDB) signed integer type holding ``width`` <= 15 hex
+    digits."""
+    return ("int", "INTEGER") if width <= 7 else ("bigint", "BIGINT")
+
+
+def md5_slice(col: Column | str, start: int, width: int) -> Column:
+    """``width`` hex digits of ``md5(col)`` from ``start`` as an integer."""
+    digits = F.substring(F.md5(col), start, width)
+    return F.conv(digits, 16, 10).cast(_slice_type(width)[0])
+
+
+def md5_slice_sql(expr: str, start: int, width: int) -> str:
+    """DuckDB twin of :func:`md5_slice`."""
+    return (
+        f"CAST('0x' || substr(md5({expr}), {start}, {width})"
+        f" AS {_slice_type(width)[1]})"
+    )

@@ -35,20 +35,29 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
-from .tokcount import WS_CLASS
+from .tokcount import (
+    N_TOKENS_SQL,
+    fingerprint_col,
+    fingerprint_sql,
+    md5_slice,
+    md5_slice_sql,
+    n_tokens_spark,
+)
 
 # ---------------------------------------------------------------------------
 # Deterministic hash split: md5(doc_id) -> bucket 0..99 -> 80/10/10.
 # ---------------------------------------------------------------------------
 
-SPLIT_SQL = """
+_SPLIT_HASH_SQL = md5_slice_sql("CAST(doc_id AS VARCHAR)", 1, 4)
+
+SPLIT_SQL = f"""
   SELECT doc_id,
          CASE WHEN bucket < 80 THEN 'train'
               WHEN bucket < 90 THEN 'val'
               ELSE 'test' END AS split
   FROM (
     SELECT doc_id,
-           CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS INTEGER)
+           {_SPLIT_HASH_SQL}
              % 100 AS bucket
     FROM documents
   )
@@ -56,15 +65,15 @@ SPLIT_SQL = """
 """
 
 
-def _hash_bucket(key, n: int = 100):
-    """First 16 bits of md5(key-as-string), mod n. Pure JVM, exact."""
-    h = F.md5(key.cast("string").cast("binary"))
-    return F.conv(F.substring(h, 1, 4), 16, 10).cast("int") % n
+def _split_hash():
+    """Spark twin of ``_SPLIT_HASH_SQL``: the first 16 md5 bits of
+    ``doc_id``; mod 100 it is the split/sample bucket."""
+    return md5_slice(F.col("doc_id").cast("string"), 1, 4)
 
 
 def q_split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    bucket = _hash_bucket(F.col("doc_id"))
+    bucket = _split_hash() % 100
     split = (
         F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
     )
@@ -85,7 +94,7 @@ SAMPLE_SQL = f"""
   SELECT doc_id, lang
   FROM (
     SELECT doc_id, lang,
-           CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS INTEGER)
+           {_SPLIT_HASH_SQL}
              % 100 AS bucket
     FROM documents
   )
@@ -101,7 +110,7 @@ SAMPLE_SQL = f"""
 
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    bucket = _hash_bucket(F.col("doc_id"))
+    bucket = _split_hash() % 100
     rate = (
         F.when(F.col("lang") == "en", _KEEP_RATES["en"])
         .when(F.col("lang") == "zh", _KEEP_RATES["zh"])
@@ -351,8 +360,7 @@ CORPUS_MIX_SQL = f"""
                        WHEN 'src2' THEN {_MIX_WHOLE["src2"]}
                        WHEN 'src3' THEN {_MIX_WHOLE["src3"]}
                        ELSE {_MIX_DEFAULT[0]} END
-           + CASE WHEN CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#mix'), 1, 4)
-                         AS INTEGER) % 100
+           + CASE WHEN {md5_slice_sql("CAST(doc_id AS VARCHAR) || '#mix'", 1, 4)} % 100
                   < CASE source WHEN 'src0' THEN {_MIX_FRAC_PCT["src0"]}
                                 WHEN 'src1' THEN {_MIX_FRAC_PCT["src1"]}
                                 WHEN 'src2' THEN {_MIX_FRAC_PCT["src2"]}
@@ -384,7 +392,10 @@ def q_corpus_mix_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("source") == "src3", _MIX_FRAC_PCT["src3"])
         .otherwise(_MIX_DEFAULT[1])
     )
-    gate = _hash_bucket(F.concat(F.col("doc_id").cast("string"), F.lit("#mix")))
+    gate = (
+        md5_slice(F.concat(F.col("doc_id").cast("string"), F.lit("#mix")), 1, 4)
+        % 100
+    )
     total = whole + F.when(gate < frac_pct, 1).otherwise(0)
     # Spark's sequence(0, -1) would count DOWN; filter total>=1 first so
     # the sequence bound is always valid (DuckDB's generate_series side
@@ -467,7 +478,6 @@ _MIN_TOKENS = 5
 
 def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import q_decontaminate
-    from .textstats import fingerprint_col
 
     docs = load_table(spark, sf_dir, "documents")
     # train pool: eval docs (doc_id % 10 == 0) are the benchmark side
@@ -479,18 +489,16 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
     )
-    # 2. quality gate: drop fragments with too few tokens -- the
-    # explicit WS_CLASS grain (r16), ONE token definition with the
-    # funnel audit's census (tests/test_funnel.py pins agreement)
-    n_tokens = F.size(F.split(F.trim(F.col("text")), WS_CLASS))
-    kept = deduped.filter(n_tokens >= _MIN_TOKENS)
+    # 2. quality gate: drop fragments with too few tokens -- the one
+    # token count (tokcount), shared with the funnel audit's census
+    kept = deduped.filter(n_tokens_spark() >= _MIN_TOKENS)
     # 3. decontamination: drop anything near-duplicating an eval doc
     contaminated = q_decontaminate(spark, sf_dir).select(
         F.col("train_id").alias("doc_id")
     ).distinct()
     clean = kept.join(contaminated, "doc_id", "left_anti")
     # 4. deterministic split + 5. census rollup
-    bucket = _hash_bucket(F.col("doc_id"))
+    bucket = _split_hash() % 100
     split = (
         F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
     )
@@ -510,7 +518,7 @@ def _curation_sql() -> str:
     return f"""
   WITH pool AS (
     SELECT doc_id, lang, n_chars, text,
-           md5(lower(trim(regexp_replace(text, '{WS_CLASS}', ' ', 'g')))) AS fingerprint
+           {fingerprint_sql()} AS fingerprint
     FROM documents WHERE doc_id % 10 <> 0
   ),
   deduped AS (
@@ -519,7 +527,7 @@ def _curation_sql() -> str:
   ),
   kept AS (
     SELECT * FROM deduped
-    WHERE len(regexp_split_to_array(trim(text), '{WS_CLASS}')) >= {_MIN_TOKENS}
+    WHERE {N_TOKENS_SQL} >= {_MIN_TOKENS}
   ),
   contaminated AS (
     SELECT DISTINCT train_id AS doc_id FROM ({DECONTAMINATE_SQL}) c
@@ -529,8 +537,8 @@ def _curation_sql() -> str:
     WHERE c.doc_id IS NULL
   )
   SELECT CASE
-           WHEN CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS INTEGER) % 100 < 80 THEN 'train'
-           WHEN CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS INTEGER) % 100 < 90 THEN 'val'
+           WHEN {_SPLIT_HASH_SQL} % 100 < 80 THEN 'train'
+           WHEN {_SPLIT_HASH_SQL} % 100 < 90 THEN 'val'
            ELSE 'test' END AS split,
          lang,
          CAST(COUNT(*) AS BIGINT) AS n_docs,

@@ -30,7 +30,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.tokcount import WS_CLASS
+from ..functions.tokcount import ws_split, ws_split_sql
 from ..sources.testdata import load_table
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
@@ -41,7 +41,7 @@ _N_GROUPS = 8
 
 TOKEN_POSITION_SQL = rf"""
   WITH toks AS (
-    SELECT doc_id, regexp_split_to_array(trim(text), '{WS_CLASS}') AS w
+    SELECT doc_id, {ws_split_sql()} AS w
     FROM documents
   ),
   pos AS (
@@ -62,9 +62,7 @@ TOKEN_POSITION_SQL = rf"""
 
 def q_token_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.split(F.trim(F.col("text")), WS_CLASS).alias("w")
-    )
+    toks = docs.select("doc_id", ws_split().alias("w"))
     exploded = toks.select(
         F.posexplode(F.slice("w", 1, _MAX_POS)).alias("pos", "tok")
     )

@@ -36,9 +36,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions.finiteness import finite_value_col
-from ..functions.tokcount import N_TOKENS_SQL as _N_TOKENS_SQL
-from ..functions.tokcount import n_tokens_spark as _n_tokens_spark
-from ..session import shuffle_partitions
+from ..functions.tokcount import N_TOKENS_SQL, n_tokens_spark
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -89,7 +87,12 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: handful of open windows: measured 1.77s -> 1.14s warm on
 #: stream_hourly_agg at 8. A real deployment sizes this to state VOLUME
 #: (keys x state size / executor memory), not down -- these finite
-#: driver-checked streams are the small-state case.
+#: oracle-checked streams are the small-state case. Local store opens
+#: serialize: sessionize took 46s on its first run at 32 partitions and
+#: 9s at 8; the streaming dedup paid ~20s of opens at 32 and ~2s at 8.
+#: A pre-repartition cannot replace the conf: stateful operators take
+#: the exact partition count of spark.sql.shuffle.partitions at plan
+#: time, because the state layout is keyed to it.
 _STATE_STORE_PARTITIONS = 8
 
 
@@ -230,12 +233,7 @@ def q_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    # same state-store sizing as the stateful queries below: partition
-    # count = store count, fixed at stream start; 8 stores cover the
-    # ~1.2k (hour, type) groups and cut serialized local store opens
-    with shuffle_partitions(spark, 8):
-        out = _run_to_table(spark, agg, "complete")
-    return out
+    return _run_to_table(spark, agg, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -327,18 +325,7 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    # the stateful shuffle's partition count = state-store instance count,
-    # fixed at stream start; each store's first open costs ~1s and the
-    # opens serialize on local mode (measured: 32 partitions -> 46s first
-    # run, 8 -> 9s). On a cluster you size this to executor count; for
-    # the local bench 8 stores cover ~5k user groups comfortably.
-    # NOTE: a pre-repartition(8, user_id) cannot replace this conf --
-    # streaming stateful operators demand the exact partition count of
-    # spark.sql.shuffle.partitions at plan time (state layout is keyed
-    # to it), so the session conf is the only knob (restore semantics
-    # and the concurrency caveat live on session.shuffle_partitions).
-    with shuffle_partitions(spark, 8):
-        out = _run_to_table(spark, sessions, "update")
+    out = _run_to_table(spark, sessions, "update")
     # update-mode sinks may hold one row per micro-batch; counts are
     # monotone, so the final state per user is the max
     return (
@@ -372,13 +359,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    # dropDuplicates keeps a state store per shuffle partition; local
-    # state-store opens serialize (same measurement as sessionize below:
-    # 32 stores cost ~20s of open overhead, 8 cost ~2s). On a cluster
-    # stores scale with executors; locally 8 cover the keyspace fine.
-    with shuffle_partitions(spark, 8):
-        out = _run_to_table(spark, deduped, "append")
-    return out
+    return _run_to_table(spark, deduped, "append")
 
 
 # ---------------------------------------------------------------------------
@@ -428,9 +409,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    with shuffle_partitions(spark, 8):
-        out = _run_to_table(spark, agg, "complete")
-    return out
+    return _run_to_table(spark, agg, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -486,11 +465,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("revenue"),
     )
-    # the dim joins are stateless broadcasts, but the revenue agg over
-    # the stream still keeps state -- size its stores like the rest
-    with shuffle_partitions(spark, 8):
-        out = _run_to_table(spark, agg, "complete")
-    return out
+    return _run_to_table(spark, agg, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -545,9 +520,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "AND purchase_time <= view_time + INTERVAL 1 HOUR"
         ),
     ).select("user_id", "view_us", "purchase_us")
-    with shuffle_partitions(spark, 8):
-        out = _run_to_table(spark, joined, "append")
-    return out
+    return _run_to_table(spark, joined, "append")
 
 
 # ---------------------------------------------------------------------------
@@ -625,9 +598,7 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    with shuffle_partitions(spark, 8):
-        out = _run_to_table(spark, agg, "complete")
-    return out
+    return _run_to_table(spark, agg, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -675,8 +646,7 @@ def q_stream_topk_types(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    with shuffle_partitions(spark, 8):
-        counts = _run_to_table(spark, agg, "complete")
+    counts = _run_to_table(spark, agg, "complete")
     # NULLS LAST explicitly on BOTH engines (r14 hostile-events fix):
     # Spark windows default NULLS FIRST for ASC, DuckDB NULLS LAST, so
     # a null event_type group tying at the cutoff ranked differently
@@ -731,8 +701,7 @@ def q_stream_sketch_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("est")
         )
     )
-    with shuffle_partitions(spark, 8):
-        out = _run_to_table(spark, agg, "complete")
+    out = _run_to_table(spark, agg, "complete")
     from ..sources.testdata import load_table
 
     from ..operators.dates import epoch_us
@@ -940,7 +909,7 @@ _DOCS_STREAM_SCHEMA = T.StructType(
 STREAM_CARD_SQL = f"""
   SELECT source,
          CAST(COUNT(*) AS BIGINT) AS n_docs,
-         CAST(SUM({_N_TOKENS_SQL}) AS BIGINT) AS tokens,
+         CAST(SUM({N_TOKENS_SQL}) AS BIGINT) AS tokens,
          CAST(SUM(n_chars) AS BIGINT) AS chars,
          MIN(doc_id) AS min_doc_id,
          MAX(doc_id) AS max_doc_id
@@ -958,7 +927,7 @@ def q_stream_card_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(_n_tokens_spark()).alias("tokens"),
+        F.sum(n_tokens_spark()).alias("tokens"),
         F.sum("n_chars").alias("chars"),
         F.min("doc_id").alias("min_doc_id"),
         F.max("doc_id").alias("max_doc_id"),

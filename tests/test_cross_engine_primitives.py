@@ -78,10 +78,10 @@ def test_kmeans_quantizer_matches_exact_math(con, x):
 # - U+000B: Java \s includes it, RE2 does not (tokcount.py docstring,
 #   tests/test_tokcount.py). r16: no longer excluded from the paired
 #   property below -- the fingerprint spelling moved to the explicit
-#   WS_CLASS. r17: the last \s+ sites (textstats._TOKEN_SPLIT and its
-#   paired batching/source_stats literals) flipped too -- NO package
-#   token site carries this divergence anymore; the enumerations stay
-#   as the engine-upgrade tripwire.
+#   WS_CLASS. r17: the last \s+ sites (the textstats token split and
+#   its paired batching/source_stats literals) flipped too -- NO
+#   package token site carries this divergence anymore; the
+#   enumerations stay as the engine-upgrade tripwire.
 # - lower(): 71 codepoints where the JVM and utf8proc disagree --
 #   U+0130 (Turkish dotted capital I: Java -> 'i'+U+0307, DuckDB ->
 #   'i') plus 70 letters cased in newer Unicode versions than
@@ -237,14 +237,9 @@ def test_token_and_fingerprint_spellings_agree_cross_engine(
 
     from etl_sales_pandas_sqlserver_spark.functions.tokcount import (
         N_TOKENS_SQL,
-        n_tokens_spark,
-    )
-
-    from etl_sales_pandas_sqlserver_spark.functions.textstats import (
         fingerprint_col,
-    )
-    from etl_sales_pandas_sqlserver_spark.functions.tokcount import (
-        WS_CLASS,
+        fingerprint_sql,
+        n_tokens_spark,
     )
 
     sdf = spark_probe.createDataFrame([(t,) for t in batch], "text string")
@@ -255,7 +250,7 @@ def test_token_and_fingerprint_spellings_agree_cross_engine(
     ).collect()
     orows = con.execute(
         f"SELECT CAST({N_TOKENS_SQL} AS BIGINT) AS n, "
-        f"md5(lower(trim(regexp_replace(text, '{WS_CLASS}', ' ', 'g')))) AS fp "
+        f"{fingerprint_sql()} AS fp "
         f"FROM (SELECT unnest(?) AS text)",
         [[r.text for r in srows]],
     ).fetchall()
@@ -391,16 +386,14 @@ def test_length_and_substr_agree_on_every_codepoint(spark_probe, con):
 
 def test_explicit_ws_class_has_zero_divergence(spark_probe, con):
     """Full-Unicode enumeration for the r14 respell target: splitting
-    on the explicit class ``[ \\t\\n\\f\\r]+`` (dedup._WS_CLASS) agrees
+    on the explicit class ``[ \\t\\n\\f\\r]+`` (tokcount.WS_CLASS) agrees
     between Java regex (Spark) and RE2 (DuckDB) on EVERY codepoint --
     including U+000B, the one character the legacy ``\\s+`` grain
     diverges on. This is the proof that a site respelled to the class
     has no latent divergence left."""
     from pyspark.sql import functions as F
 
-    from etl_sales_pandas_sqlserver_spark.functions.tokcount import (
-        WS_CLASS as _WS_CLASS,
-    )
+    from etl_sales_pandas_sqlserver_spark.functions.tokcount import WS_CLASS
 
     chars = [
         chr(c)
@@ -411,12 +404,12 @@ def test_explicit_ws_class_has_zero_divergence(spark_probe, con):
     sdf = spark_probe.createDataFrame([(p,) for p in probes], "t string")
     sl = [
         r[0]
-        for r in sdf.select(F.size(F.split(F.col("t"), _WS_CLASS))).collect()
+        for r in sdf.select(F.size(F.split(F.col("t"), WS_CLASS))).collect()
     ]
     dl = [
         r[0]
         for r in con.execute(
-            f"SELECT len(regexp_split_to_array(t, '{_WS_CLASS}')) "
+            f"SELECT len(regexp_split_to_array(t, '{WS_CLASS}')) "
             "FROM (SELECT unnest(?) AS t)",
             [probes],
         ).fetchall()

@@ -485,11 +485,11 @@ def test_portable_md5_slice_hash_matches_duckdb(spark):
     import duckdb
     import pandas as pd
 
-    from etl_sales_pandas_sqlserver_spark.functions.dedup import (
-        _HASH_MOD,
-        _hash_duck,
+    from etl_sales_pandas_sqlserver_spark.functions.dedup import _HASH_MOD
+    from etl_sales_pandas_sqlserver_spark.functions.tokcount import (
+        md5_slice,
+        md5_slice_sql,
     )
-    from pyspark.sql import functions as F
 
     toks = [
         "plain", "", " ", "tab\there", 'quote"inside', "apos'trophe",
@@ -501,20 +501,15 @@ def test_portable_md5_slice_hash_matches_duckdb(spark):
     got_spark = [
         (r.h1, r.h2)
         for r in sdf.select(
-            F.expr(
-                "CAST(conv(substring(md5(tok), 1, 14), 16, 10) AS BIGINT)"
-                f" % {_HASH_MOD}"
-            ).alias("h1"),
-            F.expr(
-                "CAST(conv(substring(md5(tok), 15, 14), 16, 10) AS BIGINT)"
-                f" % {_HASH_MOD}"
-            ).alias("h2"),
+            (md5_slice("tok", 1, 14) % _HASH_MOD).alias("h1"),
+            (md5_slice("tok", 15, 14) % _HASH_MOD).alias("h2"),
         ).collect()
     ]
     con = duckdb.connect()
     con.register("t", pdf)
     got_duck = con.execute(
-        f"SELECT {_hash_duck(1)} AS h1, {_hash_duck(15)} AS h2 FROM t"
+        f"SELECT {md5_slice_sql('tok', 1, 14)} % {_HASH_MOD} AS h1,"
+        f" {md5_slice_sql('tok', 15, 14)} % {_HASH_MOD} AS h2 FROM t"
     ).fetchall()
     assert got_spark == [tuple(r) for r in got_duck]
 

@@ -13,10 +13,10 @@ existing doc ONLY by \\x0B-vs-space):
    atomic group (exact dedup, fingerprints, curation pipeline + funnel
    audit, source dedup rate, dataset cards, corpus diff), the curation
    token gate, the repetition pair, ``_RE_TOKEN``, the r14/r15
-   tokcount/bpe/array grains, AND (r17) the final
-   ``textstats._TOKEN_SPLIT`` family: ``_TOKEN_SPLIT = WS_CLASS`` plus
-   its paired SQL literals (batching OOV_RATE_SQL, source_stats
-   CONTAMINATION_SQL) landed as one atomic set, so ``text_token_stats``,
+   tokcount/bpe/array grains, AND (r17) the final textstats token
+   split: the split and its paired SQL literals (batching OOV_RATE_SQL,
+   source_stats CONTAMINATION_SQL) moved to ``WS_CLASS`` as one atomic
+   set, so ``text_token_stats``,
    ``text_quality_scores``, ``text_winnow_fingerprints``,
    ``text_docfreq_quality``, ``oov_rate_by_source`` and
    ``lang_sampling_weights_sqrt`` now agree on \\x0B text. A
@@ -34,7 +34,7 @@ from .oracle_compare import compare_query, run_oracle
 
 pytestmark = pytest.mark.usefixtures("driver_ansi")
 
-#: representative slice of the 180 vtab-green queries: the r16
+#: representative slice of the 186 vtab-green queries: the r16
 #: fingerprint atomic group + the grains flipped in earlier rounds
 _ROBUST = [
     "text_fingerprint",
@@ -54,8 +54,8 @@ _ROBUST = [
     "bpe_top_pairs",
     "bpe_apply_merges",
     "token_salience",
-    # r17: the _TOKEN_SPLIT atomic respell set, flipped from
-    # _KNOWN_MISMATCH when _TOKEN_SPLIT became WS_CLASS
+    # r17: the textstats token-split respell set, flipped from
+    # _KNOWN_MISMATCH when that split moved to WS_CLASS
     "text_token_stats",
     "text_quality_scores",
     "text_winnow_fingerprints",
@@ -64,7 +64,7 @@ _ROBUST = [
     "lang_sampling_weights_sqrt",
 ]
 
-#: EMPTY since r17 (the _TOKEN_SPLIT set landed): every token/
+#: EMPTY since r17 (the textstats token-split set landed): every token/
 #: fingerprint site is on the explicit WS_CLASS grain. Any new entry
 #: here is a regression, not a backlog item — new token sites must be
 #: born on tokcount.WS_CLASS.

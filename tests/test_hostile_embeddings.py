@@ -11,17 +11,14 @@ behavior is THREE-TIERED:
    cosine is skipped query-side and never enters a top-k. Pinned here
    so a kernel rewrite cannot regress it silently.
 
-2. **The k-means family crashes CRYPTICALLY on a NULL element** (a
-   driver-side ``int(None)``, not the envelope guard): the quantizer's
-   ``assert_true(abs(x) <= 8)`` was designed to reject out-of-envelope
-   input loudly (r9 advice), but ``abs(NULL) <= 8`` is NULL and
-   assert_true only raises on FALSE, so NULL elements slip through to
-   a NULL cluster_id. Deliberately NOT fixed in r13: the fix stales
-   the r10-vintage trio's fingerprints, and r14's window drains the
-   r10 cohort anyway — respelling the guard predicate to
-   ``x IS NOT NULL AND abs(x) <= 8`` is a zero-slot r14 task (see
-   NOTES_r13.md). The current crash is pinned so the fix flips this
-   test on purpose.
+2. **The k-means family fails LOUDLY on a NULL element.** The
+   quantizer's envelope guard ``assert_true(abs(x) <= 8)`` once let
+   NULL through: ``abs(NULL) <= 8`` is NULL and ``assert_true`` raises
+   only on FALSE, so a NULL element became a NULL cluster_id and then
+   a cryptic Python ``int(None)`` on the collected rows. The fix waited
+   one round (r13 to r14) only because it changed the k-means trio's
+   verified outputs. The guard predicate is now ``x IS NOT NULL AND
+   abs(x) <= 8``, and the pin below asserts the loud envelope error.
 
 3. **True NaN is a KNOWN, DOCUMENTED cross-engine divergence** (the
    U+000B pattern from functions/tokcount.py): numpy comparisons with
@@ -78,7 +75,7 @@ def test_null_and_zero_vectors_stay_oracle_green(spark, null_sf, name):
 
 
 def test_kmeans_null_element_raises_envelope_error(spark, null_sf):
-    """Tier 2 pin, flipped r14 (the NOTES_r13 plan): a NULL embedding
+    """Tier 2 pin, flipped r14: a NULL embedding
     element now trips the quantizer's envelope assert_true LOUDLY —
     the guard predicate is ``x IS NOT NULL AND abs(x) <= 8`` so NULL
     no longer slips through assert_true's raise-only-on-FALSE

@@ -177,27 +177,52 @@ def test_stream_sinks_are_released_and_frames_stay_readable(spark, sf_small):
     (the card ingest twice) and one stream has failed, no
     ``stream_sink_*`` view may remain, and every returned frame must
     still collect. Running all of them also shows the append-mode guard
-    admits every registered stream."""
+    admits every registered stream. Each stream, the failing one too,
+    must leave the shuffle-partition count and the no-data micro-batch
+    switch as it found them; the session runs at a partition count
+    other than the streams' state-store count, so a missed restore
+    shows."""
     import pytest
     from pyspark.sql import functions as F
     from pyspark.errors import StreamingQueryException
 
     from etl_sales_pandas_sqlserver_spark.streaming.queries import (
+        _STATE_STORE_PARTITIONS,
         QUERIES_EXPORT,
         _run_to_table,
         q_stream_card_ingest,
         read_events_stream,
     )
 
-    assert len(QUERIES_EXPORT) == 11
-    first = q_stream_card_ingest(spark, sf_small)
-    second = q_stream_card_ingest(spark, sf_small)
-    frames = [fn(spark, sf_small) for fn, _ in QUERIES_EXPORT.values()]
-    failing = read_events_stream(spark, sf_small).select(
-        F.raise_error(F.lit("boom")).alias("x")
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.noDataMicroBatches.enabled",
     )
-    with pytest.raises(StreamingQueryException, match="boom"):
-        _run_to_table(spark, failing, "append")
+
+    def keeps_conf(run):
+        before = [spark.conf.get(k) for k in keys]
+        try:
+            return run()
+        finally:
+            assert [spark.conf.get(k) for k in keys] == before
+
+    assert len(QUERIES_EXPORT) == 11
+    session_parts = spark.conf.get(keys[0])
+    spark.conf.set(keys[0], str(_STATE_STORE_PARTITIONS + 1))
+    try:
+        first = keeps_conf(lambda: q_stream_card_ingest(spark, sf_small))
+        second = keeps_conf(lambda: q_stream_card_ingest(spark, sf_small))
+        frames = [
+            keeps_conf(lambda fn=fn: fn(spark, sf_small))
+            for fn, _ in QUERIES_EXPORT.values()
+        ]
+        failing = read_events_stream(spark, sf_small).select(
+            F.raise_error(F.lit("boom")).alias("x")
+        )
+        with pytest.raises(StreamingQueryException, match="boom"):
+            keeps_conf(lambda: _run_to_table(spark, failing, "append"))
+    finally:
+        spark.conf.set(keys[0], session_parts)
     assert _sink_views(spark) == []
     rows = sorted(first.collect())
     assert rows and rows == sorted(second.collect())

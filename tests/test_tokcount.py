@@ -1,19 +1,34 @@
-"""Direct parity pin for the shared token-count spelling: the Spark
-column and the DuckDB fragment (functions/tokcount.py) must agree on
-every whitespace shape — multiple spaces, tabs, newlines, unicode,
-empty and whitespace-only strings (both engines count 1 there: the
-regex split of an empty trim result yields one empty element). The
-hostile-docs suite exercises this through whole queries; this test
-pins the fragment itself so a future respelling cannot drift silently.
+"""Parity pins for the text-primitive twins of functions/tokcount.py:
+each Spark column builder and its DuckDB fragment must agree on every
+whitespace shape — multiple spaces, tabs, newlines, vertical tab,
+unicode, empty and whitespace-only strings (the token count is 1 there
+on both engines: the regex split of an empty trim result yields one
+empty element), NULL and integer keys. The hostile-docs suites exercise
+the twins through whole queries; these tests pin the fragments
+themselves, and a source scan keeps every other module on them.
 """
 
 from __future__ import annotations
 
+import hashlib
+import pathlib
+import re
+
 import duckdb
+import pytest
+from pyspark.sql import functions as F
 
 from etl_sales_pandas_sqlserver_spark.functions.tokcount import (
     N_TOKENS_SQL,
+    fingerprint_col,
+    fingerprint_sql,
+    md5_slice,
+    md5_slice_sql,
     n_tokens_spark,
+    space_split,
+    space_split_sql,
+    ws_split,
+    ws_split_sql,
 )
 
 _CASES = [
@@ -68,8 +83,8 @@ def test_vertical_tab_agrees_after_the_r14_respell(spark):
 
 
 def test_testdata_contains_no_vertical_tab():
-    """STOOD DOWN to a data-freshness check (r17): with the
-    _TOKEN_SPLIT family flipped onto WS_CLASS, the package has ZERO
+    """STOOD DOWN to a data-freshness check (r17): with every token
+    split on WS_CLASS, the package has ZERO
     ``\\s`` token sites left, so no query diverges on U+000B anymore
     (the hostile vtab axis proves it corpus-wide). The check remains
     because \\x0B-free driver data is the documented precondition the
@@ -92,42 +107,132 @@ def test_testdata_contains_no_vertical_tab():
         assert n == 0, f"sf{sf}: {n} docs contain U+000B"
 
 
-def test_all_consumers_bind_the_single_spelling():
-    """The r13 hoist's invariant, pinned: batching and dataset_cards
-    (and the families that always did) bind tokcount's objects, not
-    copies — reintroducing a private duplicate fails here before it
-    can drift."""
-    from etl_sales_pandas_sqlserver_spark.functions import (
-        batching,
-        budget,
-        curriculum,
-        dataset_cards,
-        release,
-        sharding,
-        tokcount,
-    )
+#: the hand spellings of the twins; only tokcount.py may contain them
+_HAND_SPELLINGS = [
+    "F.split(F.trim",
+    "regexp_split_to_array(trim(",
+    "md5(lower(trim(regexp_replace(",
+    "'0x' || substr(md5(",
+    "conv(substring(md5(",
+    "strpos('0123456789abcdef'",
+]
 
-    assert batching._N_TOKENS_SQL is tokcount.N_TOKENS_SQL
-    assert batching._n_tokens_col is tokcount.n_tokens_spark
-    assert dataset_cards._N_TOKENS_SQL is tokcount.N_TOKENS_SQL
-    assert dataset_cards._n_tokens_col is tokcount.n_tokens_spark
-    assert budget._N_TOKENS_SQL is tokcount.N_TOKENS_SQL
-    assert release._N_TOKENS_SQL is tokcount.N_TOKENS_SQL
-    assert sharding.N_TOKENS_SQL is tokcount.N_TOKENS_SQL
-    assert curriculum.N_TOKENS_SQL is tokcount.N_TOKENS_SQL
+
+def test_all_consumers_bind_the_single_spelling():
+    """Every module outside tokcount.py calls the twins instead of
+    spelling a split, fingerprint or md5 hex slice by hand. Whitespace
+    is collapsed first, so a spelling broken across lines matches too."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / (
+        "etl_sales_pandas_sqlserver_spark"
+    )
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path.name == "tokcount.py":
+            continue
+        text = re.sub(r"\s+", " ", path.read_text())
+        found += [
+            (str(path.relative_to(pkg)), pat)
+            for pat in _HAND_SPELLINGS
+            if pat in text
+        ]
+    assert not found, found
 
 
 def test_token_split_grain_is_pinned_hardcoded():
-    """r17: textstats._TOKEN_SPLIT IS WS_CLASS now (the last \\s+
-    family's respell). Hardcoded on purpose, same rationale as the
-    fingerprint spelling pin in test_funnel: the pin must not follow
-    tokcount.WS_CLASS automatically, or a WS_CLASS edit could silently
-    move every token spelling at once without any test noticing the
-    grain changed."""
-    from etl_sales_pandas_sqlserver_spark.functions import (
-        textstats,
-        tokcount,
-    )
+    """Hardcoded on purpose, same rationale as the fingerprint spelling
+    pin in test_funnel: the pin must not follow tokcount.WS_CLASS
+    automatically, or a WS_CLASS edit could silently move every token
+    spelling at once without any test noticing the grain changed."""
+    from etl_sales_pandas_sqlserver_spark.functions import tokcount
 
-    assert textstats._TOKEN_SPLIT is tokcount.WS_CLASS
     assert tokcount.WS_CLASS == "[ \\t\\n\\f\\r]+"
+
+
+_TWIN_ROWS = [
+    "one",
+    "two words",
+    "  leading and trailing  ",
+    "tabs\tand\nnewlines\r\nmixed",
+    "many     internal      spaces",
+    "vertical\x0btab a\x0bb",
+    "form\x0cfeed",
+    "",
+    "   ",
+    "\t\n",
+    "ünïcödé wörds  ここ に",
+    "emoji 🙂 counts  as a token",
+    "MiXeD CaSe  Text",
+    None,
+    "0",
+    "7",
+    "-7",
+    "123456789",
+    "-9223372036854775808",
+]
+
+#: every (start, width) the engine slices md5 at
+_MD5_SLICES = [(1, 4), (1, 8), (1, 10), (1, 14), (15, 14)]
+
+_TWINS = {
+    "ws_split": (ws_split, ws_split_sql),
+    "ws_split_lower": (
+        lambda c: ws_split(F.lower(c)),
+        lambda e: ws_split_sql(f"lower({e})"),
+    ),
+    "n_tokens": (n_tokens_spark, lambda e: f"CAST({N_TOKENS_SQL} AS BIGINT)"),
+    "space_split": (space_split, space_split_sql),
+    "space_split_trim_lower": (
+        lambda c: space_split(F.trim(F.lower(c))),
+        lambda e: space_split_sql(f"trim(lower({e}))"),
+    ),
+    "fingerprint": (fingerprint_col, fingerprint_sql),
+    **{
+        f"md5_slice_{start}_{width}": (
+            lambda c, s=start, w=width: md5_slice(c, s, w),
+            lambda e, s=start, w=width: md5_slice_sql(e, s, w),
+        )
+        for start, width in _MD5_SLICES
+    },
+}
+
+
+@pytest.mark.usefixtures("driver_ansi")
+@pytest.mark.parametrize("twin", sorted(_TWINS))
+def test_twin_sides_agree(spark, twin):
+    """Both sides of each twin give the same value on the same rows,
+    with ANSI mode on, Spark 4's default."""
+    spark_side, sql_side = _TWINS[twin]
+    sdf = spark.createDataFrame([(t,) for t in _TWIN_ROWS], "text string")
+    got = [r.v for r in sdf.select(spark_side("text").alias("v")).collect()]
+    con = duckdb.connect()
+    want = [
+        con.execute(
+            f"SELECT {sql_side('text')} FROM (SELECT CAST(? AS VARCHAR) AS text)",
+            [t],
+        ).fetchone()[0]
+        for t in _TWIN_ROWS
+    ]
+    con.close()
+    assert got == want, [
+        (ascii(t), g, w) for t, g, w in zip(_TWIN_ROWS, got, want) if g != w
+    ]
+
+
+@pytest.mark.parametrize("start,width", _MD5_SLICES)
+def test_md5_slice_sql_reads_the_hex_digits(start, width):
+    """The DuckDB side of the hex slice equals Python's reading of the
+    same md5 hex digits, for every slice the engine uses."""
+    rows = [t for t in _TWIN_ROWS if t is not None]
+    con = duckdb.connect()
+    got = [
+        con.execute(
+            f"SELECT {md5_slice_sql('?', start, width)}", [t]
+        ).fetchone()[0]
+        for t in rows
+    ]
+    con.close()
+    want = [
+        int(hashlib.md5(t.encode()).hexdigest()[start - 1 : start - 1 + width], 16)
+        for t in rows
+    ]
+    assert got == want
