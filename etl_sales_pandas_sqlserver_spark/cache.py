@@ -115,9 +115,10 @@ def release(df: DataFrame) -> None:
 
 
 def evict_session_memos(spark) -> None:
-    """Drop every memo entry held for ``spark``, so the next call of
-    each memo rebuilds from its source."""
-    _MEMO.pop(spark, None)
+    """Release and drop every memo entry held for ``spark``, so the next
+    call of each memo rebuilds from its source."""
+    for _, df in _MEMO.pop(spark, {}).values():
+        release(df)
 
 
 def managed_cache(df: DataFrame) -> DataFrame:

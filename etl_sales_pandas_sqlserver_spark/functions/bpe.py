@@ -189,7 +189,7 @@ def _one_merge_pass(s, pair: str):
 def _token_count(s) -> "F.Column":
     """Token count of a sentinel-encoded string: one ``\\x01`` per
     token (split yields a leading empty element)."""
-    return F.size(F.split(s, _S1)) - 1
+    return F.array_size(F.split(s, _S1)) - 1
 
 
 def q_bpe_apply_merges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -37,18 +37,12 @@ Three queries:
   with min/max sequence fill — the distribution that decides whether
   downstream chopping is worth enabling.
 
-Scale shape — the per-stage exclusive prefix sum is the same problem
-as the shard manifest's global one (functions/sharding.py) and uses
-the same TWO-LEVEL fixed-width chunking, with every grouping and
-window additionally keyed by ``stage``: per-(stage, chunk) token sums
-(one map-side-combinable groupBy), per-(stage, superchunk) rollups,
-superchunk offsets via a ``groupBy(stage)`` collect_list into one
-sorted array per stage (≤ |supers| structs — bounded, 3 stages) with
-in-row exclusive prefix sums, then windows partitioned by
-(stage, sup) and (stage, chunk) — ≤ 4096 rows per partition by
-construction. NO single-partition window and no unbounded per-key
-window anywhere: a naive ``SUM() OVER (PARTITION BY stage)`` would
-funnel a third of the corpus through one task. Everything is int64.
+Scale shape: the per-stage exclusive prefix sum is
+``sharding.chunked_prefix_sum`` keyed by ``stage`` -- the shard
+manifest's two-level chunked decomposition, with no single-partition
+window and no unbounded per-key window anywhere (a naive
+``SUM() OVER (PARTITION BY stage)`` would funnel a third of the corpus
+through one task). Its docstring has the details.
 
 The ORACLES are the naive forms (``ROW_NUMBER`` stage assignment +
 one ``SUM() OVER (PARTITION BY stage ORDER BY doc_id)`` window), so
@@ -66,99 +60,20 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..cache import managed_cache
 from .curriculum import _scored_docs, _stage_map
 from .intmath import exact_ppm_spark, exact_ppm_sql
 from .search import LM_SCORES_CTE
+from .sharding import chunked_prefix_sum
 from .tokcount import N_TOKENS_SQL
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
 _PACK_BUDGET = 2048
-_CHUNK = 4096
-_SUPER = 4096
 _HIST_BINS = 16  # fill octiles 0..7, overflow octiles 8..15 (capped)
-
-
-def assign_stage_sequences(staged: DataFrame) -> DataFrame:
-    """Add ``seq_id`` (= same-stage exclusive prefix token sum over
-    ``doc_id`` order, div the pack budget) to a
-    ``(stage, doc_id, n_tok)`` frame via the two-level chunked
-    decomposition described in the module docstring. The input should
-    be a narrow cached projection — the chunk-sum build and the
-    offsets join probe both read it."""
-    t = staged.withColumn("chunk", F.expr(f"doc_id div {_CHUNK}"))
-    chunk_sums = t.groupBy("stage", "chunk").agg(
-        F.sum("n_tok").alias("c_tok")
-    )
-    super_sums = (
-        chunk_sums.withColumn("sup", F.expr(f"chunk div {_SUPER}"))
-        .groupBy("stage", "sup")
-        .agg(F.sum("c_tok").alias("s_tok"))
-    )
-    # per stage: |supers| rows -> one sorted array -> in-row exclusive
-    # prefix sums -> exploded back to (stage, sup, s_off). groupBy on
-    # the 3-value stage key, arrays bounded by |supers| (the sharding
-    # module's keys-[] funnel, here keyed and therefore not even
-    # single-partition).
-    sup_off = (
-        super_sums.groupBy("stage")
-        .agg(
-            F.sort_array(F.collect_list(F.struct("sup", "s_tok"))).alias("a")
-        )
-        .select(
-            "stage",
-            F.explode(
-                F.expr(
-                    "transform(a, (x, i) -> named_struct("
-                    "'sup', x.sup, "
-                    "'s_off', aggregate(slice(a, 1, i), CAST(0 AS BIGINT),"
-                    " (acc, y) -> acc + y.s_tok)))"
-                )
-            ).alias("o"),
-        )
-        .select("stage", "o.sup", "o.s_off")
-    )
-    # chunk offset = superchunk offset + within-super running chunk
-    # sum: window over <= 4096 rows per (stage, sup) partition. Plain
-    # equi-joins throughout (no broadcast hints — the probes are tiny
-    # at any scale AQE will see, and unbounded-by-construction frames
-    # must not be hint-pinned).
-    w_cs = (
-        Window.partitionBy("stage", "sup")
-        .orderBy("chunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        chunk_sums.withColumn("sup", F.expr(f"chunk div {_SUPER}"))
-        .join(sup_off, ["stage", "sup"])
-        .select(
-            "stage",
-            "chunk",
-            (
-                F.col("s_off")
-                + F.coalesce(F.sum("c_tok").over(w_cs), F.lit(0).cast("long"))
-            ).alias("c_off"),
-        )
-    )
-    w_in = (
-        Window.partitionBy("stage", "chunk")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        t.join(offsets, ["stage", "chunk"])
-        .withColumn(
-            "before",
-            F.col("c_off")
-            + F.coalesce(F.sum("n_tok").over(w_in), F.lit(0).cast("long")),
-        )
-        .withColumn("seq_id", F.expr(f"before div {_PACK_BUDGET}"))
-        .select("stage", "doc_id", "n_tok", "seq_id")
-    )
 
 
 def _packed_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -172,7 +87,11 @@ def _packed_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # cache the 3-int64-column staged frame: the prefix-sum
     # decomposition reads it twice
-    return assign_stage_sequences(managed_cache(staged))
+    return (
+        chunked_prefix_sum(managed_cache(staged), ["stage"])
+        .withColumn("seq_id", F.expr(f"before div {_PACK_BUDGET}"))
+        .select("stage", "doc_id", "n_tok", "seq_id")
+    )
 
 
 def _seq_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:

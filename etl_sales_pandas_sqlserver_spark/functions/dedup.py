@@ -947,18 +947,6 @@ EMBEDDING_COSINE_SQL = f"""
 """
 
 
-def _dot(a, b):
-    """Sequential-fold dot product (index order, double accumulate) --
-    mirrors the DuckDB fold so scalar results are bitwise identical.
-    Used where per-row dot products are cheap (top-k search); the
-    all-pairs scan below uses BLAS instead."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x,
-    )
-
-
 # ---------------------------------------------------------------------------
 # 2c. SEMANTIC decontamination: the embedding-space counterpart of the
 # n-gram variants above -- a train document whose embedding is too

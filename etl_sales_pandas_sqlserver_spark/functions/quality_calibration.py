@@ -54,7 +54,7 @@ def q_quality_percentile_by_source(
         "doc_id",
         "source",
         "text",
-        F.size(space_split("text")).alias("n_tok"),
+        F.array_size(space_split("text")).alias("n_tok"),
     ).select(
         "doc_id",
         "source",

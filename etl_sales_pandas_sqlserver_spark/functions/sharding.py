@@ -13,37 +13,15 @@ is the per-shard manifest (doc/token counts, doc-id span) a writer
 would hand to N parallel copy tasks.
 
 The global prefix sum is the scale problem: a naive
-``SUM() OVER (ORDER BY doc_id)`` plans a single-partition window
-(all data through one task). Here it is TWO-LEVEL fixed-width
-chunking, fully deterministic with no sampled boundaries (unlike
-range-partition numbering, which needs a checkpoint to freeze sampled
-ranges) and with NO single-partition window anywhere in the plan:
-
-1. fixed-width chunks ``chunk = doc_id div 4096`` and superchunks
-   ``sup = chunk div 4096`` — per-chunk token sums via one
-   map-side-combinable groupBy, rolled up once more to per-superchunk
-   sums (a second tiny groupBy over the |chunks| frame);
-2. superchunk offsets: the |supers| rows (id-range/4096² — ~600 rows
-   at 10^10 docs) collapse through an ordinary global aggregate
-   (``HashAggregate(keys=[]``, partials map-side) into ONE sorted
-   array, whose exclusive prefix sums are computed in-row with
-   higher-order functions and exploded back out. The quadratic
-   in-row cost is bounded by |supers|² (~360k adds at 10^10 docs);
-   for corpora past ~10^12 doc ids widen the chunk constants — the
-   oracle (the naive window) is unaffected by the chunking internals;
-3. chunk offsets = superchunk offset + exclusive prefix of chunk sums
-   WITHIN the superchunk — a window partitioned by ``sup``, ≤4096
-   rows per partition by construction;
-4. join the chunk offset back on ``chunk`` (equi-join) and add the
-   WITHIN-chunk running sum — a window partitioned by ``chunk``,
-   ≤4096 rows per partition, so no skew and no giant task.
-
-Everything is int64 (prefix sums of token counts wrap only past
-~9.2e18 tokens, a ~40 PB corpus); the DuckDB oracle is the naive
-single window, so the compare also PROVES the two-level decomposition
-exact. ``tests/test_plan_shapes.py`` pins the shape: the only
-``Exchange SinglePartition`` in this plan (and the release
-composite's) feeds the bounded keys-[] aggregate — never a Window.
+``SUM() OVER (ORDER BY doc_id)`` plans a single-partition window (all
+data through one task). :func:`chunked_prefix_sum` computes it with no
+single-partition window anywhere in the plan; the curriculum packer
+(``functions/currpack.py``) calls the same function keyed by stage.
+The DuckDB oracle is the naive single window, so the compare also
+proves the decomposition exact. ``tests/test_plan_shapes.py`` pins the
+shape: the only ``Exchange SinglePartition`` in this plan (and the
+release composite's) feeds the bounded keys-[] aggregate -- never a
+Window.
 """
 
 from __future__ import annotations
@@ -64,31 +42,57 @@ _CHUNK = 4096
 _SUPER = 4096
 
 
-def assign_token_shards(toks: DataFrame) -> DataFrame:
-    """Add ``before`` (exclusive global prefix token sum over doc_id
-    order), ``total``, and ``shard_id`` to a ``(doc_id, n_tok, ...)``
-    frame via the deterministic two-level decomposition described in
-    the module docstring. The input should be a narrow cached
-    projection — both the chunk-sum build and the join probe read it.
-    Shared by the plain manifest and the budgeted-release pipeline
-    (functions/release.py)."""
-    toks = toks.withColumn("chunk", F.expr(f"doc_id div {_CHUNK}"))
-    chunk_sums = toks.groupBy("chunk").agg(F.sum("n_tok").alias("c_tok"))
+def chunked_prefix_sum(frame: DataFrame, keys: list[str]) -> DataFrame:
+    """Add ``before`` (the exclusive prefix sum of ``n_tok`` in
+    ``doc_id`` order within ``keys``) and ``total`` (the sum of
+    ``n_tok`` per key) to a ``(*keys, doc_id, n_tok, ...)`` frame.
+
+    The decomposition is two-level fixed-width chunking, deterministic
+    with no sampled boundaries (unlike range-partition numbering, which
+    needs a checkpoint to freeze sampled ranges) and with NO
+    single-partition window:
+
+    1. fixed-width chunks ``chunk = doc_id div 4096`` and superchunks
+       ``sup = chunk div 4096`` -- per-(keys, chunk) token sums via one
+       map-side-combinable groupBy, rolled up once more to
+       per-(keys, sup) sums (a second tiny groupBy over the |chunks|
+       frame);
+    2. superchunk offsets: per key, the |supers| rows (id-range/4096²
+       -- ~600 rows at 10^10 docs) collapse into ONE sorted array,
+       whose exclusive prefix sums and total are computed in-row with
+       higher-order functions and exploded back out. With ``keys=[]``
+       this is an ordinary global aggregate (``HashAggregate(keys=[]``,
+       partials map-side); keyed, it is not even single-partition. The
+       quadratic in-row cost is bounded by |supers|² (~360k adds at
+       10^10 docs); for corpora past ~10^12 doc ids widen the chunk
+       constants;
+    3. chunk offsets = superchunk offset + exclusive prefix of chunk
+       sums WITHIN the superchunk -- a window partitioned by
+       (keys, sup), <= 4096 rows per partition by construction;
+    4. join the chunk offset back on (keys, chunk) and add the
+       WITHIN-chunk running sum -- a window partitioned by
+       (keys, chunk), <= 4096 rows per partition, so no skew and no
+       giant task.
+
+    Spark's ``div`` truncates, so chunk 0 spans (-4096, 4096): wider,
+    but still a contiguous doc-id range in ascending chunk order, which
+    is all the decomposition needs. Everything is int64 (the sums wrap
+    only past ~9.2e18 tokens). The input should be a narrow cached
+    projection: the chunk-sum build and the join probe both read it."""
+    t = frame.withColumn("chunk", F.expr(f"doc_id div {_CHUNK}"))
+    chunk_sums = t.groupBy(*keys, "chunk").agg(F.sum("n_tok").alias("c_tok"))
     super_sums = (
         chunk_sums.withColumn("sup", F.expr(f"chunk div {_SUPER}"))
-        .groupBy("sup")
+        .groupBy(*keys, "sup")
         .agg(F.sum("c_tok").alias("s_tok"))
     )
-    # |supers| rows -> one sorted array -> in-row exclusive prefix
-    # sums -> exploded back to (sup, s_off) with the corpus total
-    # riding along. sort_array over unique sup keys is deterministic;
-    # the global aggregate is the bounded keys-[] funnel the plan
-    # gate allows (map-side partial_collect_list, |supers| structs).
+    # sort_array over unique sup keys is deterministic; the arrays are
+    # bounded by |supers| (map-side partial_collect_list)
     sup_off = (
-        super_sums.agg(
-            F.sort_array(F.collect_list(F.struct("sup", "s_tok"))).alias("a")
-        )
+        super_sums.groupBy(*keys)
+        .agg(F.sort_array(F.collect_list(F.struct("sup", "s_tok"))).alias("a"))
         .select(
+            *keys,
             F.explode(
                 F.expr(
                     "transform(a, (x, i) -> named_struct("
@@ -101,22 +105,22 @@ def assign_token_shards(toks: DataFrame) -> DataFrame:
                 "aggregate(a, CAST(0 AS BIGINT), (acc, y) -> acc + y.s_tok)"
             ).alias("total"),
         )
-        .select("o.sup", "o.s_off", "total")
+        .select(*keys, "o.sup", "o.s_off", "total")
     )
-    # chunk offset = superchunk offset + within-super running chunk
-    # sum (window over <=4096 rows per sup partition). No broadcast
-    # hint on the sup_off probe: it is tiny at any scale AQE will see,
-    # and as a plain equi-join the planner reuses the by-sup
-    # clustering the window just built.
+    # No broadcast hints on either equi-join: the probes are tiny at
+    # test scale (AQE broadcasts them anyway) but |chunks| is NOT
+    # bounded at corpus scale; as plain joins the planner reuses the
+    # clustering the windows build
     w_cs = (
-        Window.partitionBy("sup")
+        Window.partitionBy(*keys, "sup")
         .orderBy("chunk")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     offsets = (
         chunk_sums.withColumn("sup", F.expr(f"chunk div {_SUPER}"))
-        .join(sup_off, "sup")
+        .join(sup_off, [*keys, "sup"])
         .select(
+            *keys,
             "chunk",
             (
                 F.col("s_off")
@@ -126,29 +130,31 @@ def assign_token_shards(toks: DataFrame) -> DataFrame:
         )
     )
     w_in = (
-        Window.partitionBy("chunk")
+        Window.partitionBy(*keys, "chunk")
         .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    # no broadcast hint: |chunks| = id-range/4096 is small at test
-    # scale (AQE broadcasts it anyway) but NOT bounded at corpus
-    # scale; as a plain equi-join the planner degrades it to a
-    # shuffle join that reuses the same by-chunk partitioning the
-    # within-chunk window needs
     return (
-        toks.join(offsets, "chunk")
+        t.join(offsets, [*keys, "chunk"])
         .withColumn(
             "before",
             F.col("c_off")
             + F.coalesce(F.sum("n_tok").over(w_in), F.lit(0).cast("long")),
         )
-        .withColumn(
-            "shard_id",
-            F.expr(
-                f"before div greatest((total + {_N_SHARDS - 1}) div {_N_SHARDS},"
-                f" CAST(1 AS BIGINT))"
-            ),
-        )
+        .drop("chunk", "c_off")
+    )
+
+
+def assign_token_shards(toks: DataFrame) -> DataFrame:
+    """Add ``before``, ``total`` and ``shard_id`` to a
+    ``(doc_id, n_tok, ...)`` frame. Shared by the plain manifest and
+    the budgeted-release pipeline (functions/release.py)."""
+    return chunked_prefix_sum(toks, []).withColumn(
+        "shard_id",
+        F.expr(
+            f"before div greatest((total + {_N_SHARDS - 1}) div {_N_SHARDS},"
+            f" CAST(1 AS BIGINT))"
+        ),
     )
 
 

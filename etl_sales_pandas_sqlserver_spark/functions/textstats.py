@@ -87,7 +87,9 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = docs.select(
         "source",
         n_tokens_spark().alias("n_ws"),
-        F.size(F.regexp_extract_all(F.lower("text"), F.lit(_RE_TOKEN), F.lit(0)))
+        F.array_size(
+            F.regexp_extract_all(F.lower("text"), F.lit(_RE_TOKEN), F.lit(0))
+        )
         .cast("long")
         .alias("n_re"),
         F.length("text").alias("n_char"),
@@ -149,15 +151,15 @@ def q_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = t.select(
         "doc_id",
         "n_char",
-        F.size("toks").alias("n_tokens"),
+        F.array_size("toks").alias("n_tokens"),
         F.aggregate(
             F.transform("toks", lambda x: F.length(x)),
             F.lit(0),
             lambda acc, x: acc + x,
         ).alias("token_chars"),
-        F.size(F.filter("toks", lambda x: F.array_contains(stop_arr, x))).alias(
-            "n_stop"
-        ),
+        F.array_size(
+            F.filter("toks", lambda x: F.array_contains(stop_arr, x))
+        ).alias("n_stop"),
     )
     avg_len = F.col("token_chars").cast("double") / F.col("n_tokens")
     stop_ratio = F.col("n_stop").cast("double") / F.col("n_tokens")
@@ -231,7 +233,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     def _overlap(ws: list[str]):
         arr = F.array(*[F.lit(w) for w in ws])
-        return F.size(F.filter("toks", lambda x: F.array_contains(arr, x)))
+        return F.array_size(F.filter("toks", lambda x: F.array_contains(arr, x)))
 
     score_cols = [
         _overlap(ws).alias(f"s_{lang}") for lang, ws in _LANG_STOPWORDS.items()
@@ -356,10 +358,10 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return enriched.select(
         "doc_id",
-        F.size(F.regexp_extract_all("text", F.lit(_EMAIL_RE), 0))
+        F.array_size(F.regexp_extract_all("text", F.lit(_EMAIL_RE), 0))
         .cast("int")
         .alias("n_emails"),
-        F.size(F.regexp_extract_all("text", F.lit(_PHONE_RE), 0))
+        F.array_size(F.regexp_extract_all("text", F.lit(_PHONE_RE), 0))
         .cast("int")
         .alias("n_phones"),
         F.md5(redact_pii(F.col("text")).cast("binary")).alias("redacted_md5"),
@@ -406,16 +408,16 @@ TEXT_REPETITION_SQL = rf"""
 def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     grams_expr = """
-      CASE WHEN size(w) < 3 THEN array()
-           ELSE transform(sequence(1, size(w) - 2),
+      CASE WHEN array_size(w) < 3 THEN array()
+           ELSE transform(sequence(1, array_size(w) - 2),
                           i -> concat_ws(' ', w[i-1], w[i], w[i+1]))
       END
     """
     g = docs.select("doc_id", ws_split().alias("w")).select(
         "doc_id", F.expr(grams_expr).alias("g")
     )
-    n = F.size("g").cast("long")
-    nd = F.size(F.array_distinct("g")).cast("long")
+    n = F.array_size("g").cast("long")
+    nd = F.array_size(F.array_distinct("g")).cast("long")
     dup = F.lit(1.0) - nd.cast("double") / n
     return g.select(
         "doc_id",

@@ -76,8 +76,9 @@ N_TOKENS_SQL = f"len({ws_split_sql()})"
 
 def n_tokens_spark(col: Column | str = "text") -> Column:
     """Whitespace token count of ``col`` as int64 -- the Spark twin of
-    :data:`N_TOKENS_SQL`."""
-    return F.size(ws_split(col)).cast("long")
+    :data:`N_TOKENS_SQL`. ``array_size``, not ``size``: with ANSI off
+    ``size`` of a NULL array is -1, where DuckDB's ``len`` is NULL."""
+    return F.array_size(ws_split(col)).cast("long")
 
 
 def space_split(col: Column | str) -> Column:

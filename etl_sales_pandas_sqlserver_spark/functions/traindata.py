@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.scale import range_row_index
 from ..sources.testdata import load_table
 from .tokcount import (
     N_TOKENS_SQL,
@@ -599,17 +600,10 @@ def q_source_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
 # row_number() OVER (ORDER BY key) -- funnels the whole corpus through
 # ONE task (Spark plans a global window as a single partition); at
 # 100 TB that is the canonical scale-killer. The scale path is the
-# classic two-pass zip-with-index, kept entirely in DataFrame/Arrow
-# land:
-#   1. range-repartition by the shuffle key and sort within partitions
-#      (a scalable range exchange, pinned by localCheckpoint so both
-#      passes see identical partitioning);
-#   2. count rows per partition (|partitions| rows), prefix-sum them in
-#      a window over that TINY frame, broadcast-join the offsets back;
-#   3. an Arrow-batched mapInPandas adds offset + running local index.
-# No driver collect anywhere. The oracle is the single-task spelling
-# (ROW_NUMBER over the same md5 key) -- exact at test scale, and a
-# green row proves the distributed numbering equals the global sort.
+# two-pass zip-with-index of operators.scale.range_row_index. The
+# oracle is the single-task spelling (ROW_NUMBER over the same md5
+# key) -- exact at test scale, and a green row proves the distributed
+# numbering equals the global sort.
 # ---------------------------------------------------------------------------
 
 _N_ORDER_PARTS = 8
@@ -631,45 +625,11 @@ TRAINING_ORDER_SQL = f"""
 
 
 def q_training_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd  # noqa: F401
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     keyed = docs.select(
         "doc_id", F.md5(F.col("doc_id").cast("string")).alias("k")
     )
-    parts = (
-        keyed.repartitionByRange(_N_ORDER_PARTS, "k")
-        .sortWithinPartitions("k")
-        .withColumn("pid", F.spark_partition_id())
-        # materialize ONCE: range boundaries are sampled, so the counts
-        # pass and the numbering pass must read the same physical
-        # partitioning, not two re-executions of it
-        .localCheckpoint(eager=True)
-    )
-    counts = parts.groupBy("pid").agg(F.count(F.lit(1)).alias("n"))
-    off_win = (
-        Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    )
-    # the offsets window runs over |partitions| rows -- single-task by
-    # construction but bounded by the partition count, not the data
-    offsets = counts.select(
-        "pid", F.coalesce(F.sum("n").over(off_win), F.lit(0)).alias("off")
-    )
-    staged = parts.join(F.broadcast(offsets), "pid")
-
-    def add_index(batches):
-        local = 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            base = int(pdf["off"].iloc[0]) + local
-            out = pdf[["doc_id"]].assign(
-                pos=range(base, base + len(pdf))
-            )
-            local += len(pdf)
-            yield out
-
-    numbered = staged.mapInPandas(add_index, schema="doc_id long, pos long")
+    numbered, _ = range_row_index(keyed, ["k"], _N_ORDER_PARTS, ["doc_id"])
     return numbered.select(
         "doc_id",
         "pos",

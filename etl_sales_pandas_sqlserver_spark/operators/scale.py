@@ -1,5 +1,5 @@
-"""Scale-path join utilities: bucketed (pre-shuffled) tables and
-salted joins for skewed keys.
+"""Scale-path utilities: bucketed (pre-shuffled) tables, salted joins
+for skewed keys, chunked lookback windows and a distributed row index.
 
 These are the two knobs the prompt-level plan can't express and
 Catalyst can't infer:
@@ -17,12 +17,17 @@ Catalyst can't infer:
   feeds an aggregation or the join is broadcast-infeasible. The
   explode side replicates the small table N times -- bounded, explicit
   fan-out instead of an unbounded hot partition.
+
+:func:`range_row_index` numbers rows in a global sort order without the
+single-partition ``ROW_NUMBER() OVER (ORDER BY ...)`` window Spark would
+plan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def write_bucketed(
@@ -180,8 +185,6 @@ def chunked_lookback_window(
         staged.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )
     staged = staged.repartition(n_parts, key, "_ck")
-    from pyspark.sql import Window
-
     w = (
         Window.partitionBy(key, "_ck")
         .orderBy(tsu_col)
@@ -257,3 +260,55 @@ def hybrid_lookback_window(
         hot, key, tsu_col, agg_builder, lookback, chunk, out_col
     )
     return cold_out.unionByName(hot_out)
+
+
+def range_row_index(
+    df: DataFrame, order: list[str], n_parts: int, carry: list[str]
+) -> tuple[DataFrame, DataFrame]:
+    """``(numbered, counts)``: ``numbered`` is ``carry`` plus ``pos``,
+    each row's 0-based position in ``order``; ``counts`` is the
+    ``(pid, n)`` row count of each of the ``n_parts`` range partitions.
+
+    The naive ``ROW_NUMBER() OVER (ORDER BY ...)`` funnels every row
+    through ONE task. This is the two-pass zip-with-index instead, in
+    DataFrame/Arrow land; nothing is collected:
+
+    1. range-repartition by ``order`` and sort within partitions, pinned
+       by an eager ``localCheckpoint``: the range bounds are sampled, so
+       the counts pass and the numbering pass must read the same
+       physical partitioning, not two re-executions of it;
+    2. count rows per partition and prefix-sum the counts in a window
+       over those |partitions| rows (single-task, but bounded by
+       ``n_parts``, not the data), then broadcast-join the offsets back;
+    3. an Arrow-batched ``mapInPandas`` adds offset + running local
+       index.
+
+    ``order`` should be total (add a unique tiebreak column), or tied
+    rows are numbered in an arbitrary order."""
+    parts = (
+        df.repartitionByRange(n_parts, *order)
+        .sortWithinPartitions(*order)
+        .withColumn("pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
+    )
+    counts = parts.groupBy("pid").agg(F.count(F.lit(1)).alias("n"))
+    off_win = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
+    offsets = counts.select(
+        "pid", F.coalesce(F.sum("n").over(off_win), F.lit(0)).alias("off")
+    )
+    staged = parts.join(F.broadcast(offsets), "pid")
+
+    def number_rows(batches):
+        local = 0
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            base = int(pdf["off"].iloc[0]) + local
+            yield pdf[carry].assign(pos=range(base, base + len(pdf)))
+            local += len(pdf)
+
+    schema = T.StructType(
+        [T.StructField(c, df.schema[c].dataType) for c in carry]
+        + [T.StructField("pos", T.LongType())]
+    )
+    return staged.mapInPandas(number_rows, schema=schema), counts

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.dates import epoch_us
+from ..operators.scale import range_row_index
 from ..sources.testdata import load_table
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
@@ -278,10 +279,9 @@ def q_distinct_types_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
 # numeric column by empirical quantiles, then aggregate per bucket).
 # A naive ntile() OVER (ORDER BY ...) is a GLOBAL window -- a
 # single-partition funnel that dies at scale -- so the decile is
-# computed from a DISTRIBUTED exact rank instead: range-partition by
-# the sort key, count per partition, broadcast the prefix offsets, and
-# number rows with an Arrow kernel (the training_order_global_index
-# shape; its plan pin forbids data-sized single partitions). The
+# computed from a DISTRIBUTED exact rank instead:
+# operators.scale.range_row_index, the training_order_global_index
+# shape (their plan pin forbids data-sized single partitions). The
 # rank->ntile closed form reproduces SQL ntile's first-(N mod k)-
 # buckets-get-one-extra distribution exactly, so the DuckDB oracle can
 # use native ntile. Order is made total with the orderkey tiebreak;
@@ -312,42 +312,14 @@ def q_decile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    parts = (
-        orders.repartitionByRange(
-            _DECILE_PARTS, "o_totalprice", "o_orderkey"
-        )
-        .sortWithinPartitions("o_totalprice", "o_orderkey")
-        .withColumn("pid", F.spark_partition_id())
-        # one materialization: the counts pass and the ranking pass
-        # must see the SAME sampled range boundaries
-        .localCheckpoint(eager=True)
+    numbered, counts = range_row_index(
+        orders,
+        ["o_totalprice", "o_orderkey"],
+        _DECILE_PARTS,
+        ["o_totalprice"],
     )
-    counts = parts.groupBy("pid").agg(F.count(F.lit(1)).alias("n"))
-    off_win = Window.orderBy("pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    # |partitions| rows -- single-task but bounded by config, not data
-    offsets = counts.select(
-        "pid", F.coalesce(F.sum("n").over(off_win), F.lit(0)).alias("off")
-    )
+    ranked = numbered.select("o_totalprice", (F.col("pos") + 1).alias("rnk"))
     total = counts.agg(F.sum("n").alias("n_total"))
-    staged = parts.join(F.broadcast(offsets), "pid")
-
-    def add_rank(batches):
-        local = 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            base = int(pdf["off"].iloc[0]) + local
-            out = pdf[["o_totalprice"]].assign(
-                rnk=range(base + 1, base + 1 + len(pdf))
-            )
-            local += len(pdf)
-            yield out
-
-    ranked = staged.mapInPandas(
-        add_rank, schema="o_totalprice double, rnk long"
-    )
     # SQL ntile(k): q = N div k, m = N mod k; buckets 1..m hold q+1
     # rows, buckets m+1..k hold q. Integer arithmetic only.
     # integer div throughout -- a double division truncated back to

@@ -4,7 +4,8 @@ driver hash-compare can't see from the stock testdata:
 - the stage-rule SQL spelled in currpack's oracle must stay identical
   to curriculum.py's (the tokcount lesson: duplicated spellings drift
   silently unless pinned);
-- the two-level chunked per-stage prefix sum must be exact on id
+- the two-level chunked prefix sum (sharding.chunked_prefix_sum, keyed
+  by stage here and unkeyed in the shard manifest) must be exact on id
   shapes the stock testdata never produces — negative ids, sparse
   gaps, ids deep into superchunk > 0, and budget-straddling docs
   (the sharding-multilevel lesson: the stock ids never leave
@@ -17,6 +18,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -44,19 +46,52 @@ def test_stage_case_spelling_matches_curriculum():
     assert case in _normalize(_STAGED_CTE)
 
 
-def test_chunked_stage_prefix_on_hostile_ids(spark):
-    """assign_stage_sequences vs a naive pandas cumsum, on ids that
-    exercise every level of the decomposition: negative ids (chunk 0
-    spans (-4096, 4096) under truncating div), sparse gaps, ids in
+def _naive_prefix(rows, keys):
+    """{(stage, doc_id): (before, total)} by a per-key cumsum over
+    ``doc_id`` order; ``rows`` are (stage, doc_id, n_tok)."""
+    groups: dict = {}
+    for st, d, n in rows:
+        groups.setdefault(st if keys else None, []).append((d, n, st))
+    want = {}
+    for docs in groups.values():
+        total = sum(n for _, n, _ in docs)
+        before = 0
+        for d, n, st in sorted(docs):
+            want[(st, d)] = (before, total)
+            before += n
+    return want
+
+
+def _chunked_prefix(sdf, keys):
+    from etl_sales_pandas_sqlserver_spark.functions.sharding import (
+        chunked_prefix_sum,
+    )
+
+    return {
+        (r.stage, r.doc_id): (r.before, r.total)
+        for r in chunked_prefix_sum(sdf, keys).collect()
+    }
+
+
+#: the stage-keyed prefix (currpack) and the global one (sharding)
+_KEYS = [pytest.param(["stage"], id="stage"), pytest.param([], id="global")]
+
+
+@pytest.mark.parametrize("keys", _KEYS)
+def test_chunked_stage_prefix_on_hostile_ids(spark, keys):
+    """chunked_prefix_sum vs a naive cumsum, on ids that exercise every
+    level of the decomposition: negative ids (chunk 0 spans
+    (-4096, 4096) under truncating div), sparse gaps, ids in
     superchunks 0/1/3, and docs larger than the 2048 pack budget
     (seq_id gaps — straddling docs land whole where their prefix
-    starts)."""
+    starts). Unkeyed, the stages' ids are moved 4 superchunks apart so
+    every doc_id stays unique in the one global order."""
     from etl_sales_pandas_sqlserver_spark.functions.currpack import (
         _PACK_BUDGET,
-        assign_stage_sequences,
     )
 
     sup_w = 4096 * 4096
+    shift = 1 if keys else 4 * sup_w
     rows = []  # (stage, doc_id, n_tok)
     ids = [
         -9000, -1, 0, 17, 4095, 4096, 9999,
@@ -68,25 +103,16 @@ def test_chunked_stage_prefix_on_hostile_ids(spark):
             # vary sizes; every stage gets one straddler > budget
             n_tok = [37, 5000, 1, 2047, 2048, 2049, 400,
                      1, 1, 9000, 123, 1][i] + s
-            rows.append((s, d + s, n_tok))  # shift ids so stages differ
+            rows.append((s, d + s * shift, n_tok))  # stages differ
     sdf = spark.createDataFrame(rows, "stage long, doc_id long, n_tok long")
-    got = {
-        (r.stage, r.doc_id): r.seq_id
-        for r in assign_stage_sequences(sdf.repartition(8)).collect()
-    }
-
-    # naive expectation
-    want = {}
-    for s in (0, 1, 2):
-        docs = sorted((d, n) for st, d, n in rows if st == s)
-        before = 0
-        for d, n in docs:
-            want[(s, d)] = before // _PACK_BUDGET
-            before += n
-    assert got == want
+    want = _naive_prefix(rows, keys)
+    assert len(want) == len(rows)
+    assert _chunked_prefix(sdf.repartition(8), keys) == want
 
     # straddler sanity: at least one stage has a seq_id gap
-    seqs0 = sorted(v for (s, _), v in want.items() if s == 0)
+    seqs0 = sorted(
+        b // _PACK_BUDGET for (s, _), (b, _) in want.items() if s == 0
+    )
     assert seqs0[0] == 0
     assert max(seqs0) >= len(set(seqs0))  # gaps exist
 
@@ -111,18 +137,14 @@ def test_sequences_are_stage_homogeneous_and_zero_based(spark, sf_small):
     packed.unpersist()
 
 
-def test_chunked_stage_prefix_property(spark):
+@pytest.mark.parametrize("keys", _KEYS)
+def test_chunked_stage_prefix_property(spark, keys):
     """Property form of the hostile-id test: on randomized
     (stage, doc_id, n_tok) frames — ids signed and spanning multiple
     superchunks, token counts crossing the budget — the chunked
-    decomposition must equal the naive per-stage cumsum, under any
-    input partitioning."""
+    decomposition must equal the naive cumsum, under any input
+    partitioning."""
     import random
-
-    from etl_sales_pandas_sqlserver_spark.functions.currpack import (
-        _PACK_BUDGET,
-        assign_stage_sequences,
-    )
 
     rng = random.Random(0xC0FFEE)
     sup_w = 4096 * 4096
@@ -137,14 +159,6 @@ def test_chunked_stage_prefix_property(spark):
         sdf = spark.createDataFrame(
             rows, "stage long, doc_id long, n_tok long"
         ).repartition(rng.choice([1, 5, 16]))
-        got = {
-            (r.stage, r.doc_id): r.seq_id
-            for r in assign_stage_sequences(sdf).collect()
-        }
-        want = {}
-        for s in (0, 1, 2):
-            before = 0
-            for d, t in sorted((d, t) for st, d, t in rows if st == s):
-                want[(s, d)] = before // _PACK_BUDGET
-                before += t
-        assert got == want, f"trial {trial}"
+        assert _chunked_prefix(sdf, keys) == _naive_prefix(rows, keys), (
+            f"trial {trial}"
+        )

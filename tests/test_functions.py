@@ -631,6 +631,31 @@ def test_sales_memos_miss_on_lineitem_rewrite(spark, sf_small, tmp_path):
     )
 
 
+def test_evict_session_memos_releases_checkpoints(spark, sf_small, tmp_path):
+    """Evicting a session's memos must unpersist their checkpoints, not
+    just forget them: a dropped entry nobody can reach again would stay
+    pinned until the JVM's context cleaner happens to collect it."""
+    import shutil
+
+    from etl_sales_pandas_sqlserver_spark import cache
+    from etl_sales_pandas_sqlserver_spark.plans.testdata_queries import (
+        _sales_raw_cp,
+        _valid_sales_cp,
+    )
+
+    sf = str(tmp_path)
+    shutil.copy(f"{sf_small}/lineitem.parquet", f"{sf}/lineitem.parquet")
+    cache.evict_session_memos(spark)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    # hold the frames, so only an explicit release can free their blocks
+    held = [_sales_raw_cp(spark, sf), _valid_sales_cp(spark, sf)]
+    assert persistent().size() >= before + 2
+    cache.evict_session_memos(spark)
+    assert persistent().size() <= before, "evicted memos stay pinned"
+    assert all(df is not None for df in held)
+
+
 def test_managed_cache_releases_prior_queries_caches(spark, sf_small):
     """Constructing a new cache-using query must unpersist the caches
     the previous one registered (round-5 advice: serial driver sweeps

@@ -8,6 +8,8 @@ sort-merge join of a 5-row dim) fails loudly.
 
 from __future__ import annotations
 
+import pytest
+
 from etl_sales_pandas_sqlserver_spark.plans.testdata_queries import QUERIES
 
 
@@ -179,22 +181,34 @@ def test_bucketed_join_has_no_key_exchange(spark, sf_small):
     ), "join key exchange reappeared -- bucketing is not being used"
 
 
-def test_training_order_avoids_global_single_partition(spark, sf_small):
-    """Global index assignment must stay distributed: the Arrow-batched
+@pytest.mark.parametrize(
+    "name,n_scalar",
+    [("training_order_global_index", 0), ("decile_stats_order_price", 1)],
+    ids=["training_order_global_index", "decile_stats_order_price"],
+)
+def test_training_order_avoids_global_single_partition(
+    spark, sf_small, name, n_scalar
+):
+    """A global row index must stay distributed: the Arrow-batched
     two-pass numbering (MapInPandas + broadcast offsets), never a
-    whole-corpus ROW_NUMBER window funneled through one task. The ONE
-    allowed single-partition funnel is the offsets window, and it must
-    sit directly on the per-partition count aggregate (|partitions|
-    rows), never on corpus-sized data."""
-    fn, _ = QUERIES["training_order_global_index"]
+    whole-table ROW_NUMBER or ntile window funneled through one task.
+    The single-partition funnels allowed carry |partitions| rows: the
+    offsets window, sitting directly on the per-partition count
+    aggregate, and a scalar total over partial sums of those counts
+    (the decile closed form's N)."""
+    fn, _ = QUERIES[name]
     plan = _physical(fn(spark, sf_small))
     assert "MapInPandas" in plan
     lines = plan.splitlines()
     funnels = [i for i, ln in enumerate(lines) if "Exchange SinglePartition" in ln]
-    assert len(funnels) <= 1, "extra global funnel appeared"
-    for i in funnels:
-        # child printed right below the exchange: must be the count agg
-        assert "HashAggregate(keys=[pid" in lines[i + 1], lines[i + 1]
+    # child printed right below the exchange
+    on_counts = [i for i in funnels if "HashAggregate(keys=[pid" in lines[i + 1]]
+    assert len(on_counts) == 1, "offsets window is not on the count agg"
+    others = [i for i in funnels if i not in on_counts]
+    assert len(others) <= n_scalar, "extra global funnel appeared"
+    for i in others:
+        child = lines[i + 1]
+        assert "HashAggregate(keys=[]" in child and "partial_" in child, child
 
 
 #: queries whose plans legitimately contain BroadcastNestedLoopJoin:
@@ -279,7 +293,6 @@ _BROADCAST_ALLOWED: dict[str, set[str]] = {
     "plans/analytics_queries.py": {"nation", "region"},
     "plans/window_queries.py": {
         "nation",
-        "offsets",  # one row per shuffle partition (config-bounded)
         "total",    # single-row N for the ntile closed form
     },
     "plans/tpch_more.py": {"nation"},
@@ -296,13 +309,15 @@ _BROADCAST_ALLOWED: dict[str, set[str]] = {
     },
     "streaming/queries.py": {"nation"},
     "sources/maintenance.py": {"stats"},   # 1-row min/max per z column
-    # keys above an absolute row threshold: <= |rows|/threshold rows
-    "operators/scale.py": {"hot_keys"},
+    "operators/scale.py": {
+        # keys above an absolute row threshold: <= |rows|/threshold rows
+        "hot_keys",
+        "offsets",  # one row per range partition (argument-bounded)
+    },
     "sources/testdata.py": {"scnt"},       # single-row supplier count
     "functions/textstats.py": {"n_docs"},  # single-row corpus count
     "functions/traindata.py": {
         "n",        # single-row grand total
-        "offsets",  # one row per shuffle partition (config-bounded)
         "totals",   # single-row target/raw bigram grand totals
         "ratios",   # one row per hash bucket (fixed 64-value domain)
     },
@@ -360,31 +375,6 @@ def test_broadcast_hints_only_on_bounded_builds():
         "then extend _BROADCAST_ALLOWED for that file (named frames) or "
         f"annotate the line with '# broadcast-ok: <reason>': {violations}"
     )
-
-
-def test_decile_binning_avoids_global_single_partition(spark, sf_small):
-    """Exact ntile must NOT plan the naive global window (one task
-    sorting the whole table): the distributed-rank shape allows a
-    single-partition funnel only on the per-partition count aggregate,
-    exactly like the training-order pin."""
-    fn, _ = QUERIES["decile_stats_order_price"]
-    plan = _physical(fn(spark, sf_small))
-    assert "MapInPandas" in plan
-    lines = plan.splitlines()
-    funnels = [
-        i for i, ln in enumerate(lines) if "Exchange SinglePartition" in ln
-    ]
-    # two bounded funnels are expected: the offsets window (over the
-    # per-partition count rows) and the scalar grand-total aggregate
-    # (over partial sums of those same count rows) -- both carry
-    # |partitions| rows, never data
-    assert len(funnels) <= 2, "extra global funnel appeared"
-    for i in funnels:
-        child = lines[i + 1]
-        bounded = "HashAggregate(keys=[pid" in child or (
-            "HashAggregate(keys=[]" in child and "partial_" in child
-        )
-        assert bounded, child
 
 
 def test_heavy_hitters_counts_only_candidates(spark, sf_small):

@@ -196,14 +196,26 @@ _TWINS = {
 }
 
 
-@pytest.mark.usefixtures("driver_ansi")
-@pytest.mark.parametrize("twin", sorted(_TWINS))
-def test_twin_sides_agree(spark, twin):
+@pytest.mark.parametrize(
+    "twin,ansi",
+    [
+        pytest.param(t, ansi, id=t if ansi == "true" else f"{t}-ansi_off")
+        for t in sorted(_TWINS)
+        for ansi in ("true", "false")
+    ],
+)
+def test_twin_sides_agree(spark, twin, ansi):
     """Both sides of each twin give the same value on the same rows,
-    with ANSI mode on, Spark 4's default."""
+    with ANSI mode on (Spark 4's default) and off (the engine session's
+    setting, under which a bare ``size`` of a NULL array is -1)."""
     spark_side, sql_side = _TWINS[twin]
-    sdf = spark.createDataFrame([(t,) for t in _TWIN_ROWS], "text string")
-    got = [r.v for r in sdf.select(spark_side("text").alias("v")).collect()]
+    before = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        sdf = spark.createDataFrame([(t,) for t in _TWIN_ROWS], "text string")
+        got = [r.v for r in sdf.select(spark_side("text").alias("v")).collect()]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", before)
     con = duckdb.connect()
     want = [
         con.execute(
