@@ -1,9 +1,10 @@
-"""Session-level reuse of expensive frames, and query-local cache hygiene.
+"""Session-level reuse of expensive frames.
 
-``memo`` is the session memo for expensive intermediates that many
-queries of one session re-derive from the same source table (the
-shingle frame, the MinHash pair list, the top-k sets, the LM scores,
-the sales frames). ``memo(spark, name, sf_dir, table, build)`` runs
+``memo`` is the session memo for expensive intermediates that two
+consumers read: several queries of one session (the shingle frame, the
+MinHash pair list, the top-k sets, the LM scores, the sales frames) or
+two branches of one query's plan (the token projection, the bloom
+bitmap). ``memo(spark, name, sf_dir, table, build)`` runs
 ``build`` once, eagerly ``localCheckpoint``s the result (lineage
 severed, so later cache churn cannot invalidate it) and hands the SAME
 frame to every later caller while ``{sf_dir}/{table}.parquet`` is
@@ -14,23 +15,6 @@ checkpoint is released rather than pinned for the rest of the session.
 Entries are weak-keyed by the session object, so a new session
 recomputes. Only memoize frames whose checkpointed size is small
 relative to executor memory.
-
-``managed_cache`` is for a frame that one query's plan consumes more
-than once. The cache must survive the query's execution -- so the query
-cannot unpersist it itself -- but without any release it outlives the
-query: a correctness sweep or a test session that constructs and
-collects a hundred queries in one SparkSession would accumulate every
-one of those caches. ``managed_cache`` releases the cache registered by
-the PREVIOUS query, then caches and registers the new frame. Queries
-are constructed serially (construct -> execute -> construct ...), so by
-the time the next cache-creating query is constructed the prior query's
-execution is over and its cache is dead weight. If an
-already-constructed query is re-executed after another query was
-constructed, it simply recomputes without the cache: correctness never
-depends on a cache being present. Code whose RESULT validity depends
-on a live cache (e.g. corrupt-record-column scans) must NOT register
-here -- materialize via localCheckpoint instead (see
-sources/csv_folder.read_csv_with_bad_records).
 """
 
 from __future__ import annotations
@@ -40,8 +24,6 @@ import weakref
 from typing import Callable
 
 from pyspark.sql import DataFrame
-
-_ACTIVE: list[DataFrame] = []
 
 #: session -> {(name, sf_dir): (source tag, checkpointed frame)}
 _MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
@@ -120,21 +102,3 @@ def evict_session_memos(spark) -> None:
     for _, df in _MEMO.pop(spark, {}).values():
         release(df)
 
-
-def managed_cache(df: DataFrame) -> DataFrame:
-    """Release the caches registered by previous queries, then cache
-    and register ``df``."""
-    release_caches()
-    _ACTIVE.append(df.cache())
-    return _ACTIVE[-1]
-
-
-def release_caches() -> None:
-    """Unpersist every registered cache (best-effort: a stopped session
-    must not turn hygiene into an error)."""
-    while _ACTIVE:
-        df = _ACTIVE.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass

@@ -18,15 +18,9 @@ Everything is built from JVM-side ``pyspark.sql.functions`` expressions
 except where Python is genuinely required (multimodal decode), which
 uses Arrow-batched pandas iterators -- never row-at-a-time UDFs.
 
-CACHE DISCIPLINE (r12, verified): AQE exchange reuse does NOT fire
-across diverging aggregate subplans, so whenever TWO consumers read
-one expensive derived frame (the bigram-LM scored projection, a
-narrow token-count projection, a staged frame), register the narrow
-projection through :func:`..cache.managed_cache` instead of relying
-on plan-level reuse -- uncached, each consumer silently re-runs the
-full build (e.g. the whole corpus LM score, twice). Pattern instances:
-``currpack._packed_docs`` (the staged frame),
-``sharding.q_shard_manifest_tokens``. A frame that several QUERIES of
-one session share (the LM score feed, curriculum's scored documents)
-goes through :func:`..cache.memo` instead.
+CACHE DISCIPLINE: a frame that two consumers read -- two queries of
+one session, or two branches of one query's plan -- goes through
+:func:`..cache.memo`. AQE exchange reuse does NOT fire across diverging
+aggregate subplans, so without the memo each consumer silently re-runs
+the full build (e.g. the whole corpus LM score, twice).
 """

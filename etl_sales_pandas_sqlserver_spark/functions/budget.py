@@ -48,6 +48,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import memo
 from ..sources.testdata import load_table
 from .intmath import exact_ppm_spark, exact_ppm_sql
 from .tokcount import (
@@ -169,6 +170,24 @@ def sample_gate() -> "F.Column":
     return md5_slice(key, 1, 8) % 1_000_000
 
 
+def doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session-memoized ``(doc_id, source, n_tok, gate)`` over
+    ``documents``: the token projection the budget audit, the release
+    composite (functions/release.py) and the shard manifest
+    (functions/sharding.py) each read twice -- once to aggregate, once
+    row by row -- so one text scan serves all three."""
+
+    def build() -> DataFrame:
+        return load_table(spark, sf_dir, "documents").select(
+            "doc_id",
+            "source",
+            n_tokens_spark().alias("n_tok"),
+            sample_gate().alias("gate"),
+        )
+
+    return memo(spark, "doc_tokens", sf_dir, "documents", build)
+
+
 def q_budget_sampled_by_source(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -183,18 +202,10 @@ def q_budget_sampled_by_source(
 
     Scale: the doc-level work is one stateless projection + filter
     (zero shuffles beyond the final |sources| rollup); the water-fill
-    share is a |sources|-row broadcast join. The 3-int64-column token
-    projection is cached so the water-fill's per-source agg and the
-    doc-level gate pass share ONE scan of the text column."""
-    from ..cache import managed_cache
-
-    docs = managed_cache(
-        load_table(spark, sf_dir, "documents").select(
-            "doc_id",
-            "source",
-            n_tokens_spark().alias("n_tok"),
-        )
-    )
+    share is a |sources|-row broadcast join. The water-fill's
+    per-source agg and the doc-level gate pass both read
+    :func:`doc_tokens`, so the text column is scanned once."""
+    docs = doc_tokens(spark, sf_dir)
     per_source = docs.groupBy("source").agg(F.sum("n_tok").alias("avail"))
     shares = _waterfill(per_source).select(
         "source",
@@ -202,8 +213,7 @@ def q_budget_sampled_by_source(
         F.expr(exact_ppm_spark("alloc", "avail")).alias("target_ppm"),
     )
     sampled = (
-        docs.withColumn("gate", sample_gate())
-        .join(F.broadcast(shares), "source")  # broadcast-ok: |sources|-row waterfill frame
+        docs.join(F.broadcast(shares), "source")  # broadcast-ok: |sources|-row waterfill frame
         .filter(F.col("gate") < F.col("target_ppm"))
     )
     return (

@@ -132,10 +132,6 @@ def _stage_map(scored: DataFrame) -> DataFrame:
 
 
 def q_curriculum_stage_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the stage-map build AND the doc-level join probe both read the
-    # scored frame; since r18 _scored_docs is already a materialized
-    # session checkpoint, so the old per-query managed_cache wrap is
-    # redundant
     scored = _scored_docs(spark, sf_dir)
     # equi-join on the integer score; the stage map is <= 1e6+1 rows
     # (no broadcast hint: AQE broadcasts it at any realistic size)

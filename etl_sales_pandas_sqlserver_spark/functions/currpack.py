@@ -63,7 +63,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cache import managed_cache
+from ..cache import memo
 from .curriculum import _scored_docs, _stage_map
 from .intmath import exact_ppm_spark, exact_ppm_sql
 from .search import LM_SCORES_CTE
@@ -77,18 +77,20 @@ _HIST_BINS = 16  # fill octiles 0..7, overflow octiles 8..15 (capped)
 
 
 def _packed_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(stage, doc_id, n_tok, seq_id) for every scored document."""
-    # the stage-map build AND the doc-level join probe both read the
-    # scored frame, which since r18 is a materialized session
-    # checkpoint (curriculum._scored_docs) — no per-query cache needed
-    scored = _scored_docs(spark, sf_dir)
-    staged = scored.join(_stage_map(scored), "lm_score_ppm").select(
-        "stage", "doc_id", "n_tok"
-    )
-    # cache the 3-int64-column staged frame: the prefix-sum
-    # decomposition reads it twice
+    """(stage, doc_id, n_tok, seq_id) for every scored document. The
+    stage-map build and the doc-level join probe both read the scored
+    frame (a memo), and the prefix-sum decomposition reads the
+    3-int64-column staged frame twice, so it is a memo too."""
+
+    def build() -> DataFrame:
+        scored = _scored_docs(spark, sf_dir)
+        return scored.join(_stage_map(scored), "lm_score_ppm").select(
+            "stage", "doc_id", "n_tok"
+        )
+
+    staged = memo(spark, "staged_docs", sf_dir, "documents", build)
     return (
-        chunked_prefix_sum(managed_cache(staged), ["stage"])
+        chunked_prefix_sum(staged, ["stage"])
         .withColumn("seq_id", F.expr(f"before div {_PACK_BUDGET}"))
         .select("stage", "doc_id", "n_tok", "seq_id")
     )

@@ -55,7 +55,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import managed_cache, memo, release
+from ..cache import memo, release
 from ..session import shuffle_partitions
 from ..sources.testdata import load_table
 from .tokcount import (
@@ -519,13 +519,15 @@ def q_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    bloom_bytes = (
-        ev_pos.groupBy((F.col("pos") / 8).cast("bigint").alias("bidx"))
-        .agg(F.bit_or(F.expr("shiftleft(1, cast(pos % 8 as int))")).alias("bval"))
-        # <= m/8 rows; cached so the K broadcast copies don't each
-        # rebuild the eval pipeline
-    )
-    bloom_bytes = managed_cache(bloom_bytes)
+
+    def build() -> DataFrame:
+        return ev_pos.groupBy(
+            (F.col("pos") / 8).cast("bigint").alias("bidx")
+        ).agg(F.bit_or(F.expr("shiftleft(1, cast(pos % 8 as int))")).alias("bval"))
+
+    # <= m/8 rows; memoized so the K broadcast copies don't each
+    # rebuild the eval pipeline
+    bloom_bytes = memo(spark, "bloom_bytes", sf_dir, "documents", build)
 
     # train side: one map-side broadcast join per probe, no shingle
     # ever shuffles; a shingle is a bloom member iff ALL K probes hit
@@ -1180,19 +1182,20 @@ def cluster_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
     diameter -- a 10k-node path converges in ~6 rounds where plain
     min-label propagation needs 10k (the round-4 scale caveat this
     replaces). Near-clique dup graphs converge in 2-3 rounds, so the
-    common case pays nothing for the worst-case guarantee."""
+    common case pays nothing for the worst-case guarantee.
+
+    Callers pass a materialized pair list (the engine's callers pass
+    the ``minhash_verified_pairs`` memo checkpoint): the node universe
+    and the initial edge set both read ``pairs``, so an unmaterialized
+    input re-runs its upstream pipeline once per read."""
     spark = pairs.sparkSession
-    # materialize the pair list ONCE -- both the node universe and the
-    # edge set derive from it, and without this every round (and the
-    # node scan) re-executes the full upstream pair-detection pipeline
-    idpairs = pairs.select("a_id", "b_id").localCheckpoint(eager=True)
     nodes = (
-        idpairs.select(F.col("a_id").alias("node"))
-        .unionByName(idpairs.select(F.col("b_id").alias("node")))
+        pairs.select(F.col("a_id").alias("node"))
+        .unionByName(pairs.select(F.col("b_id").alias("node")))
         .distinct()
     )
     edges = _canon_edges(
-        idpairs.select(F.col("a_id").alias("s"), F.col("b_id").alias("d"))
+        pairs.select(F.col("a_id").alias("s"), F.col("b_id").alias("d"))
     ).localCheckpoint(eager=True)
     # the contraction loop shuffles only edges -- usually orders of
     # magnitude smaller than the corpus. Size its partition count to
@@ -1369,8 +1372,11 @@ def q_pagerank_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized every intermediate rank table -- pure overhead for
     # a 5-deep lineage over the already-checkpointed edge table
     # (measured 1.27s -> 0.88s at sf0.1; results bit-identical).
-    # Checkpointing stays where it pays: ed/ranks above sever the
-    # expensive minhash lineage that every round re-reads.
+    # The ed/ranks checkpoints above stay although the pair memo
+    # already severs the minhash lineage: the chain re-reads both every
+    # round, and deleting them measured slower at sf0.1 on 4 cores
+    # (first-call JVM CPU 9.0/8.4/9.1 -> 11.4/10.6/10.9 s, warm calls
+    # 4.3/4.7/4.3 -> 7.2/6.1/6.8 s).
     for _ in range(_PAGERANK_ITERS):
         contrib = ed.join(ranks, ed.s == ranks.v).select(
             "d", F.expr("p div outdeg").alias("c")

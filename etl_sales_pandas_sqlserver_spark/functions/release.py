@@ -2,7 +2,8 @@
 
 The round-11 capstone composite — the writer path a pipeline runs to
 cut a training corpus release under a token budget, chaining the three
-primitives end-to-end on ONE cached projection:
+primitives end-to-end on ONE memoized projection
+(``budget.doc_tokens``):
 
 1. **allocate**: water-fill the global budget across sources
    (``functions/budget.py`` — discrete max-min fair, all int64);
@@ -22,7 +23,7 @@ DuckDB oracle recomputes the whole chain with a naive global window —
 any disagreement between the staged Spark decomposition and the
 straight-line semantics is a hash mismatch.
 
-Scale: one text scan into the cached 4-int64-column projection; the
+Scale: one text scan into the memoized 4-int64-column projection; the
 water-fill is |sources|-row windows; the gate is stateless; the shard
 assignment adds the shuffles the plain manifest pays (chunk sums,
 superchunk rollup, by-chunk window) — nothing new beyond the proven
@@ -36,25 +37,16 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cache import managed_cache
-from ..sources.testdata import load_table
-from .budget import SAMPLE_GATE_SQL, _WF_CTE, _waterfill, sample_gate
+from .budget import SAMPLE_GATE_SQL, _WF_CTE, _waterfill, doc_tokens
 from .intmath import exact_ppm_spark, exact_ppm_sql
 from .sharding import _N_SHARDS, assign_token_shards
-from .tokcount import N_TOKENS_SQL, n_tokens_spark
+from .tokcount import N_TOKENS_SQL
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
 
 def q_release_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = managed_cache(
-        load_table(spark, sf_dir, "documents").select(
-            "doc_id",
-            "source",
-            n_tokens_spark().alias("n_tok"),
-            sample_gate().alias("gate"),
-        )
-    )
+    docs = doc_tokens(spark, sf_dir)
     per_source = docs.groupBy("source").agg(F.sum("n_tok").alias("avail"))
     shares = _waterfill(per_source).select(
         "source",

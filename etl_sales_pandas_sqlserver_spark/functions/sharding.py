@@ -31,9 +31,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import managed_cache
-from ..sources.testdata import load_table
-from .tokcount import N_TOKENS_SQL, n_tokens_spark
+from .budget import doc_tokens
+from .tokcount import N_TOKENS_SQL
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -77,7 +76,7 @@ def chunked_prefix_sum(frame: DataFrame, keys: list[str]) -> DataFrame:
     Spark's ``div`` truncates, so chunk 0 spans (-4096, 4096): wider,
     but still a contiguous doc-id range in ascending chunk order, which
     is all the decomposition needs. Everything is int64 (the sums wrap
-    only past ~9.2e18 tokens). The input should be a narrow cached
+    only past ~9.2e18 tokens). The input should be a narrow memoized
     projection: the chunk-sum build and the join probe both read it."""
     t = frame.withColumn("chunk", F.expr(f"doc_id div {_CHUNK}"))
     chunk_sums = t.groupBy(*keys, "chunk").agg(F.sum("n_tok").alias("c_tok"))
@@ -166,19 +165,14 @@ def q_shard_manifest_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the r15 hostile-docs divergence). On data with null doc_ids the
     # manifest's token totals therefore run below the budget and
     # release totals (which keep those documents) by their tokens.
+    # the chunk-sum build and the join probe both read the memoized
+    # token projection, so the text column is scanned once
     docs = (
-        load_table(spark, sf_dir, "documents")
+        doc_tokens(spark, sf_dir)
         .filter(F.col("doc_id").isNotNull())
-        .select(
-            "doc_id",
-            n_tokens_spark().alias("n_tok"),
-        )
+        .select("doc_id", "n_tok")
     )
-    # cache the 2-int64-column projection: the chunk-sum build and the
-    # join probe otherwise each re-scan the full text column just to
-    # recount tokens (two scans of the corpus's widest column for one
-    # narrow derived frame)
-    placed = assign_token_shards(managed_cache(docs))
+    placed = assign_token_shards(docs)
     return (
         placed.groupBy("shard_id")
         .agg(

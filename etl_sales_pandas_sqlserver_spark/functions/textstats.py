@@ -20,7 +20,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import managed_cache
+from ..cache import memo
 from ..sources.testdata import load_table
 from .tokcount import (
     N_TOKENS_SQL,
@@ -507,22 +507,27 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select("doc_id", ws_split(F.lower("text")).alias("w")).filter(
         F.size("w") >= _WINNOW_K
     )
+
     # grams + hash + position encoding all inside the array, and the
-    # frame CACHED before the explode: projection collapse would
-    # otherwise fold the transform into the generator and evaluate it
-    # interpreted (the round-5 explode-over-uncached-array cliff --
-    # measured here 4.1s -> 1.2s at sf0.1)
-    cmb = managed_cache(toks.select(
-        "doc_id",
-        F.transform(
-            F.sequence(F.lit(1), F.size("w") - _WINNOW_K + 1),
-            lambda i: md5_slice(
-                F.array_join(F.slice("w", i, _WINNOW_K), " "), 1, 10
-            )
-            * _POS_ENC
-            + (_POS_ENC - i),
-        ).alias("cs"),
-    ))
+    # frame CHECKPOINTED before the explode: the checkpoint is an
+    # optimizer barrier, so projection collapse cannot fold the
+    # transform into the generator and evaluate it interpreted (the
+    # round-5 explode-over-uncached-array cliff -- measured here
+    # 4.1s -> 1.2s at sf0.1)
+    def build() -> DataFrame:
+        return toks.select(
+            "doc_id",
+            F.transform(
+                F.sequence(F.lit(1), F.size("w") - _WINNOW_K + 1),
+                lambda i: md5_slice(
+                    F.array_join(F.slice("w", i, _WINNOW_K), " "), 1, 10
+                )
+                * _POS_ENC
+                + (_POS_ENC - i),
+            ).alias("cs"),
+        )
+
+    cmb = memo(spark, "winnow_grams", sf_dir, "documents", build)
     ex = cmb.select("doc_id", F.explode("cs").alias("c")).withColumn(
         "p", F.lit(_POS_ENC - 1) - F.col("c") % F.lit(_POS_ENC)
     )

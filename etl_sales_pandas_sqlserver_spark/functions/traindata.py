@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import memo
 from ..operators.scale import range_row_index
 from ..sources.testdata import load_table
 from .tokcount import (
@@ -707,9 +708,6 @@ IMPORTANCE_WEIGHTS_SQL = f"""
 
 
 def q_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "text"
-    )
     # per-doc bucket histograms via an Arrow-vectorized kernel: one
     # flat uint8 buffer per batch, the bigram hash as two shifted numpy
     # slices, cross-doc boundary pairs masked out, and ONE bincount
@@ -766,18 +764,18 @@ def q_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    from ..cache import managed_cache
-
-    # cache the per-doc counts: three consumers (target histogram, raw
-    # histogram, score join) would otherwise re-run the Python kernel
-    # per consumer -- mapInPandas output is not an Exchange, so plan
-    # reuse cannot deduplicate it. |docs| x 64 rows max.
-    per_doc = managed_cache(
-        docs.mapInPandas(
+    # memoize the per-doc counts: three consumers (target histogram,
+    # raw histogram, score join) would otherwise re-run the Python
+    # kernel per consumer -- mapInPandas output is not an Exchange, so
+    # plan reuse cannot deduplicate it. |docs| x 64 rows max.
+    def build() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents")
+        return docs.select("doc_id", "lang", "text").mapInPandas(
             _histograms,
             schema="doc_id long, lang string, bucket long, cnt long",
         )
-    )
+
+    per_doc = memo(spark, "bigram_histograms", sf_dir, "documents", build)
     tc = (
         per_doc.filter(F.col("lang") == _DSIR_TARGET_LANG)
         .groupBy("bucket")

@@ -296,7 +296,8 @@ def range_row_index(
     offsets = counts.select(
         "pid", F.coalesce(F.sum("n").over(off_win), F.lit(0)).alias("off")
     )
-    staged = parts.join(F.broadcast(offsets), "pid")
+    # the kernel reads only the carried columns and the offset
+    staged = parts.join(F.broadcast(offsets), "pid").select(*carry, "off")
 
     def number_rows(batches):
         local = 0

@@ -25,6 +25,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import memo
 from ..operators.dates import epoch_us
 from ..sources.testdata import load_table
 
@@ -891,30 +892,30 @@ def q_fuzzy_join_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     # native) so the variant build + hash run as codegen'd columns; a
     # transform() lambda would evaluate interpreted per variant
     # (round-9 rewrite, same class as the simhash/prefix-filter ones)
-    variants = cust.select(
-        "c_custkey",
-        "c_name",
-        F.explode(F.expr("sequence(0, length(c_name))")).alias("i"),
-    ).select(
-        "c_custkey",
-        "i",
-        # i == length marks the identity variant (no char deleted)
-        (F.col("i") == F.length("c_name")).alias("is_self"),
-        F.xxhash64(
-            F.expr(
-                "concat(substring(c_name, 1, i), "
-                "substring(c_name, i + 2, length(c_name)))"
-            )
-        ).alias("vh"),
-    )
+    def build() -> DataFrame:
+        return cust.select(
+            "c_custkey",
+            "c_name",
+            F.explode(F.expr("sequence(0, length(c_name))")).alias("i"),
+        ).select(
+            "c_custkey",
+            "i",
+            # i == length marks the identity variant (no char deleted)
+            (F.col("i") == F.length("c_name")).alias("is_self"),
+            F.xxhash64(
+                F.expr(
+                    "concat(substring(c_name, 1, i), "
+                    "substring(c_name, i + 2, length(c_name)))"
+                )
+            ).alias("vh"),
+        )
+
     # four consumers below (two leg-1 sides, the leg-2 identity and
-    # deletion sides) would each re-run the explode+hash; cache the
+    # deletion sides) would each re-run the explode+hash; memoize the
     # narrow int frame once (the _doc_shingles pattern -- measured
     # ~1.2s at sf0.1, where the single-row-group scan serializes the
     # variant build on one task)
-    from ..cache import managed_cache
-
-    variants = managed_cache(variants)
+    variants = memo(spark, "name_variants", sf_dir, "customer", build)
     # POSITION-BLOCKED candidate join (r18, guide §3.2 reduce before
     # the shuffle; the FastSS deletion-position refinement). Joining on
     # vh alone put every deletion variant of every name in one bucket

@@ -118,8 +118,9 @@ def read_csv_with_bad_records(
     (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN); the
     documented workaround is to cache the parsed frame so ``bad`` is
     ANALYZABLE. But a cache is a liveness hazard: if it is released
-    before ``bad`` executes (e.g. by the managed_cache hygiene of the
-    next query), collecting ``bad`` throws that same error at runtime.
+    before ``bad`` executes (by any cache release, e.g. a
+    ``spark.catalog.clearCache()``), collecting ``bad`` throws that
+    same error at runtime.
     So ``bad`` is eagerly materialized via ``localCheckpoint`` while
     the cache is live -- severing its lineage from the raw CSV scan --
     and the cache is dropped before returning. Both outputs are then

@@ -356,8 +356,8 @@ def test_cluster_components_high_diameter_path(spark):
 
 def test_cluster_components_releases_superseded_checkpoints(spark):
     # a 200-node path takes several rounds; each round's edge set
-    # supersedes the last, so only the pair list and the final edge set
-    # (both read by the returned frame) may stay persisted
+    # supersedes the last, so only the final edge set (read by the
+    # returned frame) may stay persisted
     n = 200
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(1, n)], ["a_id", "b_id"]
@@ -366,7 +366,7 @@ def test_cluster_components_releases_superseded_checkpoints(spark):
     before = persistent().size()
     rows = cluster_components(path).collect()
     assert len(rows) == n and {r["cluster_id"] for r in rows} == {1}
-    assert persistent().size() - before <= 2
+    assert persistent().size() - before <= 1
 
 
 def test_cluster_components_star_input_converges_in_one_round(spark):
@@ -656,47 +656,55 @@ def test_evict_session_memos_releases_checkpoints(spark, sf_small, tmp_path):
     assert all(df is not None for df in held)
 
 
-def test_managed_cache_releases_prior_queries_caches(spark, sf_small):
-    """Constructing a new cache-using query must unpersist the caches
-    the previous one registered (round-5 advice: serial driver sweeps
-    accumulated every query's shingle/exact-set cache)."""
+#: one query per frame that its plan reads twice, each a session memo;
+#: the value is the table the query reads
+_TWO_CONSUMER_MEMO_QUERIES = {
+    "budget_sampled_by_source": "documents",
+    "release_shard_manifest": "documents",
+    "shard_manifest_tokens": "documents",
+    "text_winnow_fingerprints": "documents",
+    "importance_weights_ngram": "documents",
+    "fuzzy_join_customer_names": "customer",
+    "dedup_decontaminate_bloom": "documents",
+    "pack_by_curriculum_stage": "documents",
+}
+
+
+@pytest.mark.parametrize("name", sorted(_TWO_CONSUMER_MEMO_QUERIES))
+def test_two_consumer_frames_are_session_memos(
+    spark, sf_small, tmp_path, job_ids, name
+):
+    """A frame one query's plan reads twice is a session memo: the
+    second call of the query reuses it (fewer jobs, no new persisted
+    RDD), and evicting the session's memos unpins everything the calls
+    pinned."""
+    import shutil
+
     from etl_sales_pandas_sqlserver_spark import cache
-    from etl_sales_pandas_sqlserver_spark.cache import (
-        _ACTIVE,
-        managed_cache,
-        release_caches,
+    from etl_sales_pandas_sqlserver_spark.plans.testdata_queries import (
+        QUERIES,
     )
-    from etl_sales_pandas_sqlserver_spark.functions.dedup import (
-        q_decontaminate_bloom,
-    )
+    from etl_sales_pandas_sqlserver_spark.sources.testdata import load_table
 
-    release_caches()
-    # evict the session memos (shingle frame, pair feed): a memo hit
-    # skips plan construction and registers no cache -- desired in
-    # production, but this test must see the construction-time
-    # release mechanism
+    table = _TWO_CONSUMER_MEMO_QUERIES[name]
+    sf = str(tmp_path)
+    shutil.copy(f"{sf_small}/{table}.parquet", f"{sf}/{table}.parquet")
+    fn, _ = QUERIES[name]
+    # start from no cached frame and no memo, with the copy's schema
+    # already read, so the calls below differ only in memo reuse
+    spark.catalog.clearCache()
     cache.evict_session_memos(spark)
-    # mechanism, on frames with DISTINCT canonicalized plans (alias
-    # names are erased by canonicalization, so same-shape frames would
-    # share one cache entry and mask the release)
-    a = managed_cache(spark.range(10))
-    a.count()
-    assert a.storageLevel.useMemory
-    b = managed_cache(spark.range(20))
-    b.count()
-    assert not a.storageLevel.useMemory  # a's cache released by b
-    assert b.storageLevel.useMemory
-    assert len(_ACTIVE) == 1 and _ACTIVE[0] is b
-
-    # a real cache-using query (the bloom bitmap build -- since the
-    # shingle/pair frames moved to session memos it is the remaining
-    # managed_cache user in dedup) registers exactly one cache
-    q1 = q_decontaminate_bloom(spark, sf_small)
-    q1.count()
-    assert len(_ACTIVE) == 1 and _ACTIVE[0] is not b
-    assert not b.storageLevel.useMemory
-    release_caches()
-    assert not _ACTIVE
+    load_table(spark, sf, table)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    first, jobs1 = job_ids(lambda: fn(spark, sf).collect())
+    pinned = persistent().size()
+    second, jobs2 = job_ids(lambda: fn(spark, sf).collect())
+    assert sorted(map(repr, first)) == sorted(map(repr, second))
+    assert len(jobs2) < len(jobs1), (len(jobs1), len(jobs2))
+    assert persistent().size() <= pinned, "second call pinned a new RDD"
+    cache.evict_session_memos(spark)
+    assert persistent().size() <= before, "evicted memos stay pinned"
 
 
 # ---------------------------------------------------------------------------

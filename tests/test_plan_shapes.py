@@ -182,12 +182,15 @@ def test_bucketed_join_has_no_key_exchange(spark, sf_small):
 
 
 @pytest.mark.parametrize(
-    "name,n_scalar",
-    [("training_order_global_index", 0), ("decile_stats_order_price", 1)],
+    "name,n_scalar,carry",
+    [
+        ("training_order_global_index", 0, ["doc_id"]),
+        ("decile_stats_order_price", 1, ["o_totalprice"]),
+    ],
     ids=["training_order_global_index", "decile_stats_order_price"],
 )
 def test_training_order_avoids_global_single_partition(
-    spark, sf_small, name, n_scalar
+    spark, sf_small, name, n_scalar, carry
 ):
     """A global row index must stay distributed: the Arrow-batched
     two-pass numbering (MapInPandas + broadcast offsets), never a
@@ -195,10 +198,17 @@ def test_training_order_avoids_global_single_partition(
     The single-partition funnels allowed carry |partitions| rows: the
     offsets window, sitting directly on the per-partition count
     aggregate, and a scalar total over partial sums of those counts
-    (the decile closed form's N)."""
+    (the decile closed form's N). The numbering kernel is fed only the
+    carried columns and the partition offset: no sort key or partition
+    id is serialized to Python."""
+    import re
+
     fn, _ = QUERIES[name]
     plan = _physical(fn(spark, sf_small))
-    assert "MapInPandas" in plan
+    kernel = re.search(r"MapInPandas number_rows\(([^)]*)\)", plan)
+    assert kernel, "numbering kernel missing"
+    fed = [re.sub(r"#\d+L?$", "", a.strip()) for a in kernel.group(1).split(",")]
+    assert fed == carry + ["off"], fed
     lines = plan.splitlines()
     funnels = [i for i, ln in enumerate(lines) if "Exchange SinglePartition" in ln]
     # child printed right below the exchange

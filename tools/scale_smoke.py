@@ -233,7 +233,6 @@ def main() -> int:
             spark.catalog.clearCache()
             from etl_sales_pandas_sqlserver_spark import cache
 
-            cache.release_caches()
             # evict ALL session memos (pair feed, sales frames) so
             # every pass pays the full family cost
             cache.evict_session_memos(spark)
