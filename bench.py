@@ -46,7 +46,6 @@ def main() -> None:
     spark = get_spark(
         app_name="etl-sales-spark-bench",
         master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus) if cpus.isdigit() else 32,
     )
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -13,13 +13,17 @@ changed?": a rewrite of the file or of any part file of a parquet
 directory changes the tag, the next call rebuilds, and the superseded
 checkpoint is released rather than pinned for the rest of the session.
 Entries are weak-keyed by the session object, so a new session
-recomputes. Only memoize frames whose checkpointed size is small
+recomputes. Threads that share a session build each entry once: the
+check, the build and the store hold that session's re-entrant lock
+(re-entrant because builds nest: the MinHash pair list reads the
+shingle memo). Only memoize frames whose checkpointed size is small
 relative to executor memory.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 import weakref
 from typing import Callable
 
@@ -27,6 +31,9 @@ from pyspark.sql import DataFrame
 
 #: session -> {(name, sf_dir): (source tag, checkpointed frame)}
 _MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+#: session -> the RLock its memo entries are built and dropped under
+_LOCKS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+_LOCKS_GUARD = threading.Lock()
 
 
 def source_tag(sf_dir: str, table: str):
@@ -65,16 +72,22 @@ def memo(
 ) -> DataFrame:
     """The checkpointed ``build()`` for (``name``, ``sf_dir``), rebuilt
     when ``{sf_dir}/{table}.parquet`` changes or the session stopped."""
-    per = _MEMO.setdefault(spark, {})
-    tag = source_tag(sf_dir, table)
-    hit = per.get((name, sf_dir))
-    if hit is not None:
-        if hit[0] == tag and _alive(spark):
-            return hit[1]
-        release(hit[1])
-    df = build().localCheckpoint(eager=True)
-    per[(name, sf_dir)] = (tag, df)
-    return df
+    with _lock(spark):
+        per = _MEMO.setdefault(spark, {})
+        tag = source_tag(sf_dir, table)
+        hit = per.get((name, sf_dir))
+        if hit is not None:
+            if hit[0] == tag and _alive(spark):
+                return hit[1]
+            release(hit[1])
+        df = build().localCheckpoint(eager=True)
+        per[(name, sf_dir)] = (tag, df)
+        return df
+
+
+def _lock(spark) -> threading.RLock:
+    with _LOCKS_GUARD:
+        return _LOCKS.setdefault(spark, threading.RLock())
 
 
 def _alive(spark) -> bool:
@@ -99,6 +112,7 @@ def release(df: DataFrame) -> None:
 def evict_session_memos(spark) -> None:
     """Release and drop every memo entry held for ``spark``, so the next
     call of each memo rebuilds from its source."""
-    for _, df in _MEMO.pop(spark, {}).values():
-        release(df)
+    with _lock(spark):
+        for _, df in _MEMO.pop(spark, {}).values():
+            release(df)
 

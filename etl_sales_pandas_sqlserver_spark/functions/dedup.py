@@ -56,7 +56,6 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..cache import memo, release
-from ..session import shuffle_partitions
 from ..sources.testdata import load_table
 from .tokcount import (
     fingerprint_col,
@@ -1188,7 +1187,6 @@ def cluster_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
     the ``minhash_verified_pairs`` memo checkpoint): the node universe
     and the initial edge set both read ``pairs``, so an unmaterialized
     input re-runs its upstream pipeline once per read."""
-    spark = pairs.sparkSession
     nodes = (
         pairs.select(F.col("a_id").alias("node"))
         .unionByName(pairs.select(F.col("b_id").alias("node")))
@@ -1197,67 +1195,57 @@ def cluster_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
     edges = _canon_edges(
         pairs.select(F.col("a_id").alias("s"), F.col("b_id").alias("d"))
     ).localCheckpoint(eager=True)
-    # the contraction loop shuffles only edges -- usually orders of
-    # magnitude smaller than the corpus. Size its partition count to
-    # the EDGE data (one partition per ~50k edges), not the session
-    # default: a near-dup graph with hundreds of edges must not pay
-    # 32 tasks x ~4 jobs x rounds of scheduling overhead, while a
-    # billion-edge graph still fans out
-    n_edges = edges.count()
-    nparts = max(1, min(int(spark.conf.get("spark.sql.shuffle.partitions")),
-                        n_edges // 50_000 + 1))
-    converged = n_edges == 0
-    with shuffle_partitions(spark, nparts):
-        for _ in range(max_rounds):
-            if converged:
-                break
-            # lazy checkpoint: the probe aggregation below is the first
-            # action on the new edge set, so it materializes the
-            # checkpoint as a side effect -- one Spark job per round
-            # instead of two (checkpoint + probe)
-            prev = edges
-            edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
-            # Convergence is detected DIRECTLY, in one two-level
-            # aggregation per round: a canonical edge set is a fixed
-            # point of small-star∘large-star exactly when it is a star
-            # forest (every node is a center or a leaf with ONE center,
-            # never both; centers < leaves by canon, so each center is
-            # its component's minimum -- and the transforms preserve
-            # connectivity, so those components ARE the input's).
-            # Checking the structural invariant itself, instead of
-            # comparing (count, checksum) against the previous round,
-            # saves the extra confirming round, lets an already-star
-            # input converge in one round, and removes the 64-bit
-            # XOR-collision false-convergence window the old checksum
-            # comparison carried (round-5 advice).
-            probe = edges.select(
-                F.col("d").alias("node"), F.lit(0).alias("role")
-            ).unionByName(
-                edges.select(F.col("s").alias("node"), F.lit(1).alias("role"))
-            )
-            # edges are distinct+canonical, so leaf rows per node ==
-            # distinct centers per node
-            per_node = probe.groupBy("node").agg(
-                F.sum(F.when(F.col("role") == 0, 1).otherwise(0)).alias("k"),
-                F.max("role").alias("is_center"),
-            )
-            bad_node = (F.col("k") > 1) | (
-                (F.col("k") >= 1) & (F.col("is_center") == 1)
-            )
-            viol = per_node.agg(F.sum(bad_node.cast("int"))).collect()[0][0]
-            converged = int(viol or 0) == 0
-            # the probe job filled the new checkpoint, and Spark cuts
-            # its lineage right after that job: nothing reads the
-            # superseded edge set's blocks any more
-            release(prev)
+    converged = False
+    for _ in range(max_rounds):
+        if converged:
+            break
+        # lazy checkpoint: the probe aggregation below is the first
+        # action on the new edge set, so it materializes the
+        # checkpoint as a side effect -- one Spark job per round
+        # instead of two (checkpoint + probe)
+        prev = edges
+        edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
+        # Convergence is detected DIRECTLY, in one two-level
+        # aggregation per round: a canonical edge set is a fixed
+        # point of small-star∘large-star exactly when it is a star
+        # forest (every node is a center or a leaf with ONE center,
+        # never both; centers < leaves by canon, so each center is
+        # its component's minimum -- and the transforms preserve
+        # connectivity, so those components ARE the input's).
+        # Checking the structural invariant itself, instead of
+        # comparing (count, checksum) against the previous round,
+        # saves the extra confirming round, lets an already-star
+        # input converge in one round, and removes the 64-bit
+        # XOR-collision false-convergence window the old checksum
+        # comparison carried (round-5 advice).
+        probe = edges.select(
+            F.col("d").alias("node"), F.lit(0).alias("role")
+        ).unionByName(
+            edges.select(F.col("s").alias("node"), F.lit(1).alias("role"))
+        )
+        # edges are distinct+canonical, so leaf rows per node ==
+        # distinct centers per node
+        per_node = probe.groupBy("node").agg(
+            F.sum(F.when(F.col("role") == 0, 1).otherwise(0)).alias("k"),
+            F.max("role").alias("is_center"),
+        )
+        bad_node = (F.col("k") > 1) | (
+            (F.col("k") >= 1) & (F.col("is_center") == 1)
+        )
+        viol = per_node.agg(F.sum(bad_node.cast("int"))).collect()[0][0]
+        converged = int(viol or 0) == 0
+        # the probe job filled the new checkpoint, and Spark cuts
+        # its lineage right after that job: nothing reads the
+        # superseded edge set's blocks any more
+        release(prev)
     if not converged:
         # partial star sets are WRONG (a component would be reported as
         # several clusters) -- fail loudly rather than return them.
         # O(log n) convergence makes max_rounds=20 cover any feasible
         # graph; hitting this means the input is malformed.
         raise RuntimeError(
-            f"cluster_components did not converge in {max_rounds} rounds "
-            f"({n_edges} edges); raise max_rounds"
+            f"cluster_components did not converge in {max_rounds} rounds; "
+            "raise max_rounds"
         )
     # converged == the star-forest invariant HELD (it is the
     # convergence test), so labels below are safe by construction

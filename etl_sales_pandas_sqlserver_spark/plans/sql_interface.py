@@ -1,8 +1,14 @@
-"""The engine's SQL entry point: register the testdata tables as temp
-views and run ANSI SQL through ``spark.sql``. Catalyst plans SQL and
+"""The engine's SQL entry point: run ANSI SQL through ``spark.sql``
+over temp views of the testdata tables. Catalyst plans SQL and
 DataFrame code identically (same logical plan, same optimizations), so
 this surface costs nothing extra -- the point is that a SQL-first user
 can drive the engine without touching the DataFrame API.
+
+The views live on an ``isolated`` clone of the caller's session, one
+per call, and only the tables the SQL text reads are registered: the
+caller's catalog is left as it was found. The clone reads the caller's
+verified read schemas (``sources.testdata.load_table``), so no parquet
+footer is read twice.
 
 The registered query's text is deliberately engine-portable ANSI: the
 SAME string is the DuckDB oracle, so the correctness check also proves
@@ -20,21 +26,10 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import isolated
 from ..sources.testdata import load_table
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
-
-_TABLES = (
-    "region nation customer supplier part orders lineitem "
-    "events documents embeddings"
-).split()
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Expose every testdata table as a temp view for spark.sql use."""
-    for t in _TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
 
 #: one portable SQL text -- runs verbatim on Spark AND DuckDB
 REGION_YEAR_REVENUE_SQL = """
@@ -53,8 +48,10 @@ REGION_YEAR_REVENUE_SQL = """
 
 
 def q_sql_region_year_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(REGION_YEAR_REVENUE_SQL)
+    clone = isolated(spark, {})
+    for t in ("orders", "customer", "nation", "region"):
+        load_table(clone, sf_dir, t).createOrReplaceTempView(t)
+    return clone.sql(REGION_YEAR_REVENUE_SQL)
 
 
 SQL_INTERFACE_QUERIES: dict[str, tuple[SparkQuery, str | None]] = {

@@ -1,44 +1,57 @@
-"""SparkSession factory.
+"""SparkSession factory, and the one rule for session state.
 
 Defaults are chosen for the dual target: correctness tests on
 ``local[N]`` and the same code running on a 1000-executor cluster over
 ~100 TB. Nothing here is local-only; the local knobs (shuffle partition
 count, driver memory) are read from the environment so a cluster deploy
 overrides them with spark-submit conf instead.
+
+The engine is a library over a session its caller owns (a batch job,
+a notebook, a server). Only ``get_spark`` configures the engine session;
+no query sets a conf or registers a temp view on the session it was
+handed. A path that needs other confs or its own views runs on an
+``isolated`` clone instead.
 """
 
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
-from typing import Iterator
+import weakref
 
 from pyspark.sql import SparkSession
 
+#: clone -> the caller's session it was ``isolated`` from
+_ORIGIN: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
-@contextmanager
-def shuffle_partitions(spark: SparkSession, n: int) -> Iterator[None]:
-    """Temporarily pin ``spark.sql.shuffle.partitions``.
 
-    Streaming stateful operators size their state-store count from this
-    conf at plan time (a pre-repartition cannot replace it), and
-    iterative drivers shrink it to match loop-state size; both must
-    restore the session value even on failure. Not safe against
-    concurrent planning on the same session -- single-threaded in
-    tests/bench; on a shared cluster use a dedicated session.
+def isolated(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
+    """A private clone of ``spark`` with ``conf`` set on the clone only.
+
+    The clone starts as a copy of the caller's SQL conf (ANSI, time
+    zone, whatever the caller set at run time), temp views and
+    functions, over the shared SparkContext, so nothing done to it is
+    seen by the caller. ``SparkSession.newSession`` is not a substitute:
+    it starts from the context's launch conf and drops the caller's
+    run-time settings. ``cloneSession`` is JVM-internal, which is why it is
+    wrapped here and nowhere else. ``origin`` maps the clone back to
+    the caller, so per-session metadata such as
+    ``sources.testdata``'s verified read schemas is shared with it.
     """
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    clone = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    for k, v in conf.items():
+        clone.conf.set(k, v)
+    _ORIGIN[clone] = origin(spark)
+    return clone
+
+
+def origin(spark: SparkSession) -> SparkSession:
+    """The session ``spark`` was ``isolated`` from, else ``spark``."""
+    return _ORIGIN.get(spark, spark)
 
 
 def get_spark(
     app_name: str = "etl-sales-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
@@ -53,14 +66,11 @@ def get_spark(
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
-    if shuffle_partitions is None:
-        n = os.environ.get("SPARK_GRAFT_CPUS")
-        shuffle_partitions = int(n) if n and n.isdigit() else 32
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", cpus if cpus.isdigit() else "32")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

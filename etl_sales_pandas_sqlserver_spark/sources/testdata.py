@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..cache import source_tag
 from ..schemas import TESTDATA_TABLES
+from ..session import origin
 
 #: Per-session memo of the VERIFIED read schema (a StructType — never
 #: data, never results, never a plan). Every ``spark.read.parquet``
@@ -49,7 +50,8 @@ from ..schemas import TESTDATA_TABLES
 #: scans the parquet from disk. Entries are (sf_dir, table) ->
 #: (``cache.source_tag``, schema), so a same-session rewrite of the
 #: parquet file or directory re-verifies, and the dict is weak-keyed by
-#: the session object so a new session re-infers from the files.
+#: the session object so a new session re-infers from the files. A
+#: ``session.isolated`` clone reads and fills its caller's entry.
 _SCHEMA_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
@@ -59,7 +61,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
     # a missing path tags as None: spark.read raises its usual error
     tag = source_tag(sf_dir, name)
-    per = _SCHEMA_MEMO.setdefault(spark, {})
+    per = _SCHEMA_MEMO.setdefault(origin(spark), {})
     hit = per.get((sf_dir, name))
     if tag is not None and hit is not None and hit[0] == tag:
         return spark.read.schema(hit[1]).parquet(path)

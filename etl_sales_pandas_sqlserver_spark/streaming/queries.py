@@ -37,6 +37,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions.finiteness import finite_value_col
 from ..functions.tokcount import N_TOKENS_SQL, n_tokens_spark
+from ..session import isolated
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -95,6 +96,14 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: time, because the state layout is keyed to it.
 _STATE_STORE_PARTITIONS = 8
 
+#: The conf of every ``_run_to_table`` stream, set on the stream's
+#: ``isolated`` session clone, never on the caller's. The no-data
+#: micro-batch is off: see ``_run_to_table``.
+_STREAM_CONF = {
+    "spark.sql.shuffle.partitions": str(_STATE_STORE_PARTITIONS),
+    "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+}
+
 
 class WatermarkFinalizedAppendError(ValueError):
     """An append-mode stream whose rows are emitted only once the
@@ -126,22 +135,17 @@ def _watermark_finalized(plan) -> str | None:
     return None
 
 
-# SERIAL-EXECUTION ASSUMPTION (r10 advice): the pin below mutates the
-# session-global spark.sql.shuffle.partitions; the driver/bench sweeps
-# run queries strictly serially, so nothing else observes the override.
-# If streams ever run concurrently with batch work on one session,
-# scope the override via spark.newSession() per run instead (runtime
-# conf is session-local; a new session shares the SparkContext and
-# cached data but isolates conf).
-def _run_to_table(spark: SparkSession, result: DataFrame, mode: str) -> DataFrame:
+def _run_to_table(result: DataFrame, mode: str) -> DataFrame:
     """Execute a finite stream into a memory sink and return the sink
-    table. Shuffle partitions are pinned to ``_STATE_STORE_PARTITIONS``
-    for the duration of the run (fresh checkpoint every run, so the
-    capture happens here) and restored after.
+    table. The stream runs on ``result``'s own session, which the
+    queries build as an ``isolated`` clone carrying ``_STREAM_CONF``:
+    the state-store partition count is captured at the start of the
+    run (fresh checkpoint every run), and the caller's session never
+    sees either conf.
 
-    ``noDataMicroBatches`` is disabled for the run (r18, guide §2.4
-    "remove work outright"): after the data batches, the engine by
-    default schedules one more EMPTY micro-batch whose only job is to
+    ``noDataMicroBatches`` is disabled (r18, guide §2.4 "remove work
+    outright"): after the data batches, the engine by default
+    schedules one more EMPTY micro-batch whose only job is to
     advance the watermark and evict now-expired state -- a full pass
     over every state-store instance (measured 1.6s on the
     stream-stream join, 0.4s on the streaming dedup; the complete/
@@ -155,14 +159,13 @@ def _run_to_table(spark: SparkSession, result: DataFrame, mode: str) -> DataFram
     row-for-row at sf0.001/0.01/0.1 and by the full oracle sweep. A
     24/7 deployment with downstream consumers of watermark-FINALIZED
     results (outer joins, append-mode window aggs) must keep the
-    default instead; this knob is scoped to the finite replay run and
-    restored after, and an append query of a watermark-finalized shape
+    default instead; an append query of a watermark-finalized shape
     raises ``WatermarkFinalizedAppendError`` before it starts.
 
     The memory sink's temp view is dropped on the way out, whether the
     stream succeeded or failed: the returned frame is already resolved
     and keeps the sink's rows, while the view would hold them on the
-    driver for the rest of the session."""
+    driver for as long as the session lives."""
     if mode == "append":
         shape = _watermark_finalized(result._jdf.queryExecution().analyzed())
         if shape is not None:
@@ -170,15 +173,8 @@ def _run_to_table(spark: SparkSession, result: DataFrame, mode: str) -> DataFram
                 f"append-mode stream with {shape} emits only on watermark "
                 "advance; run it in complete or update mode"
             )
+    spark = result.sparkSession
     name = f"stream_sink_{next(_sink_counter)}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled"
-    )
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_STATE_STORE_PARTITIONS)
-    )
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     try:
         q = (
             result.writeStream.format("memory")
@@ -190,10 +186,6 @@ def _run_to_table(spark: SparkSession, result: DataFrame, mode: str) -> DataFram
         q.awaitTermination()
         return spark.table(name)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-        )
         spark.catalog.dropTempView(name)
 
 
@@ -214,6 +206,7 @@ STREAM_HOURLY_SQL = """
 
 
 def q_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = isolated(spark, _STREAM_CONF)
     ev = read_events_stream(spark, sf_dir)
     agg = (
         ev.withWatermark("event_time", "1 hour")
@@ -233,7 +226,7 @@ def q_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    return _run_to_table(spark, agg, "complete")
+    return _run_to_table(agg, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -308,6 +301,7 @@ STREAM_SESSIONS_SQL = """
 
 
 def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = isolated(spark, _STREAM_CONF)
     # clock-less events (NULL ts) are excluded EXPLICITLY on both
     # engines (r14 hostile-events fix, same spelling as the batch
     # sessionize_events r13 fix): unfiltered, a null ts_us crashed the
@@ -325,7 +319,7 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    out = _run_to_table(spark, sessions, "update")
+    out = _run_to_table(sessions, "update")
     # update-mode sinks may hold one row per micro-batch; counts are
     # monotone, so the final state per user is the max
     return (
@@ -353,13 +347,14 @@ STREAM_DEDUP_SQL = """
 
 
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = isolated(spark, _STREAM_CONF)
     ev = read_events_stream(spark, sf_dir)
     deduped = (
         ev.withWatermark("event_time", "1 hour")
         .dropDuplicates(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    return _run_to_table(spark, deduped, "append")
+    return _run_to_table(deduped, "append")
 
 
 # ---------------------------------------------------------------------------
@@ -388,6 +383,7 @@ STREAM_SLIDING_SQL = """
 
 
 def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = isolated(spark, _STREAM_CONF)
     ev = read_events_stream(spark, sf_dir)
     agg = (
         ev.withWatermark("event_time", "2 hours")
@@ -409,7 +405,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    return _run_to_table(spark, agg, "complete")
+    return _run_to_table(agg, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -444,6 +440,7 @@ STREAM_STATIC_JOIN_SQL = """
 
 
 def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = isolated(spark, _STREAM_CONF)
     from ..sources.testdata import load_table
 
     orders = (
@@ -465,7 +462,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("revenue"),
     )
-    return _run_to_table(spark, agg, "complete")
+    return _run_to_table(agg, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -493,6 +490,7 @@ STREAM_STREAM_JOIN_SQL = """
 
 
 def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = isolated(spark, _STREAM_CONF)
     views = (
         read_events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "view")
@@ -520,7 +518,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "AND purchase_time <= view_time + INTERVAL 1 HOUR"
         ),
     ).select("user_id", "view_us", "purchase_us")
-    return _run_to_table(spark, joined, "append")
+    return _run_to_table(joined, "append")
 
 
 # ---------------------------------------------------------------------------
@@ -571,6 +569,7 @@ STREAM_SESSION_WINDOW_SQL = f"""
 
 
 def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = isolated(spark, _STREAM_CONF)
     ev = read_events_stream(spark, sf_dir)
     gap_us = _SESSION_GAP_US
     agg = (
@@ -598,7 +597,7 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    return _run_to_table(spark, agg, "complete")
+    return _run_to_table(agg, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -631,6 +630,7 @@ STREAM_TOPK_SQL = f"""
 
 
 def q_stream_topk_types(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = isolated(spark, _STREAM_CONF)
     from pyspark.sql import Window
 
     ev = read_events_stream(spark, sf_dir)
@@ -646,7 +646,7 @@ def q_stream_topk_types(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    counts = _run_to_table(spark, agg, "complete")
+    counts = _run_to_table(agg, "complete")
     # NULLS LAST explicitly on BOTH engines (r14 hostile-events fix):
     # Spark windows default NULLS FIRST for ASC, DuckDB NULLS LAST, so
     # a null event_type group tying at the cutoff ranked differently
@@ -682,6 +682,7 @@ STREAM_SKETCH_SQL = """
 
 
 def q_stream_sketch_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = isolated(spark, _STREAM_CONF)
     ev = read_events_stream(spark, sf_dir)
     # the STREAM maintains only the mergeable sketch state (a distinct
     # aggregate is not allowed on a stream -- and not needed: that is
@@ -701,7 +702,7 @@ def q_stream_sketch_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("est")
         )
     )
-    out = _run_to_table(spark, agg, "complete")
+    out = _run_to_table(agg, "complete")
     from ..sources.testdata import load_table
 
     from ..operators.dates import epoch_us
@@ -920,6 +921,7 @@ STREAM_CARD_SQL = f"""
 
 
 def q_stream_card_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = isolated(spark, _STREAM_CONF)
     docs = (
         spark.readStream.schema(_DOCS_STREAM_SCHEMA)
         .option("pathGlobFilter", "documents.parquet")
@@ -932,7 +934,7 @@ def q_stream_card_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("doc_id").alias("min_doc_id"),
         F.max("doc_id").alias("max_doc_id"),
     )
-    return _run_to_table(spark, agg, "complete")
+    return _run_to_table(agg, "complete")
 
 
 QUERIES_EXPORT: dict[str, tuple[SparkQuery, str | None]] = {

@@ -17,7 +17,10 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_SF_ORACLE", "/root/testdata/sf0.01")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="etl-sales-spark-tests", shuffle_partitions=8)
+    s = get_spark(
+        app_name="etl-sales-spark-tests",
+        extra_conf={"spark.sql.shuffle.partitions": "8"},
+    )
     s.sparkContext.setLogLevel("ERROR")
     yield s
 

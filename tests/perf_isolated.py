@@ -34,7 +34,6 @@ def main() -> int:
     spark = get_spark(
         app_name="etl-sales-spark-perf-isolated",
         master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus) if cpus.isdigit() else 32,
     )
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()

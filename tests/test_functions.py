@@ -656,6 +656,44 @@ def test_evict_session_memos_releases_checkpoints(spark, sf_small, tmp_path):
     assert all(df is not None for df in held)
 
 
+def test_memo_builds_once_for_concurrent_callers(spark, sf_small, tmp_path):
+    """Two threads that miss the same entry at once build it once and
+    get the same frame: a second build would overwrite the first's
+    store and leave its checkpoint pinned with no owner."""
+    import shutil
+    import threading
+    import time
+
+    from etl_sales_pandas_sqlserver_spark import cache
+
+    sf = str(tmp_path)
+    shutil.copy(f"{sf_small}/nation.parquet", f"{sf}/nation.parquet")
+    builds = []
+
+    def build():
+        builds.append(1)
+        time.sleep(0.5)
+        return spark.read.parquet(f"{sf}/nation.parquet")
+
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    got = []
+    threads = [
+        threading.Thread(
+            target=lambda: got.append(cache.memo(spark, "nation_copy", sf, "nation", build))
+        )
+        for _ in range(2)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert len(builds) == 1
+    assert len(got) == 2 and got[0] is got[1]
+    assert persistent().size() == before + 1
+    cache.release(got[0])
+
+
 #: one query per frame that its plan reads twice, each a session memo;
 #: the value is the table the query reads
 _TWO_CONSUMER_MEMO_QUERIES = {

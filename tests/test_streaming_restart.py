@@ -7,6 +7,9 @@ offsets, and the sink never duplicates rows. This is the guarantee a
 from __future__ import annotations
 
 import pyarrow.parquet as pq
+import pytest
+
+from etl_sales_pandas_sqlserver_spark.session import isolated
 
 
 def test_file_stream_restart_is_exactly_once(spark, sf_small, tmp_path):
@@ -164,9 +167,10 @@ def test_upsert_swap_recovers_from_every_crash_point(spark, tmp_path):
     assert sorted(os.listdir(tmp_path)) == ["tbl"]
 
 
-def _sink_views(spark) -> list[str]:
+def _sink_views(df) -> list[str]:
+    """The ``stream_sink_*`` views left in ``df``'s own session."""
     return [
-        t.name for t in spark.catalog.listTables()
+        t.name for t in df.sparkSession.catalog.listTables()
         if t.isTemporary and t.name.startswith("stream_sink_")
     ]
 
@@ -220,10 +224,11 @@ def test_stream_sinks_are_released_and_frames_stay_readable(spark, sf_small):
             F.raise_error(F.lit("boom")).alias("x")
         )
         with pytest.raises(StreamingQueryException, match="boom"):
-            keeps_conf(lambda: _run_to_table(spark, failing, "append"))
+            keeps_conf(lambda: _run_to_table(failing, "append"))
     finally:
         spark.conf.set(keys[0], session_parts)
-    assert _sink_views(spark) == []
+    for df in [first, second, failing, *frames]:
+        assert _sink_views(df) == []
     rows = sorted(first.collect())
     assert rows and rows == sorted(second.collect())
     for df in frames:
@@ -262,6 +267,11 @@ def test_append_stream_needing_the_watermark_fails_loudly(spark, sf_small):
     before = spark.conf.get(nodata)
     for query, shape in ((windowed, "aggregate"), (outer, "outer")):
         with pytest.raises(WatermarkFinalizedAppendError, match=shape):
-            _run_to_table(spark, query, "append")
+            _run_to_table(query, "append")
+        assert not query.sparkSession.streams.active
     assert spark.conf.get(nodata) == before
-    assert not spark.streams.active
+
+
+@pytest.mark.usefixtures("driver_ansi")
+def test_isolated_clone_reads_the_callers_run_time_conf(spark):
+    assert isolated(spark, {}).conf.get("spark.sql.ansi.enabled") == "true"

@@ -34,7 +34,10 @@ def main() -> int:
     out, sf_dirs = sys.argv[1], sys.argv[2:]
     # a private index root: never reuse another checkout's ANN index
     sim._ANN_INDEX_ROOT = tempfile.mkdtemp(prefix="similarity_dump_")
-    spark = get_spark(app_name="similarity-dump", shuffle_partitions=8)
+    spark = get_spark(
+        app_name="similarity-dump",
+        extra_conf={"spark.sql.shuffle.partitions": "8"},
+    )
     spark.sparkContext.setLogLevel("ERROR")
     fns = {name: getattr(sim, name) for name in FRAMES}
     fns["q_decontaminate_semantic"] = dedup.q_decontaminate_semantic
