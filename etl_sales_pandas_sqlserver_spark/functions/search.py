@@ -36,11 +36,11 @@ SparkQuery = Callable[[SparkSession, str], DataFrame]
 # not |corpus postings|; df/N/avgdl are single-row or 3-row broadcast
 # builds; the final top-10 compiles to TakeOrderedAndProject (k rows
 # per partition, no global sort).
+# k1 = 1.2 and b = 0.75 are spelled inline on both engines, with
+# k1 + 1 = 2.2 and 1 - b = 0.25.
 # ---------------------------------------------------------------------------
 
 _BM25_TERMS = ("vector", "stream", "spark")
-_BM25_K1 = 1.2
-_BM25_B = 0.75
 _BM25_TOPK = 10
 
 _terms_sql = ", ".join(f"'{t}'" for t in _BM25_TERMS)

@@ -71,9 +71,10 @@ def epoch_us(df: "DataFrame", col: str) -> Column:
     """Epoch microseconds of a parquet timestamp column, independent of
     the session timezone AND of how the session read the column.
 
-    The testdata stores naive ``timestamp[us]``; the engine session
-    reads it as TIMESTAMP (LTZ, NTZ inference off) while a vanilla
-    driver session infers TIMESTAMP_NTZ. ``unix_micros`` on LTZ is
+    The testdata stores naive ``timestamp[us]``; a Spark 4 session (the
+    engine's and the driver's) infers TIMESTAMP_NTZ, while a declared
+    schema (``load_table``'s ``events.ts``) or a caller's session with
+    NTZ inference off reads TIMESTAMP (LTZ). ``unix_micros`` on LTZ is
     instant-based (timezone-free), but NTZ first needs a cast -- and
     ``cast("timestamp")`` interprets the naive value in the SESSION
     timezone, silently shifting epoch outputs on any non-UTC host

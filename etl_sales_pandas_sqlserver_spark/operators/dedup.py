@@ -2,9 +2,9 @@
 
 Scale notes: both shapes shuffle once on the key set. The window
 variants use a single hash-partition exchange; at 100 TB, skewed keys
-are handled by AQE skew-join/aggregation splitting (enabled in
-session.py). ``dedup_keep_first`` with an explicit order column is the
-deterministic default -- pandas' keep='first' depends on os.listdir
+are handled by AQE skew-join/aggregation splitting (Spark 4 defaults,
+see session.py). ``dedup_keep_first`` with an explicit order column is
+the deterministic default -- pandas' keep='first' depends on os.listdir
 order (reference etl_utils.py:183), which is unspecified; at cluster
 scale "first seen" is meaningless without a declared ordering.
 """
@@ -13,13 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def dedup_any(df: DataFrame, keys: list[str]) -> DataFrame:
-    """D1 cheap variant -- keep an arbitrary row per key group
-    (``dropDuplicates``). One shuffle, no sort: the fastest correct
-    dedup when the surviving row doesn't matter."""
-    return df.dropDuplicates(keys)
 
 
 def dedup_keep_first(df: DataFrame, keys: list[str], order: list) -> DataFrame:

@@ -23,9 +23,6 @@ from pyspark.sql import functions as F
 
 from ..operators import dates, dedup, nulls, numeric, strings
 
-SALES_COLS = ["Sale_ID", "Product", "Amount", "Date", "Audit_Date"]
-
-
 def clean_valid_sales(
     df: DataFrame,
     order: list | None = None,

@@ -7,10 +7,10 @@ commitdate/receiptdate/shipmode) and each with a DuckDB oracle twin.
 Scale notes per query below; shared numeric rules follow
 plans/testdata_queries.py: DECIMAL-accumulated money sums cast back to
 DOUBLE, single double division on identical operands for ratios, and
-timestamp literals cast to the column's *runtime* type (LTZ under the
-engine session, NTZ under a vanilla driver session -- see ``_ts_lit``)
-so interval arithmetic and range predicates never lean on cross-type
-coercion that would shift with the session timezone.
+timestamp literals cast to the column's *runtime* type (NTZ under Spark
+4's default inference, LTZ under a caller's session with it off -- see
+``_ts_lit``) so interval arithmetic and range predicates never lean on
+cross-type coercion that would shift with the session timezone.
 """
 
 from __future__ import annotations
@@ -32,11 +32,12 @@ def _dec(c: str):
 
 
 def _ts_lit(df: DataFrame, col: str, value: str):
-    """Literal cast to ``col``'s actual runtime type. The engine
-    session reads parquet timestamp[us] as TIMESTAMP (NTZ inference
-    disabled); a vanilla driver session infers TIMESTAMP_NTZ. Matching
-    the column's own type keeps the comparison coercion-free in both
-    worlds, so it cannot shift with the session timezone."""
+    """Literal cast to ``col``'s actual runtime type. A Spark 4 session
+    (the engine's and the driver's) infers parquet timestamp[us] as
+    TIMESTAMP_NTZ; a caller's session with NTZ inference off reads
+    TIMESTAMP (LTZ). Matching the column's own type keeps the
+    comparison coercion-free in both worlds, so it cannot shift with
+    the session timezone."""
     return F.lit(value).cast(df.schema[col].dataType)
 
 

@@ -56,9 +56,23 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
+    Only deployment settings are set here; the SQL semantics are Spark
+    4's defaults, the same a plain ``SparkSession.builder`` session
+    (the driver's) runs with. The engine relies on three of them
+    without setting them:
+
     - AQE on: runtime coalescing of shuffle partitions, skew-join
       splitting, and dynamic join-strategy switches -- the scale story
       for unknown data distributions.
+    - ANSI on: a bare cast of garbage throws, so every parse uses
+      ``try_cast``/``try_to_timestamp``, which return NULL either way.
+    - Parquet NTZ inference on: naive ``timestamp[us]`` columns read as
+      TIMESTAMP_NTZ; ``load_table`` pins ``events.ts`` to LTZ with a
+      declared schema, and ``operators.dates.epoch_us`` takes both.
+
+    What is set:
+
+    - Shuffle partitions from ``SPARK_GRAFT_CPUS``.
     - Session timezone pinned to UTC so timestamp semantics match the
       DuckDB oracle and are cluster-location independent.
     - Arrow enabled for every pandas interchange (Pandas UDFs,
@@ -71,18 +85,8 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", cpus if cpus.isdigit() else "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # testdata parquet stores timestamp[us] with no timezone; without
-        # this, Spark 4 infers TIMESTAMP_NTZ, which unix_micros/watermarks
-        # reject and which diverges from the DuckDB oracle's naive-as-UTC
-        # reading. Reading as TIMESTAMP (LTZ) under the pinned UTC session
-        # tz gives identical instants on both engines.
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.ansi.enabled", "false")  # cast-to-null, see operators.numeric
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         # library default stays modest -- hosts with small RAM must not

@@ -21,15 +21,9 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
-def write_single_csv(
-    df: DataFrame,
-    path: str,
-    with_bom: bool = False,
-    date_cols: tuple[str, ...] = (),
-) -> str:
+def write_single_csv(df: DataFrame, path: str, with_bom: bool = False) -> str:
     """Write ``df`` to exactly ONE csv file at ``path``.
 
     ``coalesce(1)`` funnels the final stage through a single task --
@@ -37,8 +31,6 @@ def write_single_csv(
     reference's Resultados/*.csv; large outputs should use
     ``df.write.csv(dir)`` untouched.
     """
-    for c in date_cols:
-        df = df.withColumn(c, F.date_format(F.col(c), "yyyy-MM-dd"))
     tmp = path + "._spark_tmp"
     (
         df.coalesce(1)

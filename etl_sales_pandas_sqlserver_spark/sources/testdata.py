@@ -2,20 +2,20 @@
 
 ``events`` is read with its declared ``StructType``: the testdata
 stores ``ts`` as parquet ``timestamp[us]`` with no timezone, which a
-**vanilla** Spark 4 session (``spark.sql.parquet.inferTimestampNTZ.
-enabled=true`` by default) infers as TIMESTAMP_NTZ -- and
-``unix_micros`` / watermarks / interval arithmetic then fail with
-DATATYPE_MISMATCH. Declaring TimestampType (LTZ) pins the type
-regardless of which session runs the plan; the raw stored micros are
-then read as UTC-epoch instants, so every epoch-microsecond output is
-timezone-independent and matches DuckDB's ``epoch_us`` on the same
-naive values. (Same pattern as ``streaming/queries.py``'s stream
+Spark 4 session, the engine's and the driver's alike
+(``spark.sql.parquet.inferTimestampNTZ.enabled=true`` by default),
+infers as TIMESTAMP_NTZ -- and ``unix_micros`` / watermarks / interval
+arithmetic then fail with DATATYPE_MISMATCH. Declaring TimestampType
+(LTZ) pins the type regardless of which session runs the plan; the raw
+stored micros are then read as UTC-epoch instants, so every
+epoch-microsecond output is timezone-independent and matches DuckDB's
+``epoch_us`` on the same naive values. (Same pattern as ``streaming/queries.py``'s stream
 schema, which went green under the driver in round 3.)
 
 The other tables keep schema inference: their timestamp columns
 (``o_orderdate``, ``l_shipdate``) are only compared/formatted as
-*dates*, for which the driver's NTZ read is timezone-proof and has
-been driver-verified green; forcing LTZ there would make date
+*dates*, for which the NTZ read is timezone-proof and has been
+driver-verified green; forcing LTZ there would make date
 extraction depend on the session timezone for no benefit.
 
 We still fail loudly on column drift -- a declared-schema read

@@ -36,18 +36,6 @@ def sf_oracle() -> str:
 
 
 @pytest.fixture
-def driver_ansi(spark):
-    """Run a test under DRIVER conditions (Spark 4 default = ANSI ON):
-    the engine's tuned test session sets ansi=false. Restore after.
-    Opt in per module with
-    ``pytestmark = pytest.mark.usefixtures("driver_ansi")``."""
-    before = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    yield
-    spark.conf.set("spark.sql.ansi.enabled", before)
-
-
-@pytest.fixture
 def job_ids(spark):
     """``job_ids(fn)`` runs ``fn()`` under a fresh Spark job group and
     returns ``(fn's result, ids of the jobs it started)``. The ids are

@@ -1,7 +1,9 @@
 """Driver-contract simulation (the verify recipe): run every
 ``queries()`` entry against its ``oracle_sql()`` twin via DuckDB at
-sf0.01 under a PLAIN default Spark session (ANSI on, 200 shuffle
-partitions) -- the driver's conditions, not the engine's tuned session.
+sf0.01 under a PLAIN default Spark session -- the driver's conditions.
+It shares the engine session's SQL semantics (Spark 4 defaults: ANSI
+on, NTZ inference on); what differs is 200 shuffle partitions, the
+host time zone and ``local[8]``.
 
 Usage: python tests/driver_sim.py [--only name1,name2]
 """

@@ -14,10 +14,12 @@ import os
 import duckdb
 import pandas as pd
 
+from etl_sales_pandas_sqlserver_spark.cache import source_tag
 from etl_sales_pandas_sqlserver_spark.schemas import TESTDATA_TABLES
 
 
 _CONNS: dict[str, duckdb.DuckDBPyConnection] = {}
+_RESULTS: dict[tuple, pd.DataFrame] = {}
 
 
 def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -35,7 +37,14 @@ def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
 
 
 def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
-    return oracle_connection(sf_dir).execute(sql).df()
+    """The oracle's result for ``sql`` on ``sf_dir``, memoized per
+    process on the SQL and the ``cache.source_tag`` of every table
+    there, so a rewritten table re-runs it. A copy is returned."""
+    key = (sql, sf_dir, tuple(source_tag(sf_dir, t) for t in TESTDATA_TABLES))
+    hit = _RESULTS.get(key)
+    if hit is None:
+        hit = _RESULTS[key] = oracle_connection(sf_dir).execute(sql).df()
+    return hit.copy()
 
 
 def _canonical(df: pd.DataFrame) -> pd.DataFrame:

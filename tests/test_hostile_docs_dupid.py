@@ -40,8 +40,6 @@ import pytest
 from .hostile_tables import build
 from .oracle_compare import compare_query
 
-pytestmark = pytest.mark.usefixtures("driver_ansi")
-
 #: the most tie-sensitive doc-keyed queries: global/stratified prefix
 #: sums, keep-first windows, fingerprint dedup with DIFFERENT text
 #: under one id, and the funnel/census pair

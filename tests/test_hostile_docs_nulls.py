@@ -37,10 +37,6 @@ import pytest
 from .hostile_tables import build
 from .oracle_compare import compare_frames, compare_query, run_oracle
 
-# several null-text behaviors are ANSI-sensitive
-# (size(split(NULL)), divide-by-zero)
-pytestmark = pytest.mark.usefixtures("driver_ansi")
-
 _ROBUST = [
     "dedup_exact",
     "dedup_minhash_lsh",

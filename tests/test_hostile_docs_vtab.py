@@ -32,8 +32,6 @@ import pytest
 from .hostile_tables import build
 from .oracle_compare import compare_query, run_oracle
 
-pytestmark = pytest.mark.usefixtures("driver_ansi")
-
 #: representative slice of the 186 vtab-green queries: the r16
 #: fingerprint atomic group + the grains flipped in earlier rounds
 _ROBUST = [

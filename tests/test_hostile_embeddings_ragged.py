@@ -3,7 +3,9 @@ rows — the classic 100 TB ingest failure the fixed-shape axis
 (test_hostile_embeddings.py: zero/NULL/NaN) cannot see.
 
 r15 probe result (tools/hostile_sweep.py embeddings_ragged), the
-classification this module pins:
+classification this module pins; the latest full 186-query sweep
+(Spark 4 default semantics) reads the same, 175 green / 0 mismatch /
+11 Spark raises:
 
 1. **Zero silent divergence.** No query returns wrong rows on ragged
    input — every non-green is a LOUD Spark raise.
@@ -32,9 +34,6 @@ import pytest
 
 from .hostile_tables import build
 from .oracle_compare import compare_query
-
-# the element_at out-of-bounds raise is ANSI-sensitive
-pytestmark = pytest.mark.usefixtures("driver_ansi")
 
 #: cross-engine green on ragged vectors (parity-pinned below)
 _ROBUST = [

@@ -2,9 +2,9 @@
 
 Sixth audit axis (r14; the values twin of the events null audit,
 exactly as tpch_values is the values twin of the tpch null audit).
-Full 186-query sweep (`tools/hostile_sweep.py events_values`, driver
-ANSI conditions): **178 green / 0 mismatch / 3 both-engines-raise /
-5 Spark-null-vs-oracle-raise**:
+Full 186-query sweep (`tools/hostile_sweep.py events_values`, Spark 4
+default semantics): **178 green / 0 mismatch / 8 loud errors, each
+raising on both engines** (3 from the start, 5 since their guards):
 
 - Both raise (the money-envelope class, loud and consistent):
   `window_range_1h_load`, `window_moving_avg_7` (±9.9e15 overflows
@@ -37,9 +37,6 @@ import pytest
 
 from .hostile_tables import build
 from .oracle_compare import compare_query, run_oracle
-
-# the null-vs-raise classification is ANSI-dependent
-pytestmark = pytest.mark.usefixtures("driver_ansi")
 
 #: representative robust slice: the families the poisoned values flow
 #: through (double aggs, time bucketing at extreme ts, sessionization,

@@ -5,9 +5,10 @@ embeddings, tpch nulls came first): orders/lineitem/customer poisoned
 with hostile VALUES rather than nulls — negative/zero/huge money,
 rates outside [0,1], epoch/far-future dates, out-of-domain flags,
 empty strings, quoted/unicode names. Full 186-query sweep
-(`tools/hostile_sweep.py tpch_values`, driver ANSI conditions):
-**182 green / 0 mismatch / 4 loud errors — and each of the four
-raises on BOTH engines**, so the axis carries ZERO silent divergence:
+(`tools/hostile_sweep.py tpch_values`, Spark 4 default semantics;
+the latest run reads the same): **182 green / 0 mismatch / 4 loud
+errors — and each of the four raises on BOTH engines**, so the axis
+carries ZERO silent divergence:
 
 - the sales ETL trio (`clean_valid_sales`, `categorize_invalid_sales`,
   `monthly_summary`): a 9.9-trillion price exceeds the pipeline's
@@ -40,10 +41,6 @@ import pytest
 
 from .hostile_tables import build
 from .oracle_compare import compare_query, run_oracle
-
-# the loud-error classifications are ANSI-dependent (non-ANSI Spark
-# would silently NULL/wrap instead of raising)
-pytestmark = pytest.mark.usefixtures("driver_ansi")
 
 #: representative robust slice: the families the poisoned values flow
 #: through (money aggs, rate arithmetic, date bucketing, domain CASEs,

@@ -1,12 +1,14 @@
 """Pandas-only checks of the one oracle comparator, ``compare_frames``:
-what it must treat as equal, and that each mismatch names its column."""
+what it must treat as equal, and that each mismatch names its column;
+and of the ``run_oracle`` memo."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
 
-from .oracle_compare import compare_frames
+from . import oracle_compare
+from .oracle_compare import compare_frames, run_oracle
 
 
 def test_nan_equals_none():
@@ -48,3 +50,13 @@ def test_one_changed_value_mismatch():
         pd.DataFrame({"k": ["A", "B"], "n": [1, 3]}),
     )
     assert problems == ["value mismatches: n[row 1]: spark=2 oracle=3"]
+
+
+def test_oracle_memo_reruns_after_a_table_rewrite(tmp_path):
+    sf, sql = str(tmp_path), "SELECT count(*) AS n FROM region"
+    for n in (2, 3):
+        pd.DataFrame({"r_regionkey": range(n)}).to_parquet(f"{sf}/region.parquet")
+        misses = len(oracle_compare._RESULTS)
+        assert run_oracle(sql, sf)["n"].tolist() == [n]
+        assert run_oracle(sql, sf)["n"].tolist() == [n]
+        assert len(oracle_compare._RESULTS) == misses + 1

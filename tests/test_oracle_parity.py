@@ -15,9 +15,6 @@ from etl_sales_pandas_sqlserver_spark.plans.testdata_queries import QUERIES
 
 from .oracle_compare import compare, run_oracle
 
-# the driver runs with ANSI on; the tuned test session turns it off
-pytestmark = pytest.mark.usefixtures("driver_ansi")
-
 CASES = [(name, fn, sql) for name, (fn, sql) in QUERIES.items() if sql is not None]
 
 

@@ -71,8 +71,8 @@ def test_normalize_currency_matches_decimal_reference(spark, batch):
     )
 )
 def test_garbage_amounts_null_never_throw(spark, batch):
-    # ANSI mode is ON in driver conditions; try_cast semantics must
-    # hold for arbitrary garbage -- NULL, never an exception
+    # ANSI is ON (Spark 4's default, kept by the engine session): try_cast
+    # must hold for arbitrary garbage -- NULL, never an exception
     df = spark.createDataFrame([(s,) for s in batch], "raw string")
     out = df.select(normalize_currency("raw").alias("out")).collect()
     assert len(out) == len(batch)

@@ -15,16 +15,12 @@ import shutil
 import threading
 import time
 
-import pytest
-
 import __spark_entry__ as e
 from etl_sales_pandas_sqlserver_spark import cache
 from etl_sales_pandas_sqlserver_spark.plans.pipeline import run_sales_pipeline
 
 from .oracle_compare import compare_frames, run_oracle
 from .test_observability import _write_input
-
-pytestmark = pytest.mark.usefixtures("driver_ansi")
 
 #: one op list per thread; the three pair-memo ops start in three threads
 _THREADS = [
@@ -92,9 +88,10 @@ def test_threads_sharing_a_session_leave_it_as_they_found_it(
         t.join()
     assert not errors, errors
 
+    # ``sf`` is a byte copy of ``sf_small``: the oracle memo can hit
     for op, df in results.items():
         if op != "run_sales_pipeline":
-            assert not compare_frames(df, run_oracle(e.oracle_sql()[op], sf)), op
+            assert not compare_frames(df, run_oracle(e.oracle_sql()[op], sf_small)), op
     got = results["run_sales_pipeline"]
     assert got["metrics"] == serial["metrics"]
     for name, path in got["outputs"].items():

@@ -330,30 +330,33 @@ def test_merged_schema_read_fills_missing_columns(spark, tmp_path):
     assert rows[2] is None and rows[7] == 14
 
 
+def test_engine_session_runs_spark_4_sql_semantics(spark):
+    """``get_spark`` keeps Spark 4's defaults, which a plain session (the
+    driver's) reads, so tier-1 checks the semantics the driver runs."""
+    for key in (
+        "spark.sql.ansi.enabled",
+        "spark.sql.parquet.inferTimestampNTZ.enabled",
+    ):
+        assert spark.conf.get(key) == "true", key
+
+
 def test_events_ts_pinned_ltz_under_ntz_inference(spark, sf_small):
-    """Regression guard for the round-3 driver break: a vanilla Spark 4
-    session infers parquet timestamp[us] as TIMESTAMP_NTZ, and
+    """Regression guard for the round-3 driver break: a Spark 4 session
+    infers parquet timestamp[us] as TIMESTAMP_NTZ, and
     ``unix_micros(ts)`` then fails with DATATYPE_MISMATCH. load_table
-    must pin events.ts to TimestampType via its declared-schema read
-    regardless of the session's inference conf."""
+    must pin events.ts to TimestampType via its declared-schema read."""
     from pyspark.sql import types as T
 
     from etl_sales_pandas_sqlserver_spark.sources.testdata import load_table
 
-    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "true")
-    try:
-        # the hazard is real: an inferred read yields NTZ...
-        raw = spark.read.parquet(f"{sf_small}/events.parquet")
-        assert isinstance(raw.schema["ts"].dataType, T.TimestampNTZType)
-        # ...but the loader's declared schema pins LTZ, and the exact
-        # expression that broke in round 3 resolves on its output
-        ev = load_table(spark, sf_small, "events")
-        assert isinstance(ev.schema["ts"].dataType, T.TimestampType)
-        ev.select(F.unix_micros("ts")).limit(1).collect()
-    finally:
-        spark.conf.set(key, old)
+    # the hazard is real: an inferred read yields NTZ...
+    raw = spark.read.parquet(f"{sf_small}/events.parquet")
+    assert isinstance(raw.schema["ts"].dataType, T.TimestampNTZType)
+    # ...but the loader's declared schema pins LTZ, and the exact
+    # expression that broke in round 3 resolves on its output
+    ev = load_table(spark, sf_small, "events")
+    assert isinstance(ev.schema["ts"].dataType, T.TimestampType)
+    ev.select(F.unix_micros("ts")).limit(1).collect()
 
 
 def test_load_table_memo_sees_parquet_directory_rewrite(spark, sf_small, tmp_path):

@@ -272,6 +272,11 @@ def test_append_stream_needing_the_watermark_fails_loudly(spark, sf_small):
     assert spark.conf.get(nodata) == before
 
 
-@pytest.mark.usefixtures("driver_ansi")
 def test_isolated_clone_reads_the_callers_run_time_conf(spark):
-    assert isolated(spark, {}).conf.get("spark.sql.ansi.enabled") == "true"
+    key = "spark.sql.shuffle.partitions"  # the test session launches with 8
+    spark.conf.set(key, "9")
+    try:
+        assert isolated(spark, {}).conf.get(key) == "9"
+        assert spark.newSession().conf.get(key) == "8"
+    finally:
+        spark.conf.set(key, "8")

@@ -11,11 +11,12 @@ respell lands:
 
 Runs every registered query against a copy of sf0.001 with the chosen
 table poisoned by ``tests/hostile_tables.build`` (the same builder the
-suites' fixtures call), under DRIVER conditions (plain ANSI session),
-compares with ``tests/oracle_compare.compare_frames``, and prints one
-JSON line: {green: [...], mismatch: [...], spark_error: {...},
-oracle_error: {...}}. Move a query between a suite's _ROBUST and
-known-not-green lists only on this tool's evidence.
+suites' fixtures call), under DRIVER conditions (a plain session: the
+engine's SQL semantics, but 200 shuffle partitions, the host time zone
+and ``local[8]``), compares with ``tests/oracle_compare.compare_frames``,
+and prints one JSON line: {green: [...], mismatch: [...],
+spark_error: {...}, oracle_error: {...}}. Move a query between a
+suite's _ROBUST and known-not-green lists only on this tool's evidence.
 """
 
 from __future__ import annotations
@@ -39,7 +40,7 @@ def main() -> int:
     kind = sys.argv[1] if len(sys.argv) > 1 else "events"
     d = build(kind, SF, tempfile.mkdtemp(prefix=f"hostile_{kind}_"))
 
-    # DRIVER conditions: plain session, Spark 4 default = ANSI ON
+    # DRIVER conditions: a plain session
     spark = (SparkSession.builder.master("local[8]")
              .config("spark.ui.enabled", "false").getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
