@@ -6,7 +6,9 @@ MinHash pair list, the top-k sets, the LM scores, the sales frames) or
 two branches of one query's plan (the token projection, the bloom
 bitmap). ``memo(spark, name, sf_dir, table, build)`` runs
 ``build`` once, eagerly ``localCheckpoint``s the result (lineage
-severed, so later cache churn cannot invalidate it) and hands the SAME
+severed, so later cache churn cannot invalidate it; a ``build`` that
+returns its own ``localCheckpoint`` hands that one over, so no
+checkpoint is left pinned without an owner) and hands the SAME
 frame to every later caller while ``{sf_dir}/{table}.parquet`` is
 unchanged. ``source_tag`` is the one answer to "has that source
 changed?": a rewrite of the file or of any part file of a parquet
@@ -80,9 +82,18 @@ def memo(
             if hit[0] == tag and _alive(spark):
                 return hit[1]
             release(hit[1])
-        df = build().localCheckpoint(eager=True)
+        df = build()
+        if not _checkpointed(df):
+            df = df.localCheckpoint(eager=True)
         per[(name, sf_dir)] = (tag, df)
         return df
+
+
+def _checkpointed(df: DataFrame) -> bool:
+    """Whether ``df`` is a ``localCheckpoint``ed frame: a LogicalRDD
+    over a persisted RDD."""
+    plan = df._jdf.queryExecution().analyzed()
+    return plan.nodeName() == "LogicalRDD" and plan.rdd().getStorageLevel().isValid()
 
 
 def _lock(spark) -> threading.RLock:

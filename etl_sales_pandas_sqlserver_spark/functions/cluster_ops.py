@@ -27,8 +27,7 @@ from ..sources.testdata import load_table
 from .dedup import (
     _JACCARD_THRESHOLD,
     _SHINGLES_CTE,
-    cluster_components,
-    minhash_verified_pairs,
+    minhash_clusters,
 )
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
@@ -79,8 +78,7 @@ CLUSTER_REPS_SQL = f"""
 
 
 def q_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = minhash_verified_pairs(spark, sf_dir).select("a_id", "b_id")
-    clusters = cluster_components(pairs)
+    clusters = minhash_clusters(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.length("text").alias("n_chars")
     )

@@ -1186,7 +1186,12 @@ def cluster_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
     Callers pass a materialized pair list (the engine's callers pass
     the ``minhash_verified_pairs`` memo checkpoint): the node universe
     and the initial edge set both read ``pairs``, so an unmaterialized
-    input re-runs its upstream pipeline once per read."""
+    input re-runs its upstream pipeline once per read.
+
+    The result is an eager ``localCheckpoint`` and every edge set is
+    released on the way out, so the only RDD the call leaves pinned is
+    the one the returned frame reads; ``minhash_clusters`` hands it to
+    the session memo."""
     nodes = (
         pairs.select(F.col("a_id").alias("node"))
         .unionByName(pairs.select(F.col("b_id").alias("node")))
@@ -1243,6 +1248,7 @@ def cluster_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
         # several clusters) -- fail loudly rather than return them.
         # O(log n) convergence makes max_rounds=20 cover any feasible
         # graph; hitting this means the input is malformed.
+        release(edges)
         raise RuntimeError(
             f"cluster_components did not converge in {max_rounds} rounds; "
             "raise max_rounds"
@@ -1252,12 +1258,26 @@ def cluster_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
     leaf_labels = edges.select(
         F.col("d").alias("node"), F.col("s").alias("lbl")
     )
-    return (
+    labels = (
         nodes.join(leaf_labels, "node", "left")
         .select(
             F.col("node").alias("doc_id"),
             F.coalesce("lbl", "node").alias("cluster_id"),
         )
+        .localCheckpoint(eager=True)
+    )
+    release(edges)
+    return labels
+
+
+def minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``cluster_components`` over the MinHash-LSH verified pairs, one
+    session memo for every query that clusters them."""
+    return memo(
+        spark, "minhash_clusters", sf_dir, "documents",
+        lambda: cluster_components(
+            minhash_verified_pairs(spark, sf_dir).select("a_id", "b_id")
+        ),
     )
 
 
@@ -1265,8 +1285,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Clusters over the MinHash-LSH verified pairs (the scale path;
     identical to the exact pair list on this data -- the minhash oracle
     asserts that)."""
-    pairs = minhash_verified_pairs(spark, sf_dir).select("a_id", "b_id")
-    return cluster_components(pairs)
+    return minhash_clusters(spark, sf_dir)
 
 
 #: DuckDB oracle: transitive closure by recursive CTE (reach set per
@@ -1336,22 +1355,29 @@ PAGERANK_SQL = _pagerank_sql()
 
 
 def q_pagerank_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = minhash_verified_pairs(spark, sf_dir).select("a_id", "b_id")
-    edges = pairs.select(
-        F.col("a_id").alias("s"), F.col("b_id").alias("d")
-    ).unionByName(
-        pairs.select(F.col("b_id").alias("s"), F.col("a_id").alias("d"))
-    )
-    deg = edges.groupBy("s").agg(F.count(F.lit(1)).alias("outdeg"))
-    # edges+degree are reused every iteration: checkpoint once
-    ed = (
-        edges.join(deg, "s")
-        .select("s", "d", "outdeg")
-        .localCheckpoint(eager=True)
-    )
-    ranks = deg.select(
-        F.col("s").alias("v"), F.lit(1_000_000).cast("bigint").alias("p")
-    ).localCheckpoint(eager=True)
+    def degrees() -> tuple[DataFrame, DataFrame]:
+        pairs = minhash_verified_pairs(spark, sf_dir).select("a_id", "b_id")
+        edges = pairs.select(
+            F.col("a_id").alias("s"), F.col("b_id").alias("d")
+        ).unionByName(
+            pairs.select(F.col("b_id").alias("s"), F.col("a_id").alias("d"))
+        )
+        return edges, edges.groupBy("s").agg(F.count(F.lit(1)).alias("outdeg"))
+
+    def build_edges() -> DataFrame:
+        edges, deg = degrees()
+        return edges.join(deg, "s").select("s", "d", "outdeg")
+
+    def build_seed() -> DataFrame:
+        _, deg = degrees()
+        return deg.select(
+            F.col("s").alias("v"), F.lit(1_000_000).cast("bigint").alias("p")
+        )
+
+    # edges+degree and the seed ranks are reused every iteration: one
+    # session memo each
+    ed = memo(spark, "pagerank_edges", sf_dir, "documents", build_edges)
+    ranks = memo(spark, "pagerank_seed", sf_dir, "documents", build_seed)
     # The iterations CHAIN as one lazy plan (r18): each round is one
     # join + one aggregate referencing the previous round once, so the
     # plan grows linearly in _PAGERANK_ITERS and the whole chain
@@ -1360,7 +1386,7 @@ def q_pagerank_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized every intermediate rank table -- pure overhead for
     # a 5-deep lineage over the already-checkpointed edge table
     # (measured 1.27s -> 0.88s at sf0.1; results bit-identical).
-    # The ed/ranks checkpoints above stay although the pair memo
+    # The ed/ranks memos above stay although the pair memo
     # already severs the minhash lineage: the chain re-reads both every
     # round, and deleting them measured slower at sf0.1 on 4 cores
     # (first-call JVM CPU 9.0/8.4/9.1 -> 11.4/10.6/10.9 s, warm calls
@@ -1540,7 +1566,7 @@ def q_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     e2 = pairs.select(F.col("a_id").alias("b"), F.col("b_id").alias("c"))
     e3 = pairs.select(F.col("a_id").alias("a"), F.col("b_id").alias("c"))
     tri = e1.join(e2, "b").join(e3, ["a", "c"]).select("a", "b", "c")
-    clusters = cluster_components(pairs).select(
+    clusters = minhash_clusters(spark, sf_dir).select(
         F.col("doc_id").alias("a"), "cluster_id"
     )
     return (

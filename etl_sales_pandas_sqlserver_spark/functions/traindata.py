@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..cache import memo
-from ..operators.scale import range_row_index
+from ..operators.scale import range_partitions, range_row_index
 from ..sources.testdata import load_table
 from .tokcount import (
     N_TOKENS_SQL,
@@ -626,11 +626,15 @@ TRAINING_ORDER_SQL = f"""
 
 
 def q_training_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    keyed = docs.select(
-        "doc_id", F.md5(F.col("doc_id").cast("string")).alias("k")
-    )
-    numbered, _ = range_row_index(keyed, ["k"], _N_ORDER_PARTS, ["doc_id"])
+    def build() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents")
+        keyed = docs.select(
+            "doc_id", F.md5(F.col("doc_id").cast("string")).alias("k")
+        )
+        return range_partitions(keyed, ["k"], _N_ORDER_PARTS)
+
+    parts = memo(spark, "training_order_ranges", sf_dir, "documents", build)
+    numbered, _ = range_row_index(parts, ["doc_id"])
     return numbered.select(
         "doc_id",
         "pos",

@@ -18,9 +18,9 @@ Catalyst can't infer:
   explode side replicates the small table N times -- bounded, explicit
   fan-out instead of an unbounded hot partition.
 
-:func:`range_row_index` numbers rows in a global sort order without the
-single-partition ``ROW_NUMBER() OVER (ORDER BY ...)`` window Spark would
-plan.
+:func:`range_row_index` numbers the rows of a :func:`range_partitions`
+frame in a global sort order without the single-partition
+``ROW_NUMBER() OVER (ORDER BY ...)`` window Spark would plan.
 """
 
 from __future__ import annotations
@@ -262,35 +262,38 @@ def hybrid_lookback_window(
     return cold_out.unionByName(hot_out)
 
 
-def range_row_index(
-    df: DataFrame, order: list[str], n_parts: int, carry: list[str]
-) -> tuple[DataFrame, DataFrame]:
-    """``(numbered, counts)``: ``numbered`` is ``carry`` plus ``pos``,
-    each row's 0-based position in ``order``; ``counts`` is the
-    ``(pid, n)`` row count of each of the ``n_parts`` range partitions.
+def range_partitions(df: DataFrame, order: list[str], n_parts: int) -> DataFrame:
+    """``df`` range-repartitioned by ``order`` into ``n_parts``
+    partitions, sorted within each and stamped with its ``pid``.
+    ``order`` should be total (add a unique tiebreak column), or tied
+    rows are numbered in an arbitrary order."""
+    return (
+        df.repartitionByRange(n_parts, *order)
+        .sortWithinPartitions(*order)
+        .withColumn("pid", F.spark_partition_id())
+    )
+
+
+def range_row_index(parts: DataFrame, carry: list[str]) -> tuple[DataFrame, DataFrame]:
+    """``(numbered, counts)`` over a CHECKPOINTED :func:`range_partitions`
+    frame: ``numbered`` is ``carry`` plus ``pos``, each row's 0-based
+    position in the sort order; ``counts`` is each partition's
+    ``(pid, n)``.
 
     The naive ``ROW_NUMBER() OVER (ORDER BY ...)`` funnels every row
     through ONE task. This is the two-pass zip-with-index instead, in
     DataFrame/Arrow land; nothing is collected:
 
-    1. range-repartition by ``order`` and sort within partitions, pinned
-       by an eager ``localCheckpoint``: the range bounds are sampled, so
-       the counts pass and the numbering pass must read the same
-       physical partitioning, not two re-executions of it;
-    2. count rows per partition and prefix-sum the counts in a window
-       over those |partitions| rows (single-task, but bounded by
-       ``n_parts``, not the data), then broadcast-join the offsets back;
-    3. an Arrow-batched ``mapInPandas`` adds offset + running local
+    1. count rows per partition and prefix-sum the counts in a window
+       over those |partitions| rows (single-task, but bounded by the
+       partition count, not the data), then broadcast-join the offsets
+       back;
+    2. an Arrow-batched ``mapInPandas`` adds offset + running local
        index.
 
-    ``order`` should be total (add a unique tiebreak column), or tied
-    rows are numbered in an arbitrary order."""
-    parts = (
-        df.repartitionByRange(n_parts, *order)
-        .sortWithinPartitions(*order)
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
+    The range bounds are sampled, so both passes must read one
+    materialization of ``parts``: the caller owns its checkpoint
+    (``cache.memo`` keyed on the source table)."""
     counts = parts.groupBy("pid").agg(F.count(F.lit(1)).alias("n"))
     off_win = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = counts.select(
@@ -309,7 +312,7 @@ def range_row_index(
             local += len(pdf)
 
     schema = T.StructType(
-        [T.StructField(c, df.schema[c].dataType) for c in carry]
+        [T.StructField(c, parts.schema[c].dataType) for c in carry]
         + [T.StructField("pos", T.LongType())]
     )
     return staged.mapInPandas(number_rows, schema=schema), counts

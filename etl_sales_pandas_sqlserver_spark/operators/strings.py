@@ -60,6 +60,6 @@ def cast_str_nan(col: Column | str) -> Column:
     Resultados/Ventas_Invalidas_M.csv). Spark keeps NULL through a
     string cast, so golden parity needs an explicit coalesce.
 
-    This is a *parity flag*: engine-default code paths keep NULLs."""
+    plans.sales_etl.categorize_invalid_sales always applies it."""
     c = F.col(col) if isinstance(col, str) else col
     return F.coalesce(c.cast("string"), F.lit("nan"))

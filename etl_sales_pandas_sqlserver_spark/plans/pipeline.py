@@ -64,8 +64,6 @@ def run_sales_pipeline(
     input_dir: str,
     output_dir: str,
     *,
-    with_bom: bool = True,
-    nan_literal: bool = True,
     jdbc: dict[str, Any] | None = None,
     logfile: str | None = None,
 ) -> dict[str, Any]:
@@ -92,7 +90,7 @@ def run_sales_pipeline(
         valid_cp = clean_valid_sales(raw).localCheckpoint(eager=False)
         valid = obs.observe_rows(valid_cp, "valid")
         invalid = obs.observe_rows(
-            categorize_invalid_sales(raw, nan_literal=nan_literal),
+            categorize_invalid_sales(raw),
             "invalid",
             *category_counts("Reason", ("N", "A", "D")),
         ).coalesce(1).sortWithinPartitions(F.expr("instr('NAD', Reason)"))
@@ -112,7 +110,7 @@ def run_sales_pipeline(
                     options=jdbc.get("options"),
                 )
             outputs[name] = write_single_csv(
-                formatted, os.path.join(output_dir, f"{name}.csv"), with_bom=with_bom
+                formatted, os.path.join(output_dir, f"{name}.csv"), with_bom=True
             )
     finally:
         release(raw_cp)

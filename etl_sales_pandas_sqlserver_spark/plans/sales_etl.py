@@ -23,11 +23,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dates, dedup, nulls, numeric, strings
 
-def clean_valid_sales(
-    df: DataFrame,
-    order: list | None = None,
-    date_formats: tuple[str, ...] = (),
-) -> DataFrame:
+def clean_valid_sales(df: DataFrame, order: list | None = None) -> DataFrame:
     """Q1 -- the valid-sales cleaning pipeline (reference main.py:53-100).
 
     Steps (order matters; it is the reference's):
@@ -57,23 +53,22 @@ def clean_valid_sales(
     out = nulls.drop_null(out, "Product")
     out = out.withColumn("Amount", numeric.normalize_currency("Amount"))
     out = nulls.drop_null(out, "Amount")
-    out = out.withColumn("Date", dates.to_timestamp_coerce("Date", date_formats))
-    out = out.withColumn("Audit_Date", dates.to_timestamp_coerce("Audit_Date", date_formats))
+    out = out.withColumn("Date", dates.to_timestamp_coerce("Date"))
+    out = out.withColumn("Audit_Date", dates.to_timestamp_coerce("Audit_Date"))
     return nulls.drop_null(out, "Date", "Audit_Date")
 
 
-def categorize_invalid_sales(df: DataFrame, nan_literal: bool = True) -> DataFrame:
+def categorize_invalid_sales(df: DataFrame) -> DataFrame:
     """Q2 -- invalid-sales categorization (reference main.py:106-151),
     one pass over the input and one shuffle, duplicate rows kept
     verbatim.
 
     Sale_ID and Product are normalized first (main.py:112-113:
     ``astype(str).str.upper()`` and
-    ``astype(str).str.split('-').str[-1].str.upper()``).
-    ``nan_literal=True`` reproduces the pandas quirk where NULL becomes
-    the string 'NAN' (so Sale_ID/Product nulls are invisible to the
-    any-null check, main.py:119 -- golden-verified); False keeps NULLs,
-    which then DO trigger Reason 'N' (engine-default, documented delta).
+    ``astype(str).str.split('-').str[-1].str.upper()``), with the
+    pandas quirk where NULL becomes the string 'NAN': Sale_ID/Product
+    nulls are invisible to the any-null check (main.py:119 --
+    golden-verified).
 
     Tier precedence N > A > D, as a single ``when`` cascade:
     - N: any column NULL (after the 'NAN' stringification, main.py:119);
@@ -86,8 +81,7 @@ def categorize_invalid_sales(df: DataFrame, nan_literal: bool = True) -> DataFra
     sink that must reproduce the grouping sorts on the tier (see
     plans/pipeline.run_sales_pipeline).
     """
-    sid = strings.cast_str_nan("Sale_ID") if nan_literal else F.col("Sale_ID").cast("string")
-    prod = strings.cast_str_nan("Product") if nan_literal else F.col("Product").cast("string")
+    sid, prod = strings.cast_str_nan("Sale_ID"), strings.cast_str_nan("Product")
     base = df.withColumn("Sale_ID", strings.upper(sid)).withColumn(
         "Product", strings.upper(strings.split_last(prod))
     )
@@ -119,6 +113,11 @@ def monthly_summary(df_valid: DataFrame, sort: bool = True) -> DataFrame:
     reference's output names. Spark runs this as partial (map-side) +
     final hash aggregation: one shuffle on the group keys.
 
+    ``Amount`` must hold whole cents, as Q1's normalize_currency leaves
+    it, so the sum accumulates exactly in DECIMAL(18,2) and casts back
+    to double: a double sum depends on the partial aggregation order
+    and prints '7423.1100000000015' for 7423.11.
+
     ``sort=True`` appends the reference's LEXICOGRAPHIC (Mes, Producto)
     order -- pandas groupby(sort=True), golden-verified '01/2024' <
     '01/2025' < '02/2024' (SURVEY.md A2). Spark groupBy guarantees no
@@ -128,7 +127,9 @@ def monthly_summary(df_valid: DataFrame, sort: bool = True) -> DataFrame:
         df_valid.withColumn("Mes", dates.month_key("Date"))
         .groupBy(F.col("Mes"), F.col("Product").alias("Producto"))
         .agg(
-            F.sum("Amount").alias("Ventas_Totales"),
+            F.sum(F.col("Amount").cast("decimal(18,2)"))
+            .cast("double")
+            .alias("Ventas_Totales"),
             F.count("Amount").alias("Numero_Transacciones"),
             F.min("Amount").alias("Venta_Minima"),
         )

@@ -250,7 +250,7 @@ _INVALID_SALES_SQL = f"""
 def q_categorize_invalid_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q2 (reference main.py:106-151)."""
     raw = _sales_raw_cp(spark, sf_dir)
-    out = sales_etl.categorize_invalid_sales(raw, nan_literal=True)
+    out = sales_etl.categorize_invalid_sales(raw)
     return out.select(
         F.col("Sale_ID").alias("sale_id"),
         F.col("Product").alias("product"),
@@ -275,22 +275,11 @@ _MONTHLY_SUMMARY_SQL = f"""
 
 
 def q_monthly_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q3 flagship (reference main.py:156-179): monthly aggregate over
-    Q1's cleaned output. Decimal-accumulated sum cast back to double
-    (see module docstring)."""
-    valid = _valid_sales_cp(spark, sf_dir)
-    out = (
-        valid.withColumn("Mes", F.date_format("Date", "MM/yyyy"))
-        .groupBy(F.col("Mes").alias("mes"), F.col("Product").alias("producto"))
-        .agg(
-            F.sum(F.col("Amount").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("ventas_totales"),
-            F.count("Amount").alias("numero_transacciones"),
-            F.min("Amount").alias("venta_minima"),
-        )
-    )
-    return out
+    """Q3 flagship (reference main.py:156-179): the sales job's own
+    monthly aggregate over Q1's cleaned output, decimal-accumulated
+    (see module docstring), under the lowercase names."""
+    out = sales_etl.monthly_summary(_valid_sales_cp(spark, sf_dir), sort=False)
+    return out.toDF(*(c.lower() for c in out.columns))
 
 
 _FORMAT_DATES_SQL = """

@@ -23,8 +23,9 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import memo
 from ..operators.dates import epoch_us
-from ..operators.scale import range_row_index
+from ..operators.scale import range_partitions, range_row_index
 from ..sources.testdata import load_table
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
@@ -309,15 +310,16 @@ DECILE_STATS_SQL = f"""
 
 
 def q_decile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice"
-    )
-    numbered, counts = range_row_index(
-        orders,
-        ["o_totalprice", "o_orderkey"],
-        _DECILE_PARTS,
-        ["o_totalprice"],
-    )
+    def build() -> DataFrame:
+        orders = load_table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_totalprice"
+        )
+        return range_partitions(
+            orders, ["o_totalprice", "o_orderkey"], _DECILE_PARTS
+        )
+
+    parts = memo(spark, "order_price_ranges", sf_dir, "orders", build)
+    numbered, counts = range_row_index(parts, ["o_totalprice"])
     ranked = numbered.select("o_totalprice", (F.col("pos") + 1).alias("rnk"))
     total = counts.agg(F.sum("n").alias("n_total"))
     # SQL ntile(k): q = N div k, m = N mod k; buckets 1..m hold q+1

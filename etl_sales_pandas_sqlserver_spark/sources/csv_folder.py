@@ -34,12 +34,7 @@ from ..schemas import SALES_RAW
 _STEM = r"([^/\\]+)\.[Cc][Ss][Vv]$"
 
 
-def read_sales_folder(
-    spark: SparkSession,
-    directory: str,
-    schema: T.StructType = SALES_RAW,
-    audit_col: str = "Audit_Date",
-) -> DataFrame:
+def read_sales_folder(spark: SparkSession, directory: str) -> DataFrame:
     """Read every ``*.csv`` in ``directory`` as one DataFrame and add
     ``Audit_Date`` parsed from each row's source filename stem.
 
@@ -61,7 +56,7 @@ def read_sales_folder(
     df = (
         spark.read.option("header", "true")
         .option("pathGlobFilter", "*.csv")
-        .schema(schema)
+        .schema(SALES_RAW)
         .csv(directory)
     )
     if not df.inputFiles():
@@ -69,7 +64,7 @@ def read_sales_folder(
     stem = F.regexp_extract(F.input_file_name(), _STEM, 1)
     # decode %XX escapes that input_file_name() applies to the URI
     stem = F.url_decode(stem)
-    return df.withColumn(audit_col, F.try_to_timestamp(stem))
+    return df.withColumn("Audit_Date", F.try_to_timestamp(stem))
 
 
 def read_csv(

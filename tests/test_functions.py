@@ -745,6 +745,64 @@ def test_two_consumer_frames_are_session_memos(
     assert persistent().size() <= before, "evicted memos stay pinned"
 
 
+@pytest.mark.parametrize(
+    "name,table",
+    [("training_order_global_index", "documents"), ("decile_stats_order_price", "orders")],
+)
+def test_row_index_ranges_are_one_session_memo(spark, sf_small, tmp_path, name, table):
+    """The range-partitioned frame a global row index numbers is owned
+    by the session memo: repeated calls pin no RDD beyond the one the
+    first call pinned, and evicting the session's memos unpins it."""
+    import shutil
+
+    from etl_sales_pandas_sqlserver_spark import cache
+    from etl_sales_pandas_sqlserver_spark.plans.testdata_queries import (
+        QUERIES,
+    )
+
+    sf = str(tmp_path)
+    shutil.copy(f"{sf_small}/{table}.parquet", f"{sf}/{table}.parquet")
+    fn, _ = QUERIES[name]
+    spark.catalog.clearCache()
+    cache.evict_session_memos(spark)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    first = sorted(map(repr, fn(spark, sf).collect()))
+    pinned = persistent().size()
+    assert pinned <= before + 1
+    for _ in range(2):
+        assert sorted(map(repr, fn(spark, sf).collect())) == first
+    assert persistent().size() <= pinned, "a repeated call pinned a new RDD"
+    cache.evict_session_memos(spark)
+    assert persistent().size() == before, "the row index ranges stay pinned"
+
+
+@pytest.mark.parametrize("name", ["dedup_clusters", "graph_pagerank_dup"])
+def test_graph_checkpoints_are_session_memos(spark, sf_small, tmp_path, name):
+    """The checkpoints the cluster labels and PageRank's edge and seed
+    tables read are session memos: evicting the session's memos unpins
+    every RDD the query pinned, without waiting for the JVM to collect
+    the frame it returned."""
+    import shutil
+
+    from etl_sales_pandas_sqlserver_spark import cache
+    from etl_sales_pandas_sqlserver_spark.plans.testdata_queries import (
+        QUERIES,
+    )
+
+    sf = str(tmp_path)
+    shutil.copy(f"{sf_small}/documents.parquet", f"{sf}/documents.parquet")
+    fn, _ = QUERIES[name]
+    spark.catalog.clearCache()
+    cache.evict_session_memos(spark)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    first = sorted(map(repr, fn(spark, sf).collect()))
+    assert sorted(map(repr, fn(spark, sf).collect())) == first
+    cache.evict_session_memos(spark)
+    assert persistent().size() <= before, "a graph checkpoint stays pinned"
+
+
 # ---------------------------------------------------------------------------
 # textstats.py: winnowing fingerprints (MOSS guarantee + density)
 # ---------------------------------------------------------------------------

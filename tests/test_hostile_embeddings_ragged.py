@@ -5,7 +5,8 @@ rows — the classic 100 TB ingest failure the fixed-shape axis
 r15 probe result (tools/hostile_sweep.py embeddings_ragged), the
 classification this module pins; the latest full 186-query sweep
 (Spark 4 default semantics) reads the same, 175 green / 0 mismatch /
-11 Spark raises:
+11 in the sweep's `spark_only_error` bucket (Spark raises, the oracle
+returns rows; `both_error` is empty):
 
 1. **Zero silent divergence.** No query returns wrong rows on ragged
    input — every non-green is a LOUD Spark raise.

@@ -3,8 +3,10 @@
 Sixth audit axis (r14; the values twin of the events null audit,
 exactly as tpch_values is the values twin of the tpch null audit).
 Full 186-query sweep (`tools/hostile_sweep.py events_values`, Spark 4
-default semantics): **178 green / 0 mismatch / 8 loud errors, each
-raising on both engines** (3 from the start, 5 since their guards):
+default semantics): **178 green / 0 mismatch / 8 loud errors, all 8 in
+the sweep's `both_error` bucket and none in `spark_only_error`** (the
+sweep runs each oracle also when Spark raises; 3 from the start, 5
+since their guards):
 
 - Both raise (the money-envelope class, loud and consistent):
   `window_range_1h_load`, `window_moving_avg_7` (±9.9e15 overflows

@@ -7,8 +7,8 @@ rates outside [0,1], epoch/far-future dates, out-of-domain flags,
 empty strings, quoted/unicode names. Full 186-query sweep
 (`tools/hostile_sweep.py tpch_values`, Spark 4 default semantics;
 the latest run reads the same): **182 green / 0 mismatch / 4 loud
-errors — and each of the four raises on BOTH engines**, so the axis
-carries ZERO silent divergence:
+errors — and each of the four raises on BOTH engines** (the sweep's
+`both_error` bucket), so the axis carries ZERO silent divergence:
 
 - the sales ETL trio (`clean_valid_sales`, `categorize_invalid_sales`,
   `monthly_summary`): a 9.9-trillion price exceeds the pipeline's

@@ -177,3 +177,42 @@ def test_observation_counts_sink_rows_not_plan_rows(spark):
     base = obs.observe_rows(spark.range(100), "all")
     base.filter(F.col("id") < 10).write.format("noop").mode("overwrite").save()
     assert obs.metrics()["all"]["rows"] == 100
+
+
+def test_summary_sums_cents_exactly_at_any_partitioning(spark, tmp_path):
+    """The summary CSV prints each group's exact cent sum: 0.10 + 0.20
+    is '0.3' (a double sum prints 0.30000000000000004), and the bytes
+    do not depend on how many shuffle partitions the partial sums run
+    over (a double sum of 0.10, 0.20, 0.30 is 0.6 or
+    0.6000000000000001 by order)."""
+    indir = tmp_path / "in"
+    indir.mkdir()
+    rows = {
+        "2025-01-01.csv": [("a1", "KIT-A", "0.10 USD"), ("b1", "KIT-B", "0.10 USD")],
+        "2025-01-02.csv": [("a2", "KIT-A", "0.20 USD"), ("b2", "KIT-B", "0.20 USD")],
+        "2025-01-03.csv": [("b3", "KIT-B", "0.30 USD")],
+    }
+    for name, file_rows in rows.items():
+        body = "Sale_ID,Product,Amount,Date\n" + "".join(
+            f"{sid},{prod},{amt},2024-01-05\n" for sid, prod, amt in file_rows
+        )
+        (indir / name).write_text(body, encoding="utf-8")
+    key = "spark.sql.shuffle.partitions"
+    session_parts = spark.conf.get(key)
+    written = []
+    try:
+        for parts in ("1", "4"):
+            spark.conf.set(key, parts)
+            out = run_sales_pipeline(spark, str(indir), str(tmp_path / parts))
+            with open(out["outputs"]["Ventas_Resumen_Mensual"], "rb") as fh:
+                written.append(fh.read())
+    finally:
+        spark.conf.set(key, session_parts)
+    summary = pd.read_csv(
+        tmp_path / "1" / "Ventas_Resumen_Mensual.csv", encoding="utf-8-sig", dtype=str
+    )
+    assert dict(zip(summary["Producto"], summary["Ventas_Totales"])) == {
+        "A": "0.3",
+        "B": "0.6",
+    }
+    assert written[0] == written[1]

@@ -37,9 +37,9 @@ def _temp_views(spark) -> list[str]:
 
 def _pinned(spark, target: int | None = None) -> int:
     """The persistent-RDD count once the JVM has collected what no frame
-    reaches any more: a checkpoint a returned frame owns (PageRank's,
-    the final cluster edges) goes only then. Polls until the count is
-    steady, or down to ``target``."""
+    reaches any more: a checkpoint only a dropped frame owned (an
+    earlier test's) goes only then. Polls until the count is steady, or
+    down to ``target``."""
     persistent = spark.sparkContext._jsc.getPersistentRDDs
     last = None
     for _ in range(50):

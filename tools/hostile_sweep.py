@@ -15,8 +15,12 @@ suites' fixtures call), under DRIVER conditions (a plain session: the
 engine's SQL semantics, but 200 shuffle partitions, the host time zone
 and ``local[8]``), compares with ``tests/oracle_compare.compare_frames``,
 and prints one JSON line: {green: [...], mismatch: [...],
-spark_error: {...}, oracle_error: {...}}. Move a query between a
-suite's _ROBUST and known-not-green lists only on this tool's evidence.
+both_error: {...}, spark_only_error: {...}, oracle_error: {...}}. The
+oracle runs also when Spark raises, so a loud error on both engines
+(``both_error``: each engine's message) is told apart from a
+Spark-only raise (``spark_only_error``: Spark's message and the
+oracle's row count). Move a query between a suite's _ROBUST and
+known-not-green lists only on this tool's evidence.
 """
 
 from __future__ import annotations
@@ -49,28 +53,34 @@ def main() -> int:
     q, o = e.queries(), e.oracle_sql()
     only = {s for s in os.environ.get(
         "SPARK_GRAFT_SWEEP_ONLY", "").split(",") if s}
-    res = {"green": [], "mismatch": [], "spark_error": {},
-           "oracle_error": {}, "rows_only": []}
+    res = {"green": [], "mismatch": [], "both_error": {},
+           "spark_only_error": {}, "oracle_error": {}}
     for name, fn in q.items():
         if only and name not in only:
             continue
         try:
-            sdf = fn(spark, d).toPandas()
+            sdf, spark_err = fn(spark, d).toPandas(), None
         except Exception as ex:
-            res["spark_error"][name] = str(ex)[:120].replace("\n", " ")
-            continue
-        if name not in o or o[name] is None:
-            res["rows_only"].append(name)
-            continue
+            sdf, spark_err = None, _msg(ex)
         try:
             odf = run_oracle(o[name], d)
         except Exception as ex:
-            res["oracle_error"][name] = str(ex)[:120].replace("\n", " ")
+            if spark_err is None:
+                res["oracle_error"][name] = _msg(ex)
+            else:
+                res["both_error"][name] = {"spark": spark_err, "oracle": _msg(ex)}
             continue
-        res["mismatch" if compare_frames(sdf, odf) else "green"].append(name)
+        if spark_err is not None:
+            res["spark_only_error"][name] = {"error": spark_err, "oracle_rows": len(odf)}
+        else:
+            res["mismatch" if compare_frames(sdf, odf) else "green"].append(name)
     print(json.dumps({"table": kind, "sf": SF,
                       "n_green": len(res["green"]), **res}))
     return 0
+
+
+def _msg(ex: Exception) -> str:
+    return str(ex)[:120].replace("\n", " ")
 
 
 if __name__ == "__main__":
