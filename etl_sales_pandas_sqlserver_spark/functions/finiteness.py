@@ -42,20 +42,16 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def finite_value_col(col: str = "value") -> Column:
-    """``col`` guaranteed finite (or NULL): raises loudly on NaN/±inf
+def finite_value_col() -> Column:
+    """``value`` guaranteed finite (or NULL): raises loudly on NaN/±inf
     instead of letting Spark's ANSI decimal cast null them out of the
-    sum. Use as the input of ``.cast("decimal(28,6)")``. Built from
-    Column objects, not an ``F.expr`` f-string (r16 ADVICE): a column
-    name needing backticks, or containing a quote, resolves through
-    ``F.col`` instead of producing a broken SQL expression; the error
-    message is an ``F.lit`` so the name cannot escape the string."""
-    c = F.col(col)
+    sum. Use as the input of ``.cast("decimal(28,6)")``."""
+    c = F.col("value")
     return F.coalesce(
         F.assert_true(
             c.isNull() | (~F.isnan(c) & (F.abs(c) != F.lit(float("inf")))),
             F.lit(
-                f"finiteness guard: NaN/inf {col} cannot enter a "
+                "finiteness guard: NaN/inf value cannot enter a "
                 "DECIMAL(28,6) sum (the oracle raises on this input; "
                 "Spark must too, not silently drop the row)"
             ),

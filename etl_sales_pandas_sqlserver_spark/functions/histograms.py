@@ -58,17 +58,16 @@ _BIN_CAP_SPARK = (
 )
 
 
-def ceil_rank_cap_agg(pct: int, cum_col: str = "cum_docs",
-                      total_col: str = "total_docs",
-                      cap_col: str = "bin_cap"):
-    """Aggregate expression: smallest cap whose cumulative count
-    reaches the ceil-rank of the pct-quantile — ``MIN(cap WHERE cum >=
-    ceil(pct·total/100))`` with the ceiling in exact integer math.
-    Shared by this module and the dataset-card family so the rank
-    spelling can never de-sync between them."""
-    rank = f"({pct} * {total_col} + 99) div 100"
+def ceil_rank_cap_agg(pct: int):
+    """Aggregate expression: smallest ``bin_cap`` whose ``cum_docs``
+    reaches the ceil-rank of the pct-quantile of ``total_docs`` —
+    ``MIN(bin_cap WHERE cum_docs >= ceil(pct·total_docs/100))`` with
+    the ceiling in exact integer math. Shared by this module and the
+    dataset-card family so the rank spelling can never de-sync between
+    them."""
+    rank = f"({pct} * total_docs + 99) div 100"
     return F.min(
-        F.when(F.col(cum_col) >= F.expr(rank), F.col(cap_col))
+        F.when(F.col("cum_docs") >= F.expr(rank), F.col("bin_cap"))
     )
 
 

@@ -204,7 +204,7 @@ def resample_audio(payload: bytes, rate: int = 16000) -> np.ndarray:
     )
 
 
-def sample_frames(payload: bytes, every_n: int = 30) -> list[bytes]:
+def sample_frames(payload: bytes) -> list[bytes]:
     raise NotImplementedError("frame sampling requires a video codec (ffmpeg)")
 
 
@@ -378,16 +378,15 @@ _FRAME_SAMPLE_SCHEMA = T.StructType(
 )
 
 
-def sample_frames_fake(
-    payload: bytes, frame_size: int = _FRAME_BYTES, every_n: int = _FRAME_EVERY_N
-) -> list[bytes]:
+def sample_frames_fake(payload: bytes) -> list[bytes]:
     """Deterministic stand-in for :func:`sample_frames`: fixed-size
-    byte windows, every Nth kept. Same output contract (list of frame
-    payloads) a real decoder would produce."""
-    n = len(payload) // frame_size
+    ``_FRAME_BYTES`` windows, every ``_FRAME_EVERY_N``-th kept. Same
+    output contract (list of frame payloads) a real decoder would
+    produce."""
+    n = len(payload) // _FRAME_BYTES
     return [
-        payload[i * frame_size : (i + 1) * frame_size]
-        for i in range(0, n, every_n)
+        payload[i * _FRAME_BYTES : (i + 1) * _FRAME_BYTES]
+        for i in range(0, n, _FRAME_EVERY_N)
     ]
 
 

@@ -43,21 +43,19 @@ from pyspark.sql import functions as F
 
 
 def distinct_score_rank_frame(
-    scored: DataFrame,
-    group_cols: list[str],
-    score_col: str = "lm_score_ppm",
+    scored: DataFrame, group_cols: list[str]
 ) -> DataFrame:
     """Collapse ``scored`` (one row per document) to its distinct-score
-    rank frame: one row per ``(group..., score)`` carrying ``cnt``
-    (docs at that score), ``lo``/``hi`` (the contiguous rank block
-    those docs occupy under ``(score, doc_id)`` ascending) and ``n``
-    (group size). All int64."""
-    cnts = scored.groupBy(*group_cols, score_col).agg(
+    rank frame: one row per ``(group..., lm_score_ppm)`` carrying
+    ``cnt`` (docs at that score), ``lo``/``hi`` (the contiguous rank
+    block those docs occupy under ``(lm_score_ppm, doc_id)`` ascending)
+    and ``n`` (group size). All int64."""
+    cnts = scored.groupBy(*group_cols, "lm_score_ppm").agg(
         F.count(F.lit(1)).alias("cnt")
     )
     w_cum = (
         Window.partitionBy(*group_cols)
-        .orderBy(score_col)
+        .orderBy("lm_score_ppm")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     w_grp = Window.partitionBy(*group_cols)

@@ -298,10 +298,10 @@ q_topk_ann = _memoized_topk("ann", _topk_ann_build)
 # ---------------------------------------------------------------------------
 
 
-def _kmeans_fit(x: np.ndarray, k: int, seed: int, iters: int = 20) -> np.ndarray:
-    """Seeded Lloyd's with k-means++ init on the (unit-normalized)
-    training sample. Deterministic: fixed rng, argmin ties -> lowest
-    index. Returns (k, d) centroids."""
+def _kmeans_fit(x: np.ndarray, k: int, seed: int) -> np.ndarray:
+    """Seeded Lloyd's (20 iterations) with k-means++ init on the
+    (unit-normalized) training sample. Deterministic: fixed rng,
+    argmin ties -> lowest index. Returns (k, d) centroids."""
     rng = np.random.default_rng(seed)
     n = x.shape[0]
     # k-means++ seeding
@@ -313,7 +313,7 @@ def _kmeans_fit(x: np.ndarray, k: int, seed: int, iters: int = 20) -> np.ndarray
         probs = d2 / d2.sum() if d2.sum() > 0 else np.full(n, 1.0 / n)
         cents.append(x[rng.choice(n, p=probs)])
     c = np.stack(cents)
-    for _ in range(iters):
+    for _ in range(20):
         d2 = ((x[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
         assign = d2.argmin(axis=1)
         for j in range(k):

@@ -74,11 +74,11 @@ def ws_split_sql(expr: str = "text") -> str:
 N_TOKENS_SQL = f"len({ws_split_sql()})"
 
 
-def n_tokens_spark(col: Column | str = "text") -> Column:
-    """Whitespace token count of ``col`` as int64 -- the Spark twin of
+def n_tokens_spark() -> Column:
+    """Whitespace token count of ``text`` as int64 -- the Spark twin of
     :data:`N_TOKENS_SQL`. ``array_size``, not ``size``: with ANSI off
     ``size`` of a NULL array is -1, where DuckDB's ``len`` is NULL."""
-    return F.array_size(ws_split(col)).cast("long")
+    return F.array_size(ws_split("text")).cast("long")
 
 
 def space_split(col: Column | str) -> Column:
@@ -91,9 +91,9 @@ def space_split_sql(expr: str) -> str:
     return f"string_split({expr}, ' ')"
 
 
-def fingerprint_col(col: Column | str = "text") -> Column:
-    """md5 of lowercase, trimmed, whitespace-collapsed ``col``."""
-    return F.md5(F.lower(F.trim(F.regexp_replace(col, WS_CLASS, " "))))
+def fingerprint_col() -> Column:
+    """md5 of lowercase, trimmed, whitespace-collapsed ``text``."""
+    return F.md5(F.lower(F.trim(F.regexp_replace("text", WS_CLASS, " "))))
 
 
 def fingerprint_sql(expr: str = "text") -> str:

@@ -34,13 +34,11 @@ from pyspark.sql import functions as F
 LOGGER_NAME = "etl_sales_spark"
 
 
-def configure_logging(
-    logfile: str | None = None, level: int = logging.INFO
-) -> logging.Logger:
+def configure_logging(logfile: str | None = None) -> logging.Logger:
     """Reference-parity logging setup (etl_utils.py:10-31): INFO-level
     logger, optional file handler, one concise line per record."""
     logger = logging.getLogger(LOGGER_NAME)
-    logger.setLevel(level)
+    logger.setLevel(logging.INFO)
     # FileHandler stores baseFilename absolutized -- compare abspath,
     # or a relative logfile would attach a fresh handler per call and
     # write every record N times

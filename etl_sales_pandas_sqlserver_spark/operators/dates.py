@@ -3,7 +3,8 @@
 ``try_to_timestamp`` == pandas ``to_datetime(errors='coerce')`` (NULL on
 failure, no ANSI exception). The reference accepts mixed formats via
 pandas' format sniffing (main.py:92-93); the engine's coercing parse
-takes an optional format list and coalesces the first success.
+tries the default parser, then a fixed pandas-like format chain, and
+coalesces the first success.
 """
 
 from __future__ import annotations
@@ -27,27 +28,18 @@ _DEFAULT_FORMATS: tuple[str, ...] = (
 )
 
 
-def to_timestamp_coerce(col: Column | str, formats: tuple[str, ...] = ()) -> Column:
+def to_timestamp_coerce(col: Column | str) -> Column:
     """P10 -- coercing multi-format timestamp parse (reference
     main.py:92-93: ``pd.to_datetime(col, errors='coerce')`` sniffs the
-    format per element). The chain is coalesced in order, so each ROW
-    takes the first format that parses, exactly like per-element
-    sniffing. Unparseable -> NULL, never an ANSI error.
-
-    Precedence: EXPLICIT caller formats win over the default parser --
-    a caller declaring ``yyyy-dd-MM`` must not have an ambiguous
-    '2024-05-01' reinterpreted as May 1 by the ISO parser. With no
-    explicit formats (the pandas-sniffing posture) the default parser
-    is tried first, then the pandas-like ``_DEFAULT_FORMATS``."""
+    format per element). The default parser is tried first, then the
+    pandas-like ``_DEFAULT_FORMATS``; the chain is coalesced in order,
+    so each ROW takes the first format that parses, exactly like
+    per-element sniffing. Unparseable -> NULL, never an ANSI error."""
     c = F.col(col) if isinstance(col, str) else col
-    default = [F.try_to_timestamp(c)]
-    if formats:
-        attempts = [F.try_to_timestamp(c, F.lit(f)) for f in formats] + default
-    else:
-        attempts = default + [
-            F.try_to_timestamp(c, F.lit(f)) for f in _DEFAULT_FORMATS
-        ]
-    return F.coalesce(*attempts)
+    return F.coalesce(
+        F.try_to_timestamp(c),
+        *[F.try_to_timestamp(c, F.lit(f)) for f in _DEFAULT_FORMATS],
+    )
 
 
 def month_key(col: Column | str) -> Column:

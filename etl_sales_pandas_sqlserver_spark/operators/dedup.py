@@ -28,13 +28,13 @@ def dedup_keep_first(df: DataFrame, keys: list[str], order: list) -> DataFrame:
     )
 
 
-def flag_dup_groups(df: DataFrame, keys: list[str], flag_col: str = "__is_dup") -> DataFrame:
+def flag_dup_groups(df: DataFrame, keys: list[str]) -> DataFrame:
     """D2 -- pandas ``duplicated(subset=keys, keep=False)`` (reference
-    main.py:136): mark EVERY row whose key group has >1 member.
-    ``count(*) over (partition by keys)`` -- one shuffle, no sort
-    (unbounded frame aggregates don't need an ordered window)."""
+    main.py:136): mark EVERY row whose key group has >1 member in
+    ``__is_dup``. ``count(*) over (partition by keys)`` -- one shuffle,
+    no sort (unbounded frame aggregates don't need an ordered window)."""
     w = Window.partitionBy(*keys)
-    return df.withColumn(flag_col, F.count(F.lit(1)).over(w) > 1)
+    return df.withColumn("__is_dup", F.count(F.lit(1)).over(w) > 1)
 
 
 def rows_in_dup_groups(df: DataFrame, keys: list[str]) -> DataFrame:

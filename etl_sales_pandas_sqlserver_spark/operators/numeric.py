@@ -28,17 +28,15 @@ def to_double(col: Column | str) -> Column:
     return c.try_cast("double")
 
 
-def bround2(col: Column | str, scale: int = 2) -> Column:
+def bround2(col: Column | str) -> Column:
     """P8 -- pandas ``Series.round(2)`` rounds HALF-TO-EVEN (banker's;
     verified empirically per SURVEY.md P8). Spark's ``F.round`` is
     half-up; ``F.bround`` is half-even. Use bround."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.bround(c, scale)
+    return F.bround(c, 2)
 
 
-def normalize_currency(
-    raw: Column | str, scale: int = 2, float_parity: bool = False
-) -> Column:
+def normalize_currency(raw: Column | str, float_parity: bool = False) -> Column:
     """P5+P6+P7+P8 fused -- the reference's Amount repair
     (main.py:75-83): strip 'USD'/'EUR' tokens, parse, multiply by 0.85
     when the ORIGINAL string ends with 'EUR', round half-even to 2
@@ -65,9 +63,9 @@ def normalize_currency(
         amount = F.when(ends_with(c, "EUR"), amount * F.lit(EUR_TO_USD)).otherwise(
             amount
         )
-        return bround2(amount, scale)
+        return bround2(amount)
     amt = stripped.try_cast("decimal(18,2)")
-    eur = bround2(amt * F.lit(str(EUR_TO_USD)).cast("decimal(3,2)"), scale)
+    eur = bround2(amt * F.lit(str(EUR_TO_USD)).cast("decimal(3,2)"))
     return (
         F.when(ends_with(c, "EUR"), eur).otherwise(amt).cast("double")
     )

@@ -26,60 +26,52 @@ class Expectation:
     ok: "callable"  # measured value -> bool
 
 
-def expect_row_count_between(
-    lo: int, hi: int, name: str | None = None
-) -> Expectation:
+def expect_row_count_between(lo: int, hi: int) -> Expectation:
     return Expectation(
-        name or f"row_count_between_{lo}_{hi}",
+        f"row_count_between_{lo}_{hi}",
         F.count(F.lit(1)),
         lambda v: lo <= v <= hi,
     )
 
 
-def expect_not_null(
-    col: str, max_null_fraction: float = 0.0, name: str | None = None
-) -> Expectation:
+def expect_not_null(col: str) -> Expectation:
     frac = F.avg(F.col(col).isNull().cast("double"))
     return Expectation(
-        name or f"not_null_{col}",
+        f"not_null_{col}",
         frac,
-        lambda v: (v or 0.0) <= max_null_fraction,
+        lambda v: (v or 0.0) == 0.0,
     )
 
 
-def expect_unique(col: str, name: str | None = None) -> Expectation:
+def expect_unique(col: str) -> Expectation:
     # distinct == non-null count -> unique. count(col) (not count(*))
     # so NULLs are ignored, matching SQL UNIQUE / dbt `unique`
     # semantics; one extra hash-distinct inside the same agg (Spark
     # plans count+count_distinct in one pass via Expand)
     return Expectation(
-        name or f"unique_{col}",
+        f"unique_{col}",
         F.count(F.col(col)) - F.count_distinct(F.col(col)),
         lambda v: v == 0,
     )
 
 
-def expect_accepted_values(
-    col: str, values: list[Any], name: str | None = None
-) -> Expectation:
+def expect_accepted_values(col: str, values: list[Any]) -> Expectation:
     bad = F.sum(
         (~F.col(col).isin(values) & F.col(col).isNotNull()).cast("long")
     )
     return Expectation(
-        name or f"accepted_values_{col}",
+        f"accepted_values_{col}",
         bad,
         lambda v: (v or 0) == 0,
     )
 
 
-def expect_min_max(
-    col: str, lo: float, hi: float, name: str | None = None
-) -> Expectation:
+def expect_min_max(col: str, lo: float, hi: float) -> Expectation:
     viol = F.sum(
         ((F.col(col) < lo) | (F.col(col) > hi)).cast("long")
     )
     return Expectation(
-        name or f"range_{col}",
+        f"range_{col}",
         viol,
         lambda v: (v or 0) == 0,
     )
@@ -96,8 +88,8 @@ def run_expectations(
     dupes = {n for n in names if names.count(n) > 1}
     if dupes:
         raise ValueError(
-            f"duplicate expectation names {sorted(dupes)}; "
-            "two checks on the same column need distinct names"
+            f"duplicate expectation names {sorted(dupes)}: two checks "
+            "of one kind on one column would share a result key"
         )
     row = df.agg(
         *[e.agg.alias(f"_e{i}") for i, e in enumerate(expectations)]

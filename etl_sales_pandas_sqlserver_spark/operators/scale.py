@@ -31,22 +31,14 @@ from pyspark.sql import types as T
 
 
 def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int,
-    sort_cols: list[str] | None = None,
+    df: DataFrame, table: str, bucket_cols: list[str], n_buckets: int
 ) -> None:
-    """Persist ``df`` as a bucketed (and optionally sorted) managed
-    table. Joins/aggs on ``bucket_cols`` against tables bucketed with
-    the SAME column set and bucket count skip their shuffle (and with
-    ``sort_cols`` the sort-merge sort too)."""
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(
+    """Persist ``df`` as a bucketed managed table. Joins/aggs on
+    ``bucket_cols`` against tables bucketed with the SAME column set
+    and bucket count skip their shuffle."""
+    df.write.mode("overwrite").format("parquet").bucketBy(
         n_buckets, *bucket_cols
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
+    ).saveAsTable(table)
 
 
 def bucketed_join(
@@ -58,16 +50,15 @@ def bucketed_join(
     return spark.table(left_table).join(spark.table(right_table), on)
 
 
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    n_salts: int = 8,
-) -> DataFrame:
+#: salt sub-keys per hot key, for both salted shapes
+N_SALTS = 8
+
+
+def salted_join(fact: DataFrame, dim: DataFrame, key: str) -> DataFrame:
     """Inner-join ``fact`` to ``dim`` on ``key`` with the fact side
-    salted: fact rows scatter across ``n_salts`` sub-keys, the dim side
+    salted: fact rows scatter across ``N_SALTS`` sub-keys, the dim side
     replicates once per salt. Result equals a plain inner join on
-    ``key`` (asserted in tests) while a hot key occupies ``n_salts``
+    ``key`` (asserted in tests) while a hot key occupies ``N_SALTS``
     tasks instead of one.
 
     The salt must be deterministic for result stability AND vary
@@ -83,26 +74,24 @@ def salted_join(
     """
     fact_salted = fact.withColumn(
         "_salt",
-        F.pmod(F.xxhash64(*[F.col(c) for c in fact.columns]), F.lit(n_salts)),
+        F.pmod(F.xxhash64(*[F.col(c) for c in fact.columns]), F.lit(N_SALTS)),
     )
     dim_salted = dim.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
+        "_salt", F.explode(F.array(*[F.lit(i) for i in range(N_SALTS)]))
     )
     return fact_salted.join(dim_salted, [key, "_salt"]).drop("_salt")
 
 
-def salted_agg_count(
-    df: DataFrame, key: str, n_salts: int = 8
-) -> DataFrame:
+def salted_agg_count(df: DataFrame, key: str) -> DataFrame:
     """Two-phase count for a skewed group key: partial count per
     (key, salt), then final sum per key. Same result as a direct
     ``groupBy(key).count()`` (asserted in tests); the partial phase
-    spreads a hot key over ``n_salts`` reducers. Spark's hash
+    spreads a hot key over ``N_SALTS`` reducers. Spark's hash
     aggregation already does map-side partials -- this pattern matters
     when the hot key's *reduce* side overflows one task (e.g.
     count-distinct or collect-style aggs downstream)."""
     partial = (
-        df.withColumn("_salt", F.pmod(F.xxhash64(F.col(key)) + F.spark_partition_id(), F.lit(n_salts)))
+        df.withColumn("_salt", F.pmod(F.xxhash64(F.col(key)) + F.spark_partition_id(), F.lit(N_SALTS)))
         .groupBy(key, "_salt")
         .agg(F.count(F.lit(1)).alias("_partial"))
     )

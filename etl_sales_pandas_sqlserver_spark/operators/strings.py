@@ -30,12 +30,13 @@ def split_last(col: Column | str, sep: str = "-") -> Column:
     return F.element_at(F.split(c, sep), -1)
 
 
-def strip_tokens(col: Column | str, tokens: tuple[str, ...] = ("USD", "EUR")) -> Column:
-    """P5 -- chained literal ``str.replace(tok, '')`` stripping currency
-    markers (reference main.py:77). Literal (non-regex) replace, applied
-    in order, exactly like the pandas chain."""
+def strip_tokens(col: Column | str) -> Column:
+    """P5 -- chained literal ``str.replace(tok, '')`` stripping the
+    currency markers 'USD' then 'EUR' (reference main.py:77). Literal
+    (non-regex) replace, applied in order, exactly like the pandas
+    chain."""
     c = F.col(col) if isinstance(col, str) else col
-    for tok in tokens:
+    for tok in ("USD", "EUR"):
         c = F.replace(c, F.lit(tok), F.lit(""))
     return c
 

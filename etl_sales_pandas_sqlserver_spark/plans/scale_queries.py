@@ -6,7 +6,7 @@ The oracle can't see the salt (it's an execution detail, not a
 semantic), which is exactly the point: the oracle SQL is the PLAIN
 join/aggregation, so a green driver row proves the salted plan computes
 the same answer. The plan-shape guarantees (hot key fans out over
-``n_salts`` tasks, dim side replicates exactly ``n_salts`` times) are
+``N_SALTS`` tasks, dim side replicates exactly ``N_SALTS`` times) are
 asserted separately in tests/test_plan_shapes.py.
 
 At 100 TB these are the shapes that keep a skewed key from pinning one
@@ -28,8 +28,6 @@ from ..sources.testdata import load_table
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
-_N_SALTS = 8
-
 # ---------------------------------------------------------------------------
 # 1. Salted two-phase count: events per user. Oracle = plain GROUP BY.
 # ---------------------------------------------------------------------------
@@ -44,7 +42,7 @@ SALTED_USER_COUNTS_SQL = """
 
 def q_salted_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select("user_id")
-    return salted_agg_count(ev, "user_id", n_salts=_N_SALTS)
+    return salted_agg_count(ev, "user_id")
 
 
 # ---------------------------------------------------------------------------
@@ -69,7 +67,7 @@ def q_salted_join_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("custkey"), "c_mktsegment"
     )
-    joined = salted_join(fact, dim, "custkey", n_salts=_N_SALTS)
+    joined = salted_join(fact, dim, "custkey")
     return (
         joined.groupBy(F.col("c_mktsegment").alias("segment"))
         .agg(

@@ -68,36 +68,26 @@ def read_sales_folder(spark: SparkSession, directory: str) -> DataFrame:
 
 
 def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-    date_col: str | None = None,
-    date_format: str = "yyyy-MM-dd",
+    spark: SparkSession, path: str, date_col: str | None = None
 ) -> DataFrame:
     """S2 -- single-CSV scan with an optional coercing date parse on one
     column (reference etl_utils.py:71-106: ``read_csv`` +
     ``to_datetime(format='%Y-%m-%d', errors='coerce')``).
 
+    No inferSchema scan: every column arrives as a string.
     ``try_to_timestamp`` returns NULL on parse failure, matching
     ``errors='coerce'`` without tripping ANSI mode.
     """
-    reader = spark.read.option("header", "true")
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        # deliberate: no inferSchema scan; unknown files arrive as strings
-        pass
-    df = reader.csv(path)
+    df = spark.read.option("header", "true").csv(path)
     if date_col is not None:
-        df = df.withColumn(date_col, F.try_to_timestamp(F.col(date_col), F.lit(date_format)))
+        df = df.withColumn(
+            date_col, F.try_to_timestamp(F.col(date_col), F.lit("yyyy-MM-dd"))
+        )
     return df
 
 
 def read_csv_with_bad_records(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    corrupt_col: str = "_corrupt_record",
+    spark: SparkSession, path: str, schema: T.StructType
 ) -> "tuple[DataFrame, DataFrame]":
     """Production-grade malformed-row handling for CSV ingest: returns
     ``(good, bad)`` where ``good`` holds rows that parsed cleanly under
@@ -123,6 +113,7 @@ def read_csv_with_bad_records(
     checkpointed blocks, ``good`` re-parses the file (a plain query
     that references real data columns). Bad rows are a tiny fraction
     of an ingest, so checkpointing them is cheap at any scale."""
+    corrupt_col = "_corrupt_record"
     full = T.StructType(
         list(schema.fields) + [T.StructField(corrupt_col, T.StringType())]
     )

@@ -24,48 +24,37 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    multiline: bool = False,
-) -> DataFrame:
-    """Read newline-delimited JSON with a declared schema.
+def read_jsonl(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """Read newline-delimited JSON (one record per line) with a declared
+    schema.
 
     Corrupt lines are captured, not fatal: PERMISSIVE mode plus a
     ``_corrupt_record`` column when the caller's schema includes one
     (mirrors the coercing-read posture of the CSV source,
     csv_folder.py).
     """
-    return (
-        spark.read.schema(schema)
-        .option("mode", "PERMISSIVE")
-        .option("multiLine", "true" if multiline else "false")
-        .json(path)
-    )
+    return spark.read.schema(schema).option("mode", "PERMISSIVE").json(path)
 
 
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Write newline-delimited JSON (a directory of part files --
-    the scale layout; use ignoreNullFields=false so downstream schema
-    application sees explicit nulls rather than missing keys)."""
-    df.write.mode(mode).option("ignoreNullFields", "false").json(path)
+def write_jsonl(df: DataFrame, path: str) -> None:
+    """Write newline-delimited JSON, replacing ``path`` (a directory of
+    part files -- the scale layout; use ignoreNullFields=false so
+    downstream schema application sees explicit nulls rather than
+    missing keys)."""
+    df.write.mode("overwrite").option("ignoreNullFields", "false").json(path)
 
 
 def write_partitioned_parquet(
-    df: DataFrame,
-    path: str,
-    partition_by: tuple[str, ...],
-    mode: str = "overwrite",
+    df: DataFrame, path: str, partition_by: tuple[str, ...]
 ) -> None:
-    """Hive-partitioned parquet sink.
+    """Hive-partitioned parquet sink, replacing ``path``.
 
     Partition keys become directory levels (``lang=en/...``); readers
     filtering on them scan only matching directories. Keep partition
     cardinality sane (<= ~10k directories): date / language / tenant
     are good keys, high-cardinality ids are not.
     """
-    df.write.mode(mode).partitionBy(*partition_by).parquet(path)
+    df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
 
 
 def read_partitioned_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -74,11 +63,12 @@ def read_partitioned_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """ORC sink (zlib by default; columnar with predicate-pushdown
-    indexes like parquet). ORC is the interchange format of the Hive
-    ecosystem -- supported natively by Spark, no extra package."""
-    df.write.mode(mode).orc(path)
+def write_orc(df: DataFrame, path: str) -> None:
+    """ORC sink, replacing ``path`` (zlib by default; columnar with
+    predicate-pushdown indexes like parquet). ORC is the interchange
+    format of the Hive ecosystem -- supported natively by Spark, no
+    extra package."""
+    df.write.mode("overwrite").orc(path)
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
@@ -109,19 +99,17 @@ def read_xml(
     return reader.load(path)
 
 
-def write_xml(
-    df: DataFrame, path: str, row_tag: str, root_tag: str = "rows",
-    mode: str = "overwrite",
-) -> None:
-    """XML sink (native in Spark 4); one ``row_tag`` element per row
-    under ``root_tag``, through Spark's committer like every other
-    writer here. XML is an interchange-only format: no pushdown, no
-    column pruning, every scan is a full parse -- land it into parquet
-    at the ingest edge and never query it in place at scale."""
+def write_xml(df: DataFrame, path: str, row_tag: str) -> None:
+    """XML sink (native in Spark 4), replacing ``path``; one ``row_tag``
+    element per row under a ``rows`` root, through Spark's committer
+    like every other writer here. XML is an interchange-only format:
+    no pushdown, no column pruning, every scan is a full parse -- land
+    it into parquet at the ingest edge and never query it in place at
+    scale."""
     (
         df.write.format("xml")
         .option("rowTag", row_tag)
-        .option("rootTag", root_tag)
-        .mode(mode)
+        .option("rootTag", "rows")
+        .mode("overwrite")
         .save(path)
     )

@@ -13,14 +13,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Rewrite a fragmented parquet directory into ~target-sized files.
+def compact_parquet(spark: SparkSession, path: str) -> int:
+    """Rewrite a fragmented parquet directory into ~128 MB files.
 
-    File count = ceil(total bytes / target); the rewrite is one
+    File count = ceil(total bytes / 128 MB); the rewrite is one
     shuffle-free pass when coalescing down (coalesce merges partitions
     without moving rows between executors). Returns the new file
     count. Non-atomic (reader sees the directory mid-rewrite): on a
@@ -38,7 +34,7 @@ def compact_parquet(
         for f in files
         if f.endswith(".parquet")
     )
-    n_files = max(1, -(-total // target_file_bytes))
+    n_files = max(1, -(-total // (128 * 1024 * 1024)))
     df = spark.read.parquet(path)
     tmp = path.rstrip("/") + "._compact_tmp"
     df.coalesce(n_files).write.mode("overwrite").parquet(tmp)
@@ -75,20 +71,15 @@ def zorder_effective_bits(bits: int, n_cols: int) -> int:
     return eff
 
 
-def zorder_write(
-    df: "DataFrame",
-    path: str,
-    cols: "list[str]",
-    n_files: int = 8,
-    bits: int = 16,
-) -> None:
-    """Rewrite a table with rows clustered along a Z-order (Morton)
-    curve over ``cols`` -- the Delta/Iceberg OPTIMIZE ZORDER layout
-    primitive. Multi-dimensional range queries then touch a small
+def zorder_write(df: "DataFrame", path: str, cols: "list[str]") -> None:
+    """Rewrite a table as 8 files with rows clustered along a Z-order
+    (Morton) curve over ``cols`` -- the Delta/Iceberg OPTIMIZE ZORDER
+    layout primitive. Multi-dimensional range queries then touch a small
     fraction of files, and parquet min/max row-group stats prune on
     EVERY z-ordered column instead of only the first sort key.
 
-    Each column is rank-normalized to ``bits`` bits (percent_rank over
+    Each column is rank-normalized to 16 bits, fewer when
+    :func:`zorder_effective_bits` caps them (percent_rank over
     a sample-free exact window would be a global sort, so this uses the
     scalable approximation: min/max-scaled value -- adequate for layout,
     which only needs monotonicity), then the bit-interleaved key is
@@ -98,7 +89,7 @@ def zorder_write(
     """
     from pyspark.sql import functions as F
 
-    bits = zorder_effective_bits(bits, len(cols))
+    bits = zorder_effective_bits(16, len(cols))
 
     stats = df.agg(
         *[F.min(c).alias(f"__min_{c}") for c in cols],
@@ -127,7 +118,7 @@ def zorder_write(
             )
     (
         staged.withColumn("__z", z)
-        .repartitionByRange(n_files, "__z")
+        .repartitionByRange(8, "__z")
         .sortWithinPartitions("__z")
         .drop("__z", *[f"__min_{c}" for c in cols], *[f"__max_{c}" for c in cols])
         .write.mode("overwrite")

@@ -85,34 +85,24 @@ def write_jdbc(
     writer.mode(mode).save()
 
 
-def pandas_if_exists_mapping(
-    if_exists: str, keep_ddl: bool = False
-) -> "tuple[str, dict[str, str]]":
+def pandas_if_exists_mapping(if_exists: str) -> str:
     """Dialect-level contract: map the reference's pandas
     ``DataFrame.to_sql(if_exists=...)`` semantics (etl_utils.py:134-160
     calls it with ``'replace'`` and ``'append'``) onto the Spark JDBC
-    writer's ``(mode, options)``.
+    writer's mode.
 
-    - ``'replace'`` -> ``('overwrite', {})``: Spark drops and
-      recreates the table from the DataFrame schema — byte-for-byte
-      the pandas behavior (indexes, constraints and any hand-tuned
-      column types are LOST on both engines).
-    - ``'replace', keep_ddl=True`` -> ``('overwrite',
-      {'truncate': 'true'})``: Spark TRUNCATEs and reuses the existing
-      DDL. This is a DELIBERATE DELTA vs pandas ``'replace'`` (which
-      cannot keep DDL): use it when the SQL Server table carries
-      indexes or types the DataFrame schema would not regenerate.
-      On mssql the truncate path issues ``TRUNCATE TABLE`` via the
-      MsSqlServerDialect; it fails if the table does not exist yet,
-      exactly like TRUNCATE in T-SQL.
-    - ``'append'`` -> ``('append', {})``: plain inserts, table must
-      exist or is created once.
-    - ``'fail'`` -> ``('errorifexists', {})``.
+    - ``'replace'`` -> ``'overwrite'``: Spark drops and recreates the
+      table from the DataFrame schema — byte-for-byte the pandas
+      behavior (indexes, constraints and any hand-tuned column types
+      are LOST on both engines).
+    - ``'append'`` -> ``'append'``: plain inserts, table must exist or
+      is created once.
+    - ``'fail'`` -> ``'errorifexists'``.
     """
     mapping = {
-        "replace": ("overwrite", {"truncate": "true"} if keep_ddl else {}),
-        "append": ("append", {}),
-        "fail": ("errorifexists", {}),
+        "replace": "overwrite",
+        "append": "append",
+        "fail": "errorifexists",
     }
     if if_exists not in mapping:
         raise ValueError(f"unsupported if_exists mode: {if_exists!r}")

@@ -246,7 +246,7 @@ def test_token_and_fingerprint_spellings_agree_cross_engine(
     srows = sdf.select(
         "text",
         n_tokens_spark().alias("n"),
-        fingerprint_col("text").alias("fp"),
+        fingerprint_col().alias("fp"),
     ).collect()
     orows = con.execute(
         f"SELECT CAST({N_TOKENS_SQL} AS BIGINT) AS n, "

@@ -113,19 +113,14 @@ def test_if_exists_mode_mapping_contract():
     """The reference's pandas ``if_exists`` values map onto Spark JDBC
     writer modes exactly as documented (reference etl_utils.py:134-160
     uses 'replace' for Ventas_Validas/Invalidas and 'append' for the
-    monthly summary). keep_ddl adds truncate=true — the mssql
-    TRUNCATE-keeping-DDL path that pandas cannot express."""
+    monthly summary)."""
     from etl_sales_pandas_sqlserver_spark.sources.sinks import (
         pandas_if_exists_mapping,
     )
 
-    assert pandas_if_exists_mapping("replace") == ("overwrite", {})
-    assert pandas_if_exists_mapping("replace", keep_ddl=True) == (
-        "overwrite",
-        {"truncate": "true"},
-    )
-    assert pandas_if_exists_mapping("append") == ("append", {})
-    assert pandas_if_exists_mapping("fail") == ("errorifexists", {})
+    assert pandas_if_exists_mapping("replace") == "overwrite"
+    assert pandas_if_exists_mapping("append") == "append"
+    assert pandas_if_exists_mapping("fail") == "errorifexists"
     with pytest.raises(ValueError):
         pandas_if_exists_mapping("upsert")
 

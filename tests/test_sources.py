@@ -236,7 +236,7 @@ def test_xml_roundtrip_and_corrupt_record(spark, tmp_path):
         "id long, name string, meta struct<score: double, tag: string>",
     )
     out = str(tmp_path / "xmlout")
-    write_xml(df, out, row_tag="doc", root_tag="corpus")
+    write_xml(df, out, row_tag="doc")
     schema = T.StructType(
         [
             T.StructField("id", T.LongType()),
@@ -307,8 +307,8 @@ def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
     spark.range(4000).repartition(40).write.parquet(path)
     before = len([f for f in os.listdir(path) if f.endswith(".parquet")])
     assert before == 40
-    # huge target -> everything fits in one file
-    n = compact_parquet(spark, path, target_file_bytes=1 << 30)
+    # a few KB in all -> one 128 MB target file holds everything
+    n = compact_parquet(spark, path)
     after = [f for f in os.listdir(path) if f.endswith(".parquet")]
     assert n == 1 and len(after) == 1
     assert spark.read.parquet(path).count() == 4000
@@ -455,7 +455,7 @@ def test_zorder_write_clusters_both_dims(spark, tmp_path, sf_small):
         "o_orderkey", "o_custkey", "o_totalprice"
     )
     out = str(tmp_path / "z")
-    zorder_write(orders, out, ["o_custkey", "o_totalprice"], n_files=8)
+    zorder_write(orders, out, ["o_custkey", "o_totalprice"])
 
     per_file = (
         spark.read.parquet(out)
@@ -506,7 +506,7 @@ def test_zorder_effective_bits_guard():
 
 
 def test_zorder_write_caps_bits_to_bigint(spark, tmp_path, sf_small):
-    """4 cols at the default bits=16 trips the sign-bit guard (-> 15
+    """4 cols at bits=16 trips the sign-bit guard (-> 15
     effective); the rewrite must stay lossless and still cluster the
     most-significant z column (the LAST in the list -- interleave slot
     b*len+i puts larger i higher)."""
@@ -525,11 +525,7 @@ def test_zorder_write_caps_bits_to_bigint(spark, tmp_path, sf_small):
     )
     out = str(tmp_path / "z4")
     zorder_write(
-        orders,
-        out,
-        ["o_totalprice", "o_orderkey", "o_orderday", "o_custkey"],
-        n_files=8,
-        bits=16,
+        orders, out, ["o_totalprice", "o_orderkey", "o_orderday", "o_custkey"]
     )
     back = spark.read.parquet(out)
     assert back.count() == orders.count()

@@ -179,13 +179,16 @@ _TWINS = {
         lambda c: ws_split(F.lower(c)),
         lambda e: ws_split_sql(f"lower({e})"),
     ),
-    "n_tokens": (n_tokens_spark, lambda e: f"CAST({N_TOKENS_SQL} AS BIGINT)"),
+    "n_tokens": (
+        lambda c: n_tokens_spark(),
+        lambda e: f"CAST({N_TOKENS_SQL} AS BIGINT)",
+    ),
     "space_split": (space_split, space_split_sql),
     "space_split_trim_lower": (
         lambda c: space_split(F.trim(F.lower(c))),
         lambda e: space_split_sql(f"trim(lower({e}))"),
     ),
-    "fingerprint": (fingerprint_col, fingerprint_sql),
+    "fingerprint": (lambda c: fingerprint_col(), fingerprint_sql),
     **{
         f"md5_slice_{start}_{width}": (
             lambda c, s=start, w=width: md5_slice(c, s, w),
